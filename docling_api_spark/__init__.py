@@ -20,3 +20,10 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+# Python workers import this package on their first task; from then on the
+# per-task importlib.invalidate_caches() no longer re-reads every zip archive
+# on sys.path (pyspark.zip, py4j, the spark-core jar).
+from . import _zipimport
+
+_zipimport.install()

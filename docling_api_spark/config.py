@@ -2,19 +2,15 @@
 
 Mirrors the reference's per-request conversion knobs
 (``document_converter/route.py:27-28``: ``extract_tables_as_images`` default
-False, ``image_resolution_scale`` default 4 bounded [1,4];
-``service.py:17,31-39``: ``PdfPipelineOptions`` with OCR langs
-fr/de/es/en/it/pt) — but as a *job-level* config object, constant per run and
-shipped to executors by closure capture (small, immutable), not per row.
+False, ``image_resolution_scale`` default 4 bounded [1,4]) — but as a
+*job-level* config object, constant per run and shipped to executors by
+closure capture (small, immutable), not per row.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-
-#: the reference's fixed OCR language set — service.py:37
-OCR_LANGS = ("fr", "de", "es", "en", "it", "pt")
 
 #: reference default — service.py:17
 IMAGE_RESOLUTION_SCALE = 4
@@ -29,14 +25,12 @@ class ExtractConfig:
     # reference knobs (route.py:27-28)
     extract_tables_as_images: bool = False
     image_resolution_scale: int = IMAGE_RESOLUTION_SCALE
-    ocr_langs: tuple = OCR_LANGS
 
     # our additions (north_rule: spans + lineage)
     emit_spans: bool = True
 
     # scale mechanics
     num_partitions: int = 64          # manifest width / salted repartition width
-    max_batch_rows: int = 64          # arrow maxRecordsPerBatch guidance (big docs)
     #: how the resume/lineage partition_id is derived (PLANS.md §1):
     #: - "file" (default, scale-safe): hash of the input file name — the
     #:   binary html column NEVER crosses an exchange; extraction is pure

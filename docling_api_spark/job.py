@@ -28,6 +28,13 @@ is the opt-in for pathologically skewed input layouts, and there size
 ``--partitions`` to ~2-4x total executor cores and let AQE handle
 stragglers.
 
+Every Python task starts with ``importlib.invalidate_caches()``, which
+before Python 3.13 re-reads the directory of each zip on the worker's path
+(``pyspark.zip``, py4j, the spark-core jar, the ``--py-files`` engine zip).
+The engine installs 3.13's lazy zip-directory cache on each worker's first
+task (``docling_api_spark/_zipimport.py``; a no-op on 3.13+), so later
+tasks skip those reads.
+
 This replaces the reference's whole service surface (FastAPI endpoints +
 Celery queue + Redis backend — ``main.py``, ``worker/celery_config.py:5-11``,
 ``document_converter/route.py``): submission = spark-submit, job id =

@@ -65,7 +65,8 @@ def add_partition_id(pages: DataFrame, num_partitions: int,
 
 
 def extract_df(pages: DataFrame, cfg: ExtractConfig,
-               repartition: bool | None = None) -> DataFrame:
+               repartition: bool | None = None,
+               done: DataFrame | None = None) -> DataFrame:
     """Lazy extraction plan over a pages DataFrame (no write).
 
     Default (``cfg.partition_mode='file'``) is a single map stage: no
@@ -73,9 +74,12 @@ def extract_df(pages: DataFrame, cfg: ExtractConfig,
     repartitions on the url-hash key; the plan column-prunes to exactly
     the fields the extractor needs before that shuffle so it never
     carries unused columns. ``repartition`` overrides the mode's default
-    (kept for tests/benchmarks that isolate the shuffle cost)."""
+    (kept for tests/benchmarks that isolate the shuffle cost). ``done``
+    is the resume done-set: its partitions are anti-joined away before
+    the repartition, so skipped rows are never shuffled."""
     df = pages.select("url", "warc_ts", "html", "lang")
     df = add_partition_id(df, cfg.num_partitions, cfg.partition_mode)
+    df = mf.anti_join_done(df, done)
     if repartition is None:
         repartition = cfg.partition_mode == "salted"
     if repartition:
@@ -105,17 +109,10 @@ def run_extraction(spark: SparkSession, pages: DataFrame, output_path: str,
     metrics_path = metrics_path or output_path + "_metrics"
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    df = pages.select("url", "warc_ts", "html", "lang")
-    df = add_partition_id(df, cfg.num_partitions, cfg.partition_mode)
     done = mf.read_done_partitions(spark, manifest_path, run_id) if resume else None
     prior_done = set() if done is None else \
         {r.partition_id for r in done.collect()}
-    if prior_done:
-        df = mf.anti_join_done(df, done)
-
-    if cfg.partition_mode == "salted":
-        df = df.repartition(cfg.num_partitions, "partition_id")
-    out = df.mapInPandas(make_convert_fn(cfg), RESULT_DDL)
+    out = extract_df(pages, cfg, done=done if prior_done else None)
     (out.write.mode("overwrite").partitionBy("partition_id")
         .parquet(output_path))
 

@@ -92,7 +92,6 @@ METRICS_SCHEMA = T.StructType([
 #: service.py:83-85 — errors are rows, never exceptions)
 FAILURE_CODES = (
     "unsupported_format",
-    "decode_error",
     "parse_error",
     "pdf_unsupported_feature",
     "ocr_not_supported",

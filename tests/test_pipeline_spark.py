@@ -1,6 +1,14 @@
 """Spark end-to-end tests: golden e2e, dedup window, resume, parallelism
 invariance (SURVEY.md §5.2 items 1/3/5)."""
 
+import os
+import re
+import shutil
+import subprocess
+import sys
+import zipfile
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F, Window as W
 
@@ -13,6 +21,7 @@ from docling_api_spark.sources.corpus import (
     FIXTURE_CLASSES, corpus_df, make_corpus, make_url)
 
 CFG = ExtractConfig(num_partitions=8)
+ROOT = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -46,7 +55,7 @@ def test_errors_are_rows_not_exceptions(spark, pages):
     assert total == pages.count()  # no row lost, no job death
     errs = out.where(F.col("error").isNotNull())
     codes = {r.error for r in errs.select("error").distinct().collect()}
-    assert codes <= {"unsupported_format", "decode_error", "parse_error",
+    assert codes <= {"unsupported_format", "parse_error",
                      "pdf_unsupported_feature", "ocr_not_supported",
                      "empty_document"}
     assert "unsupported_format" in codes
@@ -243,7 +252,7 @@ def test_huge_page_skew_class(spark):
 def test_job_cli_main(spark, tmp_path):
     """The spark-submit entry point end-to-end (in-process: getOrCreate
     reuses the test session). The real spark-submit --py-files launch is
-    exercised in BENCH/verify runs."""
+    covered by test_spark_submit_py_files."""
     from docling_api_spark import job
     from docling_api_spark.sources.pages import pages_from_documents
 
@@ -279,3 +288,45 @@ def test_job_cli_main(spark, tmp_path):
         job.main(["--input", inp, "--output", out,
                   "--run-id", "t-cli", "--partitions", "8", "--status"])
     assert "status=SUCCESS" in buf.getvalue()
+
+
+def _spark_submit():
+    home_bin = os.path.join(os.environ.get("SPARK_HOME", ""), "bin")
+    return shutil.which("spark-submit",
+                        path=home_bin + os.pathsep + os.environ["PATH"])
+
+
+@pytest.mark.skipif(_spark_submit() is None,
+                    reason="spark-submit is not installed")
+def test_spark_submit_py_files(spark, tmp_path):
+    """The north-rule launch mode: the engine zipped into --py-files, so the
+    driver and every worker zip-import it, run twice with one --run-id; the
+    second run resumes every partition. The input is 100 rows of the
+    fixture corpus, so every converter runs from the zip."""
+    inp = str(tmp_path / "pages")
+    out = str(tmp_path / "out")
+    corpus_df(spark, 100, dup_fraction=0).write.mode("overwrite").parquet(inp)
+    engine = tmp_path / "engine.zip"
+    with zipfile.ZipFile(engine, "w") as zf:
+        for src in sorted((ROOT / "docling_api_spark").rglob("*.py")):
+            zf.write(src, src.relative_to(ROOT).as_posix())
+    cmd = [_spark_submit(), "--master", "local[2]",
+           "--py-files", str(engine),
+           str(ROOT / "docling_api_spark" / "job.py"),
+           "--input", inp, "--output", out, "--run-id", "t-submit",
+           "--partitions", "8"]
+    # the engine must come from the zip, not from this checkout
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.setdefault("PYSPARK_PYTHON", sys.executable)
+    computed = []
+    for _ in range(2):
+        run = subprocess.run(cmd, cwd=tmp_path, env=env, capture_output=True,
+                             text=True, timeout=600)
+        assert run.returncode == 0, run.stderr[-4000:]
+        m = re.search(r"docs=(\d+) partitions_computed=(\d+)", run.stdout)
+        assert m, run.stdout
+        assert int(m.group(1)) == 100
+        computed.append(int(m.group(2)))
+    assert computed[0] > 0
+    assert computed[1] == 0
+    assert spark.read.parquet(out).count() == 100
