@@ -300,9 +300,9 @@ def _spark_submit():
                     reason="spark-submit is not installed")
 def test_spark_submit_py_files(spark, tmp_path):
     """The north-rule launch mode: the engine zipped into --py-files, so the
-    driver and every worker zip-import it, run twice with one --run-id; the
-    second run resumes every partition. The input is 100 rows of the
-    fixture corpus, so every converter runs from the zip."""
+    Spark driver and each worker zip-import it, run twice with one
+    --run-id; the second run resumes every partition. The input is 100
+    rows of the fixture corpus, so every converter runs from the zip."""
     inp = str(tmp_path / "pages")
     out = str(tmp_path / "out")
     corpus_df(spark, 100, dup_fraction=0).write.mode("overwrite").parquet(inp)
