@@ -5,7 +5,7 @@ zenzen-sol/docling-api reference service (FastAPI/Celery/Redis wrapper around
 IBM docling 2.3.1; surveyed in SURVEY.md). The engine is a DataFrame batch job
 over a Parquet/Iceberg table of Common-Crawl-style pages
 ``(url string, warc_ts timestamp, html binary, text string, lang string)``
-that runs Arrow-vectorized ``mapInPandas`` extractors (no per-row Python UDFs)
+that runs Arrow-native ``mapInArrow`` extractors (no per-row Python UDFs)
 producing deterministic Markdown + images manifest + per-span offsets + error
 rows, with a zero-shuffle file-keyed default plan (salted repartitioning
 as the opt-in for skewed layouts), per-partition lineage/metrics, and

@@ -1,19 +1,16 @@
 """Job-level extraction config.
 
-Mirrors the reference's per-request conversion knobs
-(``document_converter/route.py:27-28``: ``extract_tables_as_images`` default
-False, ``image_resolution_scale`` default 4 bounded [1,4]) — but as a
-*job-level* config object, constant per run and shipped to executors by
-closure capture (small, immutable), not per row.
+Mirrors the reference's per-request ``extract_tables_as_images`` knob
+(``document_converter/route.py:27``, default False) — but as a *job-level*
+config object, constant per run and shipped to executors by closure capture
+(small, immutable), not per row. The reference's ``image_resolution_scale``
+(``route.py:28``) sizes docling's page renders; the engine renders no page
+images, so it has no counterpart here.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-
-
-#: reference default — service.py:17
-IMAGE_RESOLUTION_SCALE = 4
 
 
 @dataclass(frozen=True)
@@ -22,9 +19,8 @@ class ExtractConfig:
     of ``(document bytes, url, ExtractConfig)`` — determinism invariant
     (SURVEY.md §7.0)."""
 
-    # reference knobs (route.py:27-28)
+    # reference knob (route.py:27)
     extract_tables_as_images: bool = False
-    image_resolution_scale: int = IMAGE_RESOLUTION_SCALE
 
     # our additions (north_rule: spans + lineage)
     emit_spans: bool = True
@@ -50,8 +46,5 @@ class ExtractConfig:
     fail_partitions: frozenset = field(default_factory=frozenset)
 
     def __post_init__(self):
-        if not (1 <= self.image_resolution_scale <= 4):
-            # FastAPI Query(4, ge=1, le=4) — route.py:28
-            raise ValueError("image_resolution_scale must be in [1, 4]")
         if self.partition_mode not in ("file", "salted"):
             raise ValueError("partition_mode must be 'file' or 'salted'")

@@ -82,7 +82,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "derived from the input, so file-mode runs with "
                         "fewer files than --partitions report correctly)")
     p.add_argument("--extract-tables-as-images", action="store_true")
-    p.add_argument("--image-resolution-scale", type=int, default=4)
     return p
 
 
@@ -98,8 +97,7 @@ def main(argv: list[str] | None = None) -> None:
     cfg = ExtractConfig(
         num_partitions=args.partitions,
         partition_mode=args.partition_mode,
-        extract_tables_as_images=args.extract_tables_as_images,
-        image_resolution_scale=args.image_resolution_scale)
+        extract_tables_as_images=args.extract_tables_as_images)
     pages = read_pages(spark, args.input, storage=args.format,
                        table=args.input if args.format == "iceberg" else None)
     if args.status:

@@ -2,7 +2,7 @@
 
 This is the Spark-native re-expression of the reference's conversion engine:
 ``DoclingDocumentConversion.convert`` / ``convert_batch``
-(``service.py:68-88``, ``service.py:90-118``) become ONE ``mapInPandas``
+(``service.py:68-88``, ``service.py:90-118``) become ONE ``mapInArrow``
 operator — Spark's partition iterator *is* the batch (the reference pipelines
 a list through ``convert_all``, ``service.py:101-104``; we pipeline Arrow
 record batches through a generator). Key semantics preserved:
@@ -18,7 +18,10 @@ record batches through a generator). Key semantics preserved:
   (``spark.python.worker.reuse`` keeps it warm) — SURVEY A8.
 
 No per-row Python UDFs anywhere: this module is invoked via
-``df.mapInPandas(make_convert_fn(cfg), RESULT_DDL)``.
+``df.mapInArrow(make_convert_fn(cfg), RESULT_DDL)``. Batches stay in Arrow
+on both sides of the Python boundary: no pandas frames are built, and the
+pass-through columns (``url``, ``warc_ts``, ``lang``, ``partition_id``) are
+returned as the input arrays.
 """
 
 from __future__ import annotations
@@ -26,14 +29,25 @@ from __future__ import annotations
 import re
 import time
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..config import ExtractConfig
 from ..functions.sniffer import detect_format
+from ..schemas import RESULT_SCHEMA
 from .html_extract import extract_html
 from .md_adoc import asciidoc_to_markdown, block_spans, normalize_markdown
 from .ooxml import extract_docx_rich, extract_pptx_rich
 from .pdf_extract import PdfUnsupported, extract_pdf_rich
+
+#: Arrow type of every result column, in result order — derived from the
+#: one Spark result schema
+_RESULT_TYPES = {f.name: to_arrow_type(f.dataType)
+                 for f in RESULT_SCHEMA.fields}
+#: result columns taken from ``convert_one``'s dict (plus its timing);
+#: ``url``/``warc_ts``/``lang``/``partition_id`` pass through from the input
+_CONVERTED = ("fmt", "markdown", "images", "spans", "error", "parse_ms")
 
 
 def _decode_text(content: bytes) -> str:
@@ -159,53 +173,42 @@ def convert_one(content, url: str, cfg: ExtractConfig) -> dict:
     return out
 
 
+def _byte_length(arr: pa.Array) -> pa.Array:
+    """Byte length of each binary/utf-8 value as int64; NULL counts 0."""
+    return pc.binary_length(arr).fill_null(0).cast(pa.int64())
+
+
 def make_convert_fn(cfg: ExtractConfig):
-    """Build the mapInPandas function. The returned generator processes an
-    iterator of Arrow-backed pandas batches — one in flight at a time
-    (memory bound per SURVEY.md §7.3)."""
+    """Build the mapInArrow function. The returned generator maps an
+    iterator of input ``pyarrow.RecordBatch``es to result batches — one in
+    flight at a time (memory bound per SURVEY.md §7.3). The pass-through
+    columns go back as the input arrays, untouched; ``parse_ms`` is each
+    document's own ``convert_one`` time."""
 
     def convert_partition(batches):
-        for pdf in batches:
-            t0 = time.perf_counter()
-            n = len(pdf)
-            fmts, mds, imgs, spans, errs = [], [], [], [], []
-            bytes_in, bytes_out = [], []
-            part_ids = pdf["partition_id"] if "partition_id" in pdf.columns else None
-            for i in range(n):
-                content = pdf["html"].iat[i]
-                url = pdf["url"].iat[i]
-                if (cfg.fail_partitions and part_ids is not None
-                        and int(part_ids.iat[i]) in cfg.fail_partitions):
-                    # test hook for the resume/kill test — never set in prod
+        for batch in batches:
+            if cfg.fail_partitions:
+                # test hook for the resume/kill test — never set in prod
+                hit = cfg.fail_partitions.intersection(
+                    batch.column("partition_id").to_pylist())
+                if hit:
                     raise RuntimeError(
-                        f"injected failure in partition {int(part_ids.iat[i])}")
+                        f"injected failure in partition {min(hit)}")
+            html = batch.column("html")
+            rows = []
+            for content, url in zip(html.to_pylist(),
+                                    batch.column("url").to_pylist()):
+                t0 = time.perf_counter()
                 r = convert_one(content, url, cfg)
-                fmts.append(r["fmt"])
-                mds.append(r["markdown"])
-                imgs.append(r["images"])
-                spans.append(r["spans"])
-                errs.append(r["error"])
-                bytes_in.append(0 if content is None else len(content))
-                bytes_out.append(0 if r["markdown"] is None
-                                 else len(r["markdown"].encode("utf-8")))
-            wall_ms = (time.perf_counter() - t0) * 1000.0
-            per_doc = wall_ms / n if n else 0.0
-            yield pd.DataFrame({
-                "url": pdf["url"],
-                "warc_ts": pdf["warc_ts"] if "warc_ts" in pdf.columns
-                else pd.Series([None] * n, dtype="datetime64[us]"),
-                "lang": pdf["lang"] if "lang" in pdf.columns
-                else pd.Series([None] * n, dtype="object"),
-                "fmt": pd.Series(fmts, dtype="object", index=pdf.index),
-                "markdown": pd.Series(mds, dtype="object", index=pdf.index),
-                "images": pd.Series(imgs, dtype="object", index=pdf.index),
-                "spans": pd.Series(spans, dtype="object", index=pdf.index),
-                "error": pd.Series(errs, dtype="object", index=pdf.index),
-                "bytes_in": pd.Series(bytes_in, dtype="int64", index=pdf.index),
-                "bytes_out": pd.Series(bytes_out, dtype="int64", index=pdf.index),
-                "parse_ms": pd.Series([per_doc] * n, dtype="float64", index=pdf.index),
-                "partition_id": (part_ids.astype("int32") if part_ids is not None
-                                 else pd.Series([0] * n, dtype="int32", index=pdf.index)),
-            })
+                r["parse_ms"] = (time.perf_counter() - t0) * 1000.0
+                rows.append(r)
+            computed = {name: pa.array([r[name] for r in rows],
+                                       _RESULT_TYPES[name])
+                        for name in _CONVERTED}
+            computed["bytes_in"] = _byte_length(html)
+            computed["bytes_out"] = _byte_length(computed["markdown"])
+            yield pa.RecordBatch.from_arrays(
+                [computed[name] if name in computed else batch.column(name)
+                 for name in _RESULT_TYPES], names=list(_RESULT_TYPES))
 
     return convert_partition

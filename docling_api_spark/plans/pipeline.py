@@ -1,4 +1,4 @@
-"""End-to-end extraction job: scan → resume filter → mapInPandas extract →
+"""End-to-end extraction job: scan → resume filter → mapInArrow extract →
 write results + manifest + metrics.
 
 This is the Spark re-expression of the reference's whole service surface
@@ -84,7 +84,7 @@ def extract_df(pages: DataFrame, cfg: ExtractConfig,
         repartition = cfg.partition_mode == "salted"
     if repartition:
         df = df.repartition(cfg.num_partitions, "partition_id")
-    return df.mapInPandas(make_convert_fn(cfg), RESULT_DDL)
+    return df.mapInArrow(make_convert_fn(cfg), RESULT_DDL)
 
 
 @dataclass

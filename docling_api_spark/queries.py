@@ -31,7 +31,7 @@ def _par(spark: SparkSession) -> int:
     """Scan parallelism for the synthesized-pages extraction queries
     (r7, guide §2.5 input skew): documents.parquet is ONE small file →
     one input split, so without an explicit repartition the synthesis
-    AND the downstream mapInPandas extraction ran in a single task
+    AND the downstream mapInArrow extraction ran in a single task
     (extract_markdown measured 11.8 s at sf1.0 on local[32]; ~1.3 s
     after). Derived from the session's scheduler width, not a constant,
     so cluster runs scale with executor count. The repartition moves
@@ -493,7 +493,7 @@ FROM documents
 
 def extract_quality_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full training-data pipeline in ONE oracle-gated query:
-    synthesize pages → EXTRACT markdown (mapInPandas) → token-count the
+    synthesize pages → EXTRACT markdown (mapInArrow) → token-count the
     extracted markdown → keep/drop decision. The oracle reconstructs the
     markdown in SQL and applies the identical token gate, so the
     composition extraction→stats→filter — not just each stage — is

@@ -61,7 +61,7 @@ RESULT_SCHEMA = T.StructType([
     T.StructField("partition_id", T.IntegerType(), True),
 ])
 
-#: DDL string form for mapInPandas
+#: DDL string form of RESULT_SCHEMA, the extraction operator's return type
 RESULT_DDL = (
     "url string, warc_ts timestamp, lang string, fmt string, markdown string, "
     "images array<struct<type:string,filename:string,image:string>>, "

@@ -2,7 +2,7 @@
 
 Second resume mechanism alongside the batch manifest (SURVEY.md §7.2 /
 Table B "Streaming" row): the stream reads the pages table as files
-arrive, runs the SAME ``mapInPandas`` extraction per micro-batch, and
+arrive, runs the SAME ``mapInArrow`` extraction per micro-batch, and
 appends to the output; Spark's checkpoint (source offsets = which files
 were consumed) makes re-runs pick up only unseen files.
 

@@ -149,6 +149,16 @@ def test_file_mode_no_shuffle_plan(spark, pages, tmp_path):
     assert "Exchange" in _plan_str(salted)
 
 
+@pytest.mark.parametrize("mode", ["file", "salted"])
+def test_extract_plan_is_arrow_native(spark, pages, mode):
+    """The convert operator is handed its rows as Arrow batches in both
+    partition modes: the physical plan runs MapInArrow, never MapInPandas."""
+    plan = _plan_str(extract_df(pages, ExtractConfig(num_partitions=8,
+                                                     partition_mode=mode)))
+    assert "MapInArrow" in plan, plan
+    assert "MapInPandas" not in plan, plan
+
+
 def test_file_mode_resume_file_keyed(spark, pages, tmp_path):
     """Resume with file-keyed ids on a real file-backed input: kill-after-K
     simulated by a partial commit; the resumed run recomputes exactly the
