@@ -5,7 +5,9 @@ Mirrors the reference's per-request ``extract_tables_as_images`` knob
 config object, constant per run and shipped to executors by closure capture
 (small, immutable), not per row. The reference's ``image_resolution_scale``
 (``route.py:28``) sizes docling's page renders; the engine renders no page
-images, so it has no counterpart here.
+images, so it has no counterpart here. Spans are always emitted, and the
+boilerplate-strip thresholds are constants of ``operators/html_extract.py``:
+no caller ever set them.
 """
 
 from __future__ import annotations
@@ -22,9 +24,6 @@ class ExtractConfig:
     # reference knob (route.py:27)
     extract_tables_as_images: bool = False
 
-    # our additions (north_rule: spans + lineage)
-    emit_spans: bool = True
-
     # scale mechanics
     num_partitions: int = 64          # manifest width / salted repartition width
     #: how the resume/lineage partition_id is derived (PLANS.md §1):
@@ -36,11 +35,6 @@ class ExtractConfig:
     #:   pathologically skewed input layouts (one giant unsplittable file),
     #:   at the cost of shuffling the full page bytes once (~2x measured).
     partition_mode: str = "file"
-
-    # boilerplate-strip heuristics (pure integer ratios; §7.3 determinism)
-    link_density_num: int = 2         # drop container if link_chars*DEN >= total*NUM
-    link_density_den: int = 3
-    min_container_chars: int = 10     # containers shorter than this never dropped by density
 
     # test hook: raise inside the UDF for these partition_ids (resume test)
     fail_partitions: frozenset = field(default_factory=frozenset)

@@ -123,7 +123,7 @@ def convert_one(content, url: str, cfg: ExtractConfig) -> dict:
             res = extract_html(decode_html(content), cfg)
             out["markdown"] = res.markdown
             out["images"] = res.images
-            out["spans"] = res.spans if cfg.emit_spans else None
+            out["spans"] = res.spans
         elif fmt == "md":
             out["markdown"] = normalize_markdown(_decode_text(content))
         elif fmt == "asciidoc":
@@ -165,7 +165,7 @@ def convert_one(content, url: str, cfg: ExtractConfig) -> dict:
     if out["markdown"] is not None:
         if out["images"] is None:
             out["images"] = []
-        if out["spans"] is None and cfg.emit_spans:
+        if out["spans"] is None:
             # per-block spans for non-HTML formats (r3; the HTML path
             # tracks spans during serialization) — same C7 offset
             # contract for every format

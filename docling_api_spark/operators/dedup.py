@@ -38,6 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from ..functions import textsql as X
+from ..memo import memo
 
 
 def _docs(spark: SparkSession, sf_dir: str,
@@ -634,18 +635,21 @@ DEDUP_NEAR_ORACLE = near_pipeline_oracle()
 
 # ----------------------------------- near-dup connected components (canon)
 
-#: session-scoped memo for the canonical table (the bpe _TRAIN_CACHE
-#: pattern, r4): three registered consumers (quality_filter_neardup,
-#: retention_report, crawl_curation) need the identical deterministic
-#: LSH→verify→CC result — production materializes it once and reuses
-#: it downstream; recomputing per consumer would triple the cost.
-#: Keyed on (applicationId, startTime), never id(spark).
-_CANON_CACHE: dict = {}
-
-
 def neardup_canonical(spark: SparkSession, sf_dir: str,
                       cfg: LshConfig = DEFAULT_LSH,
                       max_iters: int = 50) -> DataFrame:
+    """Session-scoped memo of :func:`_neardup_canonical` (r4): three
+    registered consumers (quality_filter_neardup, retention_report,
+    crawl_curation) need the identical deterministic LSH→verify→CC
+    result — production materializes it once and reuses it downstream;
+    recomputing per consumer would triple the cost."""
+    return memo(("neardup_canonical", sf_dir, cfg, max_iters),
+                lambda: _neardup_canonical(spark, sf_dir, cfg, max_iters),
+                spark)
+
+
+def _neardup_canonical(spark: SparkSession, sf_dir: str, cfg: LshConfig,
+                       max_iters: int) -> DataFrame:
     """Connected-component canonical id over the VERIFIED near-dup pairs:
     every doc in a component maps to the component's min doc_id — the
     keep-one-representative decision a retention pipeline needs (pairs
@@ -660,11 +664,6 @@ def neardup_canonical(spark: SparkSession, sf_dir: str,
     truncated per round (localCheckpoint) so plans don't grow. Only docs
     in ≥1 verified pair carry a row; composition sites coalesce everyone
     else to self."""
-    sess = (spark.sparkContext.applicationId,
-            spark.sparkContext.startTime)
-    key = (sess, sf_dir, cfg, max_iters)
-    if key in _CANON_CACHE:
-        return _CANON_CACHE[key]
     pairs = dedup_near_pipeline(spark, sf_dir, cfg) \
         .select("left_id", "right_id")
     e1 = pairs.select(F.col("left_id").alias("src"),
@@ -692,10 +691,8 @@ def neardup_canonical(spark: SparkSession, sf_dir: str,
         labels = new.drop("chg")
         if changed == 0:
             break
-    out = labels.select("doc_id", F.col("label").alias("nd_canonical")) \
+    return labels.select("doc_id", F.col("label").alias("nd_canonical")) \
         .localCheckpoint()
-    _CANON_CACHE[key] = out
-    return out
 
 
 def neardup_canonical_oracle(cfg: LshConfig = DEFAULT_LSH) -> str:

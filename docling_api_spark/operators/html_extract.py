@@ -44,8 +44,8 @@ Boilerplate strip:
   text wins (ties → first in document order); else ``<body>``; else the
   whole tree;
 - link-farm containers (div/section/ul/ol) dropped when
-  ``link_chars * link_density_den >= total_chars * link_density_num``
-  and the container holds at least ``min_container_chars`` characters —
+  ``link_chars * LINK_DENSITY_DEN >= total_chars * LINK_DENSITY_NUM``
+  and the container holds at least ``MIN_CONTAINER_CHARS`` characters —
   pure integer arithmetic, no float thresholds (§7.3).
 """
 
@@ -84,6 +84,12 @@ _CONTAINER_TAGS = frozenset({
 })
 
 _DENSITY_TAGS = frozenset({"div", "section", "ul", "ol"})
+# link-farm rule (pure integer ratio; §7.3 determinism): drop a density
+# container if link_chars*DEN >= total*NUM, unless it holds fewer than
+# MIN_CONTAINER_CHARS characters
+LINK_DENSITY_NUM = 2
+LINK_DENSITY_DEN = 3
+MIN_CONTAINER_CHARS = 10
 
 
 class Node:
@@ -846,9 +852,8 @@ def _emit_blocks(node, ctx: _Ctx, blocks: list[Block]):
         _flush_para(buf, blocks)
         if tag in _DENSITY_TAGS or tag in _CONTAINER_TAGS:
             total, link = _text_stats(c)
-            cfg = ctx.cfg
-            if (tag in _DENSITY_TAGS and total >= cfg.min_container_chars
-                    and link * cfg.link_density_den >= total * cfg.link_density_num):
+            if (tag in _DENSITY_TAGS and total >= MIN_CONTAINER_CHARS
+                    and link * LINK_DENSITY_DEN >= total * LINK_DENSITY_NUM):
                 continue  # link farm — boilerplate
         if tag in ("h1", "h2", "h3", "h4", "h5", "h6"):
             text = _collapse(_inline(c, ctx)).replace("\n", " ")

@@ -65,7 +65,6 @@ def add_partition_id(pages: DataFrame, num_partitions: int,
 
 
 def extract_df(pages: DataFrame, cfg: ExtractConfig,
-               repartition: bool | None = None,
                done: DataFrame | None = None) -> DataFrame:
     """Lazy extraction plan over a pages DataFrame (no write).
 
@@ -73,16 +72,13 @@ def extract_df(pages: DataFrame, cfg: ExtractConfig,
     exchange anywhere, the page bytes stay on the scan task. Salted mode
     repartitions on the url-hash key; the plan column-prunes to exactly
     the fields the extractor needs before that shuffle so it never
-    carries unused columns. ``repartition`` overrides the mode's default
-    (kept for tests/benchmarks that isolate the shuffle cost). ``done``
-    is the resume done-set: its partitions are anti-joined away before
-    the repartition, so skipped rows are never shuffled."""
+    carries unused columns. ``done`` is the resume done-set: its
+    partitions are anti-joined away before the repartition, so skipped
+    rows are never shuffled."""
     df = pages.select("url", "warc_ts", "html", "lang")
     df = add_partition_id(df, cfg.num_partitions, cfg.partition_mode)
     df = mf.anti_join_done(df, done)
-    if repartition is None:
-        repartition = cfg.partition_mode == "salted"
-    if repartition:
+    if cfg.partition_mode == "salted":
         df = df.repartition(cfg.num_partitions, "partition_id")
     return df.mapInArrow(make_convert_fn(cfg), RESULT_DDL)
 

@@ -1,9 +1,13 @@
 """Driver-contract query registry (SURVEY.md §5.2 item 3).
 
-Each entry pairs a Spark implementation ``(spark, sf_dir) -> DataFrame``
-with a DuckDB oracle SQL string computing the same result on the same
-parquet tables. Column names/aliases match exactly (the driver's compare
-sorts columns by name and hashes values).
+``REGISTRY`` is the one ordered table of ``Query(name, fn, oracle)``
+records; ``queries()`` and ``oracle_sql()`` are derived from it. Each
+entry pairs a Spark implementation ``(spark, sf_dir) -> DataFrame`` with
+a DuckDB oracle computing the same result on the same parquet tables:
+SQL text, or for the replica oracles a function of the data dir that
+returns it. Column names/aliases match exactly (the driver's compare
+sorts columns by name and hashes values). Results shared across queries
+(fixture corpora, trained models) go through ``memo.memo``.
 
 The two ``extract_*`` queries are the flagship: the oracle *constructs the
 expected markdown byte-for-byte in SQL* from the deterministic corpus
@@ -13,12 +17,15 @@ checks byte-identical extraction per url — the north_rule invariant.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import ExtractConfig
 from .functions import textsql as X
+from .memo import memo
 from .operators import (bpe, curation, dedup, multimodal, pii, relational,
                         similarity, text_stats, webtext)
 from .plans.pipeline import extract_df
@@ -93,29 +100,26 @@ FROM documents GROUP BY 1
 """
 
 
-#: fixture-corpus memo: the Python-side fixture synthesis (zip/PDF
-#: writers in mapInPandas) is test scaffolding — materialize it to
-#: parquet ONCE per (kind, sf_dir) so repeated runs (bench warm +
-#: best-of-2) measure the ENGINE, not the fixture writers (the same
-#: honesty rule as the WARC segment memo below)
-_FIXTURE_PAGES_CACHE: dict = {}
-
-
 def _cached_fixture_pages(spark: SparkSession, kind: str, sf_dir: str,
                           build) -> DataFrame:
+    """Fixture-corpus memo: the Python-side fixture synthesis (zip/PDF
+    writers in mapInPandas) is test scaffolding — materialize it to
+    parquet ONCE per (kind, sf_dir) so repeated runs (bench warm +
+    best-of-2) measure the ENGINE, not the fixture writers (the same
+    honesty rule as the WARC segment memo below)."""
     import tempfile
 
     from .sources.pages import read_pages
-    path = _FIXTURE_PAGES_CACHE.get((kind, sf_dir))
-    if path is None:
+
+    def write() -> str:
         path = tempfile.mkdtemp(prefix=f"fixture_{kind}_") + "/pages"
         # 32 files: the memoized corpus must scan with full parallelism
         # (a 1-2 file parquet serializes the downstream extraction no
         # matter the split size — r4 find: extract_scanned spent 7 s on
         # 2 cores while the OCR itself costs ~0.3 s across 32)
         build().repartition(32).write.mode("overwrite").parquet(path)
-        _FIXTURE_PAGES_CACHE[(kind, sf_dir)] = path
-    return read_pages(spark, path)
+        return path
+    return read_pages(spark, memo(("fixture_pages", kind, sf_dir), write))
 
 
 def _cached_source(spark: SparkSession, kind: str, sf_dir: str) -> DataFrame:
@@ -1270,9 +1274,6 @@ FROM documents
 """
 
 
-_STREAM_DEDUP_CACHE: dict = {}
-_STREAM_DEDUP_STAGE: dict = {}
-
 #: one AvailableNow launch must fit ONE micro-batch for the
 #: stream==batch-min oracle to hold (within a trigger the group handler
 #: picks min(doc_id); across triggers first-arrival could beat the
@@ -1287,8 +1288,8 @@ def _stream_dedup_staging(spark: SparkSession, sf_dir: str) -> str:
     streaming_dedup, pre-materializable via prewarm_fixtures so bench
     first-pass times the stream engine, not these writes — r5)."""
     import tempfile
-    root = _STREAM_DEDUP_STAGE.get(sf_dir)
-    if root is None:
+
+    def write() -> str:
         root = tempfile.mkdtemp(prefix="stream_dedup_stage_")
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
             .select("doc_id", "text")
@@ -1297,8 +1298,8 @@ def _stream_dedup_staging(spark: SparkSession, sf_dir: str) -> str:
             .write.parquet(root + "/h1")
         docs.where(f"doc_id > {mid}").repartition(32) \
             .write.parquet(root + "/h2")
-        _STREAM_DEDUP_STAGE[sf_dir] = root
-    return root
+        return root
+    return memo(("stream_dedup_stage", sf_dir), write)
 
 
 def _link_parquet_files(src: str, dst: str, prefix: str) -> int:
@@ -1349,8 +1350,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
              .outputMode("update").trigger(availableNow=True).start())
         q.awaitTermination()
 
-    root = _STREAM_DEDUP_CACHE.get(sf_dir)
-    if root is None:
+    def run_both() -> str:
         stage = _stream_dedup_staging(spark, sf_dir)
         root = tempfile.mkdtemp(prefix="stream_dedup_")
         inp, out, ckpt = (root + "/in", root + "/out", root + "/ckpt")
@@ -1358,7 +1358,8 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         run(inp, out, ckpt)
         _link_parquet_files(stage + "/h2", inp, "h2")
         run(inp, out, ckpt)
-        _STREAM_DEDUP_CACHE[sf_dir] = root
+        return root
+    root = memo(("stream_dedup", sf_dir), run_both)
     return spark.read.parquet(root + "/out") \
         .select("content_key", "doc_id")
 
@@ -1367,9 +1368,6 @@ STREAMING_DEDUP_ORACLE = """
 SELECT md5(text) AS content_key, CAST(min(doc_id) AS BIGINT) AS doc_id
 FROM documents GROUP BY 1
 """
-
-
-_STREAM_CURATION_CACHE: dict = {}
 
 
 def streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1396,13 +1394,13 @@ def streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _streaming_curation_landing(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
-    root = _STREAM_CURATION_CACHE.get(sf_dir)
-    if root is None:
+
+    def write() -> str:
         root = tempfile.mkdtemp(prefix="stream_cur_")
         pages_from_documents(spark, sf_dir).repartition(32) \
             .write.parquet(root + "/pages")
-        _STREAM_CURATION_CACHE[sf_dir] = root
-    return root
+        return root
+    return memo(("stream_curation", sf_dir), write)
 
 
 def _streaming_curation_oracle() -> str:
@@ -1441,9 +1439,6 @@ FROM s
 STREAMING_CURATION_ORACLE = _streaming_curation_oracle()
 
 
-_COMPACT_RT_CACHE: dict = {}
-
-
 def compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver value row for the compaction maintenance op (r5, VERDICT
     r4 Missing #2): append documents to a fragmented multi-file parquet
@@ -1460,29 +1455,25 @@ def compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .plans.compact import compact_output
-    cached = _COMPACT_RT_CACHE.get(sf_dir)
-    if cached is None:
+
+    def compact() -> tuple[str, bool]:
         stage = _compact_rt_staging(spark, sf_dir)
         root = tempfile.mkdtemp(prefix="compact_rt_") + "/table"
         _link_parquet_files(stage, root, "s")
         res = compact_output(spark, root, target_file_bytes=2**40)
         shutil.rmtree(res["trash"], ignore_errors=True)
-        cached = (root, res["files_after"] < res["files_before"])
-        _COMPACT_RT_CACHE[sf_dir] = cached
-    root, reduced = cached
+        return root, res["files_after"] < res["files_before"]
+    root, reduced = memo(("compact_rt", sf_dir), compact)
     return spark.read.parquet(root).select(
         "doc_id", "text", F.lit(bool(reduced)).alias("files_reduced"))
-
-
-_COMPACT_RT_STAGE: dict = {}
 
 
 def _compact_rt_staging(spark: SparkSession, sf_dir: str) -> str:
     """Memoized fragmented table: two 64-file appends (the resumable-run
     append pattern)."""
     import tempfile
-    stage = _COMPACT_RT_STAGE.get(sf_dir)
-    if stage is None:
+
+    def write() -> str:
         stage = tempfile.mkdtemp(prefix="compact_rt_stage_") + "/table"
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
             .select("doc_id", "text")
@@ -1490,8 +1481,8 @@ def _compact_rt_staging(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("append").parquet(stage)
         docs.where("doc_id % 2 = 1").repartition(64) \
             .write.mode("append").parquet(stage)
-        _COMPACT_RT_STAGE[sf_dir] = stage
-    return stage
+        return stage
+    return memo(("compact_rt_stage", sf_dir), write)
 
 
 COMPACT_ROUNDTRIP_ORACLE = """
@@ -1578,10 +1569,7 @@ def extract_warc_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .sources import warc as W
-    # memoize the segment materialization per corpus dir: the measured
-    # operator is container-read + extraction, not fixture writing
-    tmp = _WARC_SEG_CACHE.get(sf_dir)
-    if tmp is None:
+    def write() -> str:
         pages = pages_from_documents(spark, sf_dir)
         tmp = tempfile.mkdtemp(prefix="warc_seg_")
         # r7: one segment per SCHEDULER SLOT, not a fixed 4 — the WARC
@@ -1591,12 +1579,12 @@ def extract_warc_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         # count derives from the session so cluster runs scale too.
         W.warc_segments_from_pages(
             pages.repartition(_par(spark), "url"), tmp)
-        _WARC_SEG_CACHE[sf_dir] = tmp
+        return tmp
+    # memoize the segment materialization per corpus dir: the measured
+    # operator is container-read + extraction, not fixture writing
+    tmp = memo(("warc_seg", sf_dir), write)
     out = extract_df(W.read_warc_pages(spark, tmp), _CFG)
     return out.select("url", "fmt", "markdown", "error")
-
-
-_WARC_SEG_CACHE: dict = {}
 
 
 #: lossless-container contract: identical rows to the direct path
@@ -1685,10 +1673,172 @@ def prewarm_fixtures(spark: SparkSession, sf_dir: str) -> None:
     _compact_rt_staging(spark, sf_dir)
 
 
+class Query(NamedTuple):
+    """One registered query: the Spark plan and its DuckDB oracle. The
+    oracle is SQL text or, for a replica oracle (a learned model
+    re-derived engine-free and inlined as literals), a function of the
+    data dir that returns the SQL text."""
+    name: str
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str | Callable[[str], str]
+
+
+#: every registered query, in driver-window order (see :func:`queries`)
+REGISTRY: tuple[Query, ...] = (
+    # ---- driver window (slots 1-50) ----
+    # r7-touched re-gates (policy item (a); 17 slots)
+    # r7: scan parallelism
+    Query("extract_markdown", extract_markdown, EXTRACT_MARKDOWN_ORACLE),
+    # r7: AES provider
+    Query("extract_pdf_markdown", extract_pdf_markdown, EXTRACT_PDF_ORACLE),
+    # r7: AES provider
+    Query("span_pdf_detail", span_pdf_detail, SPAN_PDF_DETAIL_ORACLE),
+    # r7: AES provider (typed errors)
+    Query("error_taxonomy", error_taxonomy, EXTRACT_ERROR_TAXONOMY_ORACLE),
+    # r7: batch IDCT decode
+    Query("extract_embedded_images", extract_embedded_images,
+          EXTRACT_EMBEDDED_IMAGES_ORACLE),
+    # r7: JPEG/OCR rewrite
+    Query("extract_scanned_markdown", extract_scanned_markdown,
+          EXTRACT_SCANNED_ORACLE),
+    # r7: segment width
+    Query("extract_warc_markdown", extract_warc_markdown, EXTRACT_WARC_ORACLE),
+    # r7: parallelism+tokenizer
+    Query("extract_quality_pipeline", extract_quality_pipeline,
+          EXTRACT_QUALITY_ORACLE),
+    # r7: scan parallelism
+    Query("content_density", content_density, CONTENT_DENSITY_ORACLE),
+    # r7: numpy pair stage
+    Query("semdedup", similarity.semdedup, similarity.semdedup_oracle),
+    # r7: numpy pair stage
+    Query("dedup_embedding_cosine", similarity.dedup_embedding_cosine,
+          similarity.DEDUP_EMBEDDING_ORACLE),
+    # r7: similarity module touched
+    Query("ann_ivf_trained", similarity.ann_ivf_trained,
+          similarity.ann_ivf_trained_oracle),
+    # r7: tk materialize-once
+    Query("substring_dedup", dedup.substring_dedup,
+          dedup.SUBSTRING_DEDUP_ORACLE),
+    # r7: tk/bg materialize-once
+    Query("lm_scores", webtext.lm_scores, webtext.LM_ORACLE),
+    # r7: bands materialize-once
+    Query("dedup_near_pipeline", dedup.dedup_near_pipeline,
+          dedup.DEDUP_NEAR_ORACLE),
+    # r7: mixed-para + rel fix
+    Query("extract_docx_markdown", extract_docx_markdown, EXTRACT_DOCX_ORACLE),
+    # r7: rel-target fix
+    Query("extract_pptx_markdown", extract_pptx_markdown, EXTRACT_PPTX_ORACLE),
+    # r5-last-gated rotation (policy item (b)): every query whose
+    # latest driver row is CORRECTNESS_r05
+    Query("extract_charset_markdown", extract_charset_markdown,
+          EXTRACT_CHARSET_ORACLE),
+    Query("span_summary", span_summary, SPAN_SUMMARY_ORACLE),
+    Query("extract_linked_markdown", extract_linked_markdown,
+          EXTRACT_LINKED_ORACLE),
+    Query("outlinks", outlinks, OUTLINKS_ORACLE),
+    Query("format_distribution", format_distribution,
+          FORMAT_DISTRIBUTION_ORACLE),
+    Query("host_stats", host_stats, HOST_STATS_ORACLE),
+    Query("host_quota_sample", host_quota_sample, HOST_QUOTA_ORACLE),
+    Query("windowed_event_counts", relational.windowed_event_counts,
+          relational.WINDOWED_EVENT_COUNTS_ORACLE),
+    Query("sessionize_events", relational.sessionize_events,
+          relational.SESSIONIZE_ORACLE),
+    Query("json_props_rollup", relational.json_props_rollup,
+          relational.JSON_PROPS_ORACLE),
+    Query("dedup_exact", dedup.dedup_exact, dedup.DEDUP_EXACT_ORACLE),
+    Query("dedup_minhash_lsh", dedup.dedup_minhash_lsh,
+          dedup.DEDUP_MINHASH_LSH_ORACLE),
+    Query("incremental_dedup", dedup.incremental_dedup,
+          dedup.INCREMENTAL_DEDUP_ORACLE),
+    Query("minhash_signatures", dedup.minhash_signatures,
+          dedup.MINHASH_SIG_ORACLE),
+    Query("simhash", dedup.simhash, dedup.SIMHASH_ORACLE),
+    Query("ngram_jaccard", dedup.ngram_jaccard, dedup.NGRAM_JACCARD_ORACLE),
+    Query("token_counts", text_stats.token_counts,
+          text_stats.TOKEN_COUNTS_ORACLE),
+    Query("quality_scores", text_stats.quality_scores,
+          text_stats.QUALITY_ORACLE),
+    Query("quality_model_score", text_stats.quality_model_score,
+          text_stats.QUALITY_MODEL_ORACLE),
+    Query("token_length_hist", text_stats.token_length_hist,
+          text_stats.TOKEN_HIST_ORACLE),
+    Query("retention_report", text_stats.retention_report,
+          text_stats.RETENTION_REPORT_ORACLE),
+    Query("tfidf_topterms", text_stats.tfidf_topterms,
+          text_stats.TFIDF_ORACLE),
+    Query("lang_id", text_stats.lang_id, text_stats.LANG_ID_ORACLE),
+    Query("fingerprints", text_stats.fingerprints,
+          text_stats.FINGERPRINT_ORACLE),
+    Query("cosine_topk", similarity.cosine_topk,
+          similarity.COSINE_TOPK_ORACLE),
+    Query("ann_lsh", similarity.ann_lsh, similarity.ANN_LSH_ORACLE),
+    Query("ann_ivf", similarity.ann_ivf, similarity.ANN_IVF_ORACLE),
+    Query("extract_rich_markdown", extract_rich_markdown, EXTRACT_RICH_ORACLE),
+    Query("span_detail", span_detail, SPAN_DETAIL_ORACLE),
+    Query("anchor_text_rollup", anchor_text_rollup, ANCHOR_ROLLUP_ORACLE),
+    Query("quality_filter", text_stats.quality_filter,
+          text_stats.QUALITY_FILTER_ORACLE),
+    Query("ann_recall_report", similarity.ann_recall_report,
+          similarity.ANN_RECALL_ORACLE),
+    Query("bpe_train", bpe.bpe_train, bpe.bpe_train_oracle),
+    # ---- past the driver window (slots 51+): all r6-driver-green
+    # (CORRECTNESS_r06 50/50); due back r8 ----
+    Query("crawl_curation", crawl_curation, CRAWL_CURATION_ORACLE),
+    Query("bpe_vocab", bpe.bpe_vocab, bpe.bpe_vocab_oracle),
+    Query("extract_adoc_markdown", extract_adoc_markdown, EXTRACT_ADOC_ORACLE),
+    Query("pii_scrub", pii.pii_scrub, pii.PII_ORACLE),
+    Query("host_link_graph", host_link_graph, HOST_LINK_GRAPH_ORACLE),
+    Query("host_pagerank", host_pagerank, HOST_PAGERANK_ORACLE),
+    Query("head_meta", head_meta, HEAD_META_ORACLE),
+    Query("sitemap_urls", sitemap_urls, SITEMAP_URLS_ORACLE),
+    Query("crawl_snapshot_diff", webtext.crawl_snapshot_diff,
+          webtext.SNAPSHOT_DIFF_ORACLE),
+    Query("fetch_schedule", webtext.fetch_schedule,
+          webtext.FETCH_SCHEDULE_ORACLE),
+    Query("dedup_window_latest", relational.latest_event_per_user,
+          relational.LATEST_EVENT_ORACLE),
+    Query("resume_anti_join", relational.resume_anti_join,
+          relational.RESUME_ANTI_JOIN_ORACLE),
+    Query("metrics_rollup", relational.metrics_rollup,
+          relational.METRICS_ROLLUP_ORACLE),
+    Query("passage_dedup", dedup.passage_dedup, dedup.PASSAGE_DEDUP_ORACLE),
+    Query("media_metadata", multimodal.media_metadata,
+          multimodal.MEDIA_METADATA_ORACLE),
+    Query("image_features", multimodal.image_features,
+          multimodal.IMAGE_FEATURES_ORACLE),
+    Query("image_metadata", multimodal.image_metadata,
+          multimodal.IMAGE_METADATA_ORACLE),
+    Query("repetition_scores", webtext.repetition_scores,
+          webtext.REPETITION_ORACLE),
+    Query("url_canonical_dedup", webtext.url_canonical_dedup,
+          webtext.URL_CANON_ORACLE),
+    Query("contamination_flags", webtext.contamination_flags,
+          webtext.CONTAMINATION_ORACLE),
+    Query("dataset_split", webtext.dataset_split, webtext.SPLIT_ORACLE),
+    Query("bpe_segment_counts", bpe.bpe_segment_counts,
+          bpe.bpe_segment_oracle),
+    Query("stratified_sample", webtext.stratified_sample,
+          webtext.STRATIFIED_ORACLE),
+    Query("normalize_text", webtext.normalize_text, webtext.NORMALIZE_ORACLE),
+    Query("robots_filter", webtext.robots_filter, webtext.ROBOTS_ORACLE),
+    Query("extract_images", extract_images, EXTRACT_IMAGES_ORACLE),
+    Query("streaming_curation", streaming_curation, STREAMING_CURATION_ORACLE),
+    Query("streaming_dedup", streaming_dedup, STREAMING_DEDUP_ORACLE),
+    Query("compact_roundtrip", compact_roundtrip, COMPACT_ROUNDTRIP_ORACLE),
+    Query("sequence_packing", webtext.sequence_packing,
+          webtext.PACKING_ORACLE),
+    Query("quality_filter_neardup", text_stats.quality_filter_neardup,
+          text_stats.QUALITY_FILTER_NEARDUP_ORACLE),
+    Query("dsir_importance", webtext.dsir_importance, webtext.DSIR_ORACLE),
+    Query("domain_mixture", webtext.domain_mixture, webtext.MIXTURE_ORACLE),
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry order is LOAD-BEARING: the driver's correctness gate
     evaluates exactly the first 50 entries (verified r3: CORRECTNESS_r03
-    keys == this dict's keys[0:50], in order).
+    keys == the first 50 REGISTRY names, in order).
 
     ROTATION POLICY (r5): with 83 registered queries and 50 driver
     slots, the window ALTERNATES — every query rotated out in round K
@@ -1698,8 +1848,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     (b) every query last gated two rounds ago, (c) the remaining slots
     filled with the highest-value composites from last round's window.
     Queries out of the window stay registered for bench + the
-    self-sweep replica (tools/sweep_driver_canon) and carry an inline
-    ``# out r7 (r6-green)`` marker naming their last driver row.
+    self-sweep replica (tools/sweep_driver_canon) and sit below the
+    slot-50 boundary comment in REGISTRY, which names their last driver
+    row.
 
     r7 window = the 33 queries last gated in CORRECTNESS_r05 (policy
     item (b) — rotated out r6, due back now) + 17 slots of r7-touched
@@ -1721,201 +1872,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     at sf0.001/sf0.1 before this rotation shipped. The 33 rotated out
     are all r6-driver-green (CORRECTNESS_r06: 50/50), due back r8.
     """
-    return {
-        # ---- driver window (slots 1-50) ----
-        # r7-touched re-gates (policy item (a); 17 slots)
-        "extract_markdown": extract_markdown,              # r7: scan parallelism
-        "extract_pdf_markdown": extract_pdf_markdown,      # r7: AES provider
-        "span_pdf_detail": span_pdf_detail,                # r7: AES provider
-        "error_taxonomy": error_taxonomy,                  # r7: AES provider (typed errors)
-        "extract_embedded_images": extract_embedded_images,  # r7: batch IDCT decode
-        "extract_scanned_markdown": extract_scanned_markdown,  # r7: JPEG/OCR rewrite
-        "extract_warc_markdown": extract_warc_markdown,    # r7: segment width
-        "extract_quality_pipeline": extract_quality_pipeline,  # r7: parallelism+tokenizer
-        "content_density": content_density,                # r7: scan parallelism
-        "semdedup": similarity.semdedup,                   # r7: numpy pair stage
-        "dedup_embedding_cosine": similarity.dedup_embedding_cosine,  # r7: numpy pair stage
-        "ann_ivf_trained": similarity.ann_ivf_trained,     # r7: similarity module touched
-        "substring_dedup": dedup.substring_dedup,          # r7: tk materialize-once
-        "lm_scores": webtext.lm_scores,                    # r7: tk/bg materialize-once
-        "dedup_near_pipeline": dedup.dedup_near_pipeline,  # r7: bands materialize-once
-        "extract_docx_markdown": extract_docx_markdown,    # r7: mixed-para + rel fix
-        "extract_pptx_markdown": extract_pptx_markdown,    # r7: rel-target fix
-        # r5-last-gated rotation (policy item (b)): every query whose
-        # latest driver row is CORRECTNESS_r05
-        "extract_charset_markdown": extract_charset_markdown,
-        "span_summary": span_summary,
-        "extract_linked_markdown": extract_linked_markdown,
-        "outlinks": outlinks,
-        "format_distribution": format_distribution,
-        "host_stats": host_stats,
-        "host_quota_sample": host_quota_sample,
-        "windowed_event_counts": relational.windowed_event_counts,
-        "sessionize_events": relational.sessionize_events,
-        "json_props_rollup": relational.json_props_rollup,
-        "dedup_exact": dedup.dedup_exact,
-        "dedup_minhash_lsh": dedup.dedup_minhash_lsh,
-        "incremental_dedup": dedup.incremental_dedup,
-        "minhash_signatures": dedup.minhash_signatures,
-        "simhash": dedup.simhash,
-        "ngram_jaccard": dedup.ngram_jaccard,
-        "token_counts": text_stats.token_counts,
-        "quality_scores": text_stats.quality_scores,
-        "quality_model_score": text_stats.quality_model_score,
-        "token_length_hist": text_stats.token_length_hist,
-        "retention_report": text_stats.retention_report,
-        "tfidf_topterms": text_stats.tfidf_topterms,
-        "lang_id": text_stats.lang_id,
-        "fingerprints": text_stats.fingerprints,
-        "cosine_topk": similarity.cosine_topk,
-        "ann_lsh": similarity.ann_lsh,
-        "ann_ivf": similarity.ann_ivf,
-        "extract_rich_markdown": extract_rich_markdown,
-        "span_detail": span_detail,
-        "anchor_text_rollup": anchor_text_rollup,
-        "quality_filter": text_stats.quality_filter,
-        "ann_recall_report": similarity.ann_recall_report,
-        "bpe_train": bpe.bpe_train,
-        # ---- past the driver window (slots 51+): all r6-driver-green
-        # (CORRECTNESS_r06 50/50); due back r8 ----
-        "crawl_curation": crawl_curation,                  # out r7 (r6-green)
-        "bpe_vocab": bpe.bpe_vocab,                        # out r7 (r6-green)
-        "extract_adoc_markdown": extract_adoc_markdown,    # out r7 (r6-green)
-        "pii_scrub": pii.pii_scrub,                        # out r7 (r6-green)
-        "host_link_graph": host_link_graph,                # out r7 (r6-green)
-        "host_pagerank": host_pagerank,                    # out r7 (r6-green)
-        "head_meta": head_meta,                            # out r7 (r6-green)
-        "sitemap_urls": sitemap_urls,                      # out r7 (r6-green)
-        "crawl_snapshot_diff": webtext.crawl_snapshot_diff,  # out r7 (r6-green)
-        "fetch_schedule": webtext.fetch_schedule,          # out r7 (r6-green)
-        "dedup_window_latest": relational.latest_event_per_user,  # out r7 (r6-green)
-        "resume_anti_join": relational.resume_anti_join,   # out r7 (r6-green)
-        "metrics_rollup": relational.metrics_rollup,       # out r7 (r6-green)
-        "passage_dedup": dedup.passage_dedup,              # out r7 (r6-green)
-        "media_metadata": multimodal.media_metadata,       # out r7 (r6-green)
-        "image_features": multimodal.image_features,       # out r7 (r6-green)
-        "image_metadata": multimodal.image_metadata,       # out r7 (r6-green)
-        "repetition_scores": webtext.repetition_scores,    # out r7 (r6-green)
-        "url_canonical_dedup": webtext.url_canonical_dedup,  # out r7 (r6-green)
-        "contamination_flags": webtext.contamination_flags,  # out r7 (r6-green)
-        "dataset_split": webtext.dataset_split,            # out r7 (r6-green)
-        "bpe_segment_counts": bpe.bpe_segment_counts,      # out r7 (r6-green)
-        "stratified_sample": webtext.stratified_sample,    # out r7 (r6-green)
-        "normalize_text": webtext.normalize_text,          # out r7 (r6-green)
-        "robots_filter": webtext.robots_filter,            # out r7 (r6-green)
-        "extract_images": extract_images,                  # out r7 (r6-green)
-        "streaming_curation": streaming_curation,          # out r7 (r6-green)
-        "streaming_dedup": streaming_dedup,                # out r7 (r6-green)
-        "compact_roundtrip": compact_roundtrip,            # out r7 (r6-green)
-        "sequence_packing": webtext.sequence_packing,      # out r7 (r6-green)
-        "quality_filter_neardup": text_stats.quality_filter_neardup,  # out r7 (r6-green)
-        "dsir_importance": webtext.dsir_importance,        # out r7 (r6-green)
-        "domain_mixture": webtext.domain_mixture,          # out r7 (r6-green)
-    }
+    return {q.name: q.fn for q in REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    out = {
-        "extract_markdown": EXTRACT_MARKDOWN_ORACLE,
-        "extract_pdf_markdown": EXTRACT_PDF_ORACLE,
-        "extract_docx_markdown": EXTRACT_DOCX_ORACLE,
-        "extract_pptx_markdown": EXTRACT_PPTX_ORACLE,
-        "extract_adoc_markdown": EXTRACT_ADOC_ORACLE,
-        "extract_images": EXTRACT_IMAGES_ORACLE,
-        "extract_embedded_images": EXTRACT_EMBEDDED_IMAGES_ORACLE,
-        "span_summary": SPAN_SUMMARY_ORACLE,
-        "span_detail": SPAN_DETAIL_ORACLE,
-        "span_pdf_detail": SPAN_PDF_DETAIL_ORACLE,
-        "format_distribution": FORMAT_DISTRIBUTION_ORACLE,
-        "host_stats": HOST_STATS_ORACLE,
-        "host_quota_sample": HOST_QUOTA_ORACLE,
-        "extract_rich_markdown": EXTRACT_RICH_ORACLE,
-        "extract_linked_markdown": EXTRACT_LINKED_ORACLE,
-        "outlinks": OUTLINKS_ORACLE,
-        "anchor_text_rollup": ANCHOR_ROLLUP_ORACLE,
-        "host_link_graph": HOST_LINK_GRAPH_ORACLE,
-        "host_pagerank": HOST_PAGERANK_ORACLE,
-        "extract_quality_pipeline": EXTRACT_QUALITY_ORACLE,
-        "head_meta": HEAD_META_ORACLE,
-        "crawl_curation": CRAWL_CURATION_ORACLE,
-        "streaming_curation": STREAMING_CURATION_ORACLE,
-        "streaming_dedup": STREAMING_DEDUP_ORACLE,
-        "compact_roundtrip": COMPACT_ROUNDTRIP_ORACLE,
-        "content_density": CONTENT_DENSITY_ORACLE,
-        "extract_scanned_markdown": EXTRACT_SCANNED_ORACLE,
-        "extract_warc_markdown": EXTRACT_WARC_ORACLE,
-        "extract_charset_markdown": EXTRACT_CHARSET_ORACLE,
-        "sitemap_urls": SITEMAP_URLS_ORACLE,
-        "error_taxonomy": EXTRACT_ERROR_TAXONOMY_ORACLE,
-        "crawl_snapshot_diff": webtext.SNAPSHOT_DIFF_ORACLE,
-        "fetch_schedule": webtext.FETCH_SCHEDULE_ORACLE,
-        "sequence_packing": webtext.PACKING_ORACLE,
-        "domain_mixture": webtext.MIXTURE_ORACLE,
-        "dsir_importance": webtext.DSIR_ORACLE,
-        "dedup_window_latest": relational.LATEST_EVENT_ORACLE,
-        "resume_anti_join": relational.RESUME_ANTI_JOIN_ORACLE,
-        "metrics_rollup": relational.METRICS_ROLLUP_ORACLE,
-        "windowed_event_counts": relational.WINDOWED_EVENT_COUNTS_ORACLE,
-        "sessionize_events": relational.SESSIONIZE_ORACLE,
-        "json_props_rollup": relational.JSON_PROPS_ORACLE,
-        "dedup_exact": dedup.DEDUP_EXACT_ORACLE,
-        "minhash_signatures": dedup.MINHASH_SIG_ORACLE,
-        "dedup_minhash_lsh": dedup.DEDUP_MINHASH_LSH_ORACLE,
-        "simhash": dedup.SIMHASH_ORACLE,
-        "ngram_jaccard": dedup.NGRAM_JACCARD_ORACLE,
-        "dedup_near_pipeline": dedup.DEDUP_NEAR_ORACLE,
-        "incremental_dedup": dedup.INCREMENTAL_DEDUP_ORACLE,
-        "passage_dedup": dedup.PASSAGE_DEDUP_ORACLE,
-        "substring_dedup": dedup.SUBSTRING_DEDUP_ORACLE,
-        "token_counts": text_stats.TOKEN_COUNTS_ORACLE,
-        "quality_scores": text_stats.QUALITY_ORACLE,
-        "quality_filter": text_stats.QUALITY_FILTER_ORACLE,
-        "quality_filter_neardup": text_stats.QUALITY_FILTER_NEARDUP_ORACLE,
-        "quality_model_score": text_stats.QUALITY_MODEL_ORACLE,
-        "retention_report": text_stats.RETENTION_REPORT_ORACLE,
-        "token_length_hist": text_stats.TOKEN_HIST_ORACLE,
-        "tfidf_topterms": text_stats.TFIDF_ORACLE,
-        "lang_id": text_stats.LANG_ID_ORACLE,
-        "fingerprints": text_stats.FINGERPRINT_ORACLE,
-        "cosine_topk": similarity.COSINE_TOPK_ORACLE,
-        "ann_lsh": similarity.ANN_LSH_ORACLE,
-        "ann_recall_report": similarity.ANN_RECALL_ORACLE,
-        "ann_ivf": similarity.ANN_IVF_ORACLE,
-        "dedup_embedding_cosine": similarity.DEDUP_EMBEDDING_ORACLE,
-        "media_metadata": multimodal.MEDIA_METADATA_ORACLE,
-        "image_features": multimodal.IMAGE_FEATURES_ORACLE,
-        "image_metadata": multimodal.IMAGE_METADATA_ORACLE,
-        "repetition_scores": webtext.REPETITION_ORACLE,
-        "url_canonical_dedup": webtext.URL_CANON_ORACLE,
-        "contamination_flags": webtext.CONTAMINATION_ORACLE,
-        "dataset_split": webtext.SPLIT_ORACLE,
-        "lm_scores": webtext.LM_ORACLE,
-        "pii_scrub": pii.PII_ORACLE,
-        "stratified_sample": webtext.STRATIFIED_ORACLE,
-        "normalize_text": webtext.NORMALIZE_ORACLE,
-        "robots_filter": webtext.ROBOTS_ORACLE,
-    }
-    # the learned-IVF oracle trains an engine-free k-means replica over
-    # the embeddings parquet (memoized). If that data is unreachable in
-    # this checkout, omit ONLY this entry (the driver then records the
-    # weaker rows-only check) instead of failing all oracles (r3 review
-    # find: a dict-literal exception would take the other 45 down).
-    try:
-        out["ann_ivf_trained"] = similarity.ann_ivf_trained_oracle()
-    except Exception:
-        pass
-    try:
-        out["semdedup"] = similarity.semdedup_oracle()
-    except Exception:
-        pass
-    # same contract for the BPE replica oracle (trains over documents
-    # parquet at oracle-build time)
-    try:
-        out["bpe_train"] = bpe.bpe_train_oracle()
-        out["bpe_vocab"] = bpe.bpe_vocab_oracle()
-        out["bpe_segment_counts"] = bpe.bpe_segment_oracle()
-    except Exception:
-        pass
+    """DuckDB oracle SQL per query. Replica oracles are built over the
+    ``SWEEP_SF_DIR`` corpus, by default the driver's correctness scale
+    (sf0.01), and memoized. If a replica's data is unreachable in this
+    checkout, omit ONLY that entry (the driver then records the weaker
+    rows-only check) instead of failing all oracles (r3 review find)."""
+    sf_dir = os.environ.get("SWEEP_SF_DIR", "/root/testdata/sf0.01")
+    out = {}
+    for name, _, oracle in REGISTRY:
+        try:
+            out[name] = oracle if isinstance(oracle, str) else oracle(sf_dir)
+        except Exception:
+            pass
     return out
 
 

@@ -9,6 +9,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from docling_api_spark.queries import REGISTRY
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
@@ -48,30 +49,7 @@ def _rows(cols, data):
 
 
 QUERY_NAMES = sorted(entrymod.queries().keys())
-
-
-#: oracles whose SQL depends on the data dir (learned-centroid literals)
-#: — the registered string targets the driver's sf0.01; rebuild for the
-#: dir THIS test runs at (r3: ann_ivf_trained gained a replica oracle,
-#: nothing is rows-only anymore)
-def _dir_dependent_oracle(name: str):
-    if name == "ann_ivf_trained":
-        from docling_api_spark.operators.similarity import \
-            ann_ivf_trained_oracle
-        return ann_ivf_trained_oracle(SF_DIR)
-    if name == "semdedup":
-        from docling_api_spark.operators.similarity import semdedup_oracle
-        return semdedup_oracle(SF_DIR)
-    if name == "bpe_train":
-        from docling_api_spark.operators.bpe import bpe_train_oracle
-        return bpe_train_oracle(SF_DIR)
-    if name == "bpe_vocab":
-        from docling_api_spark.operators.bpe import bpe_vocab_oracle
-        return bpe_vocab_oracle(SF_DIR)
-    if name == "bpe_segment_counts":
-        from docling_api_spark.operators.bpe import bpe_segment_oracle
-        return bpe_segment_oracle(SF_DIR)
-    return None
+ORACLES = {q.name: q.oracle for q in REGISTRY}
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
@@ -81,8 +59,11 @@ def test_query_matches_oracle(spark, duck, name):
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
 
-    oracle = _dir_dependent_oracle(name) or entrymod.oracle_sql().get(name)
-    assert oracle is not None, f"{name}: no oracle registered"
+    oracle = ORACLES[name]
+    if not isinstance(oracle, str):
+        # replica oracle (learned-model literals): oracle_sql() builds it
+        # for SWEEP_SF_DIR; rebuild it for the dir THIS test runs at
+        oracle = oracle(SF_DIR)
     res = duck.sql(oracle)
     dcols = res.columns
     drows = res.fetchall()
@@ -101,3 +82,16 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns == ["url", "fmt", "markdown", "error"]
+
+
+def test_oracle_sql_is_derived_from_registry(monkeypatch):
+    # every query has an oracle; replica oracles are built for SWEEP_SF_DIR
+    monkeypatch.setenv("SWEEP_SF_DIR", SF_DIR)
+    want = {name: o if isinstance(o, str) else o(SF_DIR)
+            for name, o in ORACLES.items()}
+    assert entrymod.oracle_sql() == want
+    assert list(want) == list(entrymod.queries())
+    # unreachable replica data omits only the replica entries
+    monkeypatch.setenv("SWEEP_SF_DIR", "/nonexistent/sf")
+    assert set(entrymod.oracle_sql()) == {
+        name for name, o in ORACLES.items() if isinstance(o, str)}
