@@ -12,7 +12,7 @@ no caller ever set them.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -35,9 +35,6 @@ class ExtractConfig:
     #:   pathologically skewed input layouts (one giant unsplittable file),
     #:   at the cost of shuffling the full page bytes once (~2x measured).
     partition_mode: str = "file"
-
-    # test hook: raise inside the UDF for these partition_ids (resume test)
-    fail_partitions: frozenset = field(default_factory=frozenset)
 
     def __post_init__(self):
         if self.partition_mode not in ("file", "salted"):

@@ -187,13 +187,6 @@ def make_convert_fn(cfg: ExtractConfig):
 
     def convert_partition(batches):
         for batch in batches:
-            if cfg.fail_partitions:
-                # test hook for the resume/kill test — never set in prod
-                hit = cfg.fail_partitions.intersection(
-                    batch.column("partition_id").to_pylist())
-                if hit:
-                    raise RuntimeError(
-                        f"injected failure in partition {min(hit)}")
             html = batch.column("html")
             rows = []
             for content, url in zip(html.to_pylist(),

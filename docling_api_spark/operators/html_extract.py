@@ -54,7 +54,6 @@ from __future__ import annotations
 import base64
 import re
 from dataclasses import dataclass, field
-from html.parser import HTMLParser
 
 from ..config import ExtractConfig
 
@@ -102,14 +101,14 @@ class Node:
         self.parent = parent
 
 
-class _TreeBuilder(HTMLParser):
+class _TreeBuilder:
     """Tolerant DOM builder: unmatched end tags are ignored, ``<p>``
     auto-closes on a new block tag, everything auto-closes at EOF —
     total-function requirement (``raises_on_error=False`` semantics,
-    ``service.py:80``)."""
+    ``service.py:80``). Its ``handle_*`` callbacks are html.parser's, so
+    the stdlib reference tokenizer can drive the same builder."""
 
     def __init__(self):
-        super().__init__(convert_charrefs=True)
         self.root = Node("#root")
         self.cur = self.root
 
@@ -152,20 +151,9 @@ class _TreeBuilder(HTMLParser):
                 ch.append(data)
 
 
-def parse_html_stdlib(text: str) -> Node:
-    """Reference tokenizer (stdlib html.parser). Kept as the differential
-    oracle for the fast scanner below; ~3x slower (it tracks source
-    positions and re-scans per construct)."""
-    tb = _TreeBuilder()
-    tb.feed(text)
-    tb.close()
-    return tb.root
-
-
 # one pass, one compiled alternation; group 1 = end-tag name, group 2 =
-# start-tag name (attr blob is scanned by _scan_tag_end — a quote-aware
-# char loop, NOT a regex: an ambiguous quoted-or-unquoted blob pattern
-# backtracks exponentially on truncated tags full of quotes), group 3 =
+# start-tag name (the attr blob is classified by _find_tag_end: a linear
+# unambiguous regex, else html.parser's own regexes), group 3 =
 # unterminated-construct marker (stdlib incomplete rule applies).
 #: marked sections, exactly as _markupbase.parse_marked_section: the
 #: keyword right after '<![' picks the close pattern — cdata-class
@@ -277,57 +265,6 @@ def _find_tag_end(text: str, pos: int, s: int) -> tuple[str, int, bool]:
     return _stdlib_tag_end(text, s)
 
 
-def _scan_tag_end(text: str, pos: int) -> tuple[int, int, bool]:
-    """Scan a start tag's attribute region from ``pos`` (just past the tag
-    name) to its closing '>'. Linear, quote-aware, and HTML5-faithful about
-    the self-closing slash: '/' inside a quoted or unquoted attribute VALUE
-    is data ('<a href=https://x/>' is NOT self-closing), '/' between
-    attributes is. Returns (blob_end_exclusive, resume_pos, self_closing);
-    blob_end == -1
-    means EOF before '>' (caller applies the stdlib incomplete rule)."""
-    n = len(text)
-    j = pos
-    quote = ""          # inside "..." or '...'
-    unquoted = False    # inside an unquoted attribute value
-    seen_eq = False     # just passed '=' (value comes next)
-    slash = False       # a self-closing-position slash was last seen
-    while j < n:
-        ch = text[j]
-        if quote:
-            if ch == quote:
-                quote = ""
-        elif ch == ">":
-            return (j - 1 if slash else j), j + 1, slash
-        elif ch in "\"'":
-            # a quote is a delimiter ONLY right after '=' (HTML5
-            # before-attribute-value state); anywhere else it's a junk
-            # name/value character like any other
-            if seen_eq:
-                quote = ch
-                seen_eq = False
-            slash = False
-        elif ch in " \t\r\n":
-            unquoted = False
-            seen_eq = False
-            slash = False
-        elif ch == "=":
-            seen_eq = True
-            slash = False
-        elif ch == "/":
-            if seen_eq or unquoted:
-                unquoted = True
-                seen_eq = False
-            else:
-                slash = True
-        else:
-            if seen_eq or unquoted:
-                unquoted = True
-                seen_eq = False
-            slash = False
-        j += 1
-    return -1, n, False
-
-
 def _incomplete_end(text: str, i: int) -> int:
     """stdlib html.parser's rule for an incomplete construct at EOF-side
     parsing: flush data up to (and including) the next '>', else up to the
@@ -427,11 +364,13 @@ def _candidate_end(text: str, pos: int, tag: str):
         scan = m.end()
         if m.group(2) is not None:
             # trailing '/' is usually part of an unquoted value (stdlib/
-            # HTML5), i.e. the script OPENS rawtext; ask the state machine
+            # HTML5), i.e. the script OPENS rawtext; ask html.parser
             selfclose = False
             if m.group(0).endswith("/>"):
-                _, _, selfclose = _scan_tag_end(
-                    text, m.start(2) + len(m.group(2)))
+                kind, end, selfclose = _find_tag_end(text, m.end(2),
+                                                     m.start())
+                if kind != "tag" or end != m.end():
+                    return None
             if not selfclose:
                 m3 = _RAWTEXT_END[m.group(2).lower()].search(text, scan)
                 if m3 is None:
@@ -443,13 +382,15 @@ def _candidate_end(text: str, pos: int, tag: str):
         if m.group(1):
             depth -= 1
         else:
-            # same self-closing classification as _try_skip_subtree: a
+            # same self-closing classification as the tree path: a
             # genuinely self-closing <nav/> must not add depth, and
             # <nav a=b/> (slash is value data per HTML5) must
             selfclose = False
             if m.group(0).endswith("/>"):
-                _, _, selfclose = _scan_tag_end(
-                    text, m.start() + 1 + len(tag))
+                kind, end, selfclose = _find_tag_end(
+                    text, m.start() + 1 + len(tag), m.start())
+                if kind != "tag" or end != m.end():
+                    return None
             if not selfclose:
                 depth += 1
     return scan
@@ -506,11 +447,14 @@ def _try_skip_subtree(text: str, pos: int, tag: str):
         selfclose = False
         if m.group(3).endswith("/"):
             # '/' ending an unquoted attribute VALUE is data, not a
-            # self-close — same state machine as the tree path, else a
+            # self-close — the tree path's classifier decides, else a
             # nested same-name tag like <nav a=b/> is wrongly treated
             # as self-closing, the region ends at the wrong close tag,
-            # and boilerplate text leaks into the output
-            _, _, selfclose = _scan_tag_end(text, m.start(2) + len(name))
+            # and boilerplate text leaks into the output; a construct
+            # html.parser reads differently aborts the skip
+            kind, end, selfclose = _find_tag_end(text, m.end(2), lt)
+            if kind != "tag" or end != m.end():
+                return None
         rt = _RAWTEXT_END.get(name)
         if rt is not None:
             if not selfclose:
@@ -543,10 +487,11 @@ def _parse_attrs(blob: str) -> list:
 def parse_html(text: str) -> Node:
     """Fast single-pass tokenizer feeding the same tolerant tree builder.
 
-    Matches parse_html_stdlib on the whole fixture corpus, an adversarial
-    set, and a hypothesis random-soup differential. Attribute regions are
-    scanned with a linear quote-aware char loop (no backtracking — a
-    regex blob is exponential on truncated quote-heavy tags); entities
+    Matches the stdlib html.parser driving the same builder on the whole
+    fixture corpus, an adversarial set, and a hypothesis random-soup
+    differential. Attribute regions are classified by _find_tag_end (a
+    linear regex fast path, html.parser's own regexes for every hard
+    case — never an exponential backtracking blob pattern); entities
     decode only when an ampersand is present; stray '<' runs are data;
     incomplete constructs follow the stdlib flush rule; script/style
     bodies are raw text ended only by an exact-name close tag."""
@@ -635,7 +580,6 @@ def parse_html(text: str) -> Node:
                     data(text[pos:])
                 endtag(tag)
                 pos = n
-    tb.close()
     return tb.root
 
 
@@ -735,10 +679,6 @@ def _collapse(s: str) -> str:
     lines = [_WS_RX.sub(" ", ln).strip() for ln in s.split("\n")]
     lines = [ln for ln in lines if ln]
     return "\n".join(lines)
-
-
-def _is_blockish(c) -> bool:
-    return not isinstance(c, str) and c.tag in BLOCK_TAGS
 
 
 def _list_blocks(node, ctx: _Ctx, depth: int, ordered: bool, out_lines: list):

@@ -99,50 +99,6 @@ def _fdct_quant(block: list[int]) -> list[int]:
     return [out[i] for i in _ZIGZAG]
 
 
-def _idct(coefs: list[int], qtable: list[int]) -> list[int]:
-    """zig-zag quantized coefficients + the stream's quant table →
-    8x8 spatial block (clamped 0..255). Two fast paths that matter on
-    real scans: DC-only blocks (flat regions — most of a document
-    raster) skip the transform entirely, and the separable pass skips
-    all-zero coefficient columns (quantized blocks are sparse)."""
-    dq = [0.0] * 64
-    nonzero = False
-    for k, pos in enumerate(_ZIGZAG):
-        c = coefs[k]
-        if c:
-            dq[pos] = c * qtable[pos]
-            if k:
-                nonzero = True
-    if not nonzero:                      # DC-only: f(x,y) = F00/8
-        val = int(math.floor(dq[0] / 8.0 + 128.5))
-        val = 0 if val < 0 else 255 if val > 255 else val
-        return [val] * 64
-    # tmp[u][y] = sum_v C(v) F(u,v) cos(v,y)
-    tmp = [[0.0] * 8 for _ in range(8)]
-    for u in range(8):
-        col = [dq[v * 8 + u] for v in range(8)]
-        if not any(col):
-            continue
-        for y in range(8):
-            s = 0.0
-            for v in range(8):
-                c = col[v]
-                if c:
-                    s += _C[v] * c * _COS[v][y]
-            tmp[u][y] = s
-    out = []
-    for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for u in range(8):
-                t = tmp[u][y]
-                if t:
-                    s += _C[u] * t * _COS[u][x]
-            val = int(math.floor(s / 4.0 + 128.5))
-            out.append(0 if val < 0 else 255 if val > 255 else val)
-    return out
-
-
 # ------------------------------------------------ generated Huffman
 
 def _canonical(vals: list[int]) -> tuple[list[int], list[int]]:
@@ -270,62 +226,19 @@ def encode_gray_jpeg(width: int, height: int, pixels: bytes) -> bytes:
 
 # ---------------------------------------------------------- decoder
 
-class _BitReader:
-    """MSB-first bit reader over DESTUFFED scan bytes (the 0xFF00 →
-    0xFF rewrite happens once, up front — per-bit stuffing checks were
-    the decoder's dominant cost). Reads past the end see zero padding;
-    the block loop's own bounds catch genuinely truncated data."""
-
-    __slots__ = ("data", "pos", "acc", "n")
-
-    def __init__(self, scan: bytes):
-        # a 0xFF followed by anything but 0x00 inside the scan is a
-        # marker (RST/DNL) — outside the scoped grammar, typed
-        i = scan.find(b"\xff")
-        while i != -1:
-            if i == len(scan) - 1:
-                break              # dangling 0xFF at the very end: pad
-            if scan[i + 1] != 0x00:
-                raise ValueError(
-                    f"jpeg: marker 0xFF{scan[i + 1]:02X} in scan")
-            i = scan.find(b"\xff", i + 2)
-        self.data = scan.replace(b"\xff\x00", b"\xff")
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def _fill(self, k: int) -> None:
-        # zero-pads past the end so peek16 near the last block works;
-        # truncation() makes over-consumption detectable EXACTLY —
-        # peeked-but-unconsumed padding is fine, consumed padding is a
-        # truncated stream (the silent-garble alternative is forbidden)
-        data, pos, n = self.data, self.pos, self.n
-        acc = self.acc
-        while n < k:
-            acc = (acc << 8) | (data[pos] if pos < len(data) else 0)
-            pos += 1
-            n += 8
-        self.acc, self.pos, self.n = acc, pos, n
-
-    def truncated(self) -> bool:
-        """True iff bits BEYOND the scan data were consumed (not just
-        peeked): consumed_bits = pos*8 − n must stay ≤ len(data)*8."""
-        return (self.pos - len(self.data)) * 8 > self.n
-
-    def bits(self, k: int) -> int:
-        if not k:
-            return 0
-        if self.n < k:
-            self._fill(k)
-        self.n -= k
-        v = (self.acc >> self.n) & ((1 << k) - 1)
-        self.acc &= (1 << self.n) - 1
-        return v
-
-    def peek16(self) -> int:
-        if self.n < 16:
-            self._fill(16)
-        return (self.acc >> (self.n - 16)) & 0xFFFF
+def _destuff(scan: bytes) -> bytes:
+    """Entropy-coded scan bytes with the 0xFF00 → 0xFF stuffing undone,
+    once, up front (per-bit stuffing checks were the decoder's dominant
+    cost). A 0xFF followed by anything but 0x00 inside the scan is a
+    marker (RST/DNL) — outside the scoped grammar, typed."""
+    i = scan.find(b"\xff")
+    while i != -1:
+        if i == len(scan) - 1:
+            break              # dangling 0xFF at the very end: pad
+        if scan[i + 1] != 0x00:
+            raise ValueError(f"jpeg: marker 0xFF{scan[i + 1]:02X} in scan")
+        i = scan.find(b"\xff", i + 2)
+    return scan.replace(b"\xff\x00", b"\xff")
 
 
 def _dec_table(bits: list[int], vals: list[int]):
@@ -356,43 +269,21 @@ def _dec_table(bits: list[int], vals: list[int]):
     return lut, long
 
 
-def _read_huff(br: _BitReader, table) -> int:
-    lut, long = table
-    word = br.peek16()
-    hit = lut[word >> 8]
-    if hit is not None:
-        sym, ln = hit
-        br.n -= ln
-        br.acc &= (1 << br.n) - 1
-        return sym
-    code = word >> 8
-    for ln in range(9, 17):
-        code = (code << 1) | ((word >> (16 - ln)) & 1)
-        if (ln, code) in long:
-            br.n -= ln
-            br.acc &= (1 << br.n) - 1
-            return long[(ln, code)]
-    raise ValueError("jpeg: invalid Huffman code")
-
-
-def _extend(v: int, ssss: int) -> int:
-    return v if v >= (1 << (ssss - 1)) else v - (1 << ssss) + 1
-
-
 def _idct_batch(coefs, qtable):
-    """Vectorized twin of :func:`_idct` over a batch of blocks —
-    bit-identical pixels (r7, guide §4.2: the per-block scalar IDCT was
-    ~45% of JPEG decode in the OCR path).
+    """zig-zag quantized coefficients (N, 64) + the stream's quant
+    table → N 8x8 spatial blocks (clamped 0..255), vectorized across
+    blocks (r7, guide §4.2: a per-block scalar IDCT was ~45% of JPEG
+    decode in the OCR path).
 
     Exactness argument: every output element's float op sequence is the
-    scalar one, vectorized ACROSS blocks — dequantization is int64
-    (exact), pass 1/2 accumulate terms ``(_C[v]*c)*_COS[v][y]`` in the
-    same v/u order (the scalar code's skip-zero-term branches are
-    ±0.0-neutral: adding a ±0.0 term to a +0.0-seeded sum never changes
-    it), and the DC-only fast path keeps its DISTINCT formula
-    (``dq0/8.0`` is not bit-equal to the general path's
-    ``((C0·dq0)·1·C0)/4``). Pinned by a scalar-vs-batch differential
-    test over random and fuzzed blocks."""
+    per-block scalar T.81 IDCT's, vectorized ACROSS blocks —
+    dequantization is int64 (exact), pass 1/2 accumulate terms
+    ``(_C[v]*c)*_COS[v][y]`` in the same v/u order (a scalar loop's
+    skip-zero-term branches are ±0.0-neutral: adding a ±0.0 term to a
+    +0.0-seeded sum never changes it), and DC-only blocks keep their
+    DISTINCT formula ``dq0/8.0`` (not bit-equal to the general path's
+    ``((C0·dq0)·1·C0)/4``). Pinned bit-identical to the scalar
+    reference in ``tests/test_ocr.py`` over random and fuzzed blocks."""
     import numpy as np
     nblk = len(coefs)
     a = np.asarray(coefs, dtype=np.int64)                # (N, 64)
@@ -507,17 +398,18 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
     end = data.rfind(b"\xff\xd9")
     if end < pos:
         raise ValueError("jpeg: missing EOI")
-    br = _BitReader(data[pos:end])
     bw_blocks = (width + 7) // 8
     bh_blocks = (height + 7) // 8
-    # r7 hot loop (guide §1.2 step 2 — per-task work): the per-symbol
-    # _BitReader method calls were ~half of decode time; the reader
+    # r7 hot loop (guide §1.2 step 2 — per-task work): per-symbol
+    # bit-reader method calls were ~half of decode time; the reader
     # state lives in plain locals here with the fill/peek/consume steps
-    # inlined (identical semantics incl. the exact truncation account),
-    # and blocks go through the vectorized _idct_batch one block-row at
-    # a time (bounded memory, bit-identical pixels).
+    # inlined. Reads past the end see zero padding; peeked-but-unconsumed
+    # padding is fine, consumed padding is a truncated stream (checked
+    # exactly after the loop — the silent-garble alternative is
+    # forbidden). Blocks go through the vectorized _idct_batch one
+    # block-row at a time (bounded memory, bit-identical pixels).
     import numpy as np
-    sdata = br.data
+    sdata = _destuff(data[pos:end])
     slen = len(sdata)
     acc = nb = sp = 0
     dc_lut, dc_long = dc_t
@@ -527,7 +419,7 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
     for by in range(bh_blocks):
         for bx in range(bw_blocks):
             coefs = [0] * 64
-            # ---- DC symbol (inlined _read_huff)
+            # ---- DC symbol: 8-bit-prefix LUT, else the long-code dict
             while nb < 16:
                 acc = (acc << 8) | (sdata[sp] if sp < slen else 0)
                 sp += 1
@@ -564,7 +456,7 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
             coefs[0] = prev_dc
             k = 1
             while k < 64:
-                # ---- AC symbol (inlined _read_huff)
+                # ---- AC symbol: 8-bit-prefix LUT, else the long-code dict
                 while nb < 16:
                     acc = (acc << 8) | (sdata[sp] if sp < slen else 0)
                     sp += 1
@@ -608,7 +500,7 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
                     else v - (1 << ssss) + 1
                 k += 1
             all_coefs.append(coefs)
-    if (sp - slen) * 8 > nb:                      # == _BitReader.truncated
+    if (sp - slen) * 8 > nb:                      # consumed padding bits
         raise ValueError("jpeg: entropy data truncated")
     nblk = bw_blocks * bh_blocks
     pix = np.empty((nblk, 64), dtype=np.uint8)

@@ -113,11 +113,11 @@ def _cached_fixture_pages(spark: SparkSession, kind: str, sf_dir: str,
 
     def write() -> str:
         path = tempfile.mkdtemp(prefix=f"fixture_{kind}_") + "/pages"
-        # 32 files: the memoized corpus must scan with full parallelism
-        # (a 1-2 file parquet serializes the downstream extraction no
-        # matter the split size — r4 find: extract_scanned spent 7 s on
-        # 2 cores while the OCR itself costs ~0.3 s across 32)
-        build().repartition(32).write.mode("overwrite").parquet(path)
+        # one file per scheduler slot: the memoized corpus must scan with
+        # full parallelism (a 1-2 file parquet serializes the downstream
+        # extraction no matter the split size — r4 find: extract_scanned
+        # spent 7 s on 2 cores while the OCR itself costs ~0.3 s across 32)
+        build().repartition(_par(spark)).write.mode("overwrite").parquet(path)
         return path
     return read_pages(spark, memo(("fixture_pages", kind, sf_dir), write))
 
@@ -1277,9 +1277,9 @@ FROM documents
 #: one AvailableNow launch must fit ONE micro-batch for the
 #: stream==batch-min oracle to hold (within a trigger the group handler
 #: picks min(doc_id); across triggers first-arrival could beat the
-#: run's min — r4 ADVICE). Staging writes are repartition(32), so each
-#: run delivers exactly 32 new files << this cap; the link helper
-#: asserts it.
+#: run's min — r4 ADVICE). Staging writes are repartition(_par), so
+#: each run delivers one new file per scheduler slot, well under this
+#: cap on any realistic cluster; the link helper asserts it.
 _STREAM_MAX_FILES_PER_TRIGGER = 1000
 
 
@@ -1294,9 +1294,9 @@ def _stream_dedup_staging(spark: SparkSession, sf_dir: str) -> str:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
             .select("doc_id", "text")
         mid = docs.approxQuantile("doc_id", [0.5], 0)[0]
-        docs.where(f"doc_id <= {mid}").repartition(32) \
+        docs.where(f"doc_id <= {mid}").repartition(_par(spark)) \
             .write.parquet(root + "/h1")
-        docs.where(f"doc_id > {mid}").repartition(32) \
+        docs.where(f"doc_id > {mid}").repartition(_par(spark)) \
             .write.parquet(root + "/h2")
         return root
     return memo(("stream_dedup_stage", sf_dir), write)
@@ -1325,7 +1325,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     run 1 (state carry-over through the checkpoint). Deterministic by
     construction: within a trigger the group handler picks min(doc_id),
     the doc_id-ordered split makes first-arrival == global-min, and
-    each run is exactly ONE trigger (32 staged files vs the 1000-file
+    each run is exactly ONE trigger (_par staged files vs the 1000-file
     trigger cap, asserted in _link_parquet_files — r4 ADVICE fix), so
     the sink equals the batch GROUP BY min — the oracle. batch_dups is
     slicing-dependent and projected away. Feed increments arrive by
@@ -1397,7 +1397,7 @@ def _streaming_curation_landing(spark: SparkSession, sf_dir: str) -> str:
 
     def write() -> str:
         root = tempfile.mkdtemp(prefix="stream_cur_")
-        pages_from_documents(spark, sf_dir).repartition(32) \
+        pages_from_documents(spark, sf_dir).repartition(_par(spark)) \
             .write.parquet(root + "/pages")
         return root
     return memo(("stream_curation", sf_dir), write)
@@ -1469,18 +1469,18 @@ def compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _compact_rt_staging(spark: SparkSession, sf_dir: str) -> str:
-    """Memoized fragmented table: two 64-file appends (the resumable-run
-    append pattern)."""
+    """Memoized fragmented table: two appends of two files per scheduler
+    slot (the resumable-run append pattern). files_reduced holds for any
+    count: compaction to 2**40-byte targets always leaves one file."""
     import tempfile
 
     def write() -> str:
         stage = tempfile.mkdtemp(prefix="compact_rt_stage_") + "/table"
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
             .select("doc_id", "text")
-        docs.where("doc_id % 2 = 0").repartition(64) \
-            .write.mode("append").parquet(stage)
-        docs.where("doc_id % 2 = 1").repartition(64) \
-            .write.mode("append").parquet(stage)
+        for half in (0, 1):
+            docs.where(f"doc_id % 2 = {half}").repartition(2 * _par(spark)) \
+                .write.mode("append").parquet(stage)
         return stage
     return memo(("compact_rt_stage", sf_dir), write)
 

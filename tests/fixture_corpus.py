@@ -20,7 +20,7 @@ import zipfile
 import io
 from dataclasses import dataclass
 
-from ..operators.pdf_write import append_update, write_pdf
+from docling_api_spark.operators.pdf_write import append_update, write_pdf
 
 EPOCH = datetime.datetime(2025, 1, 1, 0, 0, 0)  # FIXTURES.md §1, never wall clock
 LANGS = ("en", "fr", "de", "es", "it", "pt")     # reference OCR set, service.py:37
@@ -75,7 +75,7 @@ def html_links_images(i: int) -> Fixture:
     ).encode()
     import base64
 
-    from ..operators.png_write import picture_png
+    from docling_api_spark.operators.png_write import picture_png
     # the expected payload is the INDEPENDENT encoder call on the ref —
     # not the engine's own output (the codec itself is golden-tested
     # against hand-built byte fixtures in test_png.py)
@@ -542,6 +542,6 @@ def make_corpus(n_rows: int, classes=None, dup_fraction: int = 16):
 
 
 def corpus_df(spark, n_rows: int, classes=None, dup_fraction: int = 16):
-    from ..schemas import PAGES_SCHEMA
+    from docling_api_spark.schemas import PAGES_SCHEMA
     return spark.createDataFrame(
         make_corpus(n_rows, classes, dup_fraction), schema=PAGES_SCHEMA)

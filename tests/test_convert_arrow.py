@@ -8,13 +8,12 @@ import datetime
 import time
 
 import pyarrow as pa
-import pytest
 from pyspark.sql.pandas.types import to_arrow_type
 
 from docling_api_spark.config import ExtractConfig
 from docling_api_spark.operators.convert import convert_one, make_convert_fn
 from docling_api_spark.schemas import RESULT_SCHEMA
-from docling_api_spark.sources.corpus import (
+from fixture_corpus import (
     EPOCH, docx_basic, html_links_images, html_table, make_url,
     md_passthrough, pdf_text_simple)
 
@@ -50,8 +49,8 @@ def _mixed_rows() -> list[tuple]:
     return rows
 
 
-def _run(batch: pa.RecordBatch, cfg: ExtractConfig = CFG) -> list:
-    return list(make_convert_fn(cfg)(iter([batch])))
+def _run(batch: pa.RecordBatch) -> list:
+    return list(make_convert_fn(CFG)(iter([batch])))
 
 
 def test_result_types_come_from_result_schema():
@@ -99,14 +98,6 @@ def test_one_result_batch_per_input_batch():
     outs = list(fn(iter([_batch(rows[:3]), _batch([]), _batch(rows[3:])])))
     assert [b.num_rows for b in outs] == [3, 0, len(rows) - 3]
     assert all(b.schema == outs[0].schema for b in outs)
-
-
-def test_fail_partitions_hook_raises():
-    cfg = ExtractConfig(fail_partitions=frozenset({3}))
-    with pytest.raises(RuntimeError, match="injected failure in partition 3"):
-        _run(_batch(_mixed_rows()), cfg)
-    (out,) = _run(_batch(_mixed_rows()[:3]), cfg)   # partitions 0-2 only
-    assert out.num_rows == 3
 
 
 def test_parse_ms_is_per_document():

@@ -7,7 +7,7 @@ from docling_api_spark.config import ExtractConfig
 from docling_api_spark.operators.convert import convert_one
 from docling_api_spark.operators.html_extract import extract_html
 from docling_api_spark.operators.md_adoc import normalize_markdown
-from docling_api_spark.sources.corpus import FIXTURE_CLASSES, make_url
+from fixture_corpus import FIXTURE_CLASSES, make_url
 
 CFG = ExtractConfig()
 

@@ -6,7 +6,8 @@ import pytest
 
 from docling_api_spark.config import ExtractConfig
 from docling_api_spark.operators import html_extract as hx
-from docling_api_spark.sources.corpus import FIXTURE_CLASSES, huge_page
+from fixture_corpus import FIXTURE_CLASSES, huge_page
+from html_reference import parse_html_stdlib
 
 CFG = ExtractConfig(num_partitions=8)
 
@@ -49,12 +50,17 @@ ADVERSARIAL = [
     "<svg><rect width='5'/><circle/></svg><p>keep</p>",
     # round-2 advisor finding: a nested same-name tag whose unquoted attr
     # value ends in '/' is NOT self-closing (HTML5) — the skip path must
-    # classify it with _scan_tag_end or the region ends at the wrong
+    # classify it as the tree path does or the region ends at the wrong
     # close tag and boilerplate text leaks
     "<body><nav><nav a=b/></nav>LEAK?</nav><p>keep</p></body>",
     "<nav><aside x=1/>inner</aside>boiler</nav><p>keep</p>",
     "<nav><nav/>genuinely self-closing</nav><p>keep</p>",
     "<header><form action=/submit/>f</form>h</header><p>keep</p>",
+    # a junk attr before '/>' (' =', '-aaxb=\n') IS self-closing to
+    # html.parser: a hand-written skip-path classifier once disagreed
+    # both ways, dropping real text and leaking boilerplate
+    "<body><nav><nav =/>x</nav>leak text</nav><p>after</p></body>",
+    "<body><form><form -aaxb=\n/>x</form>mid text</form><p>after</p></body>",
     # round-2 soak finds: stdlib-exact hard-tag classification + the
     # DROP-skip scanner must consume `<!...>` declarations atomically
     # (a bogus comment swallows a literal close tag)
@@ -130,21 +136,21 @@ def test_fixture_classes_identical(cls):
     for i in (0, 1, 7, 12, 30):
         content = cls(i).content
         fast = _extract_with(hx.parse_html, content)
-        ref = _extract_with(hx.parse_html_stdlib, content)
+        ref = _extract_with(parse_html_stdlib, content)
         assert fast == ref, (cls.__name__, i)
 
 
 def test_huge_page_identical():
     content = huge_page(3).content
     assert _extract_with(hx.parse_html, content) == \
-        _extract_with(hx.parse_html_stdlib, content)
+        _extract_with(parse_html_stdlib, content)
 
 
 @pytest.mark.parametrize("snippet", ADVERSARIAL)
 def test_adversarial_identical(snippet):
     content = snippet.encode()
     fast = _extract_with(hx.parse_html, content)
-    ref = _extract_with(hx.parse_html_stdlib, content)
+    ref = _extract_with(parse_html_stdlib, content)
     assert fast == ref, snippet
 
 
@@ -183,7 +189,7 @@ def test_random_soup_identical(atoms):
     content = "".join(atoms).encode()
     fast = _extract_with(hx.parse_html, content)  # total: must never raise
     try:
-        ref = _extract_with(hx.parse_html_stdlib, content)
+        ref = _extract_with(parse_html_stdlib, content)
     except (AssertionError, NotImplementedError):
         # html.parser ITSELF crashes on some marked-section junk
         # (unknown keyword -> _markupbase AssertionError; unnameable

@@ -2,6 +2,8 @@
 distinctness (the property template matching relies on), and honest
 rejection of images the recognizer does not support."""
 
+import math
+
 import pytest
 
 from docling_api_spark.config import ExtractConfig
@@ -121,14 +123,60 @@ def test_ocr_jpeg_scan_roundtrip():
         ocr_image(encode_gray_jpeg(64, 64, noise))
 
 
+def _scalar_idct(coefs: list[int], qtable: list[int]) -> list[int]:
+    """Per-block scalar T.81 IDCT: zig-zag quantized coefficients + the
+    quant table → 8x8 spatial block (clamped 0..255). DC-only blocks
+    skip the transform, and the separable pass skips all-zero
+    coefficient columns — the branches _idct_batch must match bit for
+    bit."""
+    from docling_api_spark.operators.jpeg_codec import _C, _COS, _ZIGZAG
+
+    dq = [0.0] * 64
+    nonzero = False
+    for k, pos in enumerate(_ZIGZAG):
+        c = coefs[k]
+        if c:
+            dq[pos] = c * qtable[pos]
+            if k:
+                nonzero = True
+    if not nonzero:                      # DC-only: f(x,y) = F00/8
+        val = int(math.floor(dq[0] / 8.0 + 128.5))
+        val = 0 if val < 0 else 255 if val > 255 else val
+        return [val] * 64
+    # tmp[u][y] = sum_v C(v) F(u,v) cos(v,y)
+    tmp = [[0.0] * 8 for _ in range(8)]
+    for u in range(8):
+        col = [dq[v * 8 + u] for v in range(8)]
+        if not any(col):
+            continue
+        for y in range(8):
+            s = 0.0
+            for v in range(8):
+                c = col[v]
+                if c:
+                    s += _C[v] * c * _COS[v][y]
+            tmp[u][y] = s
+    out = []
+    for y in range(8):
+        for x in range(8):
+            s = 0.0
+            for u in range(8):
+                t = tmp[u][y]
+                if t:
+                    s += _C[u] * t * _COS[u][x]
+            val = int(math.floor(s / 4.0 + 128.5))
+            out.append(0 if val < 0 else 255 if val > 255 else val)
+    return out
+
+
 def test_idct_batch_bit_identical_to_scalar():
     """r7: decode_gray_jpeg batches the IDCT through numpy. Every block
-    must produce exactly the scalar _idct's pixels — including DC-only
+    must produce exactly the scalar IDCT's pixels — including DC-only
     blocks (distinct fast-path formula), sparse blocks (skip-zero
     branches), and extreme coefficients."""
     import random
 
-    from docling_api_spark.operators.jpeg_codec import _idct, _idct_batch
+    from docling_api_spark.operators.jpeg_codec import _idct_batch
 
     rnd = random.Random(1234)
     blocks = [[0] * 64,                       # all-zero (DC-only, dq0=0)
@@ -143,7 +191,7 @@ def test_idct_batch_bit_identical_to_scalar():
     qt = [max(1, (i * 7) % 32) for i in range(64)]
     got = _idct_batch(blocks, qt)
     for i, b in enumerate(blocks):
-        assert list(got[i]) == _idct(b, qt), i
+        assert list(got[i]) == _scalar_idct(b, qt), i
 
 
 def test_zigzag_matches_spec_literal():

@@ -17,7 +17,7 @@ from docling_api_spark.operators.convert import convert_one
 from docling_api_spark.plans import manifest as mf
 from docling_api_spark.plans.pipeline import (
     add_partition_id, extract_df, run_extraction)
-from docling_api_spark.sources.corpus import (
+from fixture_corpus import (
     FIXTURE_CLASSES, corpus_df, make_corpus, make_url)
 
 CFG = ExtractConfig(num_partitions=8)
@@ -93,18 +93,30 @@ def test_partition_id_stable(spark, pages):
 @pytest.mark.parametrize("mode", ["file", "salted"])
 def test_run_and_resume(spark, pages, tmp_path, mode):
     """Kill-after-K test (SURVEY.md §5.2 item 5), in BOTH partition modes:
-    first run fails on 3 of 8 partitions (injected), resume recomputes
-    exactly those, final output is byte-equal to a single-shot run."""
+    first run fails on 3 of 8 partitions (injected upstream of the
+    extraction), commits nothing, resume recomputes exactly those, final
+    output is byte-equal to a single-shot run."""
     cfg = ExtractConfig(num_partitions=8, partition_mode=mode)
     out_a = str(tmp_path / "single_shot")
     res_a = run_extraction(spark, pages, out_a, "runA", cfg, resume=False)
     assert res_a.partitions_computed == 8
 
+    # pages has no file provenance, so both modes key on the url hash
+    doomed = {r.url for r in add_partition_id(pages, 8)
+              .where(F.col("partition_id").isin([5, 6, 7])).collect()}
+
+    def fail_doomed(batches):
+        for batch in batches:
+            if doomed.intersection(batch.column("url").to_pylist()):
+                raise RuntimeError("injected failure")
+            yield batch
+
     out_b = str(tmp_path / "resumed")
-    fail_cfg = ExtractConfig(num_partitions=8, partition_mode=mode,
-                             fail_partitions=frozenset({5, 6, 7}))
-    with pytest.raises(Exception):
-        run_extraction(spark, pages, out_b, "runB", fail_cfg, resume=True)
+    failing = pages.mapInArrow(fail_doomed, pages.schema)
+    with pytest.raises(Exception, match="injected failure"):
+        run_extraction(spark, failing, out_b, "runB", cfg, resume=True)
+    done = mf.read_done_partitions(spark, out_b + "_manifest", "runB")
+    assert done is None or done.count() == 0
     # simulate the partial commit a killed cluster run leaves behind:
     # write only the completed partitions' results + manifest rows
     partial = (extract_df(pages, cfg)
@@ -250,7 +262,7 @@ def test_metrics_lineage(spark, pages, tmp_path):
 
 def test_huge_page_skew_class(spark):
     """The ~1 MB page class flows through Arrow batching unharmed."""
-    from docling_api_spark.sources.corpus import huge_page
+    from fixture_corpus import huge_page
     rows = make_corpus(4, classes=[huge_page], dup_fraction=0)
     from docling_api_spark.schemas import PAGES_SCHEMA
     df = spark.createDataFrame(rows, schema=PAGES_SCHEMA)

@@ -3,7 +3,7 @@
 from docling_api_spark.functions.sniffer import (
     detect_format, detect_html_xhtml, format_from_extension)
 from docling_api_spark.operators.pdf_write import write_pdf
-from docling_api_spark.sources.corpus import docx_basic, pptx_basic
+from fixture_corpus import docx_basic, pptx_basic
 
 
 def test_magic_pdf():
