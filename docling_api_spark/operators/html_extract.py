@@ -47,6 +47,15 @@ Boilerplate strip:
   ``link_chars * LINK_DENSITY_DEN >= total_chars * LINK_DENSITY_NUM``
   and the container holds at least ``MIN_CONTAINER_CHARS`` characters —
   pure integer arithmetic, no float thresholds (§7.3).
+
+One pass per page: :func:`parse_html` tokenizes once and the tree builder
+does the rest as it goes. It collapses each text node's whitespace once,
+sums every node's ``(chars, link_chars)`` from its children when the node
+closes, and records the root candidates. Root choice and the link-density
+gate read those values; nothing walks the finished tree but the
+serializer. DROP subtrees (nav, footer, ...) are skipped unbuilt, and a
+region already validated on an earlier page is skipped by one prefix
+lookup instead of a re-scan.
 """
 
 from __future__ import annotations
@@ -54,10 +63,9 @@ from __future__ import annotations
 import base64
 import re
 from dataclasses import dataclass, field
+from html import unescape
 
 from ..config import ExtractConfig
-
-_WS_RX = re.compile(r"\s+")
 
 VOID_TAGS = frozenset({
     "img", "br", "hr", "meta", "link", "input", "area", "base", "col",
@@ -77,11 +85,6 @@ BLOCK_TAGS = frozenset({
     "fieldset", "center",
 })
 
-_CONTAINER_TAGS = frozenset({
-    "div", "section", "article", "main", "figure", "details", "center",
-    "fieldset", "body", "html",
-})
-
 _DENSITY_TAGS = frozenset({"div", "section", "ul", "ol"})
 # link-farm rule (pure integer ratio; §7.3 determinism): drop a density
 # container if link_chars*DEN >= total*NUM, unless it holds fewer than
@@ -89,16 +92,56 @@ _DENSITY_TAGS = frozenset({"div", "section", "ul", "ol"})
 LINK_DENSITY_NUM = 2
 LINK_DENSITY_DEN = 3
 MIN_CONTAINER_CHARS = 10
+#: WHATWG's colspan ceiling
+MAX_COLSPAN = 1000
 
 
 class Node:
-    __slots__ = ("tag", "attrs", "children", "parent")
+    """An element. ``chars``/``link_chars`` are the collapsed-text stats
+    of its subtree (DROP subtrees count nothing; every character under an
+    ``<a>`` counts as link text), set by the builder when the node closes
+    — the link-density gate and root choice read them, never re-walk."""
+    __slots__ = ("tag", "attrs", "children", "parent", "chars", "link_chars")
 
     def __init__(self, tag: str, attrs=None, parent=None):
         self.tag = tag
-        self.attrs = dict(attrs or ())
+        self.attrs = dict(attrs) if attrs else {}
         self.children: list = []  # Node | str
         self.parent = parent
+        self.chars = 0
+        self.link_chars = 0
+
+
+class Document(Node):
+    """The tree root, plus the root candidates the builder met: every
+    ``<main>``/``<article>`` and the first ``<body>``, in document order
+    (nodes are created in pre-order, so creation order is tree order)."""
+    __slots__ = ("mains", "body")
+
+    def __init__(self):
+        super().__init__("#root")
+        self.mains: list[Node] = []
+        self.body: Node | None = None
+
+
+def _collapse_ws(s: str) -> str:
+    r"""``re.sub(r"\s+", " ", s)`` without the regex: ``str.split()``,
+    ``str.isspace()`` and re's ``\s`` agree on every code point, and
+    ``isprintable()`` is False for every whitespace character but the
+    ASCII space — so printable text with no double space is already
+    collapsed."""
+    if s.isprintable() and "  " not in s:
+        return s
+    t = " ".join(s.split())
+    return ((" " if s[0].isspace() else "") + t
+            + (" " if t and s[-1].isspace() else ""))
+
+
+class _PreText(str):
+    """A text node under ``<pre>``: the value is the collapsed text every
+    other reader wants, ``raw`` the original that the code-block
+    serializer keeps verbatim."""
+    raw: str
 
 
 class _TreeBuilder:
@@ -106,11 +149,48 @@ class _TreeBuilder:
     auto-closes on a new block tag, everything auto-closes at EOF —
     total-function requirement (``raises_on_error=False`` semantics,
     ``service.py:80``). Its ``handle_*`` callbacks are html.parser's, so
-    the stdlib reference tokenizer can drive the same builder."""
+    the stdlib reference tokenizer can drive the same builder.
+
+    A node's children are final once it closes, so closing is where each
+    text node is whitespace-collapsed (once) and the node's text stats are
+    summed from its children's."""
 
     def __init__(self):
-        self.root = Node("#root")
+        self.root = Document()
         self.cur = self.root
+        self.open_pre = 0  # <pre> elements among cur and its ancestors
+
+    def _close(self):
+        n = self.cur
+        self.cur = n.parent
+        tag = n.tag
+        if tag in DROP_TAGS:
+            return  # never serialized, counts no text
+        total = link = 0
+        ch = n.children
+        pre = self.open_pre
+        for i, c in enumerate(ch):
+            if c.__class__ is str:
+                t = _collapse_ws(c)
+                total += len(t.strip())
+                if pre:
+                    t = _PreText(t)
+                    t.raw = c
+                ch[i] = t
+            else:
+                total += c.chars
+                link += c.link_chars
+        n.chars = total
+        n.link_chars = total if tag == "a" else link
+        if tag == "pre":
+            self.open_pre -= 1
+
+    def _candidate(self, node):
+        if node.tag == "body":
+            if self.root.body is None:
+                self.root.body = node
+        else:
+            self.root.mains.append(node)
 
     def handle_starttag(self, tag, attrs):
         if tag in VOID_TAGS:
@@ -118,15 +198,22 @@ class _TreeBuilder:
             return
         # implicit </p> / </li> before a new block or sibling li
         if tag in BLOCK_TAGS and self.cur.tag == "p":
-            self.cur = self.cur.parent
+            self._close()
         if tag == "li" and self.cur.tag == "li":
-            self.cur = self.cur.parent
+            self._close()
         node = Node(tag, attrs, self.cur)
         self.cur.children.append(node)
         self.cur = node
+        if tag in _ROOT_CANDIDATE_TAGS:
+            self._candidate(node)
+        elif tag == "pre":
+            self.open_pre += 1
 
     def handle_startendtag(self, tag, attrs):
-        self.cur.children.append(Node(tag, attrs, self.cur))
+        node = Node(tag, attrs, self.cur)
+        self.cur.children.append(node)
+        if tag in _ROOT_CANDIDATE_TAGS:
+            self._candidate(node)
 
     def handle_endtag(self, tag):
         if tag in VOID_TAGS:
@@ -134,8 +221,10 @@ class _TreeBuilder:
         n = self.cur
         while n is not None and n.tag != tag:
             n = n.parent
-        if n is not None and n.tag == tag and n.parent is not None:
-            self.cur = n.parent
+        if n is not None and n.parent is not None:
+            stop = n.parent
+            while self.cur is not stop:
+                self._close()
 
     def handle_data(self, data):
         if data:
@@ -150,13 +239,16 @@ class _TreeBuilder:
             else:
                 ch.append(data)
 
+    def finish(self) -> Document:
+        """EOF: auto-close every open element, the root last."""
+        while self.cur is not None:
+            self._close()
+        return self.root
 
-# one pass, one compiled alternation; group 1 = end-tag name, group 2 =
-# start-tag name (the attr blob is classified by _find_tag_end: a linear
-# unambiguous regex, else html.parser's own regexes), group 3 =
-# unterminated-construct marker (stdlib incomplete rule applies).
-#: marked sections, exactly as _markupbase.parse_marked_section: the
-#: keyword right after '<![' picks the close pattern — cdata-class
+
+#: marked sections (after their '<'), exactly as
+#: _markupbase.parse_marked_section: the keyword right after '<![' picks
+#: the close pattern — cdata-class
 #: keywords close at ']' ws* ']' ws* '>', if-class at ']' ws* '>';
 #: any OTHER keyword makes stdlib raise (tests skip those inputs, the
 #: engine wraps them in error rows), and an unterminated section falls
@@ -164,24 +256,11 @@ class _TreeBuilder:
 #: keyword boundary = _markupbase._declname_match chars exactly
 #: ([a-zA-Z][-_.a-zA-Z0-9]*) — NO colon: stdlib reads '<![if:x]>' as an
 #: if-class section named 'if' with ':x' inside it (r3 advice fix)
-_MS_CDATA = (r"<!\[(?i:temp|cdata|ignore|include|rcdata)"
+_MS_CDATA = (r"!\[(?i:temp|cdata|ignore|include|rcdata)"
              r"(?![-.a-zA-Z0-9_]).*?\]\s*\]\s*>")
-_MS_IF = r"<!\[(?i:if|else|endif)(?![-.a-zA-Z0-9_]).*?\]\s*>"
+_MS_IF = r"!\[(?i:if|else|endif)(?![-.a-zA-Z0-9_]).*?\]\s*>"
 
-_TOKEN_RX = re.compile(
-    r"<!--.*?--\s*>"     # comment (stdlib close: '--' ws* '>')
-    rf"|{_MS_CDATA}"              # CDATA-class marked section
-    rf"|{_MS_IF}"                 # if-class marked section (<![if ...]>)
-    r"|<!(?!--|\[)[^>]*>"         # declaration (never a comment/CDATA head)
-    r"|<\?[^>]*>"                 # processing instruction
-    r"|</\s*([a-zA-Z][^\t\n\r\f />\x00]*)[^>]*>"
-    r"|</[^>]*>"                  # nameless end tag: bogus comment, skipped
-    r"|<([a-zA-Z][^\t\n\r\f />\x00]*)"
-    r"|(<[!?])",                  # unterminated construct head
-    re.S)
-
-
-#: fast path for the attribute region: UNAMBIGUOUS alternation — the
+#: the attribute region of a start tag, UNAMBIGUOUS alternation — the
 #: catch-all class excludes quote chars, so a quote can only match via a
 #: completed ``name="value"`` pair (html.parser pairs a quote as a value
 #: ONLY after an attribute name + '='; a bare ``="x"`` is a junk NAME
@@ -192,8 +271,39 @@ _TOKEN_RX = re.compile(
 #: groups require Python >= 3.11 (declared in pyproject.toml).
 _ATTR_PAIR = (r"[^\s<>\"'=/\x00][ \t\r\n]*=[ \t\r\n]*"
               r"(?:\"[^\"]*\"|'[^']*')")
-_TAG_END_RX = re.compile(
-    rf"((?:(?>{_ATTR_PAIR})|[^<>\"'=\x00]|=)*+)(/?)>")
+_ATTR_BLOB = rf"(?:(?>{_ATTR_PAIR})|[^<>\"'=\x00]|=)*+"
+
+#: what both scanners read after a '<' when it opens no element. End
+#: tags try html.parser's STRICT pattern (endtagfind) first, so unicode
+#: whitespace between the name and '>' is ignorable (</td\u2028> closes
+#: 'td'), else the tolerant name; both end at the first '>'. Groups:
+#: 1 = strict end-tag name, 2 = tolerant end-tag name.
+_NON_ELEMENT = (
+    r"!--.*?--\s*>"               # comment (stdlib close: '--' ws* '>')
+    rf"|{_MS_CDATA}"              # CDATA-class marked section
+    rf"|{_MS_IF}"                 # if-class marked section (<![if ...]>)
+    r"|!(?!--|\[)[^>]*>"          # declaration (never a comment/CDATA head)
+    r"|\?[^>]*>"                  # processing instruction
+    r"|/\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
+    r"|/\s*([a-zA-Z][^\t\n\r\f />\x00]*+)[^>]*>"
+    r"|/[^>]*>")                  # nameless end tag: bogus comment, no event
+
+#: group 3: a start-tag name. POSSESSIVE: backtracking must never donate
+#: name chars to the blob, where they could form a false name="value"
+#: pair (<nav =''> once matched as name 'na' + pair "v =''" — r2 soak
+#: find)
+_START_NAME = r"([a-zA-Z][^\t\n\r\f />\x00]*+)"
+
+# one pass, one compiled alternation behind a literal '<' (so the regex
+# engine scans text runs for the '<' instead of trying every alternative
+# at every character), dispatched on ``lastindex``: groups 1-2 = end-tag
+# name, group 3 = start-tag name, group 4 = its attribute blob when the
+# unambiguous pattern reaches a '>' (a blob ending in '/' and every tag
+# it can't read go to html.parser's own regexes), group 5 = unterminated-
+# construct marker (stdlib incomplete rule applies); no group = a
+# construct with no builder event.
+_TOKEN_RX = re.compile(
+    rf"<(?:{_NON_ELEMENT}|{_START_NAME}(?:({_ATTR_BLOB})>)?|([!?]))", re.S)
 
 
 # the stdlib's own tolerant start-tag regexes — imported, not copied, so
@@ -206,11 +316,6 @@ from html.parser import (attrfind_tolerant as _ATTRFIND_RX,
 
 _NAME_EQ_SLASH = frozenset("abcdefghijklmnopqrstuvwxyz=/"
                            "ABCDEFGHIJKLMNOPQRSTUVWXYZ")
-
-#: html.parser's STRICT end-tag pattern (endtagfind): tried before the
-#: tolerant name, so unicode whitespace between the name and '>' is
-#: ignorable rather than part of the name
-_ENDTAG_STRICT_RX = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
 
 
 def _stdlib_tag_end(text: str, s: int) -> tuple[str, int, bool]:
@@ -252,19 +357,6 @@ def _stdlib_tag_end(text: str, s: int) -> tuple[str, int, bool]:
     return ("tag", endpos, end == "/>")
 
 
-def _find_tag_end(text: str, pos: int, s: int) -> tuple[str, int, bool]:
-    """Classify the start tag whose name ends at ``pos`` (tag '<' at
-    ``s``). Regex fast path for the common case — an unambiguous
-    attribute blob with paired quotes and no trailing '/' is a plain
-    start tag in both this scanner and html.parser; everything else
-    (trailing '/', unpaired quote, junk quotes, EOF truncation) goes to
-    :func:`_stdlib_tag_end` for the reference's exact decision."""
-    m = _TAG_END_RX.match(text, pos)
-    if m is not None and not m.group(1).endswith("/") and not m.group(2):
-        return ("tag", m.end(), False)
-    return _stdlib_tag_end(text, s)
-
-
 def _incomplete_end(text: str, i: int) -> int:
     """stdlib html.parser's rule for an incomplete construct at EOF-side
     parsing: flush data up to (and including) the next '>', else up to the
@@ -300,8 +392,8 @@ _RAWTEXT_END = {
 #: literal close tag inside them can't end the skip early. embed is void.
 _DROP_SKIPPABLE = frozenset(DROP_TAGS - {"script", "style", "embed"})
 
-#: one ANCHORED match per construct inside a skipped region, mirroring
-#: _TOKEN_RX's full construct taxonomy: comments, CDATA, marked
+#: one ANCHORED match per construct inside a skipped region, with
+#: _TOKEN_RX's full construct taxonomy (_NON_ELEMENT): comments, CDATA, marked
 #: sections, declarations/bogus comments (`<!...>` — these consume to
 #: the first '>' and can swallow a literal close tag, so they MUST be
 #: atomic here too), processing instructions, named close tags, nameless
@@ -313,19 +405,7 @@ _DROP_SKIPPABLE = frozenset(DROP_TAGS - {"script", "style", "embed"})
 #: — the declaration swallows `</form>`, but search found the close tag
 #: inside it and ended the region early).
 _SKIP_TOKEN_RX = re.compile(
-    r"<!--.*?--\s*>"
-    rf"|{_MS_CDATA}"
-    rf"|{_MS_IF}"
-    r"|<!(?!--|\[)[^>]*>"
-    r"|<\?[^>]*>"
-    r"|</\s*([a-zA-Z][^\t\n\r\f />\x00]*+)[^>]*>"  # close: FIRST '>', as _TOKEN_RX
-    r"|</[^>]*>"                                    # nameless close: bogus, no event
-    # tag name is POSSESSIVE: backtracking must never donate name chars
-    # to the blob, where they could form a false name="value" pair
-    # (<nav =''> once matched as name 'na' + pair "v =''" — r2 soak find)
-    r"|<([a-zA-Z][^\t\n\r\f />\x00]*+)"
-    rf"((?:(?>{_ATTR_PAIR})|[^<>\"'=\x00]|=)*)>",
-    re.S)
+    rf"<(?:{_NON_ELEMENT}|{_START_NAME}({_ATTR_BLOB})>)", re.S)
 
 _ASCII_LETTERS = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ")
@@ -334,66 +414,23 @@ _ASCII_LETTERS = frozenset(
 #: containing one must be tree-built, never consumed
 _ROOT_CANDIDATE_TAGS = frozenset({"main", "article", "body"})
 
-#: cheap candidate-end scan: same-tag depth only (6-ish events per region
-#: instead of one per tag), comments/rawtext atomic — used to propose the
-#: region for the memo cache; the full stack walk validates it once.
-_DROP_CAND_RX = {
-    t: re.compile(
-        rf"<!--.*?--\s*>"
-        rf"|<(/?){t}(?=[\s/>])(?:(?>{_ATTR_PAIR})|[^<>\"'=\x00]|=)*>"
-        rf"|<(script|style)(?=[\s/>])(?:(?>{_ATTR_PAIR})|[^<>\"'=\x00]|=)*>",
-        re.I | re.S)
-    for t in _DROP_SKIPPABLE
-}
-
 #: validated-region memo: chrome repeats byte-identically across pages of
 #: a site (and across this bench corpus), so each distinct region is
-#: stack-validated once per worker; lookups are exact string compares.
-_SKIP_CACHE: dict[str, bool] = {}
+#: stack-validated once per worker. A region's skip depends only on its
+#: own text, so a page that continues with a cached region's text skips
+#: it: the key is (DROP tag, the first _SKIP_KEY_CHARS characters after
+#: the open tag), confirmed by one ``startswith`` — the region is never
+#: re-scanned. One region per key; a full memo evicts its oldest entry.
+_SKIP_CACHE: dict[tuple[str, str], str] = {}
 _SKIP_CACHE_MAX = 512
+_SKIP_KEY_CHARS = 64
 
 
-def _candidate_end(text: str, pos: int, tag: str):
-    """Same-tag-depth scan for the region's candidate end position."""
-    rx = _DROP_CAND_RX[tag]
-    scan, depth = pos, 1
-    while depth:
-        m = rx.search(text, scan)
-        if m is None:
-            return None
-        scan = m.end()
-        if m.group(2) is not None:
-            # trailing '/' is usually part of an unquoted value (stdlib/
-            # HTML5), i.e. the script OPENS rawtext; ask html.parser
-            selfclose = False
-            if m.group(0).endswith("/>"):
-                kind, end, selfclose = _find_tag_end(text, m.end(2),
-                                                     m.start())
-                if kind != "tag" or end != m.end():
-                    return None
-            if not selfclose:
-                m3 = _RAWTEXT_END[m.group(2).lower()].search(text, scan)
-                if m3 is None:
-                    return None
-                scan = m3.end()
-            continue
-        if m.group(1) is None:
-            continue  # comment
-        if m.group(1):
-            depth -= 1
-        else:
-            # same self-closing classification as the tree path: a
-            # genuinely self-closing <nav/> must not add depth, and
-            # <nav a=b/> (slash is value data per HTML5) must
-            selfclose = False
-            if m.group(0).endswith("/>"):
-                kind, end, selfclose = _find_tag_end(
-                    text, m.start() + 1 + len(tag), m.start())
-                if kind != "tag" or end != m.end():
-                    return None
-            if not selfclose:
-                depth += 1
-    return scan
+def _remember_skip(key: tuple[str, str], region: str) -> None:
+    _SKIP_CACHE.pop(key, None)
+    if len(_SKIP_CACHE) >= _SKIP_CACHE_MAX:
+        del _SKIP_CACHE[next(iter(_SKIP_CACHE))]
+    _SKIP_CACHE[key] = region
 
 
 def _try_skip_subtree(text: str, pos: int, tag: str):
@@ -422,10 +459,11 @@ def _try_skip_subtree(text: str, pos: int, tag: str):
                 continue
             return None  # truncated/unmodelable construct — abort
         scan = m.end()
-        end_name = m.group(1)
-        if end_name is not None:  # named closing tag
-            sm = _ENDTAG_STRICT_RX.match(text, lt)
-            name = (sm.group(1) if sm else end_name).lower()
+        g = m.lastindex
+        if g is None:
+            continue  # comment/CDATA/marked/decl/PI/bogus-close: no event
+        if g <= 2:  # named closing tag
+            name = m.group(g).lower()
             if name in stack:
                 while stack[-1] != name:
                     stack.pop()
@@ -435,24 +473,22 @@ def _try_skip_subtree(text: str, pos: int, tag: str):
             else:
                 return None  # closes an ancestor outside the region
             continue
-        name = m.group(2)
-        if name is None:
-            continue  # comment/CDATA/marked/decl/PI/bogus-close: no event
-        name = name.lower()
+        name = m.group(3).lower()
         if name in _ROOT_CANDIDATE_TAGS:
             # a main/article/body INSIDE the boilerplate region could
-            # become the extraction root (_pick_root searches the whole
-            # tolerant tree) — the region must be built, not skipped
+            # become the extraction root (_pick_root considers every
+            # candidate in the tolerant tree) — the region must be
+            # built, not skipped
             return None
         selfclose = False
-        if m.group(3).endswith("/"):
+        if m.group(4).endswith("/"):
             # '/' ending an unquoted attribute VALUE is data, not a
             # self-close — the tree path's classifier decides, else a
             # nested same-name tag like <nav a=b/> is wrongly treated
             # as self-closing, the region ends at the wrong close tag,
             # and boilerplate text leaks into the output; a construct
             # html.parser reads differently aborts the skip
-            kind, end, selfclose = _find_tag_end(text, m.end(2), lt)
+            kind, end, selfclose = _stdlib_tag_end(text, lt)
             if kind != "tag" or end != m.end():
                 return None
         rt = _RAWTEXT_END.get(name)
@@ -478,31 +514,33 @@ def _parse_attrs(blob: str) -> list:
         if val is None:
             val = m.group(4)
         if val is not None and "&" in val:
-            from html import unescape
             val = unescape(val)
         attrs.append((name, val))
     return attrs
 
 
-def parse_html(text: str) -> Node:
-    """Fast single-pass tokenizer feeding the same tolerant tree builder.
+def parse_html(text: str) -> Document:
+    """One tokenizing pass feeding the tolerant tree builder, which
+    measures each node's text and records the root candidates as it
+    builds — serialization never walks the tree for them again.
 
     Matches the stdlib html.parser driving the same builder on the whole
     fixture corpus, an adversarial set, and a hypothesis random-soup
-    differential. Attribute regions are classified by _find_tag_end (a
-    linear regex fast path, html.parser's own regexes for every hard
-    case — never an exponential backtracking blob pattern); entities
+    differential. A start tag whose attribute blob the unambiguous token
+    pattern reads is one match; every other tag goes to html.parser's own
+    regexes (never an exponential backtracking blob pattern); entities
     decode only when an ampersand is present; stray '<' runs are data;
     incomplete constructs follow the stdlib flush rule; script/style
-    bodies are raw text ended only by an exact-name close tag."""
-    from html import unescape
-
+    bodies are raw text ended only by an exact-name close tag; DROP
+    subtrees are skipped unbuilt when the skip scanner can read them, and
+    a region seen before is skipped by one prefix lookup."""
     tb = _TreeBuilder()
     starttag = tb.handle_starttag
     startend = tb.handle_startendtag
     endtag = tb.handle_endtag
     data = tb.handle_data
     search = _TOKEN_RX.search
+    cache = _SKIP_CACHE
     pos, n = 0, len(text)
     while pos < n:
         m = search(text, pos)
@@ -510,55 +548,53 @@ def parse_html(text: str) -> Node:
             chunk = text[pos:]
             data(unescape(chunk) if "&" in chunk else chunk)
             break
-        s = m.start()
+        s, end = m.span()
         if s > pos:
             chunk = text[pos:s]
             data(unescape(chunk) if "&" in chunk else chunk)
-        pos = m.end()
-        end_name = m.group(1)
-        if end_name is not None:
-            # stdlib resolves close-tag names with the STRICT pattern
-            # first (trailing unicode whitespace is ignorable there:
-            # </td > closes 'td'), falling back to the tolerant
-            # name our token regex captured
-            sm = _ENDTAG_STRICT_RX.match(text, s)
-            endtag((sm.group(1) if sm else end_name).lower())
-            continue
-        name = m.group(2)
-        if name is None:
-            if m.group(3) is not None:
-                # unterminated comment/decl/PI: stdlib incomplete rule —
-                # flush up to the next '>' as data, resume parsing there
-                pos = _incomplete_end(text, s)
-                chunk = text[s:pos]
-                data(unescape(chunk) if "&" in chunk else chunk)
+        pos = end
+        g = m.lastindex
+        if g is None:
             continue  # terminated comment / doctype / PI / CDATA
-        tag = name.lower()
-        kind, endpos, selfclose = _find_tag_end(text, pos, s)
-        if kind == "incomplete":
-            # stdlib goahead end-of-feed rule: flush to the next '>'
-            # inclusive (else next '<', else one char), charref-converted
+        if g <= 2:
+            endtag(m.group(g).lower())
+            continue
+        if g == 5:
+            # unterminated comment/decl/PI: stdlib incomplete rule —
+            # flush up to the next '>' as data, resume parsing there
             pos = _incomplete_end(text, s)
             chunk = text[s:pos]
             data(unescape(chunk) if "&" in chunk else chunk)
             continue
-        if kind == "data":
-            # stdlib parse_starttag junk-terminated flush — RAW
+        name, blob = m.group(3, 4)
+        tag = name.lower()
+        selfclose = False
+        if blob is None or blob.endswith("/"):
+            kind, endpos, selfclose = _stdlib_tag_end(text, s)
+            if kind == "incomplete":
+                # stdlib goahead end-of-feed rule: flush to the next '>'
+                # inclusive (else next '<', else one char), charref-
+                # converted
+                pos = _incomplete_end(text, s)
+                chunk = text[s:pos]
+                data(unescape(chunk) if "&" in chunk else chunk)
+                continue
+            if kind == "data":
+                # stdlib parse_starttag junk-terminated flush — RAW
+                pos = endpos
+                data(text[s:endpos])
+                continue
+            blob = text[m.end(3):endpos - (2 if selfclose else 1)]
             pos = endpos
-            data(text[s:endpos])
-            continue
-        blob_end = endpos - (2 if selfclose else 1)
-        blob = text[pos:blob_end]
-        pos = endpos
         if not selfclose and tag in _DROP_SKIPPABLE:
-            cand = _candidate_end(text, pos, tag)
-            if cand is not None and text[pos:cand] in _SKIP_CACHE:
-                pos = cand
+            key = (tag, text[pos:pos + _SKIP_KEY_CHARS])
+            region = cache.get(key)
+            if region is not None and text.startswith(region, pos):
+                pos += len(region)
                 continue
             resume = _try_skip_subtree(text, pos, tag)
             if resume is not None:
-                if resume == cand and len(_SKIP_CACHE) < _SKIP_CACHE_MAX:
-                    _SKIP_CACHE[text[pos:cand]] = True
+                _remember_skip(key, text[pos:resume])
                 pos = resume
                 continue
             # unsafe to skip: fall through and build the node normally
@@ -580,30 +616,7 @@ def parse_html(text: str) -> Node:
                     data(text[pos:])
                 endtag(tag)
                 pos = n
-    return tb.root
-
-
-# ---------------------------------------------------------------- text stats
-
-def _text_stats(node) -> tuple[int, int]:
-    """(total_chars, link_chars) of collapsed text, excluding DROP_TAGS."""
-    total = 0
-    link = 0
-    stack = [(node, False)]
-    while stack:
-        n, in_link = stack.pop()
-        if isinstance(n, str):
-            t = len(_WS_RX.sub(" ", n).strip())
-            total += t
-            if in_link:
-                link += t
-            continue
-        if n.tag in DROP_TAGS:
-            continue
-        child_in_link = in_link or n.tag == "a"
-        for c in n.children:
-            stack.append((c, child_in_link))
-    return total, link
+    return tb.finish()
 
 
 # ------------------------------------------------------------------- blocks
@@ -633,7 +646,7 @@ def _inline(node, ctx: _Ctx) -> str:
 
 def _inline_one(c, ctx: _Ctx) -> str:
     if isinstance(c, str):
-        return _WS_RX.sub(" ", c)
+        return c  # collapsed by the builder
     tag = c.tag
     if tag in DROP_TAGS:
         return ""
@@ -676,9 +689,10 @@ def _inline_one(c, ctx: _Ctx) -> str:
 
 def _collapse(s: str) -> str:
     # collapse per-line (hard breaks from <br> survive), strip edges
-    lines = [_WS_RX.sub(" ", ln).strip() for ln in s.split("\n")]
-    lines = [ln for ln in lines if ln]
-    return "\n".join(lines)
+    if s.isprintable() and "  " not in s:  # one single-spaced line
+        return s.strip()
+    lines = [" ".join(ln.split()) for ln in s.split("\n")]
+    return "\n".join([ln for ln in lines if ln])
 
 
 def _list_blocks(node, ctx: _Ctx, depth: int, ordered: bool, out_lines: list):
@@ -724,7 +738,9 @@ def _table_block(node, ctx: _Ctx) -> str | None:
                         span = int(cell.attrs.get("colspan", "1"))
                     except (TypeError, ValueError):
                         span = 1
-                    cells.extend([""] * max(0, span - 1))
+                    # WHATWG caps colspan at 1000: a 50-byte page must
+                    # not expand into megabytes of empty cells
+                    cells.extend([""] * (min(span, MAX_COLSPAN) - 1))
                 rows.append(cells)
     collect(node)
     rows = [r for r in rows if r]
@@ -756,7 +772,7 @@ def _pre_text(node) -> str:
     def walk(n):
         for c in n.children:
             if isinstance(c, str):
-                parts.append(c)
+                parts.append(c.raw)
             elif c.tag == "br":
                 parts.append("\n")
             elif c.tag not in DROP_TAGS:
@@ -781,7 +797,7 @@ def _emit_blocks(node, ctx: _Ctx, blocks: list[Block]):
     buf: list[str] = []
     for c in node.children:
         if isinstance(c, str):
-            buf.append(_WS_RX.sub(" ", c))
+            buf.append(c)
             continue
         tag = c.tag
         if tag in DROP_TAGS:
@@ -790,11 +806,10 @@ def _emit_blocks(node, ctx: _Ctx, blocks: list[Block]):
             buf.append(_inline_one(c, ctx))
             continue
         _flush_para(buf, blocks)
-        if tag in _DENSITY_TAGS or tag in _CONTAINER_TAGS:
-            total, link = _text_stats(c)
-            if (tag in _DENSITY_TAGS and total >= MIN_CONTAINER_CHARS
-                    and link * LINK_DENSITY_DEN >= total * LINK_DENSITY_NUM):
-                continue  # link farm — boilerplate
+        if (tag in _DENSITY_TAGS and c.chars >= MIN_CONTAINER_CHARS
+                and c.link_chars * LINK_DENSITY_DEN
+                >= c.chars * LINK_DENSITY_NUM):
+            continue  # link farm — boilerplate
         if tag in ("h1", "h2", "h3", "h4", "h5", "h6"):
             text = _collapse(_inline(c, ctx)).replace("\n", " ")
             if text:
@@ -833,36 +848,13 @@ def _emit_blocks(node, ctx: _Ctx, blocks: list[Block]):
 
 # ------------------------------------------------------------- root picking
 
-def _find_all(node, tags: frozenset) -> list[Node]:
-    found = []
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        if isinstance(n, str):
-            continue
-        if n.tag in tags:
-            found.append(n)
-        # reversed → document order when popping
-        for c in reversed(n.children):
-            if not isinstance(c, str):
-                stack.append(c)
-    return found
-
-
-def _pick_root(root: Node) -> Node:
-    mains = _find_all(root, frozenset({"main", "article"}))
-    if mains:
-        best = None
-        best_len = -1
-        for m in mains:  # document order; strict > keeps the first on ties
-            total, _ = _text_stats(m)
-            if total > best_len:
-                best, best_len = m, total
-        return best
-    bodies = _find_all(root, frozenset({"body"}))
-    if bodies:
-        return bodies[0]
-    return root
+def _pick_root(doc: Document) -> Node:
+    """The ``<main>``/``<article>`` with the most text (document order,
+    first wins ties), else the first ``<body>``, else the whole tree —
+    from the candidates and stats the builder recorded."""
+    if doc.mains:
+        return max(doc.mains, key=lambda m: m.chars)  # first of equals
+    return doc.body if doc.body is not None else doc
 
 
 # ---------------------------------------------------------------- top level
