@@ -81,7 +81,7 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 
 def fmt(x: float) -> str:
-    return f"{x:.0f}" if abs(x) >= 100 else f"{x:.3g}"
+    return f"{x:.0f}" if abs(x) >= 1000 else f"{x:.4g}"
 
 
 def table(workload: str, seeds: list[int], pairs: list[tuple[dict, dict]],
