@@ -418,19 +418,36 @@ _ROOT_CANDIDATE_TAGS = frozenset({"main", "article", "body"})
 #: a site (and across this bench corpus), so each distinct region is
 #: stack-validated once per worker. A region's skip depends only on its
 #: own text, so a page that continues with a cached region's text skips
-#: it: the key is (DROP tag, the first _SKIP_KEY_CHARS characters after
-#: the open tag), confirmed by one ``startswith`` — the region is never
-#: re-scanned. One region per key; a full memo evicts its oldest entry.
-_SKIP_CACHE: dict[tuple[str, str], str] = {}
+#: it. _SKIP_INDEX maps (DROP tag, the first _SKIP_KEY_CHARS characters
+#: after the open tag) to the regions seen under that key, each confirmed
+#: by one ``startswith`` — a cached region is never re-scanned. A key keeps
+#: its _SKIP_KEY_REGIONS newest regions, because a site's nav often varies
+#: past the prefix (an "active" class on the current section).
+#: _SKIP_CACHE holds every (key, region) pair in insertion order; a full
+#: memo evicts its oldest pair from both.
+_SKIP_CACHE: dict[tuple[tuple[str, str], str], None] = {}
+_SKIP_INDEX: dict[tuple[str, str], list[str]] = {}
 _SKIP_CACHE_MAX = 512
 _SKIP_KEY_CHARS = 64
+_SKIP_KEY_REGIONS = 64
+
+
+def _forget_skip(key: tuple[str, str], region: str) -> None:
+    del _SKIP_CACHE[key, region]
+    regions = _SKIP_INDEX[key]
+    regions.remove(region)
+    if not regions:
+        del _SKIP_INDEX[key]
 
 
 def _remember_skip(key: tuple[str, str], region: str) -> None:
-    _SKIP_CACHE.pop(key, None)
-    if len(_SKIP_CACHE) >= _SKIP_CACHE_MAX:
-        del _SKIP_CACHE[next(iter(_SKIP_CACHE))]
-    _SKIP_CACHE[key] = region
+    regions = _SKIP_INDEX.get(key, ())
+    if len(regions) >= _SKIP_KEY_REGIONS:
+        _forget_skip(key, regions[0])
+    elif len(_SKIP_CACHE) >= _SKIP_CACHE_MAX:
+        _forget_skip(*next(iter(_SKIP_CACHE)))
+    _SKIP_INDEX.setdefault(key, []).append(region)
+    _SKIP_CACHE[key, region] = None
 
 
 def _try_skip_subtree(text: str, pos: int, tag: str):
@@ -540,7 +557,7 @@ def parse_html(text: str) -> Document:
     endtag = tb.handle_endtag
     data = tb.handle_data
     search = _TOKEN_RX.search
-    cache = _SKIP_CACHE
+    index = _SKIP_INDEX
     pos, n = 0, len(text)
     while pos < n:
         m = search(text, pos)
@@ -588,13 +605,15 @@ def parse_html(text: str) -> Document:
             pos = endpos
         if not selfclose and tag in _DROP_SKIPPABLE:
             key = (tag, text[pos:pos + _SKIP_KEY_CHARS])
-            region = cache.get(key)
-            if region is not None and text.startswith(region, pos):
-                pos += len(region)
-                continue
-            resume = _try_skip_subtree(text, pos, tag)
+            for region in index.get(key, ()):
+                if text.startswith(region, pos):
+                    resume = pos + len(region)
+                    break
+            else:
+                resume = _try_skip_subtree(text, pos, tag)
+                if resume is not None:
+                    _remember_skip(key, text[pos:resume])
             if resume is not None:
-                _remember_skip(key, text[pos:resume])
                 pos = resume
                 continue
             # unsafe to skip: fall through and build the node normally

@@ -22,6 +22,7 @@ CFG = ExtractConfig(num_partitions=8)
 def fresh_skip_cache(monkeypatch):
     """An empty DROP-region memo for one test; the worker's is restored."""
     monkeypatch.setattr(hx, "_SKIP_CACHE", {})
+    monkeypatch.setattr(hx, "_SKIP_INDEX", {})
     return hx._SKIP_CACHE
 
 
@@ -134,18 +135,49 @@ def test_cached_region_followed_by_any_tail(fresh_skip_cache, monkeypatch):
         assert scans == [], tail  # the region was never re-scanned
 
 
-def test_shared_prefix_diverging_later_is_not_skipped(fresh_skip_cache):
+def test_shared_prefix_diverging_later_is_not_skipped(fresh_skip_cache,
+                                                     monkeypatch):
     _extract(f"<body><nav>{PREFIX}</nav><p>warm</p></body>")
     # same first 64+ characters, then a main inside the nav: the region
     # must be built (the main becomes the root), not skipped as cached
     page = f"<body><nav>{PREFIX}<main>inner</main></nav><p>after</p></body>"
     assert _extract(page) == _reference(page) == "inner"
-    # a longer, still skippable region replaces the cached one
+    # a longer, still skippable region is cached beside the first one
     longer = f"<body><nav>{PREFIX}<a>more</a></nav><p>keep</p></body>"
     assert _extract(longer) == _reference(longer) == "keep"
-    assert list(fresh_skip_cache.values()) == [f"{PREFIX}<a>more</a></nav>"]
+    key = ("nav", PREFIX[:hx._SKIP_KEY_CHARS])
+    assert hx._SKIP_INDEX[key] == [f"{PREFIX}</nav>",
+                                   f"{PREFIX}<a>more</a></nav>"]
+    scans = _count_skip_scans(monkeypatch)
     first = f"<body><nav>{PREFIX}</nav><p>again</p></body>"
     assert _extract(first) == _reference(first) == "again"
+    assert _extract(longer) == "keep"
+    assert scans == []  # both variants hit
+
+
+def test_variants_under_one_key(fresh_skip_cache, monkeypatch):
+    # a nav that differs only past the prefix (the current section marked
+    # active): each variant is validated once, then all of them hit
+    def page(i):
+        return f"<body><nav>{PREFIX}<a class=s{i}>s</a></nav><p>k</p></body>"
+    n = hx._SKIP_KEY_REGIONS
+    for i in range(n):
+        _extract(page(i))
+    scans = _count_skip_scans(monkeypatch)
+    for i in reversed(range(n)):
+        assert _extract(page(i)) == _reference(page(i)) == "k"
+    assert scans == []
+    # one more variant evicts the key's oldest, and nothing else
+    _extract(f"<body><aside>{PREFIX}</aside><p>k</p></body>")
+    _extract(page(n))
+    key = ("nav", PREFIX[:hx._SKIP_KEY_CHARS])
+    assert len(hx._SKIP_INDEX[key]) == n
+    assert len(fresh_skip_cache) == n + 1
+    scans.clear()
+    _extract(page(0))
+    assert scans == ["nav"]
+    _extract(f"<body><aside>{PREFIX}</aside><p>k</p></body>")
+    assert scans == ["nav"]
 
 
 def test_same_region_text_under_another_drop_tag(fresh_skip_cache):
@@ -154,7 +186,7 @@ def test_same_region_text_under_another_drop_tag(fresh_skip_cache):
     # built, its text stays in the (dropped) aside, not at body level
     page = f"<body><aside>{PREFIX}</nav>tail</aside><p>keep</p></body>"
     assert _extract(page) == _reference(page) == "keep"
-    assert ("aside", PREFIX[:hx._SKIP_KEY_CHARS]) not in fresh_skip_cache
+    assert ("aside", PREFIX[:hx._SKIP_KEY_CHARS]) not in hx._SKIP_INDEX
 
 
 def test_skip_cache_evicts_oldest(fresh_skip_cache, monkeypatch):
@@ -165,9 +197,10 @@ def test_skip_cache_evicts_oldest(fresh_skip_cache, monkeypatch):
         _extract(f"<body><nav>{region(i)}</nav><p>k</p></body>")
         assert len(fresh_skip_cache) <= hx._SKIP_CACHE_MAX
     keys = list(fresh_skip_cache)
-    assert len(keys) == hx._SKIP_CACHE_MAX
-    assert ("nav", region(0)[:hx._SKIP_KEY_CHARS]) not in keys  # oldest
-    assert keys[-1] == ("nav", region(n - 1)[:hx._SKIP_KEY_CHARS])
+    assert len(keys) == len(hx._SKIP_INDEX) == hx._SKIP_CACHE_MAX
+    assert ("nav", region(0)[:hx._SKIP_KEY_CHARS]) not in hx._SKIP_INDEX
+    assert keys[-1] == (("nav", region(n - 1)[:hx._SKIP_KEY_CHARS]),
+                        region(n - 1) + "</nav>")
     scans = _count_skip_scans(monkeypatch)
     _extract(f"<body><nav>{region(n - 1)}</nav><p>k</p></body>")
     assert scans == []  # region 513 was cached

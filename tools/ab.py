@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
 """Alternating A/B pairs of the repository benchmark between two revisions.
 
-    python tools/ab.py <revA> <revB> --workload W --pairs N [--seconds 10]
-                       [--seed0 S] [--workdir DIR] [--keep]
+    python tools/ab.py <revA> <revB> --workload W --pairs N [--seed0 S]
 
 Each revision's committed files are exported (``git archive``) into its
-own directory, so each side runs exactly what a commit holds. Each tree
-then gets one untimed run that builds its input pool (seed ``S - 1``).
+own directory of a new temporary directory, so each side runs exactly
+what a commit holds; the directory is removed at the end. Each tree then
+builds its input pool once, untimed (``perfbench/run.py --build-only``).
 Pair ``i`` runs ``perfbench/run.py --workload W --seed S+i --seconds T
---trace 0`` unchanged, once per tree; even pairs run A first and odd pairs
-run B first.
+--trace 0`` unchanged, once per tree, with ``T`` the ``run_seconds`` of
+``BENCHMARK.json``; even pairs run A first and odd pairs run B first.
 
 The output is the table ``CHANGES.md`` records. It has one row per
 end-to-end metric in ``BENCHMARK.json``, plus docs/s divided by each
@@ -52,6 +52,16 @@ def export(rev: str, dest: str) -> str:
     if archive.wait() != 0:
         raise SystemExit(f"git archive {rev} failed")
     return sha
+
+
+def build_pool(tree: str, workload: str) -> None:
+    """Build ``tree``'s input pool for ``workload``, untimed."""
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", "0", "--seconds", "0", "--build-only"]
+    p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
+    if p.returncode != 0:
+        sys.stderr.write(p.stderr[-4000:])
+        raise SystemExit(f"{tree}: {' '.join(cmd)} exited {p.returncode}")
 
 
 def run(tree: str, workload: str, seed: int, seconds: float) -> dict:
@@ -140,30 +150,26 @@ def main(argv=None) -> int:
     ap.add_argument("rev_b")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--seed0", type=int, default=1001)
-    ap.add_argument("--workdir", default=None,
-                    help="where the two trees go (default: a new temp dir)")
-    ap.add_argument("--keep", action="store_true",
-                    help="keep the trees (and their pools) afterwards")
     args = ap.parse_args(argv)
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        spec = json.load(f)["end_to_end"]
-    work = tempfile.mkdtemp(prefix="ab-", dir=args.workdir)
+        bench = json.load(f)
+    spec, seconds = bench["end_to_end"], bench["run_seconds"]
+    work = tempfile.mkdtemp(prefix="ab-")
     try:
         trees = {}
         for side, rev in (("A", args.rev_a), ("B", args.rev_b)):
             tree = os.path.join(work, side)
             sha = export(rev, tree)
             print(f"{side} = {rev} ({sha[:12]}) in {tree}", file=sys.stderr)
-            run(tree, args.workload, args.seed0 - 1, args.seconds)
+            build_pool(tree, args.workload)
             trees[side] = tree
         pairs, seeds = [], []
         for i in range(args.pairs):
             seed = args.seed0 + i
             order = ("A", "B") if i % 2 == 0 else ("B", "A")
-            res = {side: run(trees[side], args.workload, seed, args.seconds)
+            res = {side: run(trees[side], args.workload, seed, seconds)
                    for side in order}
             pairs.append((res["A"], res["B"]))
             seeds.append(seed)
@@ -173,8 +179,7 @@ def main(argv=None) -> int:
                   file=sys.stderr, flush=True)
         print("\n".join(table(args.workload, seeds, pairs, spec)))
     finally:
-        if not args.keep:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
     return 0
 
 
