@@ -275,11 +275,18 @@ def _idct_batch(coefs, qtable):
     blocks (r7, guide §4.2: a per-block scalar IDCT was ~45% of JPEG
     decode in the OCR path).
 
+    Each pass is a fold over whole ``(N, 8, 8)`` planes: eight
+    multiply-adds per pass, whatever the block count.
+
     Exactness argument: every output element's float op sequence is the
-    per-block scalar T.81 IDCT's, vectorized ACROSS blocks —
-    dequantization is int64 (exact), pass 1/2 accumulate terms
-    ``(_C[v]*c)*_COS[v][y]`` in the same v/u order (a scalar loop's
-    skip-zero-term branches are ±0.0-neutral: adding a ±0.0 term to a
+    per-block scalar T.81 IDCT's, vectorized across blocks and across
+    the plane — dequantization is int64 (exact); pass 1 adds, for v =
+    0..7 in order, the term ``(_C[v]*F(u,v))*_COS[v][y]`` to a
+    +0.0-seeded ``tmp[u, y]``, and pass 2 adds, for u = 0..7 in order,
+    ``(_C[u]*tmp[u, y])*_COS[u][x]`` to a +0.0-seeded ``s[y, x]``. A
+    plane fold changes which elements share a numpy call, never the
+    order of one element's multiplies and adds. The scalar loop's
+    skip-zero-term branches are ±0.0-neutral (adding a ±0.0 term to a
     +0.0-seeded sum never changes it), and DC-only blocks keep their
     DISTINCT formula ``dq0/8.0`` (not bit-equal to the general path's
     ``((C0·dq0)·1·C0)/4``). Pinned bit-identical to the scalar
@@ -294,22 +301,18 @@ def _idct_batch(coefs, qtable):
     dc_only = (a[:, 1:] == 0).all(axis=1)
     dqf = dq.astype(np.float64)
     cosr = np.asarray(_COS)                              # (v, y)
-    # pass 1: tmp[u][:, y] = fold_v (_C[v]*c_uv) * _COS[v][y] — each
-    # (block, y) element folds over v in order; term shape (N, 8)
-    tmp = []
+    cvec = np.asarray(_C)[None, :, None]
+    # pass 1: tmp[n, u, y] folds (_C[v]*F[n, v, u]) * _COS[v][y] over v
+    cf = dqf.reshape(nblk, 8, 8) * cvec                  # [n, v, u]
+    tmp = np.zeros((nblk, 8, 8))
+    for v in range(8):
+        tmp += cf[:, v, :, None] * cosr[v]
+    # pass 2: s[n, y, x] folds (_C[u]*tmp[n, u, y]) * _COS[u][x] over u
+    ct = tmp * cvec                                      # [n, u, y]
+    s = np.zeros((nblk, 8, 8))
     for u in range(8):
-        t = np.zeros((nblk, 8))
-        for v in range(8):
-            t = t + (_C[v] * dqf[:, v * 8 + u])[:, None] * cosr[v][None, :]
-        tmp.append(t)
-    # pass 2 + quantize to pixels: out[:, y, x] folds over u in order
-    out = np.empty((nblk, 8, 8), dtype=np.int64)
-    for y in range(8):
-        s = np.zeros((nblk, 8))
-        for u in range(8):
-            s = s + (_C[u] * tmp[u][:, y])[:, None] * cosr[u][None, :]
-        out[:, y, :] = np.floor(s / 4.0 + 128.5).astype(np.int64)
-    out = out.reshape(nblk, 64)
+        s += ct[:, u, :, None] * cosr[u]
+    out = np.floor(s / 4.0 + 128.5).astype(np.int64).reshape(nblk, 64)
     np.clip(out, 0, 255, out=out)
     if dc_only.any():
         val = np.floor(dqf[dc_only, 0] / 8.0 + 128.5).astype(np.int64)

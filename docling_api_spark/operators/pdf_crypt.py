@@ -55,11 +55,16 @@ import struct
 # entry points through it when present; the handler logic, wire
 # formats, padding and error taxonomy are unchanged, and a test pins
 # provider-vs-fallback byte identity on the FIPS vectors and random
-# payloads. SPARK_GRAFT_AES_PROVIDER=pure forces the fallback (used by
-# that test and available as the escape hatch).
+# payloads. RC4 goes through the same provider (its decrepit ``ARC4``,
+# for the key lengths it accepts — 5, 7, 8, 10 and 16 bytes cover the
+# 40- and 128-bit PDF keys); other key lengths keep the pure loop, and
+# the probe below drops the provider unless it reproduces an RFC 6229
+# keystream. SPARK_GRAFT_AES_PROVIDER=pure forces the fallback for both
+# ciphers (used by those tests and available as the escape hatch).
 
 _AES_PROVIDER = os.environ.get("SPARK_GRAFT_AES_PROVIDER", "auto")
 _native_cipher = None
+_native_rc4 = None
 if _AES_PROVIDER != "pure":
     try:
         from cryptography.hazmat.primitives.ciphers import (
@@ -70,6 +75,20 @@ if _AES_PROVIDER != "pure":
             return _CgCipher(_cg_alg.AES(key), mode)
     except Exception:                       # no provider in this venv
         _native_cipher = None
+    try:
+        from cryptography.hazmat.decrepit.ciphers.algorithms import \
+            ARC4 as _CgARC4
+
+        _RC4_KEY_BITS = _CgARC4.key_sizes
+
+        def _native_rc4(key: bytes, data: bytes) -> bytes:
+            return _CgCipher(_CgARC4(key), None).encryptor().update(data)
+
+        if _native_rc4(bytes([1, 2, 3, 4, 5]), bytes(8)) != \
+                bytes.fromhex("b2396305f03dc027"):
+            _native_rc4 = None
+    except Exception:                       # no ARC4 in this provider
+        _native_rc4 = None
 
 #: §7.6.3.3 — the 32-byte password padding string (spec Table 21 bytes)
 PAD = bytes([
@@ -81,7 +100,10 @@ PAD = bytes([
 
 
 def rc4(key: bytes, data: bytes) -> bytes:
-    """Plain RC4 (KSA + PRGA). Symmetric: encrypt == decrypt."""
+    """Plain RC4 (KSA + PRGA). Symmetric: encrypt == decrypt. Runs
+    natively when the provider accepts the key length."""
+    if _native_rc4 is not None and len(key) * 8 in _RC4_KEY_BITS:
+        return _native_rc4(key, data)
     s = list(range(256))
     j = 0
     klen = len(key)

@@ -41,8 +41,11 @@ grammar produced by :mod:`.pdf_write` —
   or ARRAY (§7.8.2 — the array's streams are concatenated with
   whitespace BEFORE tokenization: BT/ET and text state cross stream
   boundaries in real writer output);
-- text operators: ``BT ET Tf Td TD TL T* Tm Tj TJ '``;
-- literal ``(…)`` strings with escapes and ``<…>`` hex strings;
+- text operators: ``BT ET Tf Td TD TL T* Tm Tj TJ '``; other operators
+  (marked content ``BDC``/``EMC`` included) are read and ignored;
+- literal ``(…)`` strings with §7.3.4.2 escapes, ``<…>`` hex strings
+  and inline ``<<…>>`` dictionaries, scanned one pattern match per
+  token (:func:`_tokenize`);
 - layout: items carry ``(page, x, y, font_size)``; reading order =
   ``(page, column, -y, x)`` with a two-column split at x = width/2;
   blocks segmented by y-gap > 1.5 × leading;
@@ -180,6 +183,11 @@ _FILTER_RX = re.compile(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
 _FILTER_NAME_RX = re.compile(rb"/([A-Za-z0-9]+)")
 
 
+#: the LZW table after a clear: the 256 single bytes, then the clear and
+#: EOD codes' placeholders
+_LZW_BASE = [bytes([i]) for i in range(256)] + [b"", b""]
+
+
 def _lzw_decode(raw: bytes) -> bytes:
     """§7.4.4 LZWDecode (EarlyChange=1, the spec default and the only
     value legacy writers emit): MSB-first variable-width codes 9→12
@@ -195,7 +203,7 @@ def _lzw_decode(raw: bytes) -> bytes:
 
     def clear():
         nonlocal entries, width, prev
-        entries = [bytes([i]) for i in range(256)] + [b"", b""]
+        entries = _LZW_BASE.copy()
         width = 9
         prev = None
 
@@ -342,65 +350,95 @@ _ENC_P_RX = re.compile(rb"/P\s+(-?\d+)")
 _XREF_TYPE_RX = re.compile(rb"/Type\s*/XRef")
 
 
+def _hex_string(body: bytes) -> bytes:
+    """The bytes of a ``<…>`` hex string's ``body`` (§7.3.4.3):
+    whitespace is ignored and an odd digit count implies a trailing 0;
+    any other non-hex byte is malformed, typed."""
+    hx = re.sub(rb"\s", b"", body)
+    if len(hx) % 2:
+        hx += b"0"
+    try:
+        return bytes.fromhex(hx.decode("ascii"))
+    except ValueError as e:
+        raise PdfUnsupported(f"bad hex string: {e}") from e
+
+
+#: the bytes a literal string's decoder stops at
+_LITERAL_SPECIAL_RX = re.compile(rb"[()\\]")
+_OCTAL = b"01234567"
+
+
+def _literal_string(data: bytes, i: int) -> tuple[bytes, int]:
+    """Decode the literal ``(…)`` string opened at ``data[i]`` (§7.3.4.2)
+    → ``(value, end)``, ``end`` the index after its closing paren, or
+    -1 when the data ends first (``value`` is then what was read).
+
+    Balanced parens nest; after a backslash, a Table 3 escape maps to
+    its byte, 1-3 octal digits (0-7 only) give one byte, an end of line
+    (CR, LF or CR LF) is dropped with the backslash, and any other
+    byte is kept while the backslash is dropped. A backslash that ends
+    the data is kept."""
+    out = bytearray()
+    depth, i = 1, i + 1
+    n = len(data)
+    search = _LITERAL_SPECIAL_RX.search
+    while True:
+        m = search(data, i)
+        if m is None:
+            out += data[i:]
+            return bytes(out), -1
+        j = m.start()
+        out += data[i:j]
+        c = data[j]
+        if c == 0x5C:                       # backslash
+            e = data[j + 1:j + 2]
+            if not e:
+                out.append(c)
+                return bytes(out), -1
+            if e in _ESCAPES:
+                out += _ESCAPES[e]
+                i = j + 2
+            elif e in _OCTAL:
+                k = j + 2
+                while k < j + 4 and k < n and data[k] in _OCTAL:
+                    k += 1
+                out.append(int(data[j + 1:k], 8) & 0xFF)
+                i = k
+            elif e == b"\r":
+                i = j + 3 if data[j + 2:j + 3] == b"\n" else j + 2
+            elif e == b"\n":
+                i = j + 2
+            else:
+                out += e
+                i = j + 2
+        elif c == 0x28:
+            depth += 1
+            out.append(c)
+            i = j + 1
+        else:
+            depth -= 1
+            if depth == 0:
+                return bytes(out), j + 1
+            out.append(c)
+            i = j + 1
+
+
 def _pdf_string_at(data: bytes, i: int) -> bytes:
     """Decode the PDF string object starting at ``data[i]`` — hex
-    ``<…>`` or literal ``(…)`` with §7.3.4.2 escapes (named, octal,
-    line continuation) and balanced nested parens. Encrypt-dict /O,
-    /U and trailer /ID values arrive in either wire form in real
-    files. (The content-stream tokenizer keeps its own in-loop string
-    branches for position tracking in the hot path — this is the
-    superset decoder; a §7.3.4 fix must land in both.)"""
+    ``<…>`` or literal ``(…)`` (:func:`_literal_string`). Encrypt-dict
+    /O, /U and trailer /ID values arrive in either wire form in real
+    files; the content-stream scanner shares both decoders."""
     if data[i:i + 1] == b"<":
         end = data.find(b">", i)
         if end < 0:
             raise PdfUnsupported("unterminated hex string")
-        hx = re.sub(rb"\s", b"", data[i + 1:end])
-        if len(hx) % 2:
-            hx += b"0"
-        try:
-            return bytes.fromhex(hx.decode("ascii"))
-        except (ValueError, UnicodeDecodeError) as e:
-            raise PdfUnsupported(f"bad hex string: {e}") from e
+        return _hex_string(data[i + 1:end])
     if data[i:i + 1] != b"(":
         raise PdfUnsupported("expected string value")
-    out = bytearray()
-    depth, i = 1, i + 1
-    n = len(data)
-    while i < n:
-        c = data[i]
-        if c == 0x5C:                       # backslash
-            e = data[i + 1:i + 2]
-            if e in _ESCAPES:
-                out += _ESCAPES[e]
-                i += 2
-            elif e.isdigit() and e < b"8":  # 1-3 octal digits
-                j = i + 1
-                while j < min(i + 4, n) and data[j:j + 1].isdigit() \
-                        and data[j:j + 1] < b"8":
-                    j += 1
-                out.append(int(data[i + 1:j], 8) & 0xFF)
-                i = j
-            elif e in (b"\n", b"\r"):       # line continuation
-                i += 2
-                if e == b"\r" and data[i:i + 1] == b"\n":
-                    i += 1
-            else:                           # stray backslash: dropped
-                out += e
-                i += 2
-        elif c == 0x28:
-            depth += 1
-            out.append(c)
-            i += 1
-        elif c == 0x29:
-            depth -= 1
-            if depth == 0:
-                return bytes(out)
-            out.append(c)
-            i += 1
-        else:
-            out.append(c)
-            i += 1
-    raise PdfUnsupported("unterminated literal string")
+    value, end = _literal_string(data, i)
+    if end < 0:
+        raise PdfUnsupported("unterminated literal string")
+    return value
 
 
 def _dict_string(body: bytes, key: bytes) -> bytes:
@@ -409,6 +447,11 @@ def _dict_string(body: bytes, key: bytes) -> bytes:
         raise PdfUnsupported(
             f"encrypt dict missing /{key.decode('latin-1')}")
     return _pdf_string_at(body, m.end())
+
+
+#: what ``\s`` matches in a bytes pattern
+_WHITESPACE = b" \t\n\r\f\v"
+_TRAILER_OPEN_RX = re.compile(rb"\s*(?=<<)")
 
 
 def _trailer_regions(data: bytes, objs: dict[int, bytes]) -> list[bytes]:
@@ -426,9 +469,20 @@ def _trailer_regions(data: bytes, objs: dict[int, bytes]) -> list[bytes]:
     # classic writer's shape. A bare 'trailer' inside an uncompressed
     # content stream's TEXT no longer matches (r6, ADVICE r5: the
     # unanchored scan turned a valid page mentioning 'trailer' near
-    # '/Encrypt' into an unsupported-layout error row).
-    for m in re.finditer(rb"(?:^|[>\r\n])\s*trailer\s*(?=<<)", data):
-        regions.append(data[m.end():m.end() + 2048])
+    # '/Encrypt' into an unsupported-layout error row). The literal is
+    # found first and its context checked around it: the region starts
+    # where ``(?:^|[>\r\n])\s*trailer\s*(?=<<)`` would end a match.
+    t = data.find(b"trailer")
+    while t >= 0:
+        q = t
+        while q and data[q - 1] in _WHITESPACE:
+            q -= 1
+        if (q == 0 or data[q - 1] == 0x3E or b"\n" in data[q:t]
+                or b"\r" in data[q:t]):
+            m = _TRAILER_OPEN_RX.match(data, t + 7)
+            if m is not None:
+                regions.append(data[m.end():m.end() + 2048])
+        t = data.find(b"trailer", t + 7)
     for body in objs.values():
         sm = _STREAM_START_RX.search(body)
         dict_part = body[:sm.start()] if sm else body
@@ -602,105 +656,137 @@ _ESCAPES = {
 }
 
 
-def _tokenize(stream: bytes):
-    """Yield ('str', bytes) | ('num', float) | ('op', bytes) | ('arr', list)."""
-    i, n = 0, len(stream)
+#: bytes that end a name or an operator (§7.2.2 whitespace as this
+#: grammar reads it, plus the delimiters)
+_DELIMS = rb" \t\r\n()<>\[\]{}/%"
+
+#: one content-stream token per match, after any whitespace and stray
+#: closing delimiters (these start no token). Plain literal strings,
+#: plain hex strings and arrays of numbers, names and plain strings are
+#: matched whole; ``slow`` hands a literal string with escapes or nested
+#: parens, a ``<<`` dictionary, a hex string with whitespace or junk,
+#: and any other array to :func:`_tokenize`'s scalar branches.
+_TOKEN_RX = re.compile(
+    rb"[ \t\r\n)>\]{}%]*(?:"
+    rb"(?P<num>[-+.0-9]+)"
+    rb"|(?P<op>[^-+.0-9" + _DELIMS + rb"][^" + _DELIMS + rb"]*)"
+    rb"|/(?P<name>[^" + _DELIMS + rb"]*)"
+    rb"|\((?P<str>[^()\\]*)\)"
+    rb"|<(?P<hex>[0-9A-Fa-f]*)>"
+    rb"|\[(?P<arr>(?:[^()\]]|\([^()\\]*\))*)\]"
+    rb"|(?P<slow>[(<\[]))")
+_ARRAY_SPECIAL_RX = re.compile(rb"[(\]]")
+
+
+def _array_end(stream: bytes, i: int) -> int:
+    """Index of the ``]`` closing the array opened at ``stream[i]``:
+    the first one outside a literal string, or ``len(stream)``."""
+    search = _ARRAY_SPECIAL_RX.search
+    j = i + 1
+    while True:
+        m = search(stream, j)
+        if m is None:
+            return len(stream)
+        if stream[m.start()] == 0x5D:
+            return m.start()
+        j = _literal_string(stream, m.start())[1]
+        if j < 0:
+            return len(stream)
+
+
+def _dict_end(stream: bytes, i: int) -> int:
+    """Index after the ``>>`` closing the ``<<`` dictionary opened at
+    ``stream[i]`` (marked-content properties, §14.6.2). Dictionaries
+    nest; literal and hex strings inside are skipped whole, so a ``>``
+    in them closes nothing."""
+    depth, n = 0, len(stream)
     while i < n:
-        c = stream[i:i + 1]
-        if c in b" \t\r\n":
+        if stream.startswith(b"<<", i):
+            depth += 1
+            i += 2
+        elif stream.startswith(b">>", i):
+            depth -= 1
+            i += 2
+            if depth == 0:
+                return i
+        elif stream[i] == 0x28:
+            i = _literal_string(stream, i)[1]
+            if i < 0:
+                break
+        elif stream[i] == 0x3C:
+            i = stream.find(b">", i)
+            if i < 0:
+                break
             i += 1
-        elif c == b"(":
-            out = bytearray()
-            depth = 1
-            i += 1
-            while i < n and depth:
-                ch = stream[i:i + 1]
-                if ch == b"\\" and i + 1 < n:
-                    nxt = stream[i + 1:i + 2]
-                    if nxt in _ESCAPES:
-                        out += _ESCAPES[nxt]
-                        i += 2
-                        continue
-                    if nxt.isdigit():  # octal
-                        j = i + 1
-                        oct_s = b""
-                        while j < n and j < i + 4 and stream[j:j + 1].isdigit():
-                            oct_s += stream[j:j + 1]
-                            j += 1
-                        out.append(int(oct_s, 8) & 0xFF)
-                        i = j
-                        continue
-                    i += 2
-                    continue
-                if ch == b"(":
-                    depth += 1
-                elif ch == b")":
-                    depth -= 1
-                    if depth == 0:
-                        i += 1
-                        break
-                out += ch
-                i += 1
-            yield ("str", bytes(out))
-        elif c == b"<" and stream[i:i + 2] != b"<<":
-            j = stream.find(b">", i)
-            if j < 0:
-                raise PdfUnsupported("unterminated hex string")
-            hx = re.sub(rb"\s", b"", stream[i + 1:j])
-            if len(hx) % 2:
-                hx += b"0"
-            try:
-                s = bytes.fromhex(hx.decode("ascii"))
-            except ValueError as e:
-                # non-hex chars are malformed per §7.3.4.3 — typed
-                # channel, not a stray ValueError (r5 mutation-fuzz find)
-                raise PdfUnsupported(f"bad hex string: {e}") from e
-            yield ("str", s)
-            i = j + 1
-        elif c == b"[":
-            # collect a flat array of strings/numbers (for TJ)
-            j = i + 1
-            arr = []
-            sub = []
-            depth = 1
-            while j < n and depth:
-                ch = stream[j:j + 1]
-                if ch == b"]":
-                    depth -= 1
-                j += 1
-            for tok in _tokenize(stream[i + 1:j - 1]):
-                sub.append(tok)
-            arr = sub
-            yield ("arr", arr)
-            i = j
-        elif c == b"/":
-            j = i + 1
-            while j < n and stream[j:j + 1] not in b" \t\r\n()<>[]{}/%":
-                j += 1
-            yield ("name", stream[i + 1:j])
-            i = j
-        elif c in b"+-.0123456789":
-            j = i
-            while j < n and stream[j:j + 1] in b"+-.0123456789":
-                j += 1
-            try:
-                num = float(stream[i:j])
-            except ValueError:
-                # corrupt number token (bare '+', '-', '.', '1.2.3' —
-                # mutation-fuzz find): junk, skip it rather than crash
-                i = j
-                continue
-            yield ("num", num)
-            i = j
         else:
-            j = i
-            while j < n and stream[j:j + 1] not in b" \t\r\n()<>[]{}/%":
-                j += 1
-            if j == i:
-                i += 1
-                continue
-            yield ("op", stream[i:j])
-            i = j
+            i += 1
+    raise PdfUnsupported("unterminated dictionary")
+
+
+def _tokenize(stream: bytes) -> list[tuple]:
+    """Content stream → ``[('str', bytes) | ('num', float) | ('op',
+    bytes) | ('name', bytes) | ('arr', list) | ('dict', bytes)]``.
+
+    Each token is one :data:`_TOKEN_RX` match. The scalar branches read
+    what the pattern leaves to them: a literal string with escapes or
+    nested parens (:func:`_literal_string`; unterminated, it runs to the
+    end of the stream), a balanced ``<<…>>`` dictionary kept as raw
+    bytes, a hex string with whitespace or a non-hex byte
+    (:func:`_hex_string`), and an array whose strings need the scalar
+    reader. An array ends at its first ``]`` outside a literal string;
+    its inside is tokenized on its own, so nested arrays do not nest
+    (an unterminated array runs to the end of the stream, less its
+    last byte). A number run that is not a number is skipped."""
+    toks: list[tuple] = []
+    append = toks.append
+    match = _TOKEN_RX.match
+    pos = 0
+    while True:
+        m = match(stream, pos)
+        if m is None:
+            return toks
+        kind = m.lastgroup
+        pos = m.end()
+        if kind == "op" or kind == "name":
+            append((kind, m.group(kind)))
+        elif kind == "num":
+            try:
+                append(("num", float(m.group(kind))))
+            except ValueError:
+                pass    # corrupt number ('+', '.', '1.2.3'): junk
+        elif kind == "str":
+            append(("str", m.group(kind)))
+        elif kind == "hex":
+            hx = m.group(kind)
+            append(("str", bytes.fromhex(
+                (hx + b"0" if len(hx) % 2 else hx).decode("ascii"))))
+        elif kind == "arr":
+            append(("arr", _tokenize(m.group(kind))))
+        else:
+            i = pos - 1
+            c = stream[i]
+            if c == 0x28:                       # '('
+                value, pos = _literal_string(stream, i)
+                if pos < 0:
+                    pos = len(stream)
+                append(("str", value))
+            elif c == 0x5B:                     # '['
+                j = _array_end(stream, i)
+                if j < len(stream):
+                    append(("arr", _tokenize(stream[i + 1:j])))
+                    pos = j + 1
+                else:
+                    append(("arr", _tokenize(stream[i + 1:j - 1])))
+                    pos = j
+            elif stream.startswith(b"<<", i):
+                pos = _dict_end(stream, i)
+                append(("dict", stream[i:pos]))
+            else:                               # '<' hex string
+                j = stream.find(b">", i)
+                if j < 0:
+                    raise PdfUnsupported("unterminated hex string")
+                append(("str", _hex_string(stream[i + 1:j])))
+                pos = j + 1
 
 
 _MAX_FORM_DEPTH = 8
@@ -710,7 +796,9 @@ def _extract_items(stream: bytes, page_no: int,
                    decode=None, xobjects=None,
                    form_depth: int = 0) -> list[tuple]:
     """→ [(page, x, y, size, payload)] where payload is text or a
-    :class:`_PdfImage`; ``decode`` maps string-operand bytes to text
+    :class:`_PdfImage`. Walks the :func:`_tokenize` list once: operand
+    tokens stack up, each operator reads the stack and clears it.
+    ``decode`` maps string-operand bytes to text
     per the page font's /Encoding (default latin-1); ``xobjects``
     resolves ``Do`` operand names to images (r6 notch 11a). The
     graphics state tracked for images is the q/Q-scoped ``cm``
@@ -727,11 +815,11 @@ def _extract_items(stream: bytes, page_no: int,
     in_text = False
     ctm = (1.0, 1.0, 0.0, 0.0)       # (a, d, e, f) of the last cm
     gs_stack: list[tuple] = []
-    for kind, val in _tokenize(stream):
-        if kind in ("str", "num", "arr", "name"):
-            stack.append((kind, val))
+    for tok in _tokenize(stream):
+        if tok[0] != "op":
+            stack.append(tok)
             continue
-        op = val
+        op = tok[1]
         if op == b"q":
             gs_stack.append(ctm)
             if len(gs_stack) > 256:

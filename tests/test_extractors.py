@@ -1649,6 +1649,37 @@ def test_aes_provider_matches_pure_python_fallback():
         importlib.reload(PC)
 
 
+def test_rc4_provider_matches_pure_python_fallback():
+    """RC4 runs through the native provider for the key lengths it
+    accepts and the pure loop for the rest; both must give the same
+    bytes for every key length 1-16 and the 3-byte ``b"Key"`` vector."""
+    import importlib
+    import os
+    import random
+
+    from docling_api_spark.operators import pdf_crypt as PC
+
+    if PC._native_rc4 is None:
+        pytest.skip("no native RC4 provider in this venv")
+    assert {5, 16} <= {k for k in range(1, 17)
+                       if k * 8 in PC._RC4_KEY_BITS}
+    os.environ["SPARK_GRAFT_AES_PROVIDER"] = "pure"
+    try:
+        pure = importlib.reload(PC)
+        assert pure._native_rc4 is None
+        rnd = random.Random(7)
+        for klen in range(1, 17):
+            for dlen in (0, 1, 16, 32, 1000):
+                key = bytes(rnd.randrange(256) for _ in range(klen))
+                data = bytes(rnd.randrange(256) for _ in range(dlen))
+                assert PC.rc4(key, data) == pure.rc4(key, data), klen
+        assert PC.rc4(b"Key", b"Plaintext") == pure.rc4(b"Key", b"Plaintext")
+        assert PC.rc4(b"Key", b"Plaintext").hex() == "bbf316e8d940af0ad3"
+    finally:
+        del os.environ["SPARK_GRAFT_AES_PROVIDER"]
+        importlib.reload(PC)
+
+
 def test_docx_mixed_text_image_paragraph_keeps_text():
     """r7 (r6 ADVICE low #1): a w:p carrying BOTH an a:blip and run
     text must keep the text after the image placeholder instead of

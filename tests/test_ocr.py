@@ -194,6 +194,30 @@ def test_idct_batch_bit_identical_to_scalar():
         assert list(got[i]) == _scalar_idct(b, qt), i
 
 
+def test_idct_batch_small_batches_bit_identical_to_scalar():
+    """Batches of 1-4 blocks (an embedded image's usual size) mixing
+    DC-only and AC blocks stay bit-identical to the scalar IDCT."""
+    import random
+
+    from docling_api_spark.operators.jpeg_codec import _idct_batch
+
+    rnd = random.Random(99)
+    for trial in range(200):
+        blocks = []
+        for _ in range(1 + trial % 4):
+            b = [0] * 64
+            b[0] = rnd.randrange(-1024, 1024)
+            if rnd.random() < 0.5:               # else DC-only
+                for _ in range(rnd.randrange(1, 12)):
+                    b[rnd.randrange(1, 64)] = rnd.randrange(-512, 512)
+            blocks.append(b)
+        qt = [rnd.randrange(1, 100) for _ in range(64)]
+        got = _idct_batch(blocks, qt)
+        assert got.shape == (len(blocks), 64)
+        for i, b in enumerate(blocks):
+            assert list(got[i]) == _scalar_idct(b, qt), (trial, i)
+
+
 def test_zigzag_matches_spec_literal():
     """r7 (r6 ADVICE, high): _ZIGZAG must equal the canonical T.81
     Figure A.6 zig-zag sequence, pinned LITERALLY so a generator-logic
