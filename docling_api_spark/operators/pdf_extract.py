@@ -747,15 +747,13 @@ def _tokenize(stream: bytes) -> list[tuple]:
             return toks
         kind = m.lastgroup
         pos = m.end()
-        if kind == "op" or kind == "name":
+        if kind == "op" or kind == "name" or kind == "str":
             append((kind, m.group(kind)))
         elif kind == "num":
             try:
                 append(("num", float(m.group(kind))))
             except ValueError:
                 pass    # corrupt number ('+', '.', '1.2.3'): junk
-        elif kind == "str":
-            append(("str", m.group(kind)))
         elif kind == "hex":
             hx = m.group(kind)
             append(("str", bytes.fromhex(

@@ -1606,7 +1606,8 @@ def test_aes_provider_matches_pure_python_fallback():
     import) must be byte-identical to the pure-Python FIPS-197 fallback
     on every entry point the handlers use — CBC nopad (Algorithm 2.B /
     UE wrap), the IV-prefixed PKCS#5 wire format, and the one-block
-    ECB /Perms seal — across AES-128 and AES-256 keys and many sizes."""
+    ECB /Perms seal — across AES-128 and AES-256 keys and many sizes;
+    likewise RC4 for every key length 1-16."""
     import importlib
     import os
     import random
@@ -1644,37 +1645,19 @@ def test_aes_provider_matches_pure_python_fallback():
         for r in (5, 6):
             assert PC.hash_2b(b"", b"saltsalt", b"", r) == \
                 pure.hash_2b(b"", b"saltsalt", b"", r)
-    finally:
-        del os.environ["SPARK_GRAFT_AES_PROVIDER"]
-        importlib.reload(PC)
-
-
-def test_rc4_provider_matches_pure_python_fallback():
-    """RC4 runs through the native provider for the key lengths it
-    accepts and the pure loop for the rest; both must give the same
-    bytes for every key length 1-16 and the 3-byte ``b"Key"`` vector."""
-    import importlib
-    import os
-    import random
-
-    from docling_api_spark.operators import pdf_crypt as PC
-
-    if PC._native_rc4 is None:
-        pytest.skip("no native RC4 provider in this venv")
-    assert {5, 16} <= {k for k in range(1, 17)
-                       if k * 8 in PC._RC4_KEY_BITS}
-    os.environ["SPARK_GRAFT_AES_PROVIDER"] = "pure"
-    try:
-        pure = importlib.reload(PC)
+        # RC4: native for the key lengths the provider accepts (the 5-
+        # and 16-byte PDF keys among them), the pure loop for the rest
         assert pure._native_rc4 is None
-        rnd = random.Random(7)
+        if PC._native_rc4 is not None:
+            assert {5, 16} <= {k for k in range(1, 17)
+                               if k * 8 in PC._RC4_KEY_BITS}
         for klen in range(1, 17):
-            for dlen in (0, 1, 16, 32, 1000):
+            for dlen in (0, 1, 16, 1000):
                 key = bytes(rnd.randrange(256) for _ in range(klen))
                 data = bytes(rnd.randrange(256) for _ in range(dlen))
                 assert PC.rc4(key, data) == pure.rc4(key, data), klen
-        assert PC.rc4(b"Key", b"Plaintext") == pure.rc4(b"Key", b"Plaintext")
-        assert PC.rc4(b"Key", b"Plaintext").hex() == "bbf316e8d940af0ad3"
+        assert PC.rc4(b"Key", b"Plaintext") == \
+            pure.rc4(b"Key", b"Plaintext")
     finally:
         del os.environ["SPARK_GRAFT_AES_PROVIDER"]
         importlib.reload(PC)

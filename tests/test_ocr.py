@@ -173,7 +173,8 @@ def test_idct_batch_bit_identical_to_scalar():
     """r7: decode_gray_jpeg batches the IDCT through numpy. Every block
     must produce exactly the scalar IDCT's pixels — including DC-only
     blocks (distinct fast-path formula), sparse blocks (skip-zero
-    branches), and extreme coefficients."""
+    branches), and extreme coefficients, in one large batch and in
+    batches of 1-4 blocks."""
     import random
 
     from docling_api_spark.operators.jpeg_codec import _idct_batch
@@ -192,29 +193,20 @@ def test_idct_batch_bit_identical_to_scalar():
     got = _idct_batch(blocks, qt)
     for i, b in enumerate(blocks):
         assert list(got[i]) == _scalar_idct(b, qt), i
-
-
-def test_idct_batch_small_batches_bit_identical_to_scalar():
-    """Batches of 1-4 blocks (an embedded image's usual size) mixing
-    DC-only and AC blocks stay bit-identical to the scalar IDCT."""
-    import random
-
-    from docling_api_spark.operators.jpeg_codec import _idct_batch
-
-    rnd = random.Random(99)
+    # batches of 1-4 blocks (an embedded image's usual size) mixing
+    # DC-only and AC blocks
     for trial in range(200):
-        blocks = []
+        small = []
         for _ in range(1 + trial % 4):
             b = [0] * 64
             b[0] = rnd.randrange(-1024, 1024)
             if rnd.random() < 0.5:               # else DC-only
                 for _ in range(rnd.randrange(1, 12)):
                     b[rnd.randrange(1, 64)] = rnd.randrange(-512, 512)
-            blocks.append(b)
+            small.append(b)
         qt = [rnd.randrange(1, 100) for _ in range(64)]
-        got = _idct_batch(blocks, qt)
-        assert got.shape == (len(blocks), 64)
-        for i, b in enumerate(blocks):
+        got = _idct_batch(small, qt)
+        for i, b in enumerate(small):
             assert list(got[i]) == _scalar_idct(b, qt), (trial, i)
 
 
