@@ -755,9 +755,7 @@ def _tokenize(stream: bytes) -> list[tuple]:
             except ValueError:
                 pass    # corrupt number ('+', '.', '1.2.3'): junk
         elif kind == "hex":
-            hx = m.group(kind)
-            append(("str", bytes.fromhex(
-                (hx + b"0" if len(hx) % 2 else hx).decode("ascii"))))
+            append(("str", _hex_string(m.group(kind))))
         elif kind == "arr":
             append(("arr", _tokenize(m.group(kind))))
         else:
