@@ -661,11 +661,12 @@ _ESCAPES = {
 _DELIMS = rb" \t\r\n()<>\[\]{}/%"
 
 #: one content-stream token per match, after any whitespace and stray
-#: closing delimiters (these start no token). Plain literal strings,
-#: plain hex strings and arrays of numbers, names and plain strings are
-#: matched whole; ``slow`` hands a literal string with escapes or nested
-#: parens, a ``<<`` dictionary, a hex string with whitespace or junk,
-#: and any other array to :func:`_tokenize`'s scalar branches.
+#: closing delimiters (these start no token). Plain literal strings
+#: (no backslash, no nested parens), plain hex strings and arrays whose
+#: only parens are plain strings are matched whole; ``slow`` hands a
+#: literal string with escapes or nested parens, a ``<<`` dictionary, a
+#: hex string with whitespace or junk, and any other array to
+#: :func:`_tokenize`'s scalar branches.
 _TOKEN_RX = re.compile(
     rb"[ \t\r\n)>\]{}%]*(?:"
     rb"(?P<num>[-+.0-9]+)"
