@@ -56,11 +56,12 @@ import struct
 # formats, padding and error taxonomy are unchanged, and a test pins
 # provider-vs-fallback byte identity on the FIPS vectors and random
 # payloads. RC4 goes through the same provider (its decrepit ``ARC4``,
-# for the key lengths it accepts — 5, 7, 8, 10 and 16 bytes cover the
-# 40- and 128-bit PDF keys); other key lengths keep the pure loop, and
-# the probe below drops the provider unless it reproduces an RFC 6229
-# keystream. SPARK_GRAFT_AES_PROVIDER=pure forces the fallback for both
-# ciphers (used by those tests and available as the escape hatch).
+# for the key lengths it accepts, which include the 5-, 10- and
+# 16-byte keys of 40- and 128-bit files); other key lengths keep the
+# pure loop, and the probe below drops the provider unless it
+# reproduces an RFC 6229 keystream. SPARK_GRAFT_AES_PROVIDER=pure
+# forces the fallback for both ciphers (used by those tests and
+# available as the escape hatch).
 
 _AES_PROVIDER = os.environ.get("SPARK_GRAFT_AES_PROVIDER", "auto")
 _native_cipher = None
