@@ -363,6 +363,15 @@ def _hex_string(body: bytes) -> bytes:
         raise PdfUnsupported(f"bad hex string: {e}") from e
 
 
+def _hex_string_at(data: bytes, i: int) -> tuple[bytes, int]:
+    """Decode the hex string opened by the ``<`` at ``data[i]`` →
+    ``(value, index after its '>')``."""
+    end = data.find(b">", i)
+    if end < 0:
+        raise PdfUnsupported("unterminated hex string")
+    return _hex_string(data[i + 1:end]), end + 1
+
+
 #: the bytes a literal string's decoder stops at
 _LITERAL_SPECIAL_RX = re.compile(rb"[()\\]")
 _OCTAL = b"01234567"
@@ -429,10 +438,7 @@ def _pdf_string_at(data: bytes, i: int) -> bytes:
     /O, /U and trailer /ID values arrive in either wire form in real
     files; the content-stream scanner shares both decoders."""
     if data[i:i + 1] == b"<":
-        end = data.find(b">", i)
-        if end < 0:
-            raise PdfUnsupported("unterminated hex string")
-        return _hex_string(data[i + 1:end])
+        return _hex_string_at(data, i)[0]
     if data[i:i + 1] != b"(":
         raise PdfUnsupported("expected string value")
     value, end = _literal_string(data, i)
@@ -662,11 +668,10 @@ _DELIMS = rb" \t\r\n()<>\[\]{}/%"
 
 #: one content-stream token per match, after any whitespace and stray
 #: closing delimiters (these start no token). Plain literal strings
-#: (no backslash, no nested parens), plain hex strings and arrays whose
-#: only parens are plain strings are matched whole; ``slow`` hands a
-#: literal string with escapes or nested parens, a ``<<`` dictionary, a
-#: hex string with whitespace or junk, and any other array to
-#: :func:`_tokenize`'s scalar branches.
+#: (no backslash, no nested parens) and plain hex strings are matched
+#: whole; ``slow`` hands a literal string with escapes or nested
+#: parens, a ``<<`` dictionary, a hex string with whitespace or junk,
+#: and every array to :func:`_tokenize`'s scalar branches.
 _TOKEN_RX = re.compile(
     rb"[ \t\r\n)>\]{}%]*(?:"
     rb"(?P<num>[-+.0-9]+)"
@@ -674,7 +679,6 @@ _TOKEN_RX = re.compile(
     rb"|/(?P<name>[^" + _DELIMS + rb"]*)"
     rb"|\((?P<str>[^()\\]*)\)"
     rb"|<(?P<hex>[0-9A-Fa-f]*)>"
-    rb"|\[(?P<arr>(?:[^()\]]|\([^()\\]*\))*)\]"
     rb"|(?P<slow>[(<\[]))")
 _ARRAY_SPECIAL_RX = re.compile(rb"[(\]]")
 
@@ -733,11 +737,10 @@ def _tokenize(stream: bytes) -> list[tuple]:
     nested parens (:func:`_literal_string`; unterminated, it runs to the
     end of the stream), a balanced ``<<…>>`` dictionary kept as raw
     bytes, a hex string with whitespace or a non-hex byte
-    (:func:`_hex_string`), and an array whose strings need the scalar
-    reader. An array ends at its first ``]`` outside a literal string;
-    its inside is tokenized on its own, so nested arrays do not nest
-    (an unterminated array runs to the end of the stream, less its
-    last byte). A number run that is not a number is skipped."""
+    (:func:`_hex_string_at`), and an array. An array ends at its first
+    ``]`` outside a literal string, or at the end of the stream; its
+    inside is tokenized on its own, so nested arrays do not nest. A
+    number run that is not a number is skipped."""
     toks: list[tuple] = []
     append = toks.append
     match = _TOKEN_RX.match
@@ -757,8 +760,6 @@ def _tokenize(stream: bytes) -> list[tuple]:
                 pass    # corrupt number ('+', '.', '1.2.3'): junk
         elif kind == "hex":
             append(("str", _hex_string(m.group(kind))))
-        elif kind == "arr":
-            append(("arr", _tokenize(m.group(kind))))
         else:
             i = pos - 1
             c = stream[i]
@@ -769,21 +770,14 @@ def _tokenize(stream: bytes) -> list[tuple]:
                 append(("str", value))
             elif c == 0x5B:                     # '['
                 j = _array_end(stream, i)
-                if j < len(stream):
-                    append(("arr", _tokenize(stream[i + 1:j])))
-                    pos = j + 1
-                else:
-                    append(("arr", _tokenize(stream[i + 1:j - 1])))
-                    pos = j
+                append(("arr", _tokenize(stream[i + 1:j])))
+                pos = j + 1
             elif stream.startswith(b"<<", i):
                 pos = _dict_end(stream, i)
                 append(("dict", stream[i:pos]))
             else:                               # '<' hex string
-                j = stream.find(b">", i)
-                if j < 0:
-                    raise PdfUnsupported("unterminated hex string")
-                append(("str", _hex_string(stream[i + 1:j])))
-                pos = j + 1
+                value, pos = _hex_string_at(stream, i)
+                append(("str", value))
 
 
 _MAX_FORM_DEPTH = 8

@@ -7,7 +7,9 @@ top of the original loop:
 
 - a balanced ``<<…>>`` dictionary (nesting allowed, strings inside
   skipped whole) is one ``('dict', raw bytes)`` operand;
-- an array ends at its first ``]`` outside a literal string;
+- an array ends at its first ``]`` outside a literal string, or at the
+  end of the stream (the original loop dropped the stream's last byte
+  from an unterminated array);
 - literal-string escapes follow §7.3.4.2: only 0-7 are octal digits,
   any other byte after a backslash is kept while the backslash is
   dropped, and a backslash before CR, LF or CR LF drops both.
@@ -137,12 +139,12 @@ def tokenize(stream: bytes):
             yield ("str", s)
             i = j + 1
         elif c == b"[":
-            # a flat array (for TJ): up to the first ']' outside a string
+            # a flat array (for TJ): up to the first ']' outside a
+            # string, or to the end of the stream
             j = i + 1
             while j < n:
                 ch = stream[j:j + 1]
                 if ch == b"]":
-                    j += 1
                     break
                 if ch == b"(":
                     j = _skip_literal(stream, j)
@@ -150,8 +152,8 @@ def tokenize(stream: bytes):
                         j = n
                     continue
                 j += 1
-            yield ("arr", list(tokenize(stream[i + 1:j - 1])))
-            i = j
+            yield ("arr", list(tokenize(stream[i + 1:j])))
+            i = j + 1
         elif c == b"/":
             j = i + 1
             while j < n and stream[j:j + 1] not in _DELIMS:

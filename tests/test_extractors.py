@@ -1618,49 +1618,47 @@ def test_aes_provider_matches_pure_python_fallback():
         import pytest
         pytest.skip("no native AES provider in this venv")
 
-    os.environ["SPARK_GRAFT_AES_PROVIDER"] = "pure"
-    try:
-        pure = importlib.reload(PC)
-        assert pure._native_cipher is None
+    # reload() re-executes the module in place, so every output is taken
+    # under the native provider BEFORE the pure reload and compared after
+    def outputs(C):
         rnd = random.Random(42)
+        out = []
         for klen in (16, 32):
             for dlen in (16, 64, 1024, 4096):
                 key = bytes(rnd.randrange(256) for _ in range(klen))
                 iv = bytes(rnd.randrange(256) for _ in range(16))
                 data = bytes(rnd.randrange(256) for _ in range(dlen))
-                assert PC._cbc_nopad(key, iv, data, True) == \
-                    pure._cbc_nopad(key, iv, data, True)
-                assert PC._cbc_nopad(key, iv, data, False) == \
-                    pure._cbc_nopad(key, iv, data, False)
-                ragged = data[:dlen - 3]
-                wire = PC.aes_cbc_encrypt(key, iv, ragged)
-                assert wire == pure.aes_cbc_encrypt(key, iv, ragged)
-                assert PC.aes_cbc_decrypt(key, wire) == ragged
-                assert pure.aes_cbc_decrypt(key, wire) == ragged
+                wire = C.aes_cbc_encrypt(key, iv, data[:dlen - 3])
+                assert C.aes_cbc_decrypt(key, wire) == data[:dlen - 3]
+                out += [C._cbc_nopad(key, iv, data, True),
+                        C._cbc_nopad(key, iv, data, False), wire]
         fkey = bytes(range(32))
-        assert PC.perms_value(fkey, -4) == pure.perms_value(fkey, -4)
-        assert PC.perms_check(fkey, PC.perms_value(fkey, -4), -4)
-        assert pure.perms_check(fkey, PC.perms_value(fkey, -4), -4)
+        assert C.perms_check(fkey, C.perms_value(fkey, -4), -4)
+        out.append(C.perms_value(fkey, -4))
         # the hardened KDF end to end (both the R6 loop and R5 one-shot)
-        for r in (5, 6):
-            assert PC.hash_2b(b"", b"saltsalt", b"", r) == \
-                pure.hash_2b(b"", b"saltsalt", b"", r)
-        # RC4: native for the key lengths the provider accepts (the 5-
-        # and 16-byte PDF keys among them), the pure loop for the rest
-        assert pure._native_rc4 is None
-        if PC._native_rc4 is not None:
-            assert {5, 16} <= {k for k in range(1, 17)
-                               if k * 8 in PC._RC4_KEY_BITS}
+        out += [C.hash_2b(b"", b"saltsalt", b"", r) for r in (5, 6)]
         for klen in range(1, 17):
             for dlen in (0, 1, 16, 1000):
                 key = bytes(rnd.randrange(256) for _ in range(klen))
                 data = bytes(rnd.randrange(256) for _ in range(dlen))
-                assert PC.rc4(key, data) == pure.rc4(key, data), klen
-        assert PC.rc4(b"Key", b"Plaintext") == \
-            pure.rc4(b"Key", b"Plaintext")
+                out.append(C.rc4(key, data))
+        return out + [C.rc4(b"Key", b"Plaintext")]
+
+    # RC4 runs natively for the key lengths the provider accepts (the
+    # 5- and 16-byte PDF keys among them), the pure loop for the rest
+    if PC._native_rc4 is not None:
+        assert {5, 16} <= {k for k in range(1, 17)
+                           if k * 8 in PC._RC4_KEY_BITS}
+    native = outputs(PC)
+    os.environ["SPARK_GRAFT_AES_PROVIDER"] = "pure"
+    try:
+        pure = importlib.reload(PC)
+        assert pure._native_cipher is None and pure._native_rc4 is None
+        assert native == outputs(pure)
     finally:
         del os.environ["SPARK_GRAFT_AES_PROVIDER"]
         importlib.reload(PC)
+    assert PC._native_cipher is not None
 
 
 def test_docx_mixed_text_image_paragraph_keeps_text():

@@ -45,6 +45,7 @@ def _seed_streams() -> list[bytes]:
         b"/P <</MCID 0>> BDC BT /F1 11 Tf 72 700 Td (x) Tj ET EMC"
         b" /Span <</ActualText (a>>b) /Alt <4142>>> BDC EMC",
         b"BT (a\\101\\18b\\9) Tj (c\\\r\nd\\\re\\\nf) Tj T* (g) ' ET",
+        b"BT /F1 11 Tf 72 700 Td [(ab) 1 Tj",
     ]
     return seeds
 
@@ -100,6 +101,9 @@ def test_tj_kerning_gap_and_bracket_inside_string():
     pdf = _pdf_with_stream(
         b"BT /F1 11 Tf 72 700 Td [(see [1]) -250 (more)] TJ ET")
     assert extract_pdf(pdf) == "see [1] more"
+    # an unterminated array runs to the end of the stream
+    assert _tokenize(b"[(ab) 1 Tj") == [
+        ("arr", [("str", b"ab"), ("num", 1.0), ("op", b"Tj")])]
 
 
 def test_marked_content_dictionary_is_one_operand():
