@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import math
 import struct
+from array import array
 
 #: quantization table, generated (not transcribed): mild frequency
 #: rolloff — flat enough that fixture gradients survive recognizably,
@@ -63,6 +64,8 @@ def _make_zigzag() -> list[int]:
 
 
 _ZIGZAG = _make_zigzag()
+#: natural position → zig-zag index
+_UNZIGZAG = [_ZIGZAG.index(p) for p in range(64)]
 
 #: cos((2x+1)·u·π/16) table
 _COS = [[math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)]
@@ -241,12 +244,58 @@ def _destuff(scan: bytes) -> bytes:
     return scan.replace(b"\xff\x00", b"\xff")
 
 
-def _dec_table(bits: list[int], vals: list[int]):
-    """DHT → (lut, long): ``lut`` resolves codes of ≤ 8 bits in ONE
-    8-bit-prefix lookup (every suffix filled); longer codes fall back
-    to the (length, code) dict."""
-    lut: list[tuple[int, int] | None] = [None] * 256
-    long: dict[tuple[int, int], int] = {}
+#: steps of a decode-table entry that are not an AC coefficient's run+1
+_EOB, _ZRL, _BAD_AC, _BAD_DC, _BAD_CODE = 0, -1, -2, -3, -4
+_STEP_ERRORS = {_BAD_AC: "jpeg: bad AC symbol",
+                _BAD_DC: "jpeg: DC category out of range",
+                _BAD_CODE: "jpeg: invalid Huffman code"}
+_NO_CODE = (0, _BAD_CODE, 0, 0)
+
+#: decode tables memoized per worker by (class, BITS, HUFFVAL): pool images
+#: (scans and DCT-coded PDF images alike) carry the writer's two generated
+#: tables, so a worker builds each once. A full memo evicts its oldest
+#: table; one table is a 65536-slot list whose entry tuples are shared
+#: across the slots of a code.
+_DEC_TABLES: dict[tuple[int, bytes, bytes], list] = {}
+_DEC_TABLES_MAX = 8
+
+#: blocks decoded and transformed per chunk: bounds the int64 coefficient
+#: array and the IDCT's float temporaries at 4 MB each
+_CHUNK_BLOCKS = 8192
+
+
+def _extend(v: int, size: int) -> int:
+    """``size`` magnitude bits → signed value (T.81 §F.2.2.1 EXTEND)."""
+    return v if v >= 1 << (size - 1) else v - (1 << size) + 1
+
+
+def _dec_table(bits: list[int], vals: list[int], ac: bool) -> list:
+    """DHT → the memoized 65536-slot decode table, indexed by the next 16
+    stream bits. Each slot is ``(consumed, step, value, extra)``:
+
+    - ``consumed``: bits of the code, plus its magnitude bits when code and
+      magnitude fit in 16; ``value`` is then the extended coefficient (DC:
+      the difference). Otherwise ``extra`` magnitude bits follow the code
+      and the decoder reads them from its window.
+    - ``step``: for AC, run+1 of a coefficient, ``_EOB`` or ``_ZRL``; for
+      DC, 0. ``_BAD_AC`` (zero size, run other than 15), ``_BAD_DC``
+      (category above 11) and ``_BAD_CODE`` (no code has this prefix:
+      the shared ``_NO_CODE`` slot) raise when decoded.
+
+    Corrupt counts raise here, at DHT parse time, whether or not a scan
+    uses the table."""
+    key = (int(ac), bytes(bits), bytes(vals))
+    table = _DEC_TABLES.get(key)
+    if table is None:
+        table = _build_dec_table(bits, vals, ac)
+        if len(_DEC_TABLES) >= _DEC_TABLES_MAX:
+            del _DEC_TABLES[next(iter(_DEC_TABLES))]
+        _DEC_TABLES[key] = table
+    return table
+
+
+def _build_dec_table(bits: list[int], vals: list[int], ac: bool) -> list:
+    table = [_NO_CODE] * 65536
     code = 0
     k = 0
     for ln in range(1, 17):
@@ -257,16 +306,89 @@ def _dec_table(bits: list[int], vals: list[int]):
                 # corrupt counts: canonical codes overflow the code
                 # space at this length (found by mutation fuzz)
                 raise ValueError("jpeg: overfull Huffman table")
-            if ln <= 8:
-                base = code << (8 - ln)
-                for suffix in range(1 << (8 - ln)):
-                    lut[base | suffix] = (vals[k], ln)
+            sym = vals[k]
+            if not ac:
+                size, step = (sym, 0) if sym <= 11 else (0, _BAD_DC)
+            elif sym & 15:
+                size, step = sym & 15, (sym >> 4) + 1
             else:
-                long[(ln, code)] = vals[k]
+                size, step = 0, (_EOB if sym == 0 else
+                                 _ZRL if sym == 0xF0 else _BAD_AC)
+            base = code << (16 - ln)
+            span = 1 << (16 - ln)
+            if size and ln + size <= 16:
+                # one entry per magnitude, in magnitude-bit order: the
+                # extended values -(2^size - 1)..-half, then half..2^size-1
+                half = 1 << (size - 1)
+                ents = [(ln + size, step, v, 0) for v in
+                        [*range(1 - 2 * half, 1 - half),
+                         *range(half, 2 * half)]]
+                sub = span >> size
+                table[base:base + span] = ents if sub == 1 else [
+                    e for e in ents for _ in range(sub)]
+            else:
+                table[base:base + span] = [(ln, step, 0, size)] * span
             code += 1
             k += 1
         code <<= 1
-    return lut, long
+    return table
+
+
+def _windows(sdata: bytes) -> list[int]:
+    """The 64 stream bits that start at each 32-bit word boundary, for
+    every bit offset up to ``8 * len(sdata)``, zero past the end: one list
+    index fetches any symbol's code and magnitude bits (at most 31 + 16 +
+    15 bits into the window). Per word rather than per byte, a quarter as
+    many Python ints are built."""
+    import numpy as np
+    nwin = (len(sdata) >> 2) + 1
+    words = np.frombuffer(sdata + bytes(4 * nwin + 4 - len(sdata)),
+                          dtype=">u4").astype(np.uint64)
+    return ((words[:-1] << np.uint64(32)) | words[1:]).tolist()
+
+
+def _decode_blocks(co, nblk: int, win: list[int], bp: int, dc: int,
+                   dc_t: list, ac_t: list) -> tuple[int, int]:
+    """Entropy-decode ``nblk`` blocks from bit ``bp`` into the zeroed
+    zig-zag coefficient array ``co``; returns the new bit position and DC
+    predictor. A fetch past the last window raises IndexError: the scan
+    has then consumed padding, so it is truncated."""
+    for last in range(63, 64 * nblk, 64):
+        j = last - 63                          # the block's DC slot
+        w = win[bp >> 5]
+        sh = bp & 31
+        n, step, val, extra = dc_t[(w >> (48 - sh)) & 0xFFFF]
+        if step:
+            raise ValueError(_STEP_ERRORS[step])
+        bp += n
+        if extra:
+            val = _extend((w >> (64 - sh - n - extra)) & ((1 << extra) - 1),
+                          extra)
+            bp += extra
+        dc += val
+        co[j] = dc
+        while j < last:                  # j: the slot of the last coefficient
+            w = win[bp >> 5]
+            sh = bp & 31
+            n, step, val, extra = ac_t[(w >> (48 - sh)) & 0xFFFF]
+            bp += n
+            if step > 0:
+                if extra:
+                    val = _extend(
+                        (w >> (64 - sh - n - extra)) & ((1 << extra) - 1),
+                        extra)
+                    bp += extra
+                j += step
+                if j > last:
+                    raise ValueError("jpeg: AC run overflow")
+                co[j] = val
+            elif step == _EOB:
+                break
+            elif step == _ZRL:
+                j += 16
+            else:
+                raise ValueError(_STEP_ERRORS[step])
+    return bp, dc
 
 
 def _idct_batch(coefs, qtable):
@@ -275,50 +397,55 @@ def _idct_batch(coefs, qtable):
     blocks (r7, guide §4.2: a per-block scalar IDCT was ~45% of JPEG
     decode in the OCR path).
 
-    Each pass is a fold over whole ``(N, 8, 8)`` planes: eight
-    multiply-adds per pass, whatever the block count.
+    The block axis is innermost: pass 1 works on ``[v, u, n]`` into
+    ``[u, y, n]``, pass 2 on ``[u, y, n]`` into ``[y, x, n]``, so each of
+    the 16 multiply-add fold steps runs over contiguous runs of N blocks.
 
     Exactness argument: every output element's float op sequence is the
     per-block scalar T.81 IDCT's, vectorized across blocks and across
     the plane — dequantization is int64 (exact); pass 1 adds, for v =
     0..7 in order, the term ``(_C[v]*F(u,v))*_COS[v][y]`` to a
     +0.0-seeded ``tmp[u, y]``, and pass 2 adds, for u = 0..7 in order,
-    ``(_C[u]*tmp[u, y])*_COS[u][x]`` to a +0.0-seeded ``s[y, x]``. A
-    plane fold changes which elements share a numpy call, never the
-    order of one element's multiplies and adds. The scalar loop's
+    ``(_C[u]*tmp[u, y])*_COS[u][x]`` to a +0.0-seeded ``s[y, x]``. The
+    layout changes which elements share a numpy call, never the order
+    of one element's multiplies and adds. The scalar loop's
     skip-zero-term branches are ±0.0-neutral (adding a ±0.0 term to a
     +0.0-seeded sum never changes it), and DC-only blocks keep their
     DISTINCT formula ``dq0/8.0`` (not bit-equal to the general path's
     ``((C0·dq0)·1·C0)/4``). Pinned bit-identical to the scalar
     reference in ``tests/test_ocr.py`` over random and fuzzed blocks."""
     import numpy as np
-    nblk = len(coefs)
-    a = np.asarray(coefs, dtype=np.int64)                # (N, 64)
+    a = np.asarray(coefs, dtype=np.int64)                # (N, 64) zig-zag
+    nblk = len(a)
     qt = np.asarray(qtable, dtype=np.int64)
-    zig = np.asarray(_ZIGZAG)
-    dq = np.zeros((nblk, 64), dtype=np.int64)
-    dq[:, zig] = a * qt[zig][None, :]
-    dc_only = (a[:, 1:] == 0).all(axis=1)
-    dqf = dq.astype(np.float64)
-    cosr = np.asarray(_COS)                              # (v, y)
-    cvec = np.asarray(_C)[None, :, None]
-    # pass 1: tmp[n, u, y] folds (_C[v]*F[n, v, u]) * _COS[v][y] over v
-    cf = dqf.reshape(nblk, 8, 8) * cvec                  # [n, v, u]
-    tmp = np.zeros((nblk, 8, 8))
+    # natural-order dequantized coefficients, block axis last: [v*8+u, n]
+    dq = a.T[_UNZIGZAG] * qt[:, None]
+    dc_only = ~a[:, 1:].any(axis=1)
+    dqf = dq.astype(np.float64).reshape(8, 8, nblk)      # [v, u, n]
+    cos = np.asarray(_COS)[:, None, :, None]             # [v][1, y, 1]
+    cvec = np.asarray(_C)[:, None, None]
+    prod = np.empty((8, 8, nblk))
+    # pass 1: tmp[u, y, n] folds (_C[v]*F[v, u, n]) * _COS[v][y] over v
+    cf = dqf * cvec
+    tmp = np.zeros((8, 8, nblk))
     for v in range(8):
-        tmp += cf[:, v, :, None] * cosr[v]
-    # pass 2: s[n, y, x] folds (_C[u]*tmp[n, u, y]) * _COS[u][x] over u
-    ct = tmp * cvec                                      # [n, u, y]
-    s = np.zeros((nblk, 8, 8))
+        np.multiply(cf[v, :, None, :], cos[v], out=prod)
+        tmp += prod
+    # pass 2: s[y, x, n] folds (_C[u]*tmp[u, y, n]) * _COS[u][x] over u
+    ct = tmp * cvec
+    s = np.zeros((8, 8, nblk))
     for u in range(8):
-        s += ct[:, u, :, None] * cosr[u]
-    out = np.floor(s / 4.0 + 128.5).astype(np.int64).reshape(nblk, 64)
+        np.multiply(ct[u, :, None, :], cos[u], out=prod)
+        s += prod
+    s /= 4.0
+    s += 128.5
+    out = np.floor(s).astype(np.int64).reshape(64, nblk)
     np.clip(out, 0, 255, out=out)
     if dc_only.any():
-        val = np.floor(dqf[dc_only, 0] / 8.0 + 128.5).astype(np.int64)
+        val = np.floor(dqf[0, 0, dc_only] / 8.0 + 128.5).astype(np.int64)
         np.clip(val, 0, 255, out=val)
-        out[dc_only] = val[:, None]
-    return out.astype(np.uint8)
+        out[:, dc_only] = val
+    return out.T.astype(np.uint8)
 
 
 def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
@@ -329,7 +456,7 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
         raise ValueError("jpeg: missing SOI")
     pos = 2
     qtables: dict[int, list[int]] = {}
-    htables: dict[tuple[int, int], dict] = {}
+    htables: dict[tuple[int, int], list] = {}
     width = height = 0
     qsel = 0
     dc_sel = ac_sel = 0
@@ -369,7 +496,7 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
                 vals = list(body[i + 17:i + 17 + n])
                 if len(bits) != 16 or len(vals) != n:
                     raise ValueError("jpeg: short DHT")
-                htables[(tc, th)] = _dec_table(bits, vals)
+                htables[(tc, th)] = _dec_table(bits, vals, tc == 1)
                 i += 17 + n
         elif marker == 0xC0:                     # SOF0 baseline
             prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
@@ -403,112 +530,34 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
         raise ValueError("jpeg: missing EOI")
     bw_blocks = (width + 7) // 8
     bh_blocks = (height + 7) // 8
-    # r7 hot loop (guide §1.2 step 2 — per-task work): per-symbol
-    # bit-reader method calls were ~half of decode time; the reader
-    # state lives in plain locals here with the fill/peek/consume steps
-    # inlined. Reads past the end see zero padding; peeked-but-unconsumed
-    # padding is fine, consumed padding is a truncated stream (checked
-    # exactly after the loop — the silent-garble alternative is
-    # forbidden). Blocks go through the vectorized _idct_batch one
-    # block-row at a time (bounded memory, bit-identical pixels).
-    import numpy as np
-    sdata = _destuff(data[pos:end])
-    slen = len(sdata)
-    acc = nb = sp = 0
-    dc_lut, dc_long = dc_t
-    ac_lut, ac_long = ac_t
-    all_coefs = []
-    prev_dc = 0
-    for by in range(bh_blocks):
-        for bx in range(bw_blocks):
-            coefs = [0] * 64
-            # ---- DC symbol: 8-bit-prefix LUT, else the long-code dict
-            while nb < 16:
-                acc = (acc << 8) | (sdata[sp] if sp < slen else 0)
-                sp += 1
-                nb += 8
-            word = (acc >> (nb - 16)) & 0xFFFF
-            hit = dc_lut[word >> 8]
-            if hit is not None:
-                ssss, ln = hit
-                nb -= ln
-                acc &= (1 << nb) - 1
-            else:
-                code = word >> 8
-                for ln in range(9, 17):
-                    code = (code << 1) | ((word >> (16 - ln)) & 1)
-                    if (ln, code) in dc_long:
-                        ssss = dc_long[(ln, code)]
-                        nb -= ln
-                        acc &= (1 << nb) - 1
-                        break
-                else:
-                    raise ValueError("jpeg: invalid Huffman code")
-            if ssss > 11:
-                raise ValueError("jpeg: DC category out of range")
-            if ssss:
-                while nb < ssss:
-                    acc = (acc << 8) | (sdata[sp] if sp < slen else 0)
-                    sp += 1
-                    nb += 8
-                nb -= ssss
-                v = (acc >> nb) & ((1 << ssss) - 1)
-                acc &= (1 << nb) - 1
-                prev_dc += v if v >= (1 << (ssss - 1)) \
-                    else v - (1 << ssss) + 1
-            coefs[0] = prev_dc
-            k = 1
-            while k < 64:
-                # ---- AC symbol: 8-bit-prefix LUT, else the long-code dict
-                while nb < 16:
-                    acc = (acc << 8) | (sdata[sp] if sp < slen else 0)
-                    sp += 1
-                    nb += 8
-                word = (acc >> (nb - 16)) & 0xFFFF
-                hit = ac_lut[word >> 8]
-                if hit is not None:
-                    sym, ln = hit
-                    nb -= ln
-                    acc &= (1 << nb) - 1
-                else:
-                    code = word >> 8
-                    for ln in range(9, 17):
-                        code = (code << 1) | ((word >> (16 - ln)) & 1)
-                        if (ln, code) in ac_long:
-                            sym = ac_long[(ln, code)]
-                            nb -= ln
-                            acc &= (1 << nb) - 1
-                            break
-                    else:
-                        raise ValueError("jpeg: invalid Huffman code")
-                if sym == 0x00:                  # EOB
-                    break
-                run, ssss = sym >> 4, sym & 15
-                if ssss == 0:
-                    if run != 15:
-                        raise ValueError("jpeg: bad AC symbol")
-                    k += 16                      # ZRL
-                    continue
-                k += run
-                if k > 63:
-                    raise ValueError("jpeg: AC run overflow")
-                while nb < ssss:
-                    acc = (acc << 8) | (sdata[sp] if sp < slen else 0)
-                    sp += 1
-                    nb += 8
-                nb -= ssss
-                v = (acc >> nb) & ((1 << ssss) - 1)
-                acc &= (1 << nb) - 1
-                coefs[k] = v if v >= (1 << (ssss - 1)) \
-                    else v - (1 << ssss) + 1
-                k += 1
-            all_coefs.append(coefs)
-    if (sp - slen) * 8 > nb:                      # consumed padding bits
-        raise ValueError("jpeg: entropy data truncated")
     nblk = bw_blocks * bh_blocks
+    sdata = _destuff(data[pos:end])
+    nbits = 8 * len(sdata)
+    # Every block spends at least 2 bits (a DC code and at least one AC
+    # code), so a frame with more blocks than that would consume padding:
+    # a truncated stream, rejected before anything is sized by block count.
+    if 2 * nblk > nbits:
+        raise ValueError("jpeg: entropy data truncated")
+    # Bits past the end read as zero; peeked-but-unconsumed padding is
+    # fine, consumed padding is a truncated stream (checked exactly after
+    # the loop — the silent-garble alternative is forbidden). Each chunk
+    # of blocks goes through the vectorized _idct_batch as soon as it is
+    # decoded (bounded memory, bit-identical pixels).
+    import numpy as np
+    win = _windows(sdata)
     pix = np.empty((nblk, 64), dtype=np.uint8)
-    for i0 in range(0, nblk, 65536):              # bound the int64 temps
-        pix[i0:i0 + 65536] = _idct_batch(all_coefs[i0:i0 + 65536], qt)
+    bp = dc = 0
+    for c0 in range(0, nblk, _CHUNK_BLOCKS):
+        m = min(_CHUNK_BLOCKS, nblk - c0)
+        co = array("q", bytes(512 * m))
+        try:
+            bp, dc = _decode_blocks(co, m, win, bp, dc, dc_t, ac_t)
+        except IndexError:
+            raise ValueError("jpeg: entropy data truncated") from None
+        pix[c0:c0 + m] = _idct_batch(
+            np.frombuffer(co, dtype=np.int64).reshape(m, 64), qt)
+    if bp > nbits:                                # consumed padding bits
+        raise ValueError("jpeg: entropy data truncated")
     padded = (pix.reshape(bh_blocks, bw_blocks, 8, 8)
               .transpose(0, 2, 1, 3).reshape(bh_blocks * 8, bw_blocks * 8))
     return width, height, padded[:height, :width].tobytes()

@@ -44,7 +44,7 @@ def read_png_gray(data: bytes) -> tuple[int, int, bytes]:
     filter 0). Raises ValueError on anything else."""
     if data[:8] != _SIG:
         raise ValueError("not a PNG")
-    pos, w, h, idat = 8, 0, 0, b""
+    pos, w, h, idat = 8, 0, 0, []
     while pos < len(data):
         (ln,) = struct.unpack(">I", data[pos:pos + 4])
         tag = data[pos + 4:pos + 8]
@@ -54,9 +54,9 @@ def read_png_gray(data: bytes) -> tuple[int, int, bytes]:
             if (depth, ctype) != (8, 0):
                 raise ValueError("unsupported PNG shape")
         elif tag == b"IDAT":
-            idat += payload
+            idat.append(payload)
         pos += 12 + ln
-    raw = zlib.decompress(idat)
+    raw = zlib.decompress(b"".join(idat))
     out = bytearray()
     stride = w + 1
     for y in range(h):

@@ -2,13 +2,15 @@
 distinctness (the property template matching relies on), and honest
 rejection of images the recognizer does not support."""
 
-import math
+import random
 
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from docling_api_spark.config import ExtractConfig
 from docling_api_spark.operators import ocr, png_write
 from docling_api_spark.operators.convert import convert_one
+from jpeg_reference import scalar_idct
 
 CFG = ExtractConfig()
 
@@ -123,50 +125,13 @@ def test_ocr_jpeg_scan_roundtrip():
         ocr_image(encode_gray_jpeg(64, 64, noise))
 
 
-def _scalar_idct(coefs: list[int], qtable: list[int]) -> list[int]:
-    """Per-block scalar T.81 IDCT: zig-zag quantized coefficients + the
-    quant table → 8x8 spatial block (clamped 0..255). DC-only blocks
-    skip the transform, and the separable pass skips all-zero
-    coefficient columns — the branches _idct_batch must match bit for
-    bit."""
-    from docling_api_spark.operators.jpeg_codec import _C, _COS, _ZIGZAG
-
-    dq = [0.0] * 64
-    nonzero = False
-    for k, pos in enumerate(_ZIGZAG):
-        c = coefs[k]
-        if c:
-            dq[pos] = c * qtable[pos]
-            if k:
-                nonzero = True
-    if not nonzero:                      # DC-only: f(x,y) = F00/8
-        val = int(math.floor(dq[0] / 8.0 + 128.5))
-        val = 0 if val < 0 else 255 if val > 255 else val
-        return [val] * 64
-    # tmp[u][y] = sum_v C(v) F(u,v) cos(v,y)
-    tmp = [[0.0] * 8 for _ in range(8)]
-    for u in range(8):
-        col = [dq[v * 8 + u] for v in range(8)]
-        if not any(col):
-            continue
-        for y in range(8):
-            s = 0.0
-            for v in range(8):
-                c = col[v]
-                if c:
-                    s += _C[v] * c * _COS[v][y]
-            tmp[u][y] = s
-    out = []
-    for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for u in range(8):
-                t = tmp[u][y]
-                if t:
-                    s += _C[u] * t * _COS[u][x]
-            val = int(math.floor(s / 4.0 + 128.5))
-            out.append(0 if val < 0 else 255 if val > 255 else val)
-    return out
+def _random_block(rnd: random.Random, dc_only: bool) -> list[int]:
+    b = [0] * 64
+    b[0] = rnd.randrange(-1024, 1024)
+    if not dc_only:
+        for _ in range(rnd.randrange(1, 20)):
+            b[rnd.randrange(1, 64)] = rnd.randrange(-1024, 1024)
+    return b
 
 
 def test_idct_batch_bit_identical_to_scalar():
@@ -174,9 +139,7 @@ def test_idct_batch_bit_identical_to_scalar():
     must produce exactly the scalar IDCT's pixels — including DC-only
     blocks (distinct fast-path formula), sparse blocks (skip-zero
     branches), and extreme coefficients, in one large batch and in
-    batches of 1-4 blocks."""
-    import random
-
+    batches of 1-300 blocks that mix DC-only and AC blocks."""
     from docling_api_spark.operators.jpeg_codec import _idct_batch
 
     rnd = random.Random(1234)
@@ -192,22 +155,19 @@ def test_idct_batch_bit_identical_to_scalar():
     qt = [max(1, (i * 7) % 32) for i in range(64)]
     got = _idct_batch(blocks, qt)
     for i, b in enumerate(blocks):
-        assert list(got[i]) == _scalar_idct(b, qt), i
-    # batches of 1-4 blocks (an embedded image's usual size) mixing
-    # DC-only and AC blocks
-    for trial in range(200):
-        small = []
-        for _ in range(1 + trial % 4):
-            b = [0] * 64
-            b[0] = rnd.randrange(-1024, 1024)
-            if rnd.random() < 0.5:               # else DC-only
-                for _ in range(rnd.randrange(1, 12)):
-                    b[rnd.randrange(1, 64)] = rnd.randrange(-512, 512)
-            small.append(b)
+        assert list(got[i]) == scalar_idct(b, qt), i
+    # batches of 1-4 blocks (an embedded image's usual size) and of up
+    # to 300 (a scan's), each mixing DC-only and AC blocks
+    sizes = [1 + t % 4 for t in range(100)] + [
+        rnd.randrange(5, 301) for _ in range(20)]
+    for trial, n in enumerate(sizes):
+        share = rnd.random()
+        batch = [_random_block(rnd, rnd.random() < share) for _ in range(n)]
         qt = [rnd.randrange(1, 100) for _ in range(64)]
-        got = _idct_batch(small, qt)
-        for i, b in enumerate(small):
-            assert list(got[i]) == _scalar_idct(b, qt), (trial, i)
+        got = _idct_batch(batch, qt)
+        assert got.shape == (n, 64)
+        for i, b in enumerate(batch):
+            assert list(got[i]) == scalar_idct(b, qt), (trial, i)
 
 
 def test_zigzag_matches_spec_literal():
@@ -246,3 +206,39 @@ def test_jpeg_roundtrip_unchanged_by_zigzag_fix():
     # lossy codec: decoded pixels close to the source, deterministic
     assert len(out) == len(px)
     assert max(abs(a - b) for a, b in zip(out, px)) < 48
+
+
+def _grid_outcome(fn, w, h, px):
+    try:
+        return fn(w, h, px)
+    except ValueError as exc:
+        return ValueError, str(exc)
+
+
+_TEXTS = ["scan 42\nthe fast key order sort\nlang en", "a", " ",
+          "abcdefghijklmnopqrstuvwxyz 0123456789", "x\n\n", "\n 9 \nq"]
+
+
+def test_recognize_grid_equals_scalar_on_rendered_pages():
+    for text in _TEXTS:
+        w, h, px = png_write.read_png_gray(ocr.render_text_png(text))
+        got = ocr._recognize_grid(w, h, px)
+        assert got == ocr._recognize_grid_scalar(w, h, px)
+        assert got == ocr.ocr_png(ocr.render_text_png(text))
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.sampled_from(_TEXTS + ["scan 7\nreal text\nlang de"]),
+       st.lists(st.tuples(st.floats(0, 1, exclude_max=True),
+                          st.sampled_from((0, 255, 127, 128, 1))),
+                min_size=1, max_size=4))
+def test_recognize_grid_equals_scalar_on_flipped_pixels(text, flips):
+    """Any pixel set to ink, paper or grey: the packed-key path returns
+    the scalar path's string, or the scalar path's exact error."""
+    w, h, px = png_write.read_png_gray(ocr.render_text_png(text))
+    bad = bytearray(px)
+    for where, value in flips:
+        bad[int(where * len(bad))] = value
+    bad = bytes(bad)
+    assert _grid_outcome(ocr._recognize_grid, w, h, bad) == \
+        _grid_outcome(ocr._recognize_grid_scalar, w, h, bad)

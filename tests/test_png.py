@@ -34,6 +34,32 @@ def test_roundtrip_and_determinism():
     assert P.write_png_gray(w, h, px) == data     # byte-deterministic
 
 
+def test_many_idat_chunks_read_in_linear_time():
+    """A PNG may split its zlib stream over any number of IDAT chunks;
+    the reader joins them once, so 40,000 chunks read in a fraction of a
+    second and give the pixels of the one-chunk file."""
+    import random
+    import time
+
+    w, h = 1000, 1000
+    px = random.Random(8).randbytes(w * h)       # incompressible
+    one = P.write_png_gray(w, h, px)
+    ihdr_end = 8 + 12 + 13
+    (ln,) = struct.unpack(">I", one[ihdr_end:ihdr_end + 4])
+    stream = one[ihdr_end + 8:ihdr_end + 8 + ln]
+    step = max(1, len(stream) // 40_000)
+    chunks = b"".join(
+        struct.pack(">I", len(part)) + b"IDAT" + part
+        + struct.pack(">I", zlib.crc32(b"IDAT" + part))
+        for part in (stream[i:i + step]
+                     for i in range(0, len(stream), step)))
+    many = one[:ihdr_end] + chunks + one[ihdr_end + 12 + ln:]
+    assert many.count(b"IDAT") >= 40_000
+    t0 = time.perf_counter()
+    assert P.read_png_gray(many) == (w, h, px)
+    assert time.perf_counter() - t0 < 0.5
+
+
 def test_picture_png_dims_and_texture():
     ref = "img-5.png"
     data = P.picture_png(ref)
