@@ -254,10 +254,12 @@ _NO_CODE = (0, _BAD_CODE, 0, 0)
 #: decode tables memoized per worker by (class, BITS, HUFFVAL): pool images
 #: (scans and DCT-coded PDF images alike) carry the writer's two generated
 #: tables, so a worker builds each once. A full memo evicts its oldest
-#: table; one table is a 65536-slot list whose entry tuples are shared
-#: across the slots of a code.
+#: table. One table is a 65536-slot list whose entry tuples are shared
+#: across the slots of a code: ≈1 MB for each generated table, ≈7 MB for
+#: a table whose short codes carry long magnitudes (every slot distinct),
+#: so the bound of 4 (two scans' worth) caps the memo near 28 MB.
 _DEC_TABLES: dict[tuple[int, bytes, bytes], list] = {}
-_DEC_TABLES_MAX = 8
+_DEC_TABLES_MAX = 4
 
 #: blocks decoded and transformed per chunk: bounds the int64 coefficient
 #: array and the IDCT's float temporaries at 4 MB each
