@@ -541,10 +541,11 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
     if 2 * nblk > nbits:
         raise ValueError("jpeg: entropy data truncated")
     # Bits past the end read as zero; peeked-but-unconsumed padding is
-    # fine, consumed padding is a truncated stream (checked exactly after
-    # the loop — the silent-garble alternative is forbidden). Each chunk
-    # of blocks goes through the vectorized _idct_batch as soon as it is
-    # decoded (bounded memory, bit-identical pixels).
+    # fine, consumed padding is a truncated stream (a fetch past the last
+    # window, or the exact check after the loop — the silent-garble
+    # alternative is forbidden). Each chunk of blocks goes through the
+    # vectorized _idct_batch as soon as it is decoded (bounded memory,
+    # bit-identical pixels).
     import numpy as np
     win = _windows(sdata)
     pix = np.empty((nblk, 64), dtype=np.uint8)
