@@ -284,8 +284,8 @@ def _dec_table(bits: list[int], vals: list[int], ac: bool) -> list:
       (category above 11) and ``_BAD_CODE`` (no code has this prefix:
       the shared ``_NO_CODE`` slot) raise when decoded.
 
-    Corrupt counts raise here, at DHT parse time, whether or not a scan
-    uses the table."""
+    Only the two tables a scan selects are built, after SOS; every DHT
+    has passed ``_check_dht`` when it was read."""
     key = (int(ac), bytes(bits), bytes(vals))
     table = _DEC_TABLES.get(key)
     if table is None:
@@ -296,18 +296,27 @@ def _dec_table(bits: list[int], vals: list[int], ac: bool) -> list:
     return table
 
 
+def _check_dht(bits: list[int]) -> None:
+    """Raise on counts that no canonical code can have, at DHT parse time,
+    whether or not a scan selects the table. Only the 16 counts are
+    walked: the 65536-slot tables are built for the scan's selected pair
+    alone, so a file of many distinct DHTs holds no more than two."""
+    code = 0
+    for ln in range(1, 17):
+        code += bits[ln - 1]
+        if code > (1 << ln):
+            # corrupt counts: canonical codes overflow the code space at
+            # this length (found by mutation fuzz)
+            raise ValueError("jpeg: overfull Huffman table")
+        code <<= 1
+
+
 def _build_dec_table(bits: list[int], vals: list[int], ac: bool) -> list:
     table = [_NO_CODE] * 65536
     code = 0
     k = 0
     for ln in range(1, 17):
         for _ in range(bits[ln - 1]):
-            if k >= len(vals):
-                raise ValueError("jpeg: DHT counts exceed values")
-            if code >= (1 << ln):
-                # corrupt counts: canonical codes overflow the code
-                # space at this length (found by mutation fuzz)
-                raise ValueError("jpeg: overfull Huffman table")
             sym = vals[k]
             if not ac:
                 size, step = (sym, 0) if sym <= 11 else (0, _BAD_DC)
@@ -458,7 +467,7 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
         raise ValueError("jpeg: missing SOI")
     pos = 2
     qtables: dict[int, list[int]] = {}
-    htables: dict[tuple[int, int], list] = {}
+    htables: dict[tuple[int, int], tuple[list[int], list[int]]] = {}
     width = height = 0
     qsel = 0
     dc_sel = ac_sel = 0
@@ -498,7 +507,8 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
                 vals = list(body[i + 17:i + 17 + n])
                 if len(bits) != 16 or len(vals) != n:
                     raise ValueError("jpeg: short DHT")
-                htables[(tc, th)] = _dec_table(bits, vals, tc == 1)
+                _check_dht(bits)
+                htables[(tc, th)] = bits, vals
                 i += 17 + n
         elif marker == 0xC0:                     # SOF0 baseline
             prec, height, width, ncomp = struct.unpack(">BHHB", body[:6])
@@ -524,7 +534,6 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
         raise ValueError("jpeg: missing Huffman table")
     if qsel not in qtables:
         raise ValueError("jpeg: missing quant table")
-    dc_t, ac_t = htables[(0, dc_sel)], htables[(1, ac_sel)]
     qt = qtables[qsel]
     # entropy data runs to the EOI marker
     end = data.rfind(b"\xff\xd9")
@@ -547,6 +556,8 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
     # vectorized _idct_batch as soon as it is decoded (bounded memory,
     # bit-identical pixels).
     import numpy as np
+    dc_t = _dec_table(*htables[(0, dc_sel)], False)
+    ac_t = _dec_table(*htables[(1, ac_sel)], True)
     win = _windows(sdata)
     pix = np.empty((nblk, 64), dtype=np.uint8)
     bp = dc = 0

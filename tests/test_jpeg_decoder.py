@@ -158,8 +158,8 @@ def test_decode_table_memo_is_bounded():
 
 
 def test_corrupt_unused_table_still_raises():
-    """Tables are built and checked when the DHT is read, whether or not
-    the scan selects them."""
+    """Huffman counts are checked when the DHT is read, whether or not
+    the scan selects the table."""
     base = J.encode_gray_jpeg(8, 8, bytes(64))
     sos = base.index(b"\xff\xda")
     overfull = (b"\xff\xc4" + struct.pack(">H", 2 + 17 + 3)
@@ -170,6 +170,30 @@ def test_corrupt_unused_table_still_raises():
         reference_decode(base[:sos] + overfull + base[sos:])
 
 
+def test_many_distinct_tables_hold_only_the_selected_pair():
+    """A DHT carries a 4-bit class and a 4-bit slot, so one file may
+    define 256 tables. Here 254 distinct tables, none of them the scan's
+    pair, each have 32 five-bit codes of magnitude 11: built, every one
+    would be a 65536-slot table of distinct entries (megabytes each).
+    Only their counts are checked, so the row comes back typed with a
+    small allocation peak."""
+    base = J.encode_gray_jpeg(8, 8, bytes(64))
+    sos = base.index(b"\xff\xda")
+    tables = b"".join(
+        bytes([(tc << 4) | th, 0, 0, 0, 0, 32]) + bytes(11)
+        + bytes([11] * 31) + bytes([tc * 16 + th])
+        for tc in range(16) for th in range(16)
+        if (tc, th) not in ((0, 0), (1, 0)))
+    dht = b"\xff\xc4" + struct.pack(">H", 2 + len(tables)) + tables
+    data = base[:sos] + dht + base[sos:]
+    assert J.decode_gray_jpeg(data) == reference_decode(data)
+    convert_one(base, "https://x/warm.jpg", CFG)
+    row, peak = _peak(lambda: convert_one(data, "https://x/dht.jpg", CFG))
+    assert row == convert_one(base, "https://x/dht.jpg", CFG)
+    assert row["error"] == "ocr_not_supported"
+    assert peak < 1 << 20, peak
+
+
 def _huge_sof(data: bytes) -> bytes:
     """``data`` with its SOF0 frame declaring 65535 x 65535 pixels."""
     sof = data.index(b"\xff\xc0")
@@ -177,31 +201,43 @@ def _huge_sof(data: bytes) -> bytes:
             + data[sof + 9:])
 
 
-def _timed_peak(fn):
+def _peak(fn):
+    """``fn()`` and the peak of its traced allocations."""
     tracemalloc.start()
     try:
-        t0 = time.perf_counter()
-        out = fn()
-        return out, time.perf_counter() - t0, \
-            tracemalloc.get_traced_memory()[1]
+        return fn(), tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
 
 
+def _best_secs(fn, repeats: int = 5) -> float:
+    """The fastest of ``repeats`` timed calls: the least disturbed by
+    other processes sharing the cores."""
+    best = float("inf")
+    for _ in range(repeats):
+        t0 = time.perf_counter()
+        fn()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
 def test_huge_sof_is_rejected_before_allocating():
     """A ~160-byte JPEG declaring 65535² pixels (67M blocks) cannot hold
-    2 bits per block, so it is truncated: a typed row in well under a
-    tenth of a second, with nothing sized by block count."""
+    2 bits per block, so it is truncated: a typed row with nothing sized
+    by block count, no slower than converting the 8x8 image it came from
+    (decoding it block by block would take minutes)."""
     small = J.encode_gray_jpeg(8, 8, bytes(range(64)))
     assert len(small) < 400
     huge = _huge_sof(small)
     with pytest.raises(ValueError, match="truncated"):
         J.decode_gray_jpeg(huge)
     convert_one(small, "https://x/warm.jpg", CFG)
-    row, secs, peak = _timed_peak(
-        lambda: convert_one(huge, "https://x/big.jpg", CFG))
+    row, peak = _peak(lambda: convert_one(huge, "https://x/big.jpg", CFG))
     assert row["error"] == "ocr_not_supported" and row["markdown"] is None
-    assert secs < 0.1 and peak < 1 << 20, (secs, peak)
+    assert peak < 1 << 20, peak
+    secs = _best_secs(lambda: convert_one(huge, "https://x/big.jpg", CFG))
+    ref = _best_secs(lambda: convert_one(small, "https://x/warm.jpg", CFG))
+    assert secs < 10 * ref, (secs, ref)
 
 
 def test_huge_sof_in_pdf_dct_image_is_typed():
@@ -212,7 +248,9 @@ def test_huge_sof_in_pdf_dct_image_is_typed():
     jpeg = _dct_payload(16, 10, bytes(160))
     assert pdf.count(jpeg) == 1
     bad = pdf.replace(jpeg, _huge_sof(jpeg))
-    row, secs, peak = _timed_peak(
-        lambda: convert_one(bad, "https://x/big.pdf", CFG))
+    row, peak = _peak(lambda: convert_one(bad, "https://x/big.pdf", CFG))
     assert row["error"] == "pdf_unsupported_feature"
-    assert secs < 0.1 and peak < 1 << 20, (secs, peak)
+    assert peak < 1 << 20, peak
+    secs = _best_secs(lambda: convert_one(bad, "https://x/big.pdf", CFG))
+    ref = _best_secs(lambda: convert_one(pdf, "https://x/ok.pdf", CFG))
+    assert secs < 10 * ref, (secs, ref)
