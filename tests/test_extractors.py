@@ -1106,24 +1106,31 @@ def test_pdf_crypt_review_regressions():
 # --------------------- notch 10: V4 crypt filters (AES-128 / AESV2)
 
 def test_aes_known_answer_vectors():
-    """The AES core is anchored to the PUBLISHED vectors: FIPS-197
-    Appendix C.1 and Appendix B block encrypt/decrypt, and the
-    SP 800-38A F.2.1 CBC-AES128 first block."""
+    """AES is anchored to the PUBLISHED vectors: FIPS-197 Appendix C.1
+    and Appendix B block encrypt/decrypt, through the reference core's
+    block functions and through the shipped CBC with a zero IV (one
+    block of CBC is ECB), and the SP 800-38A F.2.1 CBC-AES128 first
+    block."""
+    import crypt_reference as R
+
     from docling_api_spark.operators import pdf_crypt as C
-    key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
-    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    ct = C._aes_encrypt_block(C._expand_key(key), pt)
-    assert ct.hex() == "69c4e0d86a7b0430d8cdb78070b4c55a"
-    assert C._aes_decrypt_block(C._expand_key(key), ct) == pt
+    for key, pt, ct in (
+            ("000102030405060708090a0b0c0d0e0f",
+             "00112233445566778899aabbccddeeff",
+             "69c4e0d86a7b0430d8cdb78070b4c55a"),
+            ("2b7e151628aed2a6abf7158809cf4f3c",
+             "3243f6a8885a308d313198a2e0370734",
+             "3925841d02dc09fbdc118597196a0b32")):
+        key, pt, ct = map(bytes.fromhex, (key, pt, ct))
+        assert R.encrypt_block(R.expand_key(key), pt) == ct
+        assert R.decrypt_block(R.expand_key(key), ct) == pt
+        assert C._cbc_nopad(key, bytes(16), pt, encrypt=True) == ct
+        assert C._cbc_nopad(key, bytes(16), ct, encrypt=False) == pt
     key2 = bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c")
-    pt2 = bytes.fromhex("3243f6a8885a308d313198a2e0370734")
-    assert C._aes_encrypt_block(
-        C._expand_key(key2), pt2).hex() == \
-        "3925841d02dc09fbdc118597196a0b32"
     iv = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     p3 = bytes.fromhex("6bc1bee22e409f96e93d7e117393172a")
-    enc = C.aes_cbc_encrypt(key2, iv, p3)
-    assert enc[16:32].hex() == "7649abac8119b246cee98e9b12e9197d"
+    for enc in (C.aes_cbc_encrypt(key2, iv, p3), R.cbc_encrypt(key2, iv, p3)):
+        assert enc[16:32].hex() == "7649abac8119b246cee98e9b12e9197d"
     # CBC round-trip property incl. empty payload
     import random
     rng = random.Random(13)
@@ -1263,14 +1270,19 @@ def test_pdf_r5_advice_regressions():
 # --------------- notch 11b: V5 / AESV3 (AES-256, SHA-2 handler)
 
 def test_aes256_known_answer_vector():
-    """The Nk=8 key schedule is anchored to FIPS-197 Appendix C.3."""
+    """The Nk=8 key schedule is anchored to FIPS-197 Appendix C.3, in
+    the reference core and in the shipped path (zero-IV one-block CBC)."""
+    import crypt_reference as R
+
     from docling_api_spark.operators import pdf_crypt as C
     key = bytes.fromhex("000102030405060708090a0b0c0d0e0f"
                         "101112131415161718191a1b1c1d1e1f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    ct = C._aes_encrypt_block(C._expand_key(key), pt)
-    assert ct.hex() == "8ea2b7ca516745bfeafc49904b496089"
-    assert C._aes_decrypt_block(C._expand_key(key), ct) == pt
+    ct = bytes.fromhex("8ea2b7ca516745bfeafc49904b496089")
+    assert R.encrypt_block(R.expand_key(key), pt) == ct
+    assert R.decrypt_block(R.expand_key(key), ct) == pt
+    assert C._cbc_nopad(key, bytes(16), pt, encrypt=True) == ct
+    assert C._cbc_nopad(key, bytes(16), ct, encrypt=False) == pt
 
 
 def test_v5_handler_math_roundtrip():
@@ -1601,64 +1613,57 @@ def test_pdf_image_predictors():
         extract_pdf_rich(bad)
 
 
-def test_aes_provider_matches_pure_python_fallback():
-    """r7: the native AES provider hook (cryptography/OpenSSL, probed at
-    import) must be byte-identical to the pure-Python FIPS-197 fallback
-    on every entry point the handlers use — CBC nopad (Algorithm 2.B /
-    UE wrap), the IV-prefixed PKCS#5 wire format, and the one-block
-    ECB /Perms seal — across AES-128 and AES-256 keys and many sizes;
-    likewise RC4 for every key length 1-16."""
-    import importlib
-    import os
+def test_crypt_matches_pure_python_reference():
+    """The shipped AES (OpenSSL through ``cryptography``) is
+    byte-identical to the spec-shaped reference in
+    ``tests/crypt_reference.py`` on every entry point the handlers use:
+    CBC nopad in both directions (Algorithm 2.B, the /UE //OE wrap), the
+    IV-prefixed PKCS#5 wire format, the one-block ECB /Perms seal and
+    check, and the Algorithm 2.B hash for R5 and R6, over AES-128 and
+    AES-256 keys and data sizes 16-4096. RC4 likewise for every key
+    length 1-16, native or pure loop."""
     import random
 
-    from docling_api_spark.operators import pdf_crypt as PC
+    import crypt_reference as R
 
-    if PC._native_cipher is None:
-        import pytest
-        pytest.skip("no native AES provider in this venv")
+    from docling_api_spark.operators import pdf_crypt as C
 
-    # reload() re-executes the module in place, so every output is taken
-    # under the native provider BEFORE the pure reload and compared after
-    def outputs(C):
-        rnd = random.Random(42)
-        out = []
-        for klen in (16, 32):
-            for dlen in (16, 64, 1024, 4096):
-                key = bytes(rnd.randrange(256) for _ in range(klen))
-                iv = bytes(rnd.randrange(256) for _ in range(16))
-                data = bytes(rnd.randrange(256) for _ in range(dlen))
-                wire = C.aes_cbc_encrypt(key, iv, data[:dlen - 3])
-                assert C.aes_cbc_decrypt(key, wire) == data[:dlen - 3]
-                out += [C._cbc_nopad(key, iv, data, True),
-                        C._cbc_nopad(key, iv, data, False), wire]
-        fkey = bytes(range(32))
-        assert C.perms_check(fkey, C.perms_value(fkey, -4), -4)
-        out.append(C.perms_value(fkey, -4))
-        # the hardened KDF end to end (both the R6 loop and R5 one-shot)
-        out += [C.hash_2b(b"", b"saltsalt", b"", r) for r in (5, 6)]
-        for klen in range(1, 17):
-            for dlen in (0, 1, 16, 1000):
-                key = bytes(rnd.randrange(256) for _ in range(klen))
-                data = bytes(rnd.randrange(256) for _ in range(dlen))
-                out.append(C.rc4(key, data))
-        return out + [C.rc4(b"Key", b"Plaintext")]
+    def rand(n):
+        return bytes(rnd.randrange(256) for _ in range(n))
 
+    rnd = random.Random(42)
+    for klen in (16, 32):
+        for dlen in (16, 64, 1024, 4096):
+            key, iv, data = rand(klen), rand(16), rand(dlen)
+            for encrypt in (True, False):
+                assert C._cbc_nopad(key, iv, data, encrypt) == \
+                    R.cbc_nopad(key, iv, data, encrypt)
+            msg = data[:dlen - 3]
+            wire = C.aes_cbc_encrypt(key, iv, msg)
+            assert wire == R.cbc_encrypt(key, iv, msg)
+            assert C.aes_cbc_decrypt(key, wire) == msg
+        fkey = rand(klen)
+        for p in (-4, -3904, 0xFFFFF0C0):
+            seal = C.perms_value(fkey, p, tail=b"id0")
+            assert seal == R.perms_value(fkey, p, tail=b"id0")
+            assert C.perms_check(fkey, seal, p) and R.perms_check(fkey, seal, p)
+            assert not C.perms_check(fkey, seal, p + 1)
+    # fresh salts: the shipped hash_2b's memo cannot answer these
+    for r in (5, 6):
+        for pwd, udata in ((b"", b""), (b"owner", rand(48))):
+            salt = rand(8)
+            assert C.hash_2b(pwd, salt, udata, r) == \
+                R.hash_2b(pwd, salt, udata, r)
     # RC4 runs natively for the key lengths the provider accepts (the
     # 5- and 16-byte PDF keys among them), the pure loop for the rest
-    if PC._native_rc4 is not None:
-        assert {5, 16} <= {k for k in range(1, 17)
-                           if k * 8 in PC._RC4_KEY_BITS}
-    native = outputs(PC)
-    os.environ["SPARK_GRAFT_AES_PROVIDER"] = "pure"
-    try:
-        pure = importlib.reload(PC)
-        assert pure._native_cipher is None and pure._native_rc4 is None
-        assert native == outputs(pure)
-    finally:
-        del os.environ["SPARK_GRAFT_AES_PROVIDER"]
-        importlib.reload(PC)
-    assert PC._native_cipher is not None
+    assert C._native_rc4 is not None
+    assert {5, 16} <= {k for k in range(1, 17)
+                       if k * 8 in C._RC4_KEY_BITS}
+    for klen in range(1, 17):
+        for dlen in (0, 1, 16, 1000):
+            key, data = rand(klen), rand(dlen)
+            assert C.rc4(key, data) == R.rc4(key, data)
+    assert C.rc4(b"Key", b"Plaintext") == bytes.fromhex("bbf316e8d940af0ad3")
 
 
 def test_docx_mixed_text_image_paragraph_keeps_text():

@@ -10,6 +10,7 @@ from hypothesis import given, settings, strategies as st
 from docling_api_spark.config import ExtractConfig
 from docling_api_spark.operators import ocr, png_write
 from docling_api_spark.operators.convert import convert_one
+import ocr_reference
 from jpeg_reference import scalar_idct
 
 CFG = ExtractConfig()
@@ -60,6 +61,15 @@ def test_pipeline_ocrs_scan_and_rejects_photo():
     # non-PNG image formats keep the typed failure too
     r3 = convert_one(b"GIF89a" + b"\x00" * 20, "https://x/g.gif", CFG)
     assert r3["error"] == "ocr_not_supported"
+
+
+def test_blank_scan_is_empty_document():
+    """A raster whose OCR text is empty is an ``empty_document`` row:
+    NULL markdown, images and spans, like every error row."""
+    for text in (" ", "   \n \n"):
+        r = convert_one(ocr.render_text_png(text), "https://x/b.png", CFG)
+        assert r == {"fmt": "image", "markdown": None, "images": None,
+                     "spans": None, "error": "empty_document"}
 
 
 def test_ink_in_spacing_row_rejected():
@@ -211,8 +221,8 @@ def test_jpeg_roundtrip_unchanged_by_zigzag_fix():
 def _grid_outcome(fn, w, h, px):
     try:
         return fn(w, h, px)
-    except ValueError as exc:
-        return ValueError, str(exc)
+    except ValueError:
+        return ValueError
 
 
 _TEXTS = ["scan 42\nthe fast key order sort\nlang en", "a", " ",
@@ -223,7 +233,7 @@ def test_recognize_grid_equals_scalar_on_rendered_pages():
     for text in _TEXTS:
         w, h, px = png_write.read_png_gray(ocr.render_text_png(text))
         got = ocr._recognize_grid(w, h, px)
-        assert got == ocr._recognize_grid_scalar(w, h, px)
+        assert got == ocr_reference.recognize_grid(w, h, px)
         assert got == ocr.ocr_png(ocr.render_text_png(text))
 
 
@@ -233,12 +243,13 @@ def test_recognize_grid_equals_scalar_on_rendered_pages():
                           st.sampled_from((0, 255, 127, 128, 1))),
                 min_size=1, max_size=4))
 def test_recognize_grid_equals_scalar_on_flipped_pixels(text, flips):
-    """Any pixel set to ink, paper or grey: the packed-key path returns
-    the scalar path's string, or the scalar path's exact error."""
+    """Any pixel set to ink, paper or grey: the packed-key recognizer
+    returns the per-pixel reference's string, or raises ValueError
+    where the reference does."""
     w, h, px = png_write.read_png_gray(ocr.render_text_png(text))
     bad = bytearray(px)
     for where, value in flips:
         bad[int(where * len(bad))] = value
     bad = bytes(bad)
     assert _grid_outcome(ocr._recognize_grid, w, h, bad) == \
-        _grid_outcome(ocr._recognize_grid_scalar, w, h, bad)
+        _grid_outcome(ocr_reference.recognize_grid, w, h, bad)
