@@ -14,7 +14,7 @@ Semantics mirror ``document_converter/utils.py``:
   rejects it).
 
 Everything here is pure Python over one value; it is applied *vectorized*
-inside the pandas-UDF extraction batch (no per-row Python UDF at the Spark
+inside the ``mapInArrow`` extraction batch (no per-row Python UDF at the Spark
 level).
 """
 

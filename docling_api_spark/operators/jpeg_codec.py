@@ -575,21 +575,3 @@ def decode_gray_jpeg(data: bytes) -> tuple[int, int, bytes]:
     padded = (pix.reshape(bh_blocks, bw_blocks, 8, 8)
               .transpose(0, 2, 1, 3).reshape(bh_blocks * 8, bw_blocks * 8))
     return width, height, padded[:height, :width].tobytes()
-
-
-def jpeg_dimensions(data: bytes) -> tuple[int, int]:
-    """(width, height) from the SOF header without decoding — the
-    cheap metadata path (multimodal.media_metadata pattern)."""
-    pos = 2
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("jpeg: missing SOI")
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("jpeg: bad marker alignment")
-        marker = data[pos + 1]
-        ln = struct.unpack(">H", data[pos + 2:pos + 4])[0]
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            _, h, w, _ = struct.unpack(">BHHB", data[pos + 4:pos + 10])
-            return w, h
-        pos += 2 + ln
-    raise ValueError("jpeg: no SOF segment")

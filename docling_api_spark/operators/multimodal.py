@@ -1,44 +1,50 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media are opaque ``binary`` columns with typed metadata — the Spark-side
-plumbing (schema, Arrow batch shape, ``mapInPandas`` signature,
+plumbing (schema, Arrow batch shape, ``mapInArrow`` signature,
 partition-friendly layout) is real and tested; the actual decoders are
 STUBBED because the image/audio libraries are not in this container
 (FIXTURES/SURVEY scoping — same posture as OCR: ``ocr_not_supported``).
 
-- :func:`media_metadata` — a real, oracle-checked ``mapInPandas`` operator:
+- :func:`media_metadata` — a real, oracle-checked ``mapInArrow`` operator:
   byte length + magic prefix + deterministic content hash per blob.
 - :func:`decode_image` — the scale-path decode/resize/feature UDF with its
   full Spark plumbing; raises :class:`NotImplementedError` at the decode
   step (clearly marked stub) unless ``fake=True``, which produces a
   deterministic fake feature vector so the distributed plumbing is testable.
+
+Every operator takes and yields ``pa.RecordBatch``es: per-row logic over
+``to_pylist()`` columns, typed Arrow arrays out.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 MEDIA_META_DDL = ("doc_id bigint, n_bytes bigint, magic string, "
                   "content_md5 string")
 
 
+def _batch(**cols) -> pa.RecordBatch:
+    """One output batch, its columns in DDL order."""
+    return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
+
+
 def _meta_batches(batches):
-    for pdf in batches:
-        blobs = pdf["blob"]
-        yield pd.DataFrame({
-            "doc_id": pdf["doc_id"],
-            "n_bytes": blobs.map(lambda b: 0 if b is None else len(b))
-                            .astype("int64"),
-            "magic": blobs.map(
-                lambda b: "" if not b else bytes(b[:4]).hex().upper()),
-            "content_md5": blobs.map(
-                lambda b: "" if b is None
-                else hashlib.md5(bytes(b)).hexdigest()),
-        })
+    for b in batches:
+        blobs = b.column("blob").to_pylist()
+        yield _batch(
+            doc_id=b.column("doc_id"),
+            n_bytes=pa.array([0 if x is None else len(x) for x in blobs],
+                             pa.int64()),
+            magic=pa.array(["" if not x else x[:4].hex().upper()
+                            for x in blobs], pa.string()),
+            content_md5=pa.array(["" if x is None
+                                  else hashlib.md5(x).hexdigest()
+                                  for x in blobs], pa.string()))
 
 
 def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,7 +55,7 @@ def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     from pyspark.sql import functions as F
     blobs = docs.select("doc_id", F.encode("text", "UTF-8").alias("blob"))
-    return blobs.mapInPandas(_meta_batches, MEDIA_META_DDL)
+    return blobs.mapInArrow(_meta_batches, MEDIA_META_DDL)
 
 
 MEDIA_METADATA_ORACLE = """
@@ -90,20 +96,18 @@ def make_image_feature_fn(fake: bool = False):
     decode = _fake_decode if fake else _decode_image_bytes
 
     def image_features(batches):
-        for pdf in batches:
+        for b in batches:
             ws, hs, fs = [], [], []
-            for b in pdf["blob"]:
-                if b is None or len(b) == 0:
+            for x in b.column("blob").to_pylist():
+                if not x:
                     ws.append(None); hs.append(None); fs.append(None)
                     continue
-                w, h, f = decode(bytes(b))
+                w, h, f = decode(x)
                 ws.append(w); hs.append(h); fs.append(f)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.Series(ws, dtype="Int32", index=pdf.index),
-                "height": pd.Series(hs, dtype="Int32", index=pdf.index),
-                "feature": pd.Series(fs, dtype="object", index=pdf.index),
-            })
+            yield _batch(doc_id=b.column("doc_id"),
+                         width=pa.array(ws, pa.int32()),
+                         height=pa.array(hs, pa.int32()),
+                         feature=pa.array(fs, pa.list_(pa.float64())))
 
     return image_features
 
@@ -111,12 +115,12 @@ def make_image_feature_fn(fake: bool = False):
 def image_features_df(blobs: DataFrame, fake: bool = False) -> DataFrame:
     """blobs(doc_id bigint, blob binary) → decoded features. Partition- and
     Arrow-batch-shaped exactly as the real decoder path would be."""
-    return blobs.mapInPandas(make_image_feature_fn(fake), IMAGE_FEATURES_DDL)
+    return blobs.mapInArrow(make_image_feature_fn(fake), IMAGE_FEATURES_DDL)
 
 
 def image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Oracle-checked driver query: the full decode plumbing (binary column
-    → mapInPandas → width/height/feature batch) with the deterministic
+    → mapInArrow → width/height/feature batch) with the deterministic
     fake decoder, so DuckDB can recompute the identical md5-derived values
     from the same bytes.
 
@@ -179,19 +183,17 @@ def parse_image_header(b: bytes):
 
 
 def _image_meta_batches(batches):
-    for pdf in batches:
+    for b in batches:
         fmts, ws, hs, nb = [], [], [], []
-        for b in pdf["html"]:
-            raw = bytes(b) if b is not None else b""
+        for raw in b.column("html").to_pylist():
+            raw = raw or b""
             f, w, h = parse_image_header(raw)
             fmts.append(f); ws.append(w); hs.append(h); nb.append(len(raw))
-        yield pd.DataFrame({
-            "url": pdf["url"],
-            "img_fmt": pd.Series(fmts, dtype="object", index=pdf.index),
-            "width": pd.Series(ws, dtype="Int32", index=pdf.index),
-            "height": pd.Series(hs, dtype="Int32", index=pdf.index),
-            "n_bytes": pd.Series(nb, dtype="int64", index=pdf.index),
-        })
+        yield _batch(url=b.column("url"),
+                     img_fmt=pa.array(fmts, pa.string()),
+                     width=pa.array(ws, pa.int32()),
+                     height=pa.array(hs, pa.int32()),
+                     n_bytes=pa.array(nb, pa.int64()))
 
 
 def image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,7 +207,7 @@ def image_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = pages.where(F.col("url").endswith(".png")
                        | F.col("url").endswith(".gif")) \
         .select("url", "html")
-    return imgs.mapInPandas(_image_meta_batches, IMAGE_META_DDL)
+    return imgs.mapInArrow(_image_meta_batches, IMAGE_META_DDL)
 
 
 IMAGE_METADATA_ORACLE = """
@@ -239,32 +241,29 @@ def make_resize_fn(out_w: int, out_h: int, fake: bool = False):
     """Resize plumbing: errors are rows, never exceptions (the reference's
     raises_on_error=False semantics, service.py:80)."""
     def resize(batches):
-        for pdf in batches:
+        for batch in batches:
             ws, hs, nb, err = [], [], [], []
-            for b in pdf["blob"]:
-                if b is None or len(b) == 0:
+            for b in batch.column("blob").to_pylist():
+                if not b:
                     ws.append(None); hs.append(None); nb.append(None)
                     err.append("empty_blob")
                     continue
                 try:
                     if fake:
                         # deterministic fake: output size scales with input
-                        out = bytes(b[: max(1, len(b) // 2)])
+                        out = b[: max(1, len(b) // 2)]
                     else:
-                        out = _resize_image_bytes(bytes(b), out_w, out_h)
+                        out = _resize_image_bytes(b, out_w, out_h)
                     ws.append(out_w); hs.append(out_h); nb.append(len(out))
                     err.append(None)
                 except NotImplementedError as exc:
                     ws.append(None); hs.append(None); nb.append(None)
                     err.append(f"decode_not_supported: {exc}")
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "out_w": pd.Series(ws, dtype="Int32", index=pdf.index),
-                "out_h": pd.Series(hs, dtype="Int32", index=pdf.index),
-                "n_bytes_out": pd.Series(nb, dtype="Int64", index=pdf.index),
-                "resize_error": pd.Series(err, dtype="object",
-                                          index=pdf.index),
-            })
+            yield _batch(doc_id=batch.column("doc_id"),
+                         out_w=pa.array(ws, pa.int32()),
+                         out_h=pa.array(hs, pa.int32()),
+                         n_bytes_out=pa.array(nb, pa.int64()),
+                         resize_error=pa.array(err, pa.string()))
 
     return resize
 
@@ -272,7 +271,7 @@ def make_resize_fn(out_w: int, out_h: int, fake: bool = False):
 def resize_images_df(blobs: DataFrame, out_w: int = 256, out_h: int = 256,
                      fake: bool = False) -> DataFrame:
     """blobs(doc_id, blob) → resized metadata rows."""
-    return blobs.mapInPandas(make_resize_fn(out_w, out_h, fake), RESIZED_DDL)
+    return blobs.mapInArrow(make_resize_fn(out_w, out_h, fake), RESIZED_DDL)
 
 
 AUDIO_CHUNKS_DDL = ("doc_id bigint, chunk_idx int, n_samples int, "
@@ -286,22 +285,22 @@ def make_audio_chunk_fn(fake: bool = False):
     """Audio chunking plumbing: one input row fans out to one row per
     fixed-size chunk with per-chunk energy stats (RMS as an exact integer
     sum-of-squares to stay engine-comparable, plus the peak amplitude) —
-    the mapInPandas shape a real libsndfile/ffmpeg-backed feature
+    the mapInArrow shape a real libsndfile/ffmpeg-backed feature
     extractor produces. The decode step is STUBBED like image/video
     (no audio libs in this container): fake mode reinterprets the raw
     bytes as PCM so the distributed plumbing is fully testable."""
     def chunk(batches):
-        for pdf in batches:
+        for batch in batches:
             ids, idxs, ns, rms, peak = [], [], [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
-                if b is None or len(b) < 2:
+            for doc_id, raw in zip(batch.column("doc_id").to_pylist(),
+                                   batch.column("blob").to_pylist()):
+                if raw is None or len(raw) < 2:
                     continue
                 if not fake:
                     raise NotImplementedError(
                         "audio decode requires libsndfile/ffmpeg — not "
                         "available in this environment; use fake=True "
                         "for plumbing tests")
-                raw = bytes(b)
                 samples = [int.from_bytes(raw[i:i + 2], "little",
                                           signed=True)
                            for i in range(0, len(raw) - 1, 2)]
@@ -312,21 +311,19 @@ def make_audio_chunk_fn(fake: bool = False):
                     ns.append(len(seg))
                     rms.append(sum(x * x for x in seg))
                     peak.append(max(abs(x) for x in seg))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "chunk_idx": pd.Series(idxs, dtype="int32"),
-                "n_samples": pd.Series(ns, dtype="int32"),
-                "rms": pd.Series(rms, dtype="int64"),
-                "peak": pd.Series(peak, dtype="int32"),
-            })
+            yield _batch(doc_id=pa.array(ids, pa.int64()),
+                         chunk_idx=pa.array(idxs, pa.int32()),
+                         n_samples=pa.array(ns, pa.int32()),
+                         rms=pa.array(rms, pa.int64()),
+                         peak=pa.array(peak, pa.int32()))
 
     return chunk
 
 
 def audio_chunks_df(blobs: DataFrame, fake: bool = False) -> DataFrame:
-    """blobs(doc_id, blob) → per-chunk energy rows (fan-out mapInPandas,
+    """blobs(doc_id, blob) → per-chunk energy rows (fan-out mapInArrow,
     same shape as :func:`sample_frames_df`)."""
-    return blobs.mapInPandas(make_audio_chunk_fn(fake), AUDIO_CHUNKS_DDL)
+    return blobs.mapInArrow(make_audio_chunk_fn(fake), AUDIO_CHUNKS_DDL)
 
 
 FRAMES_DDL = ("doc_id bigint, frame_idx int, frame_md5 string")
@@ -337,21 +334,21 @@ _FAKE_FRAME_BYTES = 4096
 
 def make_frame_sample_fn(every_k: int, fake: bool = False):
     """Video frame-sampling plumbing: one input row fans out to 0..n output
-    rows (frame_idx, frame content hash) — the mapInPandas shape a real
+    rows (frame_idx, frame content hash) — the mapInArrow shape a real
     ffmpeg-backed sampler produces. Fake mode treats each 4 KiB slice of
     the blob as one 'frame'."""
     def sample(batches):
-        for pdf in batches:
+        for batch in batches:
             ids, idxs, md5s = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
-                if b is None or len(b) == 0:
+            for doc_id, raw in zip(batch.column("doc_id").to_pylist(),
+                                   batch.column("blob").to_pylist()):
+                if not raw:
                     continue
                 if not fake:
                     raise NotImplementedError(
                         "video decode requires ffmpeg — not available in "
                         "this environment; use fake=True for plumbing "
                         "tests")
-                raw = bytes(b)
                 n_frames = (len(raw) + _FAKE_FRAME_BYTES - 1) \
                     // _FAKE_FRAME_BYTES
                 for i in range(0, n_frames, every_k):
@@ -360,16 +357,14 @@ def make_frame_sample_fn(every_k: int, fake: bool = False):
                     ids.append(doc_id)
                     idxs.append(i)
                     md5s.append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "frame_md5": pd.Series(md5s, dtype="object"),
-            })
+            yield _batch(doc_id=pa.array(ids, pa.int64()),
+                         frame_idx=pa.array(idxs, pa.int32()),
+                         frame_md5=pa.array(md5s, pa.string()))
 
     return sample
 
 
 def sample_frames_df(blobs: DataFrame, every_k: int = 2,
                      fake: bool = False) -> DataFrame:
-    """blobs(doc_id, blob) → sampled frame rows (fan-out mapInPandas)."""
-    return blobs.mapInPandas(make_frame_sample_fn(every_k, fake), FRAMES_DDL)
+    """blobs(doc_id, blob) → sampled frame rows (fan-out mapInArrow)."""
+    return blobs.mapInArrow(make_frame_sample_fn(every_k, fake), FRAMES_DDL)

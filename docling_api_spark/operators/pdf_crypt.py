@@ -70,7 +70,10 @@ except Exception:                           # no ARC4 in this provider
 
 
 def _cipher(key: bytes, iv: bytes | None) -> Cipher:
-    """AES under ``key``: CBC with ``iv``, or ECB when ``iv`` is None."""
+    """AES under ``key``: CBC with ``iv``, or ECB when ``iv`` is None.
+    A key that is not 16, 24 or 32 bytes raises :class:`AesError`."""
+    if len(key) not in (16, 24, 32):
+        raise AesError(f"bad AES key length {len(key)}")
     return Cipher(algorithms.AES(key),
                   modes.ECB() if iv is None else modes.CBC(iv))
 
@@ -174,8 +177,8 @@ def object_key(key: bytes, num: int, gen: int) -> bytes:
 # ------------------------- AES-128-CBC (FIPS-197 / SP 800-38A) ------
 
 class AesError(Exception):
-    """Malformed AES payload (bad length / padding) — callers map it
-    to the typed PdfUnsupported channel."""
+    """Malformed AES input (bad key length, payload length or padding)
+    — callers map it to the typed PdfUnsupported channel."""
 
 
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:

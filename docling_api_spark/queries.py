@@ -103,7 +103,7 @@ FROM documents GROUP BY 1
 def _cached_fixture_pages(spark: SparkSession, kind: str, sf_dir: str,
                           build) -> DataFrame:
     """Fixture-corpus memo: the Python-side fixture synthesis (zip/PDF
-    writers in mapInPandas) is test scaffolding — materialize it to
+    writers in mapInArrow) is test scaffolding — materialize it to
     parquet ONCE per (kind, sf_dir) so repeated runs (bench warm +
     best-of-2) measure the ENGINE, not the fixture writers (the same
     honesty rule as the WARC segment memo below)."""
@@ -127,7 +127,7 @@ def _cached_source(spark: SparkSession, kind: str, sf_dir: str) -> DataFrame:
     #2): every corpus the queries synthesize — not just the Python
     zip/PDF writers — goes through the parquet memo, so warm bench runs
     time the ENGINE, not per-run fixture synthesis. The big win is
-    ``scans`` (PNG rasterization in mapInPandas); the JVM-side shells
+    ``scans`` (PNG rasterization in mapInArrow); the JVM-side shells
     (images/rich/linked/meta) are memoized for the same honesty rule."""
     from .sources import pages as PS
     builders = {

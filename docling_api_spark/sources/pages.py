@@ -12,11 +12,18 @@ driver-provided ``documents.parquet``, used by the benchmark and the driver
 smoke entry — every document's text is wrapped in an HTML shell with real
 boilerplate (nav/header/footer/link-farm) so extraction work is
 representative.
+
+The sources whose bytes need Python writers (non-JVM charsets, zip, PDF,
+PNG and JPEG) run ``mapInArrow`` over the documents or a pages table and
+emit Arrow batches in :data:`PAGES_SCHEMA`, ``warc_ts`` as a UTC instant,
+so no source's rows depend on the session time zone.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import PAGES_SCHEMA
 
@@ -90,6 +97,113 @@ SHELL_TBL_MID = "</td></tr><tr><td>lang</td><td>"
 SHELL_TBL_POST = "</td></tr></table>"
 
 
+
+#: the Arrow form of PAGES_SCHEMA: ``warc_ts`` is ``timestamp[us, tz=UTC]``
+_ARROW_PAGES = to_arrow_schema(PAGES_SCHEMA)
+
+
+def _jvm_url(i, ext=None):
+    """The synthetic page url, ``https://site{i%97}.example/doc/{i}{ext}``
+    (``ext`` a column, ``.html`` by default), as a column expression."""
+    return F.concat(F.lit("https://site"), (i % 97).cast("string"),
+                    F.lit(".example/doc/"), i.cast("string"),
+                    F.lit(".html") if ext is None else ext)
+
+
+def _para():
+    """The document text, NULL read as empty: the paragraph of every
+    column-expression page and its ``text`` column."""
+    return F.coalesce(F.col("text"), F.lit(""))
+
+
+def _jvm_pages(docs: DataFrame, html, ext=None) -> DataFrame:
+    """The pages rows of a column-expression source: ``html`` (a string
+    column) is encoded to UTF-8, and ``warc_ts`` is the epoch plus
+    ``doc_id % 86400`` seconds."""
+    i = F.col("doc_id")
+    return docs.select(
+        _jvm_url(i, ext).alias("url"),
+        F.timestamp_seconds(F.lit(_EPOCH_S) + (i % 86400)).alias("warc_ts"),
+        F.encode(html, "UTF-8").alias("html"),
+        _para().alias("text"),   # the WET-style text column of the CC shape
+        F.col("lang"),
+    )
+
+
+def _from_documents(docs: DataFrame, page) -> DataFrame:
+    """documents → pages through the Python function
+    ``page(doc_id, text, lang) -> (ext, body, text_out)``, one Arrow
+    batch out per batch in. url and ``warc_ts`` follow the same rule as
+    :func:`pages_from_documents`; ``lang`` passes through."""
+    ts_type = _ARROW_PAGES.field("warc_ts").type
+
+    def render(batches):
+        for b in batches:
+            ids = b.column("doc_id").to_pylist()
+            out = [page(i, t, lg) for i, t, lg in zip(
+                ids, b.column("text").to_pylist(),
+                b.column("lang").to_pylist())]
+            yield pa.RecordBatch.from_arrays([
+                pa.array([f"https://site{i % 97}.example/doc/{i}{ext}"
+                          for i, (ext, _, _) in zip(ids, out)], pa.string()),
+                pa.array([(_EPOCH_S + i % 86400) * 1_000_000 for i in ids],
+                         ts_type),
+                pa.array([body for _, body, _ in out], pa.binary()),
+                pa.array([text for _, _, text in out], pa.string()),
+                b.column("lang"),
+            ], schema=_ARROW_PAGES)
+
+    return docs.select("doc_id", "text", "lang").mapInArrow(
+        render, PAGES_SCHEMA)
+
+
+def _replace_html(pages: DataFrame, page) -> DataFrame:
+    """Rewrite the ``.html`` rows of a pages table through the Python
+    function ``page(doc_id, text, lang) -> (ext, body)``, or None to keep
+    the row. The doc_id is read from the url stem; url and html change,
+    and every other column passes through as the input's Arrow arrays."""
+    ts_type = _ARROW_PAGES.field("warc_ts").type
+
+    def rewrite(batches):
+        for b in batches:
+            urls = b.column("url").to_pylist()
+            htmls = b.column("html").to_pylist()
+            texts = b.column("text").to_pylist()
+            langs = b.column("lang").to_pylist()
+            for j, url in enumerate(urls):
+                if not url.endswith(".html"):
+                    continue
+                i = int(url.rsplit("/", 1)[-1].split(".")[0])
+                new = page(i, texts[j], langs[j])
+                if new is not None:
+                    urls[j] = url[: -len(".html")] + new[0]
+                    htmls[j] = new[1]
+            yield pa.RecordBatch.from_arrays([
+                pa.array(urls, pa.string()),
+                b.column("warc_ts").cast(ts_type),
+                pa.array(htmls, pa.binary()),
+                b.column("text"),
+                b.column("lang"),
+            ], schema=_ARROW_PAGES)
+
+    return pages.mapInArrow(rewrite, PAGES_SCHEMA)
+
+
+def _wrap(text: str) -> list[str]:
+    """Greedy word wrap of ``text`` into lines of at most 90 chars (the
+    fixture PDFs' body paragraph)."""
+    lines, cur = [], ""
+    for w in text.split():
+        if len(cur) + len(w) + 1 > 90:
+            lines.append(cur)
+            cur = w
+        else:
+            cur = w if not cur else f"{cur} {w}"
+    if cur:
+        lines.append(cur)
+    return lines
+
+
 def pages_from_documents(spark: SparkSession, sf_dir: str,
                          repeat: int = 1,
                          parallelism: int | None = None) -> DataFrame:
@@ -119,7 +233,6 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
             .withColumn("doc_id", F.col("doc_id") + F.col("rep") * 10_000_000) \
             .drop("rep")
     i = F.col("doc_id")
-    para = F.coalesce(F.col("text"), F.lit(""))
     title = F.concat(F.lit("Doc "), i.cast("string"))
     is_md = (i % 10) == 7  # every 10th doc ships as raw Markdown, rest as HTML
     lst = F.when(
@@ -136,21 +249,15 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
     html_str = F.concat(
         F.lit(SHELL_PRE),
         title,
-        F.lit(SHELL_AFTER_TITLE), para, F.lit(SHELL_AFTER_PARA),
+        F.lit(SHELL_AFTER_TITLE), _para(), F.lit(SHELL_AFTER_PARA),
         lst, tbl,
         F.lit(SHELL_POST),
     )
-    md_str = F.concat(F.lit("# "), title, F.lit("\n\n"), para, F.lit("\n"))
-    body = F.when(is_md, md_str).otherwise(html_str)
-    ext = F.when(is_md, F.lit(".md")).otherwise(F.lit(".html"))
-    return docs.select(
-        F.concat(F.lit("https://site"), (i % 97).cast("string"),
-                 F.lit(".example/doc/"), i.cast("string"), ext).alias("url"),
-        F.timestamp_seconds(F.lit(_EPOCH_S) + (i % 86400)).alias("warc_ts"),
-        F.encode(body, "UTF-8").alias("html"),
-        para.alias("text"),   # the WET-style text column of the CC shape
-        F.col("lang"),
-    )
+    md_str = F.concat(F.lit("# "), title, F.lit("\n\n"), _para(),
+                      F.lit("\n"))
+    return _jvm_pages(
+        docs, F.when(is_md, md_str).otherwise(html_str),
+        F.when(is_md, F.lit(".md")).otherwise(F.lit(".html")))
 
 
 def pages_with_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -162,32 +269,21 @@ def pages_with_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     the markdown (``service.py:53-56``). Pure column expressions."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     i = F.col("doc_id")
-    para = F.coalesce(F.col("text"), F.lit(""))
     sid = i.cast("string")
     tbl = F.when(
         i % 5 == 0,
-        F.concat(
-            F.lit("<table><tr><th>k</th><th>v</th></tr><tr><td>id</td><td>"),
-            sid,
-            F.lit("</td></tr><tr><td>lang</td><td>"), F.col("lang"),
-            F.lit("</td></tr></table>"))).otherwise(F.lit(""))
+        F.concat(F.lit(SHELL_TBL_PRE), sid, F.lit(SHELL_TBL_MID),
+                 F.col("lang"), F.lit(SHELL_TBL_POST))).otherwise(F.lit(""))
     html_str = F.concat(
         F.lit("<!DOCTYPE html><html><head><title>t</title></head><body>"
               + _CHROME_NAV + "<main><h1>"),
         F.lit("Doc "), sid,
         F.lit("</h1><p><img src=\"pic-"), sid, F.lit("-a.png\"> "),
-        para,
+        _para(),
         F.lit(" <img src=\"pic-"), sid, F.lit("-b.png\"></p>"),
         tbl,
         F.lit("</main>" + _CHROME_FOOTER + "</body></html>"))
-    return docs.select(
-        F.concat(F.lit("https://site"), (i % 97).cast("string"),
-                 F.lit(".example/doc/"), sid, F.lit(".html")).alias("url"),
-        F.timestamp_seconds(F.lit(_EPOCH_S) + (i % 86400)).alias("warc_ts"),
-        F.encode(html_str, "UTF-8").alias("html"),
-        para.alias("text"),
-        F.col("lang"),
-    )
+    return _jvm_pages(docs, html_str)
 
 
 def pages_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,28 +293,19 @@ def pages_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver gate value-checks the serialization shapes the main corpus
     (h1/p/ul/table) doesn't reach. Pure column expressions."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    i = F.col("doc_id")
-    sid = i.cast("string")
-    para = F.coalesce(F.col("text"), F.lit(""))
+    sid = F.col("doc_id").cast("string")
     html_str = F.concat(
         F.lit("<!DOCTYPE html><html><head><title>t</title></head><body>"
               + _CHROME_NAV + "<main><h2>"),
         F.lit("Doc "), sid,
-        F.lit("</h2><blockquote><p>"), para,
+        F.lit("</h2><blockquote><p>"), _para(),
         F.lit("</p></blockquote><pre><code>code line "), sid,
         F.lit("</code></pre><hr><ol><li>first of "), sid,
         F.lit("</li><li>second</li></ol>"
               "<ul><li>a<ul><li>deep "), F.col("lang"),
         F.lit("</li></ul></li><li>b</li></ul></main>"
               + _CHROME_FOOTER + "</body></html>"))
-    return docs.select(
-        F.concat(F.lit("https://site"), (i % 97).cast("string"),
-                 F.lit(".example/doc/"), sid, F.lit(".html")).alias("url"),
-        F.timestamp_seconds(F.lit(_EPOCH_S) + (i % 86400)).alias("warc_ts"),
-        F.encode(html_str, "UTF-8").alias("html"),
-        para.alias("text"),
-        F.col("lang"),
-    )
+    return _jvm_pages(docs, html_str)
 
 
 def pages_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,7 +317,7 @@ def pages_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     i = F.col("doc_id")
     sid = i.cast("string")
-    para = F.coalesce(F.col("text"), F.lit(""))
+    para = _para()
     dst_host = F.concat(F.lit("site"), ((i + 1) % 97).cast("string"),
                         F.lit(".example"))
     abs_href = F.concat(F.lit("https://"), dst_host, F.lit("/doc/"),
@@ -247,14 +334,7 @@ def pages_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</a> and <a href=\""), rel_href,
         F.lit("\">about "), (i % 5).cast("string"),
         F.lit("</a>.</p></main>" + _CHROME_FOOTER + "</body></html>"))
-    return docs.select(
-        F.concat(F.lit("https://site"), (i % 97).cast("string"),
-                 F.lit(".example/doc/"), sid, F.lit(".html")).alias("url"),
-        F.timestamp_seconds(F.lit(_EPOCH_S) + (i % 86400)).alias("warc_ts"),
-        F.encode(html_str, "UTF-8").alias("html"),
-        para.alias("text"),
-        F.col("lang"),
-    )
+    return _jvm_pages(docs, html_str)
 
 
 def pages_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -269,9 +349,6 @@ def pages_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     i = F.col("doc_id")
     sid = i.cast("string")
-    para = F.coalesce(F.col("text"), F.lit(""))
-    url = F.concat(F.lit("https://site"), (i % 97).cast("string"),
-                   F.lit(".example/doc/"), sid, F.lit(".html"))
     robots = (
         F.when(i % 4 == 1, F.lit(
             "<meta name=\"robots\" content=\"noindex, nofollow\">"))
@@ -282,9 +359,10 @@ def pages_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("")))
     canonical = (
         F.when(i % 3 == 0, F.concat(
-            F.lit("<link rel=\"canonical\" href=\""), url, F.lit("\">")))
+            F.lit("<link rel=\"canonical\" href=\""), _jvm_url(i),
+            F.lit("\">")))
         .when(i % 3 == 1, F.concat(
-            F.lit("<link rel=\"canonical\" href=\""), url,
+            F.lit("<link rel=\"canonical\" href=\""), _jvm_url(i),
             F.lit("?ref=syndicated\">")))
         .otherwise(F.lit("")))
     html_str = F.concat(
@@ -293,15 +371,21 @@ def pages_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</title><meta charset=\"utf-8\">"),
         robots, canonical,
         F.lit("</head><body><main><h1>Doc "), sid,
-        F.lit("</h1><p>"), para,
+        F.lit("</h1><p>"), _para(),
         F.lit("</p></main>" + _CHROME_FOOTER + "</body></html>"))
-    return docs.select(
-        url.alias("url"),
-        F.timestamp_seconds(F.lit(_EPOCH_S) + (i % 86400)).alias("warc_ts"),
-        F.encode(html_str, "UTF-8").alias("html"),
-        para.alias("text"),
-        F.col("lang"),
-    )
+    return _jvm_pages(docs, html_str)
+
+
+#: pages_charset's classes by ``doc_id % 5``: (text before the doc_id,
+#: codec of the bytes, declaration in <head>)
+_CHARSETS = (
+    ("café costs € ", "utf-8", '<meta charset="utf-8">'),
+    ("déjà vu ", "latin-1", '<meta http-equiv="Content-Type" '
+                            'content="text/html; charset=iso-8859-1">'),
+    ("dash — euro € ", "cp1252", '<meta charset="windows-1252">'),
+    ("naïve ", "latin-1", ""),
+    ("résumé ", "utf-8", '<meta charset="utf-16">'),
+)
 
 
 def pages_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -322,56 +406,26 @@ def pages_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
       (a visible utf-16 declaration is always wrong); under the old
       alias table this page decoded as CJK mojibake with no error row
 
-    mapInPandas (Python) — corpus materialization (cp1252 isn't a JVM
-    F.encode charset); memoized via queries._cached_source."""
-    import pandas as pd
+    The ``text`` column is the generated sentence. Python rendering
+    (cp1252 isn't a JVM F.encode charset); memoized via
+    queries._cached_source."""
+    def page(i, _text, _lang):
+        prefix, codec, meta = _CHARSETS[i % 5]
+        text = f"{prefix}{i}"
+        html = (f"<!DOCTYPE html><html><head>{meta}<title>t"
+                f"</title></head><body>{_CHROME_NAV}<main>"
+                f"<h1>Doc {i}</h1><p>{text}</p></main>"
+                f"{_CHROME_FOOTER}</body></html>")
+        return ".html", html.encode(codec), text
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-    def render(batches):
-        for pdf in batches:
-            rows = {"url": [], "warc_ts": [], "html": [], "text": [],
-                    "lang": []}
-            for i, lang in zip(pdf["doc_id"].tolist(),
-                               pdf["lang"].tolist()):
-                cls = i % 5
-                if cls == 0:
-                    text, codec = f"café costs € {i}", "utf-8"
-                    meta = '<meta charset="utf-8">'
-                elif cls == 1:
-                    text, codec = f"déjà vu {i}", "latin-1"
-                    meta = ('<meta http-equiv="Content-Type" '
-                            'content="text/html; charset=iso-8859-1">')
-                elif cls == 2:
-                    text, codec = (f"dash — euro € {i}",
-                                   "cp1252")
-                    meta = '<meta charset="windows-1252">'
-                elif cls == 3:
-                    text, codec = f"naïve {i}", "latin-1"
-                    meta = ""
-                else:
-                    text, codec = f"résumé {i}", "utf-8"
-                    meta = '<meta charset="utf-16">'
-                html = (f"<!DOCTYPE html><html><head>{meta}<title>t"
-                        f"</title></head><body>{_CHROME_NAV}<main>"
-                        f"<h1>Doc {i}</h1><p>{text}</p></main>"
-                        f"{_CHROME_FOOTER}</body></html>")
-                rows["url"].append(
-                    f"https://site{i % 97}.example/doc/{i}.html")
-                rows["warc_ts"].append(pd.Timestamp(
-                    (_EPOCH_S + (i % 86400)) * 1_000_000_000))
-                rows["html"].append(html.encode(codec))
-                rows["text"].append(text)
-                rows["lang"].append(lang)
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(render, PAGES_SCHEMA)
+    return _from_documents(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), page)
 
 
 def pages_broken(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet → a corpus exercising the FULL per-document
     failure taxonomy (r4; reference A14 — error capture must never
-    raise, ``service.py:83-88``): by ``doc_id % 9`` —
+    raise, ``service.py:83-88``): by ``doc_id % 11`` —
 
     - 0: good HTML (the control row — real markdown comes out)
     - 1: zero-byte payload            → ``empty_document``
@@ -399,109 +453,83 @@ def pages_broken(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode paths — the gate proves those paths fail TYPED through
     the full Spark pipeline, never raise, never emit mojibake rows.)
 
-    mapInPandas (corpus materialization; the zip/PNG writers are
-    Python). Deterministic: zip entries pin date_time."""
+    The ``text`` column is the document text, NULL read as empty.
+    Python rendering (the zip/PNG writers); deterministic: zip entries
+    pin date_time."""
     import io
+    import re
     import zipfile
-
-    import pandas as pd
 
     from ..operators.pdf_write import write_pdf
     from ..operators.png_write import picture_png
 
-    def broken_docx() -> bytes:
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as z:
-            # a word/ entry so the sniffer classifies DOCX, but no
-            # word/document.xml — extraction must fail as parse_error
-            zi = zipfile.ZipInfo("word/styles.xml",
-                                 date_time=(1980, 1, 1, 0, 0, 0))
-            z.writestr(zi, "<w:styles/>")
-        return buf.getvalue()
-
-    _DOCX = broken_docx()
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as z:
+        # a word/ entry so the sniffer classifies DOCX, but no
+        # word/document.xml — extraction must fail as parse_error
+        z.writestr(zipfile.ZipInfo("word/styles.xml",
+                                   date_time=(1980, 1, 1, 0, 0, 0)),
+                   "<w:styles/>")
     # class 6: a valid PDF 1.5 file whose ObjStm dict loses /First —
     # the container unpack must fail typed (malformed /ObjStm dict)
-    _PDF_OBJSTM_BAD = write_pdf(
+    pdf_objstm_bad = write_pdf(
         [[(72.0, 730.0, 24.0, ["Broken"]),
           (72.0, 690.0, 11.0, ["container probe"])]],
         compress=True, xref_stream=True).replace(b"/First", b"/Fifst")
-    assert b"/Fifst" in _PDF_OBJSTM_BAD
+    assert b"/Fifst" in pdf_objstm_bad
     # class 7: Identity-H content referencing CID 0x9958 which the
     # CMap does not map (heading 'X' = <0058> corrupted)
-    _PDF_CID_BAD = write_pdf(
+    pdf_cid_bad = write_pdf(
         [[(72.0, 730.0, 24.0, ["X"])]],
         font_encoding=("cid", {0x1001: "€"})
     ).replace(b"<0058>", b"<9958>")
-    assert b"<9958>" in _PDF_CID_BAD
+    assert b"<9958>" in pdf_cid_bad
     # class 8: RC4-encrypted with a real user password — the empty-
     # password probe fails /U verification → typed password row
-    _PDF_LOCKED = write_pdf(
+    pdf_locked = write_pdf(
         [[(72.0, 730.0, 24.0, ["Locked"]),
           (72.0, 690.0, 11.0, ["secret body"])]],
         compress=True, encrypt_r=3, encrypt_user_pwd=b"hunter2")
-    assert b"/Encrypt" in _PDF_LOCKED
+    assert b"/Encrypt" in pdf_locked
     # class 9: V5/AESV3 (AES-256 R6) with a real user password
-    _PDF_V5_LOCKED = write_pdf(
+    pdf_v5_locked = write_pdf(
         [[(72.0, 730.0, 24.0, ["Locked5"]),
           (72.0, 690.0, 11.0, ["secret body"])]],
         compress=True, encrypt_r=6, encrypt_user_pwd=b"hunter2")
-    assert b"/CFM /AESV3" in _PDF_V5_LOCKED
+    assert b"/CFM /AESV3" in pdf_v5_locked
     # class 10: V5/AESV3 empty-password but /Perms tampered — seal fails
-    import re as _re
-    _PDF_V5_BADPERMS = _re.sub(
+    pdf_v5_badperms = re.sub(
         rb"/Perms <[0-9a-f]{8}", b"/Perms <deadbeef",
         write_pdf([[(72.0, 730.0, 24.0, ["Sealed"]),
                     (72.0, 690.0, 11.0, ["perms probe"])]],
                   compress=True, encrypt_r=6))
-    assert b"<deadbeef" in _PDF_V5_BADPERMS
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert b"<deadbeef" in pdf_v5_badperms
+    fixed = {1: (".html", b""),
+             2: (".xyz", b"\x00\x01\x02binaryjunk" + bytes(range(200, 230))),
+             3: (".pdf", b"%PDF-1.4\n no objects here"),
+             5: (".docx", buf.getvalue()),
+             6: (".pdf", pdf_objstm_bad),
+             7: (".pdf", pdf_cid_bad),
+             8: (".pdf", pdf_locked),
+             9: (".pdf", pdf_v5_locked),
+             10: (".pdf", pdf_v5_badperms)}
 
-    def render(batches):
-        for pdf in batches:
-            rows = {"url": [], "warc_ts": [], "html": [], "text": [],
-                    "lang": []}
-            for i, t, lg in zip(pdf["doc_id"].tolist(),
-                                pdf["text"].tolist(),
-                                pdf["lang"].tolist()):
-                cls = i % 11
-                t = t or ""
-                if cls == 0:
-                    ext, body = ".html", (
-                        f"<html><body>{_CHROME_NAV}<main><h1>Doc {i}"
-                        f"</h1><p>{t}</p></main>{_CHROME_FOOTER}"
-                        f"</body></html>").encode()
-                elif cls == 1:
-                    ext, body = ".html", b""
-                elif cls == 2:
-                    ext, body = ".xyz", b"\x00\x01\x02binaryjunk" + bytes(
-                        range(200, 230))
-                elif cls == 3:
-                    ext, body = ".pdf", b"%PDF-1.4\n no objects here"
-                elif cls == 4:
-                    ext, body = ".png", picture_png(f"photo-{i}")
-                elif cls == 5:
-                    ext, body = ".docx", _DOCX
-                elif cls == 6:
-                    ext, body = ".pdf", _PDF_OBJSTM_BAD
-                elif cls == 7:
-                    ext, body = ".pdf", _PDF_CID_BAD
-                elif cls == 8:
-                    ext, body = ".pdf", _PDF_LOCKED
-                elif cls == 9:
-                    ext, body = ".pdf", _PDF_V5_LOCKED
-                else:
-                    ext, body = ".pdf", _PDF_V5_BADPERMS
-                rows["url"].append(
-                    f"https://site{i % 97}.example/doc/{i}{ext}")
-                rows["warc_ts"].append(pd.Timestamp(
-                    (_EPOCH_S + (i % 86400)) * 1_000_000_000))
-                rows["html"].append(body)
-                rows["text"].append(t)
-                rows["lang"].append(lg)
-            yield pd.DataFrame(rows)
+    def page(i, t, _lang):
+        t = t or ""
+        cls = i % 11
+        if cls == 0:
+            ext, body = ".html", (
+                f"<html><body>{_CHROME_NAV}<main><h1>Doc {i}"
+                f"</h1><p>{t}</p></main>{_CHROME_FOOTER}"
+                f"</body></html>").encode()
+        elif cls == 4:
+            ext, body = ".png", picture_png(f"photo-{i}")
+        else:
+            ext, body = fixed[cls]
+        return ext, body, t
 
-    return docs.mapInPandas(render, PAGES_SCHEMA)
+    return _from_documents(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), page)
 
 
 def pages_with_scans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -516,46 +544,26 @@ def pages_with_scans(spark: SparkSession, sf_dir: str) -> DataFrame:
         lang {lang}
 
     — all within the rasterizer charset (the driver corpus is pure
-    [a-z ], langs lowercase alpha). Rendering is
-    Python, so this source is a mapInPandas over the tiny documents
-    table (Arrow-batched; the REAL extraction work downstream is the
-    pixel-level OCR)."""
-    import pandas as pd
-
+    [a-z ], langs lowercase alpha). The ``text`` column is the document
+    text, NULL read as empty. Rendering is Python over the tiny
+    documents table (Arrow-batched; the REAL extraction work downstream
+    is the pixel-level OCR)."""
     from ..operators.jpeg_codec import encode_gray_jpeg
     from ..operators.ocr import render_text_png
     from ..operators.png_write import read_png_gray
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
-    def raster(i, t, lg):
+    def page(i, t, lg):
+        t = t or ""
         # r6: odd doc_ids ship as baseline-grayscale JPEG (the
         # container real scanners emit), even as PNG — text identical,
         # so the oracle only switches the extension
-        png = render_text_png(f"scan {i}\n" + (t or "")[:40]
-                              + f"\nlang {lg}")
+        png = render_text_png(f"scan {i}\n" + t[:40] + f"\nlang {lg}")
         if i % 2 == 0:
-            return ".png", png
-        return ".jpg", encode_gray_jpeg(*read_png_gray(png))
+            return ".png", png, t
+        return ".jpg", encode_gray_jpeg(*read_png_gray(png)), t
 
-    def render(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            texts = pdf["text"].tolist()
-            langs = pdf["lang"].tolist()
-            pairs = [raster(i, t, lg)
-                     for i, t, lg in zip(ids, texts, langs)]
-            yield pd.DataFrame({
-                "url": [f"https://site{i % 97}.example/doc/{i}{ext}"
-                        for i, (ext, _) in zip(ids, pairs)],
-                "warc_ts": pd.to_datetime(
-                    [(_EPOCH_S + (i % 86400)) * 1_000_000_000
-                     for i in ids]),
-                "html": [body for _, body in pairs],
-                "text": [t or "" for t in texts],
-                "lang": langs,
-            })
-
-    return docs.mapInPandas(render, PAGES_SCHEMA)
+    return _from_documents(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), page)
 
 
 def with_fixture_ooxml(pages: DataFrame, docx_mod: int = 2,
@@ -571,54 +579,32 @@ def with_fixture_ooxml(pages: DataFrame, docx_mod: int = 2,
              slide2(title 'Summary i', bullets lvl0/lvl1)
     - ADOC:  '= Doc i' + text + '* item...'x2 + '. first' '. second'
 
-    mapInPandas (Python) — corpus *materialization*, not for a timed
-    region. Deterministic: bytes are a pure function of (doc_id, text,
-    lang)."""
-    import pandas as pd
-
+    Python rendering (mapInArrow) — corpus *materialization*, not for a
+    timed region. Deterministic: bytes are a pure function of (doc_id,
+    text, lang)."""
     from ..operators.ooxml_write import write_docx, write_pptx
 
-    def rewrite(batches):
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist()
-            for j, url in enumerate(urls):
-                if not url.endswith(".html"):
-                    continue
-                stem = url.rsplit("/", 1)[-1]
-                i = int(stem.split(".")[0])
-                text = pdf["text"].iat[j] or ""
-                lang = pdf["lang"].iat[j] or ""
-                if i % 10 == docx_mod:
-                    htmls[j] = write_docx(
-                        f"Doc {i}", text,
-                        [f"item one of doc {i}", "item two"],
-                        [["k", "v"], ["id", str(i)], ["lang", lang]])
-                    ext = ".docx"
-                elif i % 10 == pptx_mod:
-                    htmls[j] = write_pptx([
-                        (f"Doc {i}", [(0, text)]),
-                        (f"Summary {i}",
-                         [(0, f"point one of doc {i}"), (1, "point two")]),
-                    ])
-                    ext = ".pptx"
-                elif i % 10 == adoc_mod:
-                    htmls[j] = (
-                        f"= Doc {i}\n\n{text}\n\n"
-                        f"* item one of doc {i}\n* item two\n\n"
-                        f". first\n. second\n").encode("utf-8")
-                    ext = ".adoc"
-                else:
-                    continue
-                urls[j] = url[: -len(".html")] + ext
-            out = pdf.copy()
-            out["url"] = pd.Series(urls, index=pdf.index)
-            out["html"] = pd.Series(htmls, index=pdf.index, dtype="object")
-            yield out
+    def page(i, text, lang):
+        text, lang = text or "", lang or ""
+        if i % 10 == docx_mod:
+            return ".docx", write_docx(
+                f"Doc {i}", text,
+                [f"item one of doc {i}", "item two"],
+                [["k", "v"], ["id", str(i)], ["lang", lang]])
+        if i % 10 == pptx_mod:
+            return ".pptx", write_pptx([
+                (f"Doc {i}", [(0, text)]),
+                (f"Summary {i}",
+                 [(0, f"point one of doc {i}"), (1, "point two")]),
+            ])
+        if i % 10 == adoc_mod:
+            return ".adoc", (
+                f"= Doc {i}\n\n{text}\n\n"
+                f"* item one of doc {i}\n* item two\n\n"
+                f". first\n. second\n").encode("utf-8")
+        return None
 
-    return pages.mapInPandas(
-        rewrite, "url string, warc_ts timestamp, html binary, "
-                 "text string, lang string")
+    return _replace_html(pages, page)
 
 
 def with_fixture_images(pages: DataFrame, every_mod: int = 6) -> DataFrame:
@@ -631,47 +617,21 @@ def with_fixture_images(pages: DataFrame, every_mod: int = 6) -> DataFrame:
     import struct
     import zlib
 
-    import pandas as pd
+    def page(i, _text, _lang):
+        if i % 10 != every_mod:
+            return None
+        w, h = 16 + i % 64, 16 + i % 32
+        if i % 2:
+            return ".gif", (b"GIF89a" + struct.pack("<HH", w, h)
+                            + b"\x00\x00\x00;")
+        chunk = b"IHDR" + struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
+        return ".png", (b"\x89PNG\r\n\x1a\n"
+                        + struct.pack(">I", 13) + chunk
+                        + struct.pack(">I", zlib.crc32(chunk))
+                        + struct.pack(">I", 0) + b"IEND"
+                        + struct.pack(">I", zlib.crc32(b"IEND")))
 
-    def png_bytes(w: int, h: int) -> bytes:
-        ihdr = struct.pack(">II", w, h) + b"\x08\x02\x00\x00\x00"
-        chunk = b"IHDR" + ihdr
-        return (b"\x89PNG\r\n\x1a\n"
-                + struct.pack(">I", 13) + chunk
-                + struct.pack(">I", zlib.crc32(chunk))
-                + struct.pack(">I", 0) + b"IEND"
-                + struct.pack(">I", zlib.crc32(b"IEND")))
-
-    def gif_bytes(w: int, h: int) -> bytes:
-        return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00;"
-
-    def rewrite(batches):
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist()
-            for j, url in enumerate(urls):
-                if not url.endswith(".html"):
-                    continue
-                stem = url.rsplit("/", 1)[-1]
-                i = int(stem.split(".")[0])
-                if i % 10 != every_mod:
-                    continue
-                w, h = 16 + i % 64, 16 + i % 32
-                if i % 2 == 0:
-                    htmls[j] = png_bytes(w, h)
-                    ext = ".png"
-                else:
-                    htmls[j] = gif_bytes(w, h)
-                    ext = ".gif"
-                urls[j] = url[: -len(".html")] + ext
-            out = pdf.copy()
-            out["url"] = pd.Series(urls, index=pdf.index)
-            out["html"] = pd.Series(htmls, index=pdf.index, dtype="object")
-            yield out
-
-    return pages.mapInPandas(
-        rewrite, "url string, warc_ts timestamp, html binary, "
-                 "text string, lang string")
+    return _replace_html(pages, page)
 
 
 def with_fixture_pdfs(pages: DataFrame, every_mod: int = 4) -> DataFrame:
@@ -679,188 +639,161 @@ def with_fixture_pdfs(pages: DataFrame, every_mod: int = 4) -> DataFrame:
     PDFs (``pdf_write``), so a corpus exercises the PDF extraction path
     end-to-end ("HTML/PDF→Markdown", BASELINE.json metric).
 
-    mapInPandas (Python) — intended for corpus *materialization*, not for
-    inside a timed region. Deterministic: PDF bytes are a pure function of
-    (doc_id, text)."""
-    import pandas as pd
-
+    Python rendering (mapInArrow) — intended for corpus
+    *materialization*, not for inside a timed region. Deterministic: PDF
+    bytes are a pure function of (doc_id, text)."""
     from ..operators.pdf_write import write_pdf
 
-    def rewrite(batches):
-        for pdf in batches:
-            urls = pdf["url"].tolist()
-            htmls = pdf["html"].tolist()
-            for j, url in enumerate(urls):
-                stem = url.rsplit("/", 1)[-1]
-                i = int(stem.split(".")[0])
-                if i % 10 != every_mod or not url.endswith(".html"):
-                    continue
-                text = pdf["text"].iat[j] or ""
-                words, lines, cur = text.split(), [], ""
-                for w in words:
-                    if len(cur) + len(w) + 1 > 90:
-                        lines.append(cur)
-                        cur = w
-                    else:
-                        cur = w if not cur else f"{cur} {w}"
-                if cur:
-                    lines.append(cur)
-                # Tf size-driven heading hierarchy (r3): 24→h1, 18→h2,
-                # 14→h3, body 11 — the driver oracle reconstructs all
-                # three levels from the generation rule
-                blocks = [(72.0, 730.0, 24.0, [f"Doc {i}"]),
-                          (72.0, 690.0, 18.0, [f"Section {i % 7}"]),
-                          (72.0, 655.0, 14.0, [f"Part {i % 3}"])]
-                if lines:
-                    blocks.append((72.0, 620.0, 11.0, lines))
-                # r4: a trailing reference paragraph whose text NEEDS
-                # string escapes — '(', ')', '\' — so the escape path
-                # (pdf_write._escape / pdf_extract._ESCAPES) is driver
-                # value-gated, not just unit-tested. 40pt below the last
-                # body line (> 1.5×size → its own block).
-                # r5 encoding slice (i%30==24, every third PDF): the
-                # ref paragraph gains chars OUTSIDE latin-1 (€ and
-                # curly quotes) and the font alternates by i//30 among
-                # /WinAnsiEncoding, a /Differences array remapping
-                # codes 0xE9-0xEB (which HAVE base cp1252 meanings, so
-                # ignoring the table yields visibly wrong chars), and
-                # a /ToUnicode CMap mapping control-code bytes (the
-                # embedded-subset-font pattern — unreadable without
-                # the CMap). All three decode to identical text, so
-                # one oracle branch covers them.
-                enc = None
-                tail = ""
-                if i % 30 == 24:
-                    tail = " “prix” %d €" % (i % 50)
-                    # r5 notch 9 widens the alternation to FIVE: the
-                    # array-form bfrange CMap (consecutive control
-                    # codes grouped into <lo> <hi> [<d1> <d2> <d3>])
-                    enc = [
-                        "winansi",
-                        {0xE9: "Euro", 0xEA: "quotedblleft",
-                         0xEB: "quotedblright"},
-                        ("tounicode",
-                         {0x01: "€", 0x04: "“", 0x05: "”"}),
-                        ("cid",
-                         {0x1001: "€", 0x1002: "“", 0x1003: "”"}),
-                        ("tounicode_arr",
-                         {0x01: "€", 0x02: "“", 0x03: "”"}),
-                    ][(i // 30) % 5]
-                ref_line = f"(ref {i}\\{i % 7}){tail}"
-                para_y = 620.0 - 14.0 * max(0, len(lines) - 1)
-                if i % 20 == 14:
-                    # two-page fixture: the reference paragraph moves to
-                    # page 2 under its own h3 — span offsets cross the
-                    # page boundary and reading order must concatenate
-                    # pages in /Kids order
-                    page2 = [(72.0, 730.0, 14.0, [f"Part {i % 3} b"]),
-                             (72.0, 690.0, 11.0, [ref_line])]
-                    doc_pages = [blocks, page2]
-                else:
-                    blocks.append((72.0, para_y - 40.0, 11.0, [ref_line]))
-                    doc_pages = [blocks]
-                # r5: every third PDF uses the PDF 1.5 ObjStm+XRef-
-                # stream layout (i%3 decorrelates from the i%20 two-
-                # page rule, so 1.5 covers both single- and two-page
-                # shapes); markdown is layout-invariant, so the driver
-                # oracle is unchanged
-                if i % 7 == 4:
-                    # incremental-save slice (r5): the base revision
-                    # carries STALE page-0 text; an appended update
-                    # (§7.5.6, /Prev-chained) replaces it with the
-                    # real blocks — the oracle expects the UPDATED
-                    # text, so a first-definition-wins reader fails
-                    # the value gate
-                    from ..operators.pdf_write import append_update
-                    stale = [(72.0, 730.0, 24.0, [f"Doc {i} STALE"]),
-                             (72.0, 690.0, 11.0, ["pre-edit text"])]
-                    base = write_pdf(
-                        [stale] + doc_pages[1:],
-                        compress=i % 2 == 0, xref_stream=i % 3 == 0,
-                        font_encoding=enc)
-                    htmls[j] = append_update(
-                        base, 0, doc_pages[0], compress=i % 2 == 0,
-                        font_encoding=enc)
-                else:
-                    # r5 notch 6: docs with i%5 in {2,4} split each
-                    # page's content across 3 streams (/Contents
-                    # ARRAY, §7.8.2 — BT/ET cross stream boundaries);
-                    # two-page docs (i%20==14, always i%5==4) also get
-                    # a NESTED page tree with /Resources inherited
-                    # from the root node (§7.7.3.4). Markdown is
-                    # layout-invariant, so the driver oracle is
-                    # unchanged — a reader that misses the array or
-                    # the tree extracts nothing and fails the hash.
-                    # r5 notch 7: docs with i%11==6 swap the content
-                    # stream's plain/Flate coding for ASCIIHex,
-                    # ASCII85, the [/ASCII85Decode /FlateDecode]
-                    # chain, or (notch 9) LZWDecode / RunLengthDecode
-                    # — the pre-Flate codings of the oldest web-PDF
-                    # slice (alternating by i//11) — layout-invariant,
-                    # so the oracle is again unchanged
-                    filt = (("ahx", "a85", "a85+flate", "lzw", "rle")
-                            [(i // 11) % 5]
-                            if i % 11 == 6 else None)
-                    # r5 notches 8/10 + r6 notch 11b: docs with
-                    # i%13==7 are standard-security encrypted with an
-                    # EMPTY user password, alternating by i//13 across
-                    # R2 RC4-40, R3 RC4-128, R4 V4/AESV2 (AES-128-CBC),
-                    # R5 V5/AESV3 (AES-256, deprecated one-SHA-256
-                    # revision) and R6 V5/AESV3 (AES-256, hardened
-                    # Algorithm-2.B — the CURRENT standard scheme) —
-                    # the permissions-only protection the whole web-PDF
-                    # corpus carries, legacy to modern. Text is
-                    # identical after decryption, so the oracle is
-                    # unchanged; a reader that skips /Encrypt extracts
-                    # nothing (or mojibake) and fails the value hash.
-                    # Decorrelated from the incremental slice (i%7==4
-                    # branch above stays unencrypted — append_update
-                    # bases must).
-                    # rotation is by encrypted-doc RANK (i // 130: PDF
-                    # ∧ encrypted ⇒ i ≡ 124 mod 130), NOT (i//13)%5 —
-                    # encrypted ids step by 130 so i//13 steps by
-                    # 10 ≡ 0 (mod 5) and that index is CONSTANT: the
-                    # first r6 corpus silently made EVERY encrypted doc
-                    # R6 and its deliberately-expensive KDF dominated
-                    # the flagship (7.5 s vs ~2.5 s — caught by the new
-                    # bench calibration + per-query deltas). Ordered
-                    # 6,5,4,3,2 so the NEW V5 revisions land on the
-                    # lowest ranks and reach the sf0.01 driver gate
-                    # (3 encrypted docs there); all five appear from
-                    # sf0.1 up.
-                    enc_r = ((6, 5, 4, 3, 2)[(i // 130) % 5]
-                             if i % 13 == 7 else None)
-                    # r6 form-XObject slice: docs with i%19==11 move
-                    # the h3 'Part' block into a /Subtype /Form
-                    # XObject painted by cm/Do — the letterhead
-                    # pattern; markdown is layout-invariant so the
-                    # oracle is unchanged, and a reader that ignores
-                    # Form XObjects LOSES the h3 and fails the value
-                    # hash. Excluded from nested-tree docs (i%20==14:
-                    # per-page /XObject resources would override the
-                    # §7.7.3.4 inheritance that slice gates).
-                    pdf_forms = None
-                    if i % 19 == 11 and i % 20 != 14:
-                        part_block = doc_pages[0].pop(2)
-                        pdf_forms = [[(0.0, 0.0, [part_block])]]
-                    htmls[j] = write_pdf(doc_pages, compress=i % 2 == 0,
-                                         xref_stream=i % 3 == 0,
-                                         font_encoding=enc,
-                                         split_contents=(
-                                             3 if i % 5 in (2, 4) else 1),
-                                         nested_kids=i % 20 == 14,
-                                         stream_filter=filt,
-                                         encrypt_r=enc_r,
-                                         forms=pdf_forms)
-                urls[j] = url[: -len(".html")] + ".pdf"
-            out = pdf.copy()
-            out["url"] = pd.Series(urls, index=pdf.index)
-            out["html"] = pd.Series(htmls, index=pdf.index, dtype="object")
-            yield out
+    def page(i, text, _lang):
+        if i % 10 != every_mod:
+            return None
+        lines = _wrap(text or "")
+        # Tf size-driven heading hierarchy (r3): 24→h1, 18→h2,
+        # 14→h3, body 11 — the driver oracle reconstructs all
+        # three levels from the generation rule
+        blocks = [(72.0, 730.0, 24.0, [f"Doc {i}"]),
+                  (72.0, 690.0, 18.0, [f"Section {i % 7}"]),
+                  (72.0, 655.0, 14.0, [f"Part {i % 3}"])]
+        if lines:
+            blocks.append((72.0, 620.0, 11.0, lines))
+        # r4: a trailing reference paragraph whose text NEEDS
+        # string escapes — '(', ')', '\' — so the escape path
+        # (pdf_write._escape / pdf_extract._ESCAPES) is driver
+        # value-gated, not just unit-tested. 40pt below the last
+        # body line (> 1.5×size → its own block).
+        # r5 encoding slice (i%30==24, every third PDF): the
+        # ref paragraph gains chars OUTSIDE latin-1 (€ and
+        # curly quotes) and the font alternates by i//30 among
+        # /WinAnsiEncoding, a /Differences array remapping
+        # codes 0xE9-0xEB (which HAVE base cp1252 meanings, so
+        # ignoring the table yields visibly wrong chars), and
+        # a /ToUnicode CMap mapping control-code bytes (the
+        # embedded-subset-font pattern — unreadable without
+        # the CMap). All three decode to identical text, so
+        # one oracle branch covers them.
+        enc = None
+        tail = ""
+        if i % 30 == 24:
+            tail = " “prix” %d €" % (i % 50)
+            # r5 notch 9 widens the alternation to FIVE: the
+            # array-form bfrange CMap (consecutive control
+            # codes grouped into <lo> <hi> [<d1> <d2> <d3>])
+            enc = [
+                "winansi",
+                {0xE9: "Euro", 0xEA: "quotedblleft",
+                 0xEB: "quotedblright"},
+                ("tounicode",
+                 {0x01: "€", 0x04: "“", 0x05: "”"}),
+                ("cid",
+                 {0x1001: "€", 0x1002: "“", 0x1003: "”"}),
+                ("tounicode_arr",
+                 {0x01: "€", 0x02: "“", 0x03: "”"}),
+            ][(i // 30) % 5]
+        ref_line = f"(ref {i}\\{i % 7}){tail}"
+        para_y = 620.0 - 14.0 * max(0, len(lines) - 1)
+        if i % 20 == 14:
+            # two-page fixture: the reference paragraph moves to
+            # page 2 under its own h3 — span offsets cross the
+            # page boundary and reading order must concatenate
+            # pages in /Kids order
+            page2 = [(72.0, 730.0, 14.0, [f"Part {i % 3} b"]),
+                     (72.0, 690.0, 11.0, [ref_line])]
+            doc_pages = [blocks, page2]
+        else:
+            blocks.append((72.0, para_y - 40.0, 11.0, [ref_line]))
+            doc_pages = [blocks]
+        # r5: every third PDF uses the PDF 1.5 ObjStm+XRef-
+        # stream layout (i%3 decorrelates from the i%20 two-
+        # page rule, so 1.5 covers both single- and two-page
+        # shapes); markdown is layout-invariant, so the driver
+        # oracle is unchanged
+        if i % 7 == 4:
+            # incremental-save slice (r5): the base revision
+            # carries STALE page-0 text; an appended update
+            # (§7.5.6, /Prev-chained) replaces it with the
+            # real blocks — the oracle expects the UPDATED
+            # text, so a first-definition-wins reader fails
+            # the value gate
+            from ..operators.pdf_write import append_update
+            stale = [(72.0, 730.0, 24.0, [f"Doc {i} STALE"]),
+                     (72.0, 690.0, 11.0, ["pre-edit text"])]
+            base = write_pdf(
+                [stale] + doc_pages[1:],
+                compress=i % 2 == 0, xref_stream=i % 3 == 0,
+                font_encoding=enc)
+            return ".pdf", append_update(
+                base, 0, doc_pages[0], compress=i % 2 == 0,
+                font_encoding=enc)
+        else:
+            # r5 notch 6: docs with i%5 in {2,4} split each
+            # page's content across 3 streams (/Contents
+            # ARRAY, §7.8.2 — BT/ET cross stream boundaries);
+            # two-page docs (i%20==14, always i%5==4) also get
+            # a NESTED page tree with /Resources inherited
+            # from the root node (§7.7.3.4). Markdown is
+            # layout-invariant, so the driver oracle is
+            # unchanged — a reader that misses the array or
+            # the tree extracts nothing and fails the hash.
+            # r5 notch 7: docs with i%11==6 swap the content
+            # stream's plain/Flate coding for ASCIIHex,
+            # ASCII85, the [/ASCII85Decode /FlateDecode]
+            # chain, or (notch 9) LZWDecode / RunLengthDecode
+            # — the pre-Flate codings of the oldest web-PDF
+            # slice (alternating by i//11) — layout-invariant,
+            # so the oracle is again unchanged
+            filt = (("ahx", "a85", "a85+flate", "lzw", "rle")
+                    [(i // 11) % 5]
+                    if i % 11 == 6 else None)
+            # r5 notches 8/10 + r6 notch 11b: docs with
+            # i%13==7 are standard-security encrypted with an
+            # EMPTY user password, alternating by i//13 across
+            # R2 RC4-40, R3 RC4-128, R4 V4/AESV2 (AES-128-CBC),
+            # R5 V5/AESV3 (AES-256, deprecated one-SHA-256
+            # revision) and R6 V5/AESV3 (AES-256, hardened
+            # Algorithm-2.B — the CURRENT standard scheme) —
+            # the permissions-only protection the whole web-PDF
+            # corpus carries, legacy to modern. Text is
+            # identical after decryption, so the oracle is
+            # unchanged; a reader that skips /Encrypt extracts
+            # nothing (or mojibake) and fails the value hash.
+            # Decorrelated from the incremental slice (i%7==4
+            # branch above stays unencrypted — append_update
+            # bases must).
+            # rotation is by encrypted-doc RANK (i // 130: PDF
+            # ∧ encrypted ⇒ i ≡ 124 mod 130), NOT (i//13)%5 —
+            # encrypted ids step by 130 so i//13 steps by
+            # 10 ≡ 0 (mod 5) and that index is CONSTANT: the
+            # first r6 corpus silently made EVERY encrypted doc
+            # R6 and its deliberately-expensive KDF dominated
+            # the flagship (7.5 s vs ~2.5 s — caught by the new
+            # bench calibration + per-query deltas). Ordered
+            # 6,5,4,3,2 so the NEW V5 revisions land on the
+            # lowest ranks and reach the sf0.01 driver gate
+            # (3 encrypted docs there); all five appear from
+            # sf0.1 up.
+            enc_r = ((6, 5, 4, 3, 2)[(i // 130) % 5]
+                     if i % 13 == 7 else None)
+            # r6 form-XObject slice: docs with i%19==11 move
+            # the h3 'Part' block into a /Subtype /Form
+            # XObject painted by cm/Do — the letterhead
+            # pattern; markdown is layout-invariant so the
+            # oracle is unchanged, and a reader that ignores
+            # Form XObjects LOSES the h3 and fails the value
+            # hash. Excluded from nested-tree docs (i%20==14:
+            # per-page /XObject resources would override the
+            # §7.7.3.4 inheritance that slice gates).
+            pdf_forms = None
+            if i % 19 == 11 and i % 20 != 14:
+                part_block = doc_pages[0].pop(2)
+                pdf_forms = [[(0.0, 0.0, [part_block])]]
+            return ".pdf", write_pdf(
+                doc_pages, compress=i % 2 == 0,
+                xref_stream=i % 3 == 0, font_encoding=enc,
+                split_contents=3 if i % 5 in (2, 4) else 1,
+                nested_kids=i % 20 == 14, stream_filter=filt,
+                encrypt_r=enc_r, forms=pdf_forms)
 
-    return pages.mapInPandas(
-        rewrite, "url string, warc_ts timestamp, html binary, "
-                 "text string, lang string")
+    return _replace_html(pages, page)
 
 
 def pages_embedded_images(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -887,73 +820,39 @@ def pages_embedded_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every dimension above is a pure function of doc_id, so the driver
     oracle value-gates the decoded PNG geometry end to end; exact
     pixel bytes are golden-tested in pytest (test_extractors /
-    test_png)."""
-    import pandas as pd
-
+    test_png). The ``text`` column passes NULL through."""
     from ..operators.ooxml_write import write_docx, write_pptx
     from ..operators.pdf_write import write_pdf
     from ..operators.png_write import picture_png
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    def page(i, t, _lang):
+        text = t or ""
+        if i % 3 == 1:
+            return ".docx", write_docx(
+                f"Doc {i}", text, [f"li one {i}", "li two"],
+                [["k", "v"], ["id", str(i)]],
+                images=[picture_png(f"demb-{i}-a")]), t
+        if i % 3 == 2:
+            return ".pptx", write_pptx(
+                [(f"Doc {i}", [(0, text)])],
+                images=[[picture_png(f"pemb-{i}-a")]]), t
+        w1, h1 = 16 + i % 13, 12 + i % 9
+        px1 = bytes(((x * 3 + y * 5 + i) % 256)
+                    for y in range(h1) for x in range(w1))
+        w2, h2 = 8 + i % 8, 8 + i % 5
+        px2 = bytes([(i * 7) % 256]) * (w2 * h2)
+        blocks = [(72.0, 730.0, 24.0, [f"Doc {i}"])]
+        lines = _wrap(text)
+        if lines:
+            blocks.append((72.0, 560.0, 11.0, lines))
+        # r6: half the flate images ride the /Predictor 15
+        # PNG-row coding real writers emit — decode output
+        # is identical, so the geometry oracle is unchanged
+        codec1 = "flate-png" if (i // 3) % 2 else "flate"
+        return ".pdf", write_pdf(
+            [blocks], compress=i % 4 == 0, xref_stream=i % 6 == 0,
+            images=[[(72.0, 700.0, w1, h1, px1, codec1),
+                     (72.0, 640.0, w2, h2, px2, "dct")]]), t
 
-    def render(batches):
-        for pdf in batches:
-            urls, payloads = [], []
-            for j in range(len(pdf)):
-                i = int(pdf["doc_id"].iat[j])
-                text = pdf["text"].iat[j] or ""
-                if i % 3 == 0:
-                    w1, h1 = 16 + i % 13, 12 + i % 9
-                    px1 = bytes(((x * 3 + y * 5 + i) % 256)
-                                for y in range(h1) for x in range(w1))
-                    w2, h2 = 8 + i % 8, 8 + i % 5
-                    px2 = bytes([(i * 7) % 256]) * (w2 * h2)
-                    words, lines, cur = text.split(), [], ""
-                    for wd in words:
-                        if len(cur) + len(wd) + 1 > 90:
-                            lines.append(cur)
-                            cur = wd
-                        else:
-                            cur = wd if not cur else f"{cur} {wd}"
-                    if cur:
-                        lines.append(cur)
-                    blocks = [(72.0, 730.0, 24.0, [f"Doc {i}"])]
-                    if lines:
-                        blocks.append((72.0, 560.0, 11.0, lines))
-                    # r6: half the flate images ride the /Predictor 15
-                    # PNG-row coding real writers emit — decode output
-                    # is identical, so the geometry oracle is unchanged
-                    codec1 = "flate-png" if (i // 3) % 2 else "flate"
-                    payloads.append(write_pdf(
-                        [blocks], compress=i % 4 == 0,
-                        xref_stream=i % 6 == 0,
-                        images=[[(72.0, 700.0, w1, h1, px1, codec1),
-                                 (72.0, 640.0, w2, h2, px2, "dct")]]))
-                    ext = ".pdf"
-                elif i % 3 == 1:
-                    payloads.append(write_docx(
-                        f"Doc {i}", text,
-                        [f"li one {i}", "li two"],
-                        [["k", "v"], ["id", str(i)]],
-                        images=[picture_png(f"demb-{i}-a")]))
-                    ext = ".docx"
-                else:
-                    payloads.append(write_pptx(
-                        [(f"Doc {i}", [(0, text)])],
-                        images=[[picture_png(f"pemb-{i}-a")]]))
-                    ext = ".pptx"
-                urls.append(f"https://site{i % 97}.example/doc/{i}{ext}")
-            out = pd.DataFrame({
-                "url": pd.Series(urls, index=pdf.index),
-                "warc_ts": pd.to_datetime(
-                    (pdf["doc_id"] % 86400) + _EPOCH_S, unit="s"),
-                "html": pd.Series(payloads, index=pdf.index,
-                                  dtype="object"),
-                "text": pdf["text"],
-                "lang": pdf["lang"],
-            })
-            yield out
-
-    return docs.mapInPandas(
-        render, "url string, warc_ts timestamp, html binary, "
-                "text string, lang string")
+    return _from_documents(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), page)

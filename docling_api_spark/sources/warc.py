@@ -10,7 +10,7 @@ pipeline ingests WARC segments. This module provides:
 - :func:`iter_warc_records` — parse records back (header block +
   Content-Length-sliced payload; tolerant of records it does not know);
 - :func:`read_warc_pages` — the Spark source: ``binaryFile`` scan over
-  WARC files → ``flatMap``-style ``mapInPandas`` record parse → the
+  WARC files → ``flatMap``-style ``mapInArrow`` record parse → the
   standard pages rows.
 
 Scale model (PLANS.md): one WARC file per task — exactly how CC is
@@ -22,11 +22,14 @@ whole segment per task, which matches the 1-file-1-task model.
 
 from __future__ import annotations
 
+import datetime
 import gzip
 import io
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import PAGES_SCHEMA
 
@@ -139,39 +142,49 @@ def iter_warc_records(data: bytes, types: tuple = (b"response",)):
         yield url, date, payload
 
 
+def _warc_date_us(date: str) -> int | None:
+    """WARC-Date → microseconds since the epoch, or None if it does not
+    parse. Each date is read on its own (``datetime.fromisoformat``:
+    ``Z``, fractional seconds and offsets); a date without an offset is
+    UTC, as WARC §5.4 requires."""
+    try:
+        dt = datetime.datetime.fromisoformat(date)
+    except ValueError:
+        return None
+    if dt.tzinfo is None:
+        dt = dt.replace(tzinfo=datetime.timezone.utc)
+    delta = dt - datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    return delta // datetime.timedelta(microseconds=1)
+
+
 def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:
     """WARC segment files → pages(url, warc_ts, html, text, lang).
 
     Plan: ``binaryFile`` scan (one whole segment per row → one per
-    task; a crawl's parallelism is its file count) → mapInPandas record
-    parse. ``text``/``lang`` are NULL — they are WET-side columns the
-    extraction pipeline does not read."""
-    import pandas as pd
-
+    task; a crawl's parallelism is its file count) → mapInArrow record
+    parse, ``warc_ts`` a UTC instant (:func:`_warc_date_us`), so the rows
+    do not depend on the session time zone. ``text``/``lang`` are NULL —
+    they are WET-side columns the extraction pipeline does not read."""
+    schema = to_arrow_schema(PAGES_SCHEMA)
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", "*.warc*")
              .load(path)
              .select("content"))
 
     def parse(batches):
-        for pdf in batches:
-            urls, tss, payloads = [], [], []
-            for blob in pdf["content"]:
-                for url, date, payload in iter_warc_records(bytes(blob)):
-                    urls.append(url)
-                    tss.append(date)
-                    payloads.append(payload)
-            yield pd.DataFrame({
-                "url": pd.Series(urls, dtype="object"),
-                "warc_ts": pd.to_datetime(
-                    pd.Series(tss, dtype="object"), errors="coerce",
-                    utc=True).dt.tz_localize(None),
-                "html": pd.Series(payloads, dtype="object"),
-                "text": pd.Series([None] * len(urls), dtype="object"),
-                "lang": pd.Series([None] * len(urls), dtype="object"),
-            })
+        for b in batches:
+            recs = [rec for blob in b.column("content").to_pylist()
+                    for rec in iter_warc_records(blob)]
+            yield pa.RecordBatch.from_arrays([
+                pa.array([url for url, _, _ in recs], pa.string()),
+                pa.array([_warc_date_us(date) for _, date, _ in recs],
+                         schema.field("warc_ts").type),
+                pa.array([payload for _, _, payload in recs], pa.binary()),
+                pa.nulls(len(recs), pa.string()),
+                pa.nulls(len(recs), pa.string()),
+            ], schema=schema)
 
-    return files.mapInPandas(parse, PAGES_SCHEMA)
+    return files.mapInArrow(parse, PAGES_SCHEMA)
 
 
 def iso8601(epoch_s: int) -> str:

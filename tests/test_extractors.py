@@ -1141,6 +1141,51 @@ def test_aes_known_answer_vectors():
         assert C.aes_cbc_decrypt(k, C.aes_cbc_encrypt(k, v, d)) == d
 
 
+def test_aes_rejects_a_key_of_the_wrong_length():
+    """Every AES entry point raises AesError, not OpenSSL's ValueError,
+    for a key that is not 16, 24 or 32 bytes."""
+    import pytest
+
+    from docling_api_spark.operators import pdf_crypt as C
+    for n in (0, 5, 10, 15, 17, 31, 33):
+        key = bytes(n)
+        for call in (lambda: C.aes_cbc_decrypt(key, bytes(32)),
+                     lambda: C.aes_cbc_encrypt(key, bytes(16), b"x"),
+                     lambda: C._cbc_nopad(key, bytes(16), bytes(16), True),
+                     lambda: C.perms_check(key, bytes(16), -4)):
+            with pytest.raises(C.AesError, match="key length"):
+                call()
+    for n in (16, 24, 32):
+        key = bytes(range(n))
+        assert C.aes_cbc_decrypt(
+            key, C.aes_cbc_encrypt(key, bytes(16), b"ok")) == b"ok"
+
+
+def test_aesv2_file_with_a_40_bit_key_is_typed_unsupported():
+    """An AESV2 file whose encrypt dict says /Length 40, with a /U that
+    matches the 5-byte file key, derives 10-byte object keys; that is
+    pdf_unsupported_feature, not parse_error."""
+    import re
+
+    from docling_api_spark.operators import pdf_crypt as C
+    from docling_api_spark.operators.pdf_extract import _dict_string
+    from docling_api_spark.operators.pdf_write import write_pdf
+    enc = write_pdf([[(72.0, 730.0, 24.0, ["Doc A"]),
+                      (72.0, 690.0, 11.0, ["aes body"])]], encrypt_r=4)
+    # same byte length, so every xref offset still holds
+    enc = enc.replace(b"/V 4 /R 4 /Length 128", b"/V 4 /R 4 /Length 40 ")
+    edict = enc[enc.index(b"/Filter /Standard"):]
+    p = int(re.search(rb"/P (-?\d+)", edict).group(1))
+    id0 = bytes.fromhex(
+        re.search(rb"/ID \[<([0-9a-f]+)>", enc).group(1).decode())
+    key = C.file_key(b"", _dict_string(edict, b"O"), p, id0, 4, 5)
+    u = _dict_string(edict, b"U")
+    enc = enc.replace(u.hex().encode(), C.u_value(key, id0, 4).hex().encode())
+    r = convert_one(enc, "https://x/doc.pdf", CFG)
+    assert r["markdown"] is None
+    assert r["error"] == "pdf_unsupported_feature"
+
+
 def test_pdf_aesv2_layout_invariant_and_scopeouts():
     """Empty-password AESV2 files extract byte-identically to their
     unencrypted twins on every layout (incl. ObjStm containers, whose
@@ -1396,14 +1441,16 @@ def test_jpeg_codec_roundtrip_and_scopeouts():
     import pytest
 
     from docling_api_spark.operators.jpeg_codec import (
-        decode_gray_jpeg, encode_gray_jpeg, jpeg_dimensions)
+        decode_gray_jpeg, encode_gray_jpeg)
+    from docling_api_spark.operators.multimodal import parse_image_header
     rng = random.Random(3)
     for (w, h) in [(8, 8), (16, 12), (17, 9), (1, 1), (5, 30), (23, 23)]:
         px = bytes(((x * 3 + y * 5) % 256)
                    for y in range(h) for x in range(w))
         data = encode_gray_jpeg(w, h, px)
         dw, dh, out = decode_gray_jpeg(data)
-        assert (dw, dh) == (w, h) and jpeg_dimensions(data) == (w, h)
+        assert (dw, dh) == (w, h)
+        assert parse_image_header(data) == ("jpeg", w, h)
         assert max(abs(a - b) for a, b in zip(px, out)) <= 24
         assert encode_gray_jpeg(w, h, px) == data  # deterministic
     base = encode_gray_jpeg(8, 8, bytes(64))
