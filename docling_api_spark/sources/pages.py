@@ -97,7 +97,6 @@ SHELL_TBL_MID = "</td></tr><tr><td>lang</td><td>"
 SHELL_TBL_POST = "</td></tr></table>"
 
 
-
 #: the Arrow form of PAGES_SCHEMA: ``warc_ts`` is ``timestamp[us, tz=UTC]``
 _ARROW_PAGES = to_arrow_schema(PAGES_SCHEMA)
 
@@ -180,6 +179,8 @@ def _replace_html(pages: DataFrame, page) -> DataFrame:
                     htmls[j] = new[1]
             yield pa.RecordBatch.from_arrays([
                 pa.array(urls, pa.string()),
+                # Spark hands timestamps over labelled with the session
+                # zone; the cast relabels the same instant as UTC
                 b.column("warc_ts").cast(ts_type),
                 pa.array(htmls, pa.binary()),
                 b.column("text"),
