@@ -650,7 +650,7 @@ def with_fixture_pdfs(pages: DataFrame, every_mod: int = 4) -> DataFrame:
             return None
         lines = _wrap(text or "")
         # Tf size-driven heading hierarchy (r3): 24→h1, 18→h2,
-        # 14→h3, body 11 — the driver oracle reconstructs all
+        # 14→h3, body 11 — the SQL oracle reconstructs all
         # three levels from the generation rule
         blocks = [(72.0, 730.0, 24.0, [f"Doc {i}"]),
                   (72.0, 690.0, 18.0, [f"Section {i % 7}"]),
@@ -659,7 +659,7 @@ def with_fixture_pdfs(pages: DataFrame, every_mod: int = 4) -> DataFrame:
             blocks.append((72.0, 620.0, 11.0, lines))
         # r4: a trailing reference paragraph whose text NEEDS
         # string escapes — '(', ')', '\' — so the escape path
-        # (pdf_write._escape / pdf_extract._ESCAPES) is driver
+        # (pdf_write._escape / pdf_extract._ESCAPES) is oracle
         # value-gated, not just unit-tested. 40pt below the last
         # body line (> 1.5×size → its own block).
         # r5 encoding slice (i%30==24, every third PDF): the
@@ -706,7 +706,7 @@ def with_fixture_pdfs(pages: DataFrame, every_mod: int = 4) -> DataFrame:
         # r5: every third PDF uses the PDF 1.5 ObjStm+XRef-
         # stream layout (i%3 decorrelates from the i%20 two-
         # page rule, so 1.5 covers both single- and two-page
-        # shapes); markdown is layout-invariant, so the driver
+        # shapes); markdown is layout-invariant, so the SQL
         # oracle is unchanged
         if i % 7 == 4:
             # incremental-save slice (r5): the base revision
@@ -732,7 +732,7 @@ def with_fixture_pdfs(pages: DataFrame, every_mod: int = 4) -> DataFrame:
             # two-page docs (i%20==14, always i%5==4) also get
             # a NESTED page tree with /Resources inherited
             # from the root node (§7.7.3.4). Markdown is
-            # layout-invariant, so the driver oracle is
+            # layout-invariant, so the SQL oracle is
             # unchanged — a reader that misses the array or
             # the tree extracts nothing and fails the hash.
             # r5 notch 7: docs with i%11==6 swap the content
@@ -769,7 +769,7 @@ def with_fixture_pdfs(pages: DataFrame, every_mod: int = 4) -> DataFrame:
             # the flagship (7.5 s vs ~2.5 s — caught by the new
             # bench calibration + per-query deltas). Ordered
             # 6,5,4,3,2 so the NEW V5 revisions land on the
-            # lowest ranks and reach the sf0.01 driver gate
+            # lowest ranks and reach the sf0.01 oracle gate
             # (3 encrypted docs there); all five appear from
             # sf0.1 up.
             enc_r = ((6, 5, 4, 3, 2)[(i // 130) % 5]

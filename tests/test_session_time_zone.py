@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 
 from docling_api_spark.sources import pages as P
 from docling_api_spark.sources import warc as W
+from test_multimodal_streaming import SF
 
-SF = "/root/testdata/sf0.001"
 EPOCH = 1735689600
 
 
