@@ -99,6 +99,7 @@ SHELL_TBL_POST = "</td></tr></table>"
 
 #: the Arrow form of PAGES_SCHEMA: ``warc_ts`` is ``timestamp[us, tz=UTC]``
 _ARROW_PAGES = to_arrow_schema(PAGES_SCHEMA)
+_ARROW_TS = _ARROW_PAGES.field("warc_ts").type
 
 
 def _jvm_url(i, ext=None):
@@ -134,8 +135,6 @@ def _from_documents(docs: DataFrame, page) -> DataFrame:
     ``page(doc_id, text, lang) -> (ext, body, text_out)``, one Arrow
     batch out per batch in. url and ``warc_ts`` follow the same rule as
     :func:`pages_from_documents`; ``lang`` passes through."""
-    ts_type = _ARROW_PAGES.field("warc_ts").type
-
     def render(batches):
         for b in batches:
             ids = b.column("doc_id").to_pylist()
@@ -146,7 +145,7 @@ def _from_documents(docs: DataFrame, page) -> DataFrame:
                 pa.array([f"https://site{i % 97}.example/doc/{i}{ext}"
                           for i, (ext, _, _) in zip(ids, out)], pa.string()),
                 pa.array([(_EPOCH_S + i % 86400) * 1_000_000 for i in ids],
-                         ts_type),
+                         _ARROW_TS),
                 pa.array([body for _, body, _ in out], pa.binary()),
                 pa.array([text for _, _, text in out], pa.string()),
                 b.column("lang"),
@@ -161,8 +160,6 @@ def _replace_html(pages: DataFrame, page) -> DataFrame:
     function ``page(doc_id, text, lang) -> (ext, body)``, or None to keep
     the row. The doc_id is read from the url stem; url and html change,
     and every other column passes through as the input's Arrow arrays."""
-    ts_type = _ARROW_PAGES.field("warc_ts").type
-
     def rewrite(batches):
         for b in batches:
             urls = b.column("url").to_pylist()
@@ -181,7 +178,7 @@ def _replace_html(pages: DataFrame, page) -> DataFrame:
                 pa.array(urls, pa.string()),
                 # Spark hands timestamps over labelled with the session
                 # zone; the cast relabels the same instant as UTC
-                b.column("warc_ts").cast(ts_type),
+                b.column("warc_ts").cast(_ARROW_TS),
                 pa.array(htmls, pa.binary()),
                 b.column("text"),
                 b.column("lang"),
