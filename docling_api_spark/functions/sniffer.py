@@ -29,8 +29,6 @@ DOCX, PPTX, HTML, IMAGE, PDF, ASCIIDOC, MD = (
     "docx", "pptx", "html", "image", "pdf", "asciidoc", "md",
 )
 
-SUPPORTED = frozenset({DOCX, PPTX, HTML, IMAGE, PDF, ASCIIDOC, MD})
-
 # extension → format. The reference's ``mime_from_extension``
 # (utils.py:92-101) maps ONLY the text formats asciidoc/html/md — binary
 # formats (pdf/docx/pptx/image) are detected by content magic alone, so a
@@ -143,7 +141,7 @@ def detect_format(content: bytes, url: str) -> str | None:
     """Full sniff chain of ``guess_format`` (``utils.py:76-89``):
     magic bytes → extension → HTML content heuristic → None (unsupported).
 
-    Returns one of SUPPORTED or None; None rows become
+    Returns a key of ``convert.CONVERTERS`` or None; None rows become
     ``error='unsupported_format'`` rows instead of being dropped
     (error-row semantics, SURVEY.md Table A row A3)."""
     if not content:

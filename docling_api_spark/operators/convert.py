@@ -12,6 +12,8 @@ record batches through a generator). Key semantics preserved:
   a failure code (``service.py:83-88``) — the job never dies on a poison
   document;
 - format gate as error rows, not drops (``utils.py:104-105`` + SURVEY A3);
+- one table, ``CONVERTERS``, keyed by the sniffed ``InputFormat``
+  (``utils.py:8-15``), picks each converter and its failure codes;
 - unlike the reference, which constructs its converter **per request**
   (``service.py:76-78`` — models reloaded every call), all our extractor
   state is module-level and built once per Python worker process
@@ -34,7 +36,8 @@ import pyarrow.compute as pc
 from pyspark.sql.pandas.types import to_arrow_type
 
 from ..config import ExtractConfig
-from ..functions.sniffer import detect_format
+from ..functions.sniffer import (ASCIIDOC, DOCX, HTML, IMAGE, MD, PDF, PPTX,
+                                 detect_format)
 from ..schemas import RESULT_SCHEMA
 from .html_extract import extract_html
 from .md_adoc import asciidoc_to_markdown, block_spans, normalize_markdown
@@ -104,69 +107,66 @@ def decode_html(content: bytes) -> str:
     return _decode_text(content)
 
 
+def _html(content: bytes, cfg: ExtractConfig):
+    res = extract_html(decode_html(content), cfg)
+    return res.markdown, res.images, res.spans
+
+
+def _text(to_md):
+    return lambda content, cfg: (to_md(_decode_text(content)), None, None)
+
+
+def _rich(extract):
+    return lambda content, cfg: (*extract(content), None)
+
+
+def _ocr(content: bytes, cfg: ExtractConfig):
+    from .ocr import ocr_image   # only workers that meet an image load OCR
+    return ocr_image(content), None, None
+
+
+#: sniffed format → (run, errors). ``run(content, cfg)`` gives (markdown,
+#: images, spans); convert_one fills None images with [] and None spans
+#: with per-block spans (one C7 offset contract). ``errors`` maps the
+#: exceptions a format expects to its failure code (OCR raises ValueError
+#: on all but machine-rendered text); any other exception is parse_error.
+CONVERTERS = {
+    HTML: (_html, {}),
+    MD: (_text(normalize_markdown), {}),
+    ASCIIDOC: (_text(asciidoc_to_markdown), {}),
+    PDF: (_rich(extract_pdf_rich),
+          {PdfUnsupported: "pdf_unsupported_feature"}),
+    DOCX: (_rich(extract_docx_rich), {}),
+    PPTX: (_rich(extract_pptx_rich), {}),
+    IMAGE: (_ocr, {ValueError: "ocr_not_supported"}),
+}
+
+
+def _error_row(fmt, error: str, spans=None) -> dict:
+    return dict(fmt=fmt, markdown=None, images=None, spans=spans, error=error)
+
+
 def convert_one(content, url: str, cfg: ExtractConfig) -> dict:
     """Pure per-document conversion. Returns a dict with keys
     fmt/markdown/images/spans/error — exactly one of markdown/error set."""
-    out = {"fmt": None, "markdown": None, "images": None, "spans": None,
-           "error": None}
-    if content is None or len(content) == 0:
-        out["error"] = "empty_document"
-        return out
+    if not content:
+        return _error_row(None, "empty_document")
     content = bytes(content)
     fmt = detect_format(content, url)
-    out["fmt"] = fmt
     if fmt is None:
-        out["error"] = "unsupported_format"
-        return out
+        return _error_row(None, "unsupported_format")
+    run, errors = CONVERTERS[fmt]
     try:
-        if fmt == "html":
-            res = extract_html(decode_html(content), cfg)
-            out["markdown"] = res.markdown
-            out["images"] = res.images
-            out["spans"] = res.spans
-        elif fmt == "md":
-            out["markdown"] = normalize_markdown(_decode_text(content))
-        elif fmt == "asciidoc":
-            out["markdown"] = asciidoc_to_markdown(_decode_text(content))
-        elif fmt == "pdf":
-            # r6 notch 11a: embedded image XObjects surface on the
-            # same A12 manifest contract as HTML pictures
-            out["markdown"], out["images"] = extract_pdf_rich(content)
-        elif fmt == "docx":
-            out["markdown"], out["images"] = extract_docx_rich(content)
-        elif fmt == "pptx":
-            out["markdown"], out["images"] = extract_pptx_rich(content)
-        elif fmt == "image":
-            # Machine-rendered text rasters are OCR'd for real by the
-            # from-scratch template matcher (operators/ocr.py — the
-            # easyocr counterpart, service.py:37, within sandbox scope);
-            # anything else (photographic scans, other encodings) keeps
-            # the explicit failure code rather than garbled output.
-            from .ocr import ocr_image
-            try:
-                out["markdown"] = ocr_image(content)
-            except ValueError:
-                out["error"] = "ocr_not_supported"
-                return out
-    except PdfUnsupported:
-        out["error"] = "pdf_unsupported_feature"
-        return out
-    except Exception:
-        out["error"] = "parse_error"
-        return out
-    if out["markdown"] is not None and out["markdown"] == "":
-        out["markdown"] = None
-        out["images"] = None     # error rows carry NULL images
-        out["error"] = "empty_document"
-    if out["markdown"] is not None:
-        if out["images"] is None:
-            out["images"] = []
-        if out["spans"] is None:
-            # per-block spans for non-HTML formats (r3; the HTML path
-            # tracks spans during serialization) — same C7 offset
-            # contract for every format
-            out["spans"] = block_spans(out["markdown"])
-    return out
+        markdown, images, spans = run(content, cfg)
+    except Exception as exc:
+        return _error_row(fmt, next((code for cls, code in errors.items()
+                                     if isinstance(exc, cls)), "parse_error"))
+    if not markdown:   # an empty HTML page keeps its serializer's spans: []
+        return _error_row(fmt, "empty_document", spans)
+    return {"fmt": fmt, "markdown": markdown,
+            "images": [] if images is None else images,
+            "spans": block_spans(markdown) if spans is None else spans,
+            "error": None}
 
 
 def _byte_length(arr: pa.Array) -> pa.Array:

@@ -208,11 +208,6 @@ def extract_docx_rich(content: bytes) -> tuple[str, list]:
     return "\n\n".join(blocks), images
 
 
-def extract_docx(content: bytes) -> str:
-    """DOCX → Markdown (text view of :func:`extract_docx_rich`)."""
-    return extract_docx_rich(content)[0]
-
-
 def _slide_no(name: str) -> int:
     m = re.search(r"slide(\d+)\.xml$", name)
     return int(m.group(1)) if m else 0
@@ -304,8 +299,3 @@ def _pptx_shape_blocks(sp, blocks: list[str]) -> None:
             bullets.append("  " * lvl + "- " + text)
     if bullets:
         blocks.append("\n".join(bullets))
-
-
-def extract_pptx(content: bytes) -> str:
-    """PPTX → Markdown (text view of :func:`extract_pptx_rich`)."""
-    return extract_pptx_rich(content)[0]

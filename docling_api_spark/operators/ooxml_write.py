@@ -3,7 +3,7 @@
 Counterpart of :mod:`.pdf_write` for the OOXML extraction paths: the bench/
 oracle corpus synthesizes real ZIP+XML documents whose expected markdown is
 reconstructable in pure SQL from the generation rule, so the driver's
-DuckDB gate value-checks ``extract_docx``/``extract_pptx`` end-to-end
+DuckDB gate value-checks ``extract_docx_rich``/``extract_pptx_rich`` end-to-end
 (the reference accepts DOCX/PPTX as first-class inputs —
 ``document_converter/utils.py:26-27``).
 
@@ -71,7 +71,7 @@ def write_docx(heading: str, paragraph: str, bullets: list[str],
                table_rows: list[list[str]],
                images: list[bytes] | None = None) -> bytes:
     """Minimal-but-real DOCX: Heading1 title, a body paragraph, a bulleted
-    list, and a table — exactly the constructs ``extract_docx`` maps to
+    list, and a table — exactly the constructs ``extract_docx_rich`` maps to
     markdown blocks.
 
     ``images`` (r6 notch 11a, the A12 contract on the OOXML path): each
@@ -150,7 +150,7 @@ def write_pptx(slides: list[tuple[str, list[tuple[int, str]]]],
                images: list[list[bytes]] | None = None) -> bytes:
     """Minimal-but-real PPTX: per slide a title placeholder shape and a
     body shape of (indent-level, text) bullets — the constructs
-    ``extract_pptx`` maps to '##' headings and '-' bullets.
+    ``extract_pptx_rich`` maps to '##' headings and '-' bullets.
 
     ``images`` (r6 — A12 on the PPTX path): per-slide lists of PNG
     bytes; each becomes a ``ppt/media/imageN.png`` part, a slide-rels

@@ -1496,9 +1496,3 @@ def extract_pdf_rich(content: bytes) -> tuple[str, list]:
                     out[i] = b.replace("<!-- image -->", fname, 1)
                     break
     return "\n\n".join(out), images
-
-
-def extract_pdf(content: bytes) -> str:
-    """PDF bytes → Markdown (the text-only view of
-    :func:`extract_pdf_rich` — same markdown, images dropped)."""
-    return extract_pdf_rich(content)[0]

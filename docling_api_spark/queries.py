@@ -204,7 +204,7 @@ _TEXT_BLOCK = ("CASE WHEN length(trim(text)) > 0 "
 
 def extract_docx_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOCX path, value-checked end-to-end: deterministic ZIP+XML fixtures
-    (ooxml_write) extracted by the stdlib OOXML reader (ooxml.extract_docx);
+    (ooxml_write) extracted by ooxml.extract_docx_rich, the stdlib reader;
     the oracle reconstructs the expected markdown from the generation rule
     (heading + paragraph + bullets + table — reference capability
     utils.py:26)."""

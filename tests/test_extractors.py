@@ -109,7 +109,7 @@ def test_pdf_multipage_two_column_reading_order():
     """Pages concatenate in order; within a page, blocks sort into
     column-major reading order (full left column before the right one) —
     the north_star's layout-block segmentation + reading-order sort."""
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
 
     pdf = write_pdf([
@@ -119,8 +119,8 @@ def test_pdf_multipage_two_column_reading_order():
          (320.0, 720.0, 12.0, ["right col"]),
          (72.0, 680.0, 11.0, ["left lower"])],
     ], compress=True)
-    assert extract_pdf(pdf) == ("## Page One Title\n\np1 body\n\n"
-                                "left col\n\nleft lower\n\nright col")
+    assert extract_pdf_rich(pdf)[0] == ("## Page One Title\n\np1 body\n\n"
+                                        "left col\n\nleft lower\n\nright col")
 
 
 def test_pdf_flate_stream_ending_in_cr_byte():
@@ -129,7 +129,7 @@ def test_pdf_flate_stream_ending_in_cr_byte():
     truncating the stream. The reader must slice by /Length instead."""
     import zlib
 
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import (content_stream,
                                                        write_pdf)
 
@@ -141,7 +141,7 @@ def test_pdf_flate_stream_ending_in_cr_byte():
         if zlib.compress(content_stream(blocks), 6).endswith(b"\r"):
             hit += 1
         pdf = write_pdf([blocks], compress=True)
-        assert extract_pdf(pdf) == f"## Probe {i}\n\n{body}", i
+        assert extract_pdf_rich(pdf)[0] == f"## Probe {i}\n\n{body}", i
     assert hit > 0  # the hazardous byte pattern was actually exercised
 
 
@@ -169,7 +169,7 @@ def test_pdf_reader_robust_under_mutation():
     import time
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
 
     base = [write_pdf([[(72.0, 720.0, 18.0, [f"Doc {i}"]),
@@ -188,12 +188,12 @@ def test_pdf_reader_robust_under_mutation():
             else:
                 raw.insert(rng.randrange(len(raw) + 1), rng.randrange(256))
         try:
-            extract_pdf(bytes(raw))
+            extract_pdf_rich(bytes(raw))
         except PdfUnsupported:
             pass
     for frac in (1, len(base[0]) // 3, len(base[0]) - 10):
         try:
-            extract_pdf(base[0][:frac])
+            extract_pdf_rich(base[0][:frac])
         except PdfUnsupported:
             pass
     assert time.perf_counter() - t0 < 20
@@ -211,11 +211,11 @@ def test_pdf_string_escapes_roundtrip():
     write→extract round trip byte-exactly (r4 grammar notch — the most
     common real-PDF string feature the scoped reader handles)."""
     from docling_api_spark.operators.pdf_extract import (_tokenize,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     tricky = r"(ref 14\0) and \ (nested (parens)) end"
     pdf = write_pdf([[(72.0, 700.0, 11.0, [tricky])]])
-    assert extract_pdf(pdf) == tricky
+    assert extract_pdf_rich(pdf)[0] == tricky
     # octal escapes decode too (reader-side; the writer never emits them)
     toks = list(_tokenize(rb"(\051\134\050) Tj"))
     assert toks[0] == ("str", b")\\(")
@@ -226,7 +226,7 @@ def test_pdf_two_page_fixture_markdown_and_spans():
     page 1 in /Kids order and span offsets continue across the page
     boundary (hand-derived golden, independent of the SQL oracle)."""
     from docling_api_spark.operators.md_adoc import block_spans
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
     p1 = [(72.0, 730.0, 24.0, ["Doc 14"]),
           (72.0, 690.0, 18.0, ["Section 0"]),
@@ -234,7 +234,7 @@ def test_pdf_two_page_fixture_markdown_and_spans():
           (72.0, 620.0, 11.0, ["body text"])]
     p2 = [(72.0, 730.0, 14.0, ["Part 2 b"]),
           (72.0, 690.0, 11.0, ["(ref 14\\0)"])]
-    md = extract_pdf(write_pdf([p1, p2], compress=True))
+    md = extract_pdf_rich(write_pdf([p1, p2], compress=True))[0]
     assert md == ("# Doc 14\n\n## Section 0\n\n### Part 2\n\n"
                   "body text\n\n### Part 2 b\n\n(ref 14\\0)")
     spans = block_spans(md)
@@ -329,18 +329,18 @@ def test_pdf15_objstm_xref_layout_invariant():
     the markdown is a function of the page content only, never the
     file layout (r5 grammar notch; corpus class pdf_objstm_xref and
     the i%3==0 slice of the driver PDF corpus use this layout)."""
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["Spec 7"]),
               (72.0, 690.0, 18.0, ["Overview"]),
               (72.0, 620.0, 11.0, ["Body one.", "Body two."])],
              [(72.0, 730.0, 14.0, ["Part b"]),
               (72.0, 690.0, 11.0, ["(ref 7\\3)"])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     assert "# Spec 7" in expect and "(ref 7\\3)" in expect
     for compress in (False, True):
-        got = extract_pdf(write_pdf(pages, compress=compress,
-                                    xref_stream=True))
+        got = extract_pdf_rich(write_pdf(pages, compress=compress,
+                                         xref_stream=True))[0]
         assert got == expect, compress
     # and the 1.5 file really is 1.5-shaped (no classic xref table)
     pdf15 = write_pdf(pages, xref_stream=True)
@@ -355,11 +355,11 @@ def test_pdf_object_scan_survives_endobj_in_stream_payload():
     scanner skips payloads by direct /Length before searching for the
     object end (the old non-greedy ``(.*?)endobj`` regex truncated the
     object here and silently extracted partial text)."""
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
     tricky = "before endobj after 9 0 obj done"
     pdf = write_pdf([[(72.0, 700.0, 11.0, [tricky])]])
-    assert extract_pdf(pdf) == tricky
+    assert extract_pdf_rich(pdf)[0] == tricky
 
 
 def test_pdf15_reader_robust_under_mutation():
@@ -370,7 +370,7 @@ def test_pdf15_reader_robust_under_mutation():
     import time
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
 
     base = [write_pdf([[(72.0, 720.0, 18.0, [f"Doc {i}"]),
@@ -390,12 +390,12 @@ def test_pdf15_reader_robust_under_mutation():
             else:
                 raw.insert(rng.randrange(len(raw) + 1), rng.randrange(256))
         try:
-            extract_pdf(bytes(raw))
+            extract_pdf_rich(bytes(raw))
         except PdfUnsupported:
             pass
     for frac in range(0, len(base[0]), 61):
         try:
-            extract_pdf(base[0][:frac])
+            extract_pdf_rich(base[0][:frac])
         except PdfUnsupported:
             pass
     assert time.perf_counter() - t0 < 20
@@ -418,7 +418,7 @@ def test_pdf_incremental_update_last_definition_wins():
     content; extraction must return the UPDATED text on every base
     layout, and the base bytes must be a strict prefix (the defining
     property of incremental save)."""
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import (append_update,
                                                        write_pdf)
     stale = [(72.0, 730.0, 24.0, ["Doc 4 STALE"]),
@@ -432,8 +432,8 @@ def test_pdf_incremental_update_last_definition_wins():
             base = write_pdf([stale, p2], compress=c, xref_stream=xs)
             upd = append_update(base, 0, final, compress=c)
             assert upd.startswith(base)
-            assert extract_pdf(base).startswith("# Doc 4 STALE")
-            got = extract_pdf(upd)
+            assert extract_pdf_rich(base)[0].startswith("# Doc 4 STALE")
+            got = extract_pdf_rich(upd)[0]
             assert got == ("# Doc 4\n\npost-edit text\n\n"
                            "### Part b\n\npage two body"), (xs, c, got)
 
@@ -448,7 +448,7 @@ def test_pdf_winansi_and_differences_encodings():
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
                                                          _decode_winansi,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     txt = "Price: 42 € — “fair”, n’est-ce pas…"
     for c in (False, True):
@@ -457,11 +457,11 @@ def test_pdf_winansi_and_differences_encodings():
                               (72.0, 690.0, 11.0, [txt])]],
                             compress=c, xref_stream=xs,
                             font_encoding="winansi")
-            assert extract_pdf(pdf) == f"# Facture 9\n\n{txt}", (c, xs)
+            assert extract_pdf_rich(pdf)[0] == f"# Facture 9\n\n{txt}", (c, xs)
     diff = {0xE9: "Euro", 0xEA: "quotedblleft", 0xEB: "quotedblright"}
     txt2 = "Total € is “large”"
     pdf = write_pdf([[(72.0, 690.0, 11.0, [txt2])]], font_encoding=diff)
-    assert extract_pdf(pdf) == txt2
+    assert extract_pdf_rich(pdf)[0] == txt2
     # the table is load-bearing: base-winansi decode of the same bytes
     # yields the (wrong) base chars
     import re
@@ -474,7 +474,7 @@ def test_pdf_winansi_and_differences_encodings():
     # reader scope: unknown glyph name is a typed error
     bad = pdf.replace(b"/Euro", b"/Zyzzy")
     with pytest.raises(PdfUnsupported):
-        extract_pdf(bad)
+        extract_pdf_rich(bad)
 
 
 def test_pdf_winansi_cp1252_holes_fall_back():
@@ -496,7 +496,7 @@ def test_pdf_tounicode_cmap():
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
                                                          _parse_cmap,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     tu = ("tounicode", {0x01: "é", 0x02: "€", 0x03: "ffi",
                         0x04: "“", 0x05: "”"})
@@ -506,7 +506,7 @@ def test_pdf_tounicode_cmap():
             pdf = write_pdf([[(72.0, 730.0, 24.0, ["CMap 1"]),
                               (72.0, 690.0, 11.0, [txt])]],
                             compress=c, xref_stream=xs, font_encoding=tu)
-            assert extract_pdf(pdf) == f"# CMap 1\n\n{txt}", (c, xs)
+            assert extract_pdf_rich(pdf)[0] == f"# CMap 1\n\n{txt}", (c, xs)
     # the bytes on the wire are HEX STRINGS of control codes (what real
     # generators emit for subset fonts) — 'Office' collapses to
     # 'O\x03ce' via the ligature — so the CMap is load-bearing
@@ -539,7 +539,7 @@ def test_pdf_cid_identity_h_font():
     import pytest
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     cid = ("cid", {0x1001: "€", 0x1002: "“", 0x1003: "”",
                    0x1004: "é", 0x1005: "ffi"})
@@ -549,7 +549,7 @@ def test_pdf_cid_identity_h_font():
             pdf = write_pdf([[(72.0, 730.0, 24.0, ["CID 1"]),
                               (72.0, 690.0, 11.0, [txt])]],
                             compress=c, xref_stream=xs, font_encoding=cid)
-            assert extract_pdf(pdf) == f"# CID 1\n\n{txt}", (c, xs)
+            assert extract_pdf_rich(pdf)[0] == f"# CID 1\n\n{txt}", (c, xs)
     # wire: 4 hex digits per glyph; 'A b €' -> 0041 0062 0020 1001
     pdf = write_pdf([[(72.0, 690.0, 11.0, ["Ab €"])]], font_encoding=cid)
     m = re.search(rb"stream\r?\n(.*?)\r?\nendstream", pdf, re.DOTALL)
@@ -557,10 +557,10 @@ def test_pdf_cid_identity_h_font():
         == b"0041006200201001"
     # unmapped CID is a typed error, not mojibake
     with pytest.raises(PdfUnsupported):
-        extract_pdf(pdf.replace(b"<0041", b"<9941"))
+        extract_pdf_rich(pdf.replace(b"<0041", b"<9941"))
     # vertical/other CID encodings scope out
     with pytest.raises(PdfUnsupported):
-        extract_pdf(pdf.replace(b"/Identity-H", b"/Identity-V"))
+        extract_pdf_rich(pdf.replace(b"/Identity-H", b"/Identity-V"))
     # writer guard: custom codes must stay out of the identity range
     with pytest.raises(ValueError):
         write_pdf([[(72.0, 690.0, 11.0, ["x"])]],
@@ -576,18 +576,18 @@ def test_pdf_split_contents_layout_invariant():
     import itertools
     import re
 
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["Split 7"]),
               (72.0, 690.0, 11.0, ["Body line one.", "and line two."]),
               (72.0, 620.0, 11.0, ["(ref 7\\3) closing."])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     assert "# Split 7" in expect and "(ref 7\\3)" in expect
     for k, comp, xs in itertools.product((2, 3, 5), (False, True),
                                          (False, True)):
         pdf = write_pdf(pages, compress=comp, xref_stream=xs,
                         split_contents=k)
-        assert extract_pdf(pdf) == expect, (k, comp, xs)
+        assert extract_pdf_rich(pdf)[0] == expect, (k, comp, xs)
     # the file really carries an ARRAY with k refs
     pdf = write_pdf(pages, split_contents=3)
     m = re.search(rb"/Contents \[([^\]]+)\]", pdf)
@@ -601,7 +601,7 @@ def test_pdf_split_state_crosses_stream_boundary():
     concatenate-then-tokenize rule recovers everything."""
     import re
 
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["Heading line"]),
               (72.0, 690.0, 11.0, ["aa " * 30]),
@@ -615,7 +615,7 @@ def test_pdf_split_state_crosses_stream_boundary():
     # BT opens in the first chunk only; later chunks carry naked Tj ops
     assert b"BT" in chunks[0] and b"ET" not in chunks[0]
     assert any(b"Tj" in c and b"BT" not in c for c in chunks[1:])
-    got = extract_pdf(pdf)
+    got = extract_pdf_rich(pdf)[0]
     assert "Heading line" in got and "aa aa" in got and "bb bb" in got
 
 
@@ -628,21 +628,21 @@ def test_pdf_nested_tree_inherits_resources():
     import itertools
     import re
 
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
     txt = "Synthèse — “total 42 €”"
     pages = [[(72.0, 730.0, 24.0, ["Dossier 9"]),
               (72.0, 690.0, 12.0, [txt])],
              [(72.0, 730.0, 16.0, ["Annexe"]),
               (72.0, 690.0, 12.0, ["Corps deux."])]]
-    expect = extract_pdf(write_pdf(pages, font_encoding="winansi"))
+    expect = extract_pdf_rich(write_pdf(pages, font_encoding="winansi"))[0]
     assert "€" in expect and "## Annexe" in expect
     for comp, xs, k in itertools.product((False, True), (False, True),
                                          (1, 3)):
         pdf = write_pdf(pages, compress=comp, xref_stream=xs,
                         split_contents=k, nested_kids=True,
                         font_encoding="winansi")
-        assert extract_pdf(pdf) == expect, (comp, xs, k)
+        assert extract_pdf_rich(pdf)[0] == expect, (comp, xs, k)
     # shape: intermediate /Pages nodes exist; leaf dicts carry NO
     # /Resources (inheritance is load-bearing, not decorative)
     pdf = write_pdf(pages, nested_kids=True, font_encoding="winansi")
@@ -660,7 +660,7 @@ def test_pdf_page_tree_cycle_and_depth_are_typed():
     import pytest
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
 
     def obj(n, body):
         return f"{n} 0 obj\n{body}\nendobj\n".encode()
@@ -670,7 +670,7 @@ def test_pdf_page_tree_cycle_and_depth_are_typed():
            + obj(2, "<< /Type /Pages /Kids [2 0 R] /Count 1 >>")
            + b"%%EOF\n")
     with pytest.raises(PdfUnsupported, match="cycle"):
-        extract_pdf(cyc)
+        extract_pdf_rich(cyc)
     deep = bytearray(b"%PDF-1.4\n")
     deep += obj(1, "<< /Type /Catalog /Pages 2 0 R >>")
     n_nodes = 80
@@ -678,7 +678,7 @@ def test_pdf_page_tree_cycle_and_depth_are_typed():
         deep += obj(k, f"<< /Type /Pages /Kids [{k + 1} 0 R] /Count 1 >>")
     deep += obj(2 + n_nodes, "<< /Type /Page /Parent 81 0 R >>")
     with pytest.raises(PdfUnsupported, match="deep"):
-        extract_pdf(bytes(deep))
+        extract_pdf_rich(bytes(deep))
 
 
 def test_pdf_split_tree_reader_robust_under_mutation():
@@ -688,7 +688,7 @@ def test_pdf_split_tree_reader_robust_under_mutation():
     import time
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
 
     base = [write_pdf([[(72.0, 720.0, 18.0, [f"Doc {i}"]),
@@ -711,12 +711,12 @@ def test_pdf_split_tree_reader_robust_under_mutation():
             else:
                 raw.insert(rng.randrange(len(raw) + 1), rng.randrange(256))
         try:
-            extract_pdf(bytes(raw))
+            extract_pdf_rich(bytes(raw))
         except PdfUnsupported:
             pass
     for frac in range(0, len(base[0]), 61):
         try:
-            extract_pdf(base[0][:frac])
+            extract_pdf_rich(base[0][:frac])
         except PdfUnsupported:
             pass
     assert time.perf_counter() - t0 < 20
@@ -733,17 +733,17 @@ def test_pdf_filter_chains():
     import pytest
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["Archive 3"]),
               (72.0, 690.0, 11.0, ["Filtered body.", "(ref 3\\3)"])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     for filt, xs, k, nk in itertools.product(
             ("ahx", "a85", "a85+flate"), (False, True), (1, 3),
             (False, True)):
         pdf = write_pdf(pages, xref_stream=xs, split_contents=k,
                         nested_kids=nk, stream_filter=filt)
-        assert extract_pdf(pdf) == expect, (filt, xs, k, nk)
+        assert extract_pdf_rich(pdf)[0] == expect, (filt, xs, k, nk)
     # wire shapes
     assert b"/Filter /ASCIIHexDecode" in write_pdf(
         pages, stream_filter="ahx")
@@ -760,14 +760,14 @@ def test_pdf_filter_chains():
     # corrupt ascii85 payload → typed, not a stray ValueError
     bad = a85.replace(b"~>", b"\x00\x01~>", 1)
     with pytest.raises(PdfUnsupported):
-        extract_pdf(bad)
+        extract_pdf_rich(bad)
     # a filter label LYING about the payload coding → typed (LZW
     # graduated to supported in notch 9; plain text declared as LZW
     # now fails inside the decoder, not at the name gate)
     lzw = write_pdf(pages).replace(
         b"<< /Length", b"<< /Filter /LZWDecode /Length", 1)
     with pytest.raises(PdfUnsupported, match="lzw"):
-        extract_pdf(lzw)
+        extract_pdf_rich(lzw)
 
 
 def test_pdf_filter_chain_reader_robust_under_mutation():
@@ -777,7 +777,7 @@ def test_pdf_filter_chain_reader_robust_under_mutation():
     import time
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
 
     base = [write_pdf([[(72.0, 720.0, 18.0, [f"Doc {i}"]),
@@ -799,7 +799,7 @@ def test_pdf_filter_chain_reader_robust_under_mutation():
             else:
                 raw.insert(rng.randrange(len(raw) + 1), rng.randrange(256))
         try:
-            extract_pdf(bytes(raw))
+            extract_pdf_rich(bytes(raw))
         except PdfUnsupported:
             pass
     assert time.perf_counter() - t0 < 20
@@ -822,13 +822,13 @@ def test_pdf_rc4_encryption_layout_invariant():
     layout combination — classic/1.5, plain/Flate, split-contents
     tree, ASCII filter chains — and the ciphertext really is
     ciphertext (the plaintext marker is absent from the file)."""
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["Doc E"]),
               (72.0, 690.0, 11.0, ["MARKER7 body (with) \\ escapes"])],
              [(72.0, 730.0, 14.0, ["Part b"]),
               (72.0, 690.0, 11.0, ["page two"])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     assert "MARKER7" in expect
     combos = [
         dict(),
@@ -843,7 +843,7 @@ def test_pdf_rc4_encryption_layout_invariant():
             enc = write_pdf(pages, encrypt_r=r, **kw)
             assert b"/Encrypt" in enc and b"/ID [<" in enc
             assert b"MARKER7" not in enc, (r, kw)
-            assert extract_pdf(enc) == expect, (r, kw)
+            assert extract_pdf_rich(enc)[0] == expect, (r, kw)
 
 
 def test_pdf_rc4_literal_string_o_u():
@@ -854,7 +854,7 @@ def test_pdf_rc4_literal_string_o_u():
     as they are for any incrementally-edited real file)."""
     import re
 
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
 
     def to_literal(hexs: bytes) -> bytes:
@@ -867,13 +867,13 @@ def test_pdf_rc4_literal_string_o_u():
     pdf = write_pdf([[(72.0, 730.0, 24.0, ["Lit"]),
                       (72.0, 690.0, 11.0, ["literal o u strings"])]],
                     compress=True, encrypt_r=3)
-    expect = extract_pdf(pdf)
+    expect = extract_pdf_rich(pdf)[0]
     lit = re.sub(rb"/O <([0-9a-f]+)>",
                  lambda m: b"/O " + to_literal(m.group(1)), pdf)
     lit = re.sub(rb"/U <([0-9a-f]+)>",
                  lambda m: b"/U " + to_literal(m.group(1)), lit)
     assert lit != pdf
-    assert extract_pdf(lit) == expect
+    assert extract_pdf_rich(lit)[0] == expect
 
 
 def test_pdf_password_and_aes_and_tamper_are_typed():
@@ -886,18 +886,18 @@ def test_pdf_password_and_aes_and_tamper_are_typed():
     import pytest
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["Locked"]),
               (72.0, 690.0, 11.0, ["secret"])]]
     with pytest.raises(PdfUnsupported, match="password"):
-        extract_pdf(write_pdf(pages, encrypt_r=3,
-                              encrypt_user_pwd=b"hunter2"))
+        extract_pdf_rich(write_pdf(pages, encrypt_r=3,
+                                   encrypt_user_pwd=b"hunter2"))
     enc = write_pdf(pages, encrypt_r=3)
     with pytest.raises(PdfUnsupported, match="V4"):
-        extract_pdf(enc.replace(b"/V 2 /R 3", b"/V 4 /R 4"))
+        extract_pdf_rich(enc.replace(b"/V 2 /R 3", b"/V 4 /R 4"))
     with pytest.raises(PdfUnsupported, match="password"):
-        extract_pdf(re.sub(rb"/U <[0-9a-f]{8}", b"/U <deadbeef", enc))
+        extract_pdf_rich(re.sub(rb"/U <[0-9a-f]{8}", b"/U <deadbeef", enc))
 
 
 def test_pdf_rc4_reader_robust_under_mutation():
@@ -908,7 +908,7 @@ def test_pdf_rc4_reader_robust_under_mutation():
     import time
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
 
     base = [write_pdf([[(72.0, 720.0, 18.0, [f"Doc {i}"]),
@@ -929,12 +929,12 @@ def test_pdf_rc4_reader_robust_under_mutation():
             else:
                 raw.insert(rng.randrange(len(raw) + 1), rng.randrange(256))
         try:
-            extract_pdf(bytes(raw))
+            extract_pdf_rich(bytes(raw))
         except PdfUnsupported:
             pass
     for frac in range(0, len(base[0]), 61):
         try:
-            extract_pdf(base[0][:frac])
+            extract_pdf_rich(base[0][:frac])
         except PdfUnsupported:
             pass
     assert time.perf_counter() - t0 < 20
@@ -989,15 +989,15 @@ def test_pdf_lzw_stream_layout_invariant():
     """/LZWDecode content streams extract byte-identically to plain —
     including under 1.5 layout and RC4 encryption (filters and crypto
     compose: decrypt, THEN defilter)."""
-    from docling_api_spark.operators.pdf_extract import extract_pdf
+    from docling_api_spark.operators.pdf_extract import extract_pdf_rich
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["LZ"]),
               (72.0, 690.0, 11.0, ["lzw body (with) \\ escapes",
                                    "line two of the paragraph"])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     for kw in (dict(), dict(xref_stream=True),
                dict(encrypt_r=3), dict(xref_stream=True, encrypt_r=2)):
-        got = extract_pdf(write_pdf(pages, stream_filter="lzw", **kw))
+        got = extract_pdf_rich(write_pdf(pages, stream_filter="lzw", **kw))[0]
         assert got == expect, kw
 
 
@@ -1010,15 +1010,15 @@ def test_pdf_bfrange_array_form():
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
                                                          _parse_cmap,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["T"]),
               (72.0, 690.0, 11.0, ["x € y “q” z ffi."])]]
     m = {0x01: "€", 0x02: "“", 0x03: "”", 0x07: "ffi"}  # two runs
-    a = extract_pdf(write_pdf(pages, font_encoding=("tounicode", m)))
+    a = extract_pdf_rich(write_pdf(pages, font_encoding=("tounicode", m)))[0]
     arr_pdf = write_pdf(pages, font_encoding=("tounicode_arr", m))
     assert b"beginbfrange" in arr_pdf and b"beginbfchar" not in arr_pdf
-    assert extract_pdf(arr_pdf) == a
+    assert extract_pdf_rich(arr_pdf)[0] == a
     # direct CMap-parser checks
     ok = _parse_cmap(b"1 beginbfrange\n<01> <03> [<20AC> <201C> <201D>]"
                      b"\nendbfrange")
@@ -1040,7 +1040,7 @@ def test_rle_round_trip_and_layout_invariance():
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
                                                          _rle_decode,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import (_rle_encode,
                                                        write_pdf)
     assert _rle_decode(bytes([0x01, 0x41, 0x42, 0xFD, 0x43, 0x80])) \
@@ -1055,10 +1055,10 @@ def test_rle_round_trip_and_layout_invariance():
         _rle_decode(bytes([0xFD]))            # repeat run missing byte
     pages = [[(72.0, 730.0, 24.0, ["R"]),
               (72.0, 690.0, 11.0, ["rle body (x) \\ y"])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     for kw in (dict(), dict(xref_stream=True), dict(encrypt_r=2)):
-        assert extract_pdf(
-            write_pdf(pages, stream_filter="rle", **kw)) == expect, kw
+        assert extract_pdf_rich(
+            write_pdf(pages, stream_filter="rle", **kw))[0] == expect, kw
 
 
 def test_pdf_crypt_review_regressions():
@@ -1073,17 +1073,17 @@ def test_pdf_crypt_review_regressions():
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
                                                          _parse_cmap,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
 
     pages = [[(72.0, 730.0, 24.0, ["Doc P"]),
               (72.0, 690.0, 11.0, ["payload text here"])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     # (1) unsigned /P: -44 == 4294967252 as a 32-bit pattern
     enc = write_pdf(pages, encrypt_r=3, compress=True)
     unsigned = enc.replace(b"/P -44", b"/P 4294967252")
     assert unsigned != enc
-    assert extract_pdf(unsigned) == expect
+    assert extract_pdf_rich(unsigned)[0] == expect
     # (2) empty hex token in bfrange → typed
     with pytest.raises(PdfUnsupported, match="empty bfrange"):
         _parse_cmap(b"1 beginbfrange\n<> <42> <0041>\nendbfrange")
@@ -1091,7 +1091,7 @@ def test_pdf_crypt_review_regressions():
     # stream so the bytes are visible in the file)
     chatty = [[(72.0, 730.0, 24.0, ["Spec notes"]),
                (72.0, 690.0, 11.0, ["see /Encrypt 1 0 R and /Encrypt"])]]
-    got = extract_pdf(write_pdf(chatty))
+    got = extract_pdf_rich(write_pdf(chatty))[0]
     assert "/Encrypt 1 0 R" in got
     # (4) /ID as escaped literal strings instead of hex
     m = re.search(rb"/ID \[<([0-9a-f]+)> <([0-9a-f]+)>\]", enc)
@@ -1100,7 +1100,7 @@ def test_pdf_crypt_review_regressions():
     lit = bytes(b"(") + b"".join(b"\\%03o" % b for b in raw) + b")"
     enc_lit = enc.replace(m.group(0), b"/ID [" + lit + b" " + lit + b"]")
     assert enc_lit != enc
-    assert extract_pdf(enc_lit) == expect
+    assert extract_pdf_rich(enc_lit)[0] == expect
 
 
 # --------------------- notch 10: V4 crypt filters (AES-128 / AESV2)
@@ -1195,13 +1195,13 @@ def test_pdf_aesv2_layout_invariant_and_scopeouts():
     import pytest
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["Doc A"]),
               (72.0, 690.0, 11.0, ["aes body (x) \\ y", "line two"])],
              [(72.0, 730.0, 14.0, ["Part b"]),
               (72.0, 690.0, 11.0, ["page two"])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     combos = [dict(), dict(compress=True), dict(xref_stream=True),
               dict(compress=True, xref_stream=True),
               dict(split_contents=3, nested_kids=True),
@@ -1210,7 +1210,7 @@ def test_pdf_aesv2_layout_invariant_and_scopeouts():
         enc = write_pdf(pages, encrypt_r=4, **kw)
         assert b"/CFM /AESV2" in enc
         assert b"aes body" not in enc, kw
-        assert extract_pdf(enc) == expect, kw
+        assert extract_pdf_rich(enc)[0] == expect, kw
     # V4 with /CFM /V2 = RC4-128 behind crypt filters: ciphertext is
     # the plain V2 RC4 wire format, only the dict differs
     rc4v4 = write_pdf(pages, encrypt_r=3).replace(
@@ -1219,13 +1219,13 @@ def test_pdf_aesv2_layout_invariant_and_scopeouts():
         b"/StmF /StdCF /StrF /StdCF")
     # note: R changed 3->4 alters nothing in the key derivation path
     # (both take the r>=3 branches), so the stored /O//U stay valid
-    assert extract_pdf(rc4v4) == expect
+    assert extract_pdf_rich(rc4v4)[0] == expect
     enc = write_pdf(pages, encrypt_r=4)
     with pytest.raises(PdfUnsupported, match="crypt filter"):
-        extract_pdf(enc.replace(b"/CFM /AESV2", b"/CFM /AESV3"))
+        extract_pdf_rich(enc.replace(b"/CFM /AESV2", b"/CFM /AESV3"))
     with pytest.raises(PdfUnsupported, match="password"):
-        extract_pdf(write_pdf(pages, encrypt_r=4,
-                              encrypt_user_pwd=b"pw"))
+        extract_pdf_rich(write_pdf(pages, encrypt_r=4,
+                                   encrypt_user_pwd=b"pw"))
 
 
 def test_pdf_aes_reader_robust_under_mutation():
@@ -1235,7 +1235,7 @@ def test_pdf_aes_reader_robust_under_mutation():
     import time
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     base = [write_pdf([[(72.0, 720.0, 18.0, [f"Doc {i}"]),
                         (72.0, 680.0, 11.0, ["hello world " * 10])]],
@@ -1255,12 +1255,12 @@ def test_pdf_aes_reader_robust_under_mutation():
             else:
                 raw.insert(rng.randrange(len(raw) + 1), rng.randrange(256))
         try:
-            extract_pdf(bytes(raw))
+            extract_pdf_rich(bytes(raw))
         except PdfUnsupported:
             pass
     for frac in range(0, len(base[0]), 61):
         try:
-            extract_pdf(base[0][:frac])
+            extract_pdf_rich(base[0][:frac])
         except PdfUnsupported:
             pass
     assert time.perf_counter() - t0 < 30
@@ -1277,7 +1277,7 @@ def test_pdf_r5_advice_regressions():
     import zlib
 
     from docling_api_spark.operators.pdf_extract import (_expand_objstm,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
 
     # (1) two ObjStm containers defining object 5: later wins
@@ -1298,17 +1298,18 @@ def test_pdf_r5_advice_regressions():
     # (2) V1 with a bogus /Length 128 — reader forces 40 bits
     pages = [[(72.0, 730.0, 24.0, ["Doc V1"]),
               (72.0, 690.0, 11.0, ["forty bit body"])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     enc = write_pdf(pages, encrypt_r=2)
     bogus = enc.replace(b"/V 1 /R 2 /Length 40", b"/V 1 /R 2 /Length 128")
     assert bogus != enc
-    assert extract_pdf(bogus) == expect
+    assert extract_pdf_rich(bogus)[0] == expect
 
     # (3) page text with a line-leading 'trailer' near '/Encrypt'
     chatty = [[(72.0, 730.0, 24.0, ["Spec notes"]),
                (72.0, 690.0, 11.0,
                 ["trailer keyword here", "see /Encrypt 9 0 R denied"])]]
-    got = extract_pdf(write_pdf(chatty))  # plain streams — bytes visible
+    # plain streams — bytes visible
+    got = extract_pdf_rich(write_pdf(chatty))[0]
     assert "trailer keyword here" in got and "/Encrypt 9 0 R" in got
 
 
@@ -1364,13 +1365,13 @@ def test_pdf_aesv3_layout_invariant_and_scopeouts():
     import pytest
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["Doc V5"]),
               (72.0, 690.0, 11.0, ["aes two fifty six (x) \\ y"])],
              [(72.0, 730.0, 14.0, ["Part b"]),
               (72.0, 690.0, 11.0, ["page two"])]]
-    expect = extract_pdf(write_pdf(pages))
+    expect = extract_pdf_rich(write_pdf(pages))[0]
     for r in (5, 6):
         for kw in (dict(), dict(compress=True), dict(xref_stream=True),
                    dict(compress=True, xref_stream=True),
@@ -1378,18 +1379,18 @@ def test_pdf_aesv3_layout_invariant_and_scopeouts():
             enc = write_pdf(pages, encrypt_r=r, **kw)
             assert b"/CFM /AESV3" in enc and b"/UE <" in enc
             assert b"aes two" not in enc, (r, kw)
-            assert extract_pdf(enc) == expect, (r, kw)
+            assert extract_pdf_rich(enc)[0] == expect, (r, kw)
     with pytest.raises(PdfUnsupported, match="password"):
-        extract_pdf(write_pdf(pages, encrypt_r=6,
-                              encrypt_user_pwd=b"hunter2"))
+        extract_pdf_rich(write_pdf(pages, encrypt_r=6,
+                                   encrypt_user_pwd=b"hunter2"))
     enc = write_pdf(pages, encrypt_r=6)
     with pytest.raises(PdfUnsupported, match="password"):
-        extract_pdf(re.sub(rb"/U <[0-9a-f]{8}", b"/U <deadbeef", enc))
+        extract_pdf_rich(re.sub(rb"/U <[0-9a-f]{8}", b"/U <deadbeef", enc))
     with pytest.raises(PdfUnsupported, match="Perms"):
-        extract_pdf(re.sub(rb"/Perms <[0-9a-f]{8}",
-                           b"/Perms <deadbeef", enc))
+        extract_pdf_rich(re.sub(rb"/Perms <[0-9a-f]{8}",
+                                b"/Perms <deadbeef", enc))
     with pytest.raises(PdfUnsupported, match="crypt filter"):
-        extract_pdf(enc.replace(b"/CFM /AESV3", b"/CFM /AESV4"))
+        extract_pdf_rich(enc.replace(b"/CFM /AESV3", b"/CFM /AESV4"))
 
 
 def test_pdf_aesv3_reader_robust_under_mutation():
@@ -1399,7 +1400,7 @@ def test_pdf_aesv3_reader_robust_under_mutation():
     import time
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     base = [write_pdf([[(72.0, 720.0, 18.0, [f"Doc {i}"]),
                         (72.0, 680.0, 11.0, ["hello world " * 10])]],
@@ -1419,12 +1420,12 @@ def test_pdf_aesv3_reader_robust_under_mutation():
             else:
                 raw.insert(rng.randrange(len(raw) + 1), rng.randrange(256))
         try:
-            extract_pdf(bytes(raw))
+            extract_pdf_rich(bytes(raw))
         except PdfUnsupported:
             pass
     for frac in range(0, len(base[0]), 61):
         try:
-            extract_pdf(base[0][:frac])
+            extract_pdf_rich(base[0][:frac])
         except PdfUnsupported:
             pass
     assert time.perf_counter() - t0 < 60
@@ -1520,8 +1521,7 @@ def test_docx_embedded_images_manifest():
 
     import pytest
 
-    from docling_api_spark.operators.ooxml import (extract_docx,
-                                                   extract_docx_rich)
+    from docling_api_spark.operators.ooxml import extract_docx_rich
     from docling_api_spark.operators.ooxml_write import write_docx
     from docling_api_spark.operators.png_write import picture_png
     png1, png2 = picture_png("t-a.png"), picture_png("t-b.png")
@@ -1534,7 +1534,6 @@ def test_docx_embedded_images_manifest():
     assert base64.b64decode(imgs[1]["image"]) == png2
     assert md.index("body text") < md.index("picture-1.png") \
         < md.index("picture-2.png") < md.index("- one")
-    assert extract_docx(docx) == md
     # image-free docs are unchanged by the rich path
     md0, imgs0 = extract_docx_rich(
         write_docx("Doc 7", "body text", ["one"], [["k", "v"]]))
@@ -1562,8 +1561,7 @@ def test_pptx_embedded_images_manifest():
     defines picture numbering across slides."""
     import base64
 
-    from docling_api_spark.operators.ooxml import (extract_pptx,
-                                                   extract_pptx_rich)
+    from docling_api_spark.operators.ooxml import extract_pptx_rich
     from docling_api_spark.operators.ooxml_write import write_pptx
     from docling_api_spark.operators.png_write import picture_png
     png1, png2 = picture_png("ps1.png"), picture_png("ps2.png")
@@ -1577,7 +1575,6 @@ def test_pptx_embedded_images_manifest():
     assert base64.b64decode(imgs[1]["image"]) == png2
     assert (md.index("## Doc 9") < md.index("picture-1.png")
             < md.index("## Summary 9") < md.index("picture-2.png"))
-    assert extract_pptx(pptx) == md
     md0, i0 = extract_pptx_rich(write_pptx([("Doc 9", [(0, "x")])]))
     assert i0 == [] and "picture" not in md0
 
@@ -1591,14 +1588,14 @@ def test_pdf_form_xobjects():
     import pytest
 
     from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
-                                                         extract_pdf)
+                                                         extract_pdf_rich)
     from docling_api_spark.operators.pdf_write import write_pdf
     pages = [[(72.0, 730.0, 24.0, ["Doc F"]),
               (72.0, 620.0, 11.0, ["body para text"])]]
-    expect = extract_pdf(write_pdf(
+    expect = extract_pdf_rich(write_pdf(
         [[(72.0, 730.0, 24.0, ["Doc F"]),
           (72.0, 655.0, 14.0, ["Part 2"]),
-          (72.0, 620.0, 11.0, ["body para text"])]]))
+          (72.0, 620.0, 11.0, ["body para text"])]]))[0]
     combos = [dict(), dict(compress=True), dict(xref_stream=True),
               dict(split_contents=3), dict(encrypt_r=4),
               dict(encrypt_r=6), dict(stream_filter="lzw")]
@@ -1607,14 +1604,14 @@ def test_pdf_form_xobjects():
         pdf = write_pdf(pages, forms=[[(0.0, 655.0,
                                         [(72.0, 0.0, 14.0, ["Part 2"])])]],
                         **kw)
-        assert extract_pdf(pdf) == expect, kw
+        assert extract_pdf_rich(pdf)[0] == expect, kw
     # non-identity /Matrix scopes out typed
     pdf = write_pdf(pages, forms=[[(0.0, 655.0,
                                     [(72.0, 0.0, 14.0, ["Part 2"])])]])
     bad = pdf.replace(b"/Matrix [1 0 0 1 0 0]", b"/Matrix [2 0 0 2 0 0]")
     assert bad != pdf
     with pytest.raises(PdfUnsupported, match="Matrix"):
-        extract_pdf(bad)
+        extract_pdf_rich(bad)
     # nested tree + forms is a writer-side error, not silent
     with pytest.raises(ValueError, match="nested"):
         write_pdf([pages[0], pages[0]], nested_kids=True,

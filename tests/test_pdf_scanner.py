@@ -12,7 +12,7 @@ from docling_api_spark.operators.pdf_extract import (PdfUnsupported,
                                                      _page_streams,
                                                      _tokenize,
                                                      _trailer_regions,
-                                                     extract_pdf)
+                                                     extract_pdf_rich)
 from docling_api_spark.operators.pdf_write import content_stream, write_pdf
 from fixture_corpus import FIXTURE_CLASSES
 from pdf_reference import tokenize as reference_tokenize
@@ -97,10 +97,10 @@ def test_tj_kerning_gap_and_bracket_inside_string():
     pdf = _pdf_with_stream(
         b"BT /F1 11 Tf 72 700 Td [(Wor) -179 (ld) -180 (see [1]) 120"
         b" (x)] TJ ET")
-    assert extract_pdf(pdf) == "World see [1]x"
+    assert extract_pdf_rich(pdf)[0] == "World see [1]x"
     pdf = _pdf_with_stream(
         b"BT /F1 11 Tf 72 700 Td [(see [1]) -250 (more)] TJ ET")
-    assert extract_pdf(pdf) == "see [1] more"
+    assert extract_pdf_rich(pdf)[0] == "see [1] more"
     # an unterminated array runs to the end of the stream
     assert _tokenize(b"[(ab) 1 Tj") == [
         ("arr", [("str", b"ab"), ("num", 1.0), ("op", b"Tj")])]
@@ -115,7 +115,7 @@ def test_marked_content_dictionary_is_one_operand():
     assert _tokenize(nested + b" BDC") == [("dict", nested), ("op", b"BDC")]
     pdf = _pdf_with_stream(
         b"/P <</MCID 0>> BDC BT /F1 11 Tf 72 700 Td (x) Tj ET EMC")
-    assert extract_pdf(pdf) == "x"
+    assert extract_pdf_rich(pdf)[0] == "x"
     with pytest.raises(PdfUnsupported):
         _tokenize(b"/P <</MCID 0 BDC")
 
@@ -136,7 +136,8 @@ def test_literal_string_escapes(literal, value):
     is a line continuation."""
     assert _tokenize(literal + b" Tj") == [("str", value), ("op", b"Tj")]
     pdf = _pdf_with_stream(b"BT /F1 11 Tf 72 700 Td " + literal + b" Tj ET")
-    assert extract_pdf(pdf) == " ".join(value.decode("latin-1").split())
+    md = extract_pdf_rich(pdf)[0]
+    assert md == " ".join(value.decode("latin-1").split())
 
 
 def _trailer_regions_regex(data: bytes) -> list[bytes]:

@@ -1,7 +1,9 @@
 """Table-driven sniffer tests mirroring utils.py:60-105 semantics."""
 
 from docling_api_spark.functions.sniffer import (
-    detect_format, detect_html_xhtml, format_from_extension)
+    ASCIIDOC, DOCX, HTML, IMAGE, MD, PDF, PPTX, detect_format,
+    detect_html_xhtml, format_from_extension)
+from docling_api_spark.operators.convert import CONVERTERS
 from docling_api_spark.operators.pdf_write import write_pdf
 from fixture_corpus import docx_basic, pptx_basic
 
@@ -98,3 +100,9 @@ def test_plaintext_falls_through_to_none():
 
 def test_empty_is_none():
     assert detect_format(b"", "https://a/file.html") is None
+
+
+def test_every_sniffed_format_has_a_converter():
+    # the reference's InputFormat taxonomy (utils.py:8-15) is the key set
+    # of the converter table: a format the sniffer returns must convert
+    assert {DOCX, PPTX, HTML, IMAGE, PDF, ASCIIDOC, MD} == set(CONVERTERS)
